@@ -89,15 +89,6 @@ def load_all() -> dict[str, QuerySpec]:
     first, then least-recently-verified. Deterministic — derived only
     from committed CORRECTNESS_r*.json files, so every machine computes
     the same order for a given commit.
-
-    Refresh horizon (VERDICT r10 item 7): at 362 registered queries and
-    a 50-slot window, a round with no landings refreshes 50 stale
-    greens, so the full catalog re-earns driver evidence every ~7-8
-    windows; rounds that land new queries spend those slots first and
-    stretch the horizon proportionally. At the r11 landing the oldest
-    cohort was CORRECTNESS_r03 (28 queries, all of which fill the r11
-    window's refresh half — pinned in tests/test_catalog.py
-    R11_REFRESH); the next-oldest greens date to r4.
     """
     from .queries import (  # noqa: F401
         aggregates,
@@ -111,7 +102,14 @@ def load_all() -> dict[str, QuerySpec]:
         joins,
         llm,
         relational,
-        roadmap7_landed,
+        roadmap7,
+        roadmap9,
+        roadmap10,
+        roadmap11,
+        roadmap12,
+        roadmap13,
+        roadmap14,
+        roadmap15,
         scalars,
         windows,
     )

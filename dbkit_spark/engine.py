@@ -28,7 +28,6 @@ class Engine:
     def __init__(self, spark: SparkSession | None = None):
         self.spark = spark or build_session()
         self._catalog: dict[str, QuerySpec] | None = None
-        self._queued_catalog: dict[str, QuerySpec] | None = None
 
     # --- I/O ---------------------------------------------------------------
     def table(self, sf_dir: str, name: str) -> DataFrame:
@@ -52,32 +51,13 @@ class Engine:
         return self._catalog
 
     def run(self, query_name: str, sf_dir: str) -> DataFrame:
-        """Run a declared catalog query (SURVEY.md §2 inventory) or a
-        pre-verified queued query (``queries/roadmap7.py`` — written
-        behind the catalog freeze, registered next round; the Engine
-        resolves both so users are not gated on the driver rotation)."""
-        spec = self.catalog.get(query_name)
-        if spec is not None:
-            return spec.fn(self.spark, sf_dir)
-        return self._queued()[query_name].fn(self.spark, sf_dir)
+        """Run a declared catalog query (SURVEY.md §2 inventory); an
+        unknown name raises ``KeyError``."""
+        return self.catalog[query_name].fn(self.spark, sf_dir)
 
     def oracle(self, query_name: str) -> str | None:
-        """The ANSI-SQL oracle for a declared or queued query
-        (None = rows-only)."""
-        spec = self.catalog.get(query_name)
-        if spec is not None:
-            return spec.oracle
-        return self._queued()[query_name].oracle
-
-    def _queued(self) -> dict[str, QuerySpec]:
-        if self._queued_catalog is None:
-            from .queries.roadmap7 import ROADMAP7
-
-            self._queued_catalog = {
-                name: QuerySpec(fn=fn, oracle=oracle, notes=notes)
-                for name, (fn, oracle, notes) in ROADMAP7.items()
-            }
-        return self._queued_catalog
+        """The ANSI-SQL oracle for a declared query (None = rows-only)."""
+        return self.catalog[query_name].oracle
 
     def stop(self) -> None:
         self.spark.stop()

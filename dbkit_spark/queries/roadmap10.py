@@ -1,14 +1,9 @@
-"""Round-10 catalog queue (q342+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (imported at the
-bottom of ``roadmap7.py``; must not import roadmap7 back) and landed by
-``roadmap7_landed`` when the rotation arithmetic allows (round 11: q341
-leads, these follow — the staged-window discipline of the r8 verdict,
-queue capped at one driver window).
+"""Catalog queries q342–q362, each registered where it is defined.
 
 Every entry follows the r9 additions template: operator + randomized
 brute-force or hand-case pytest (tests/test_round10.py) + oracle
 pre-verified at sf0.001 and sf0.01
-(tests/test_catalog.py::test_roadmap7_queue_preverified), and the
+(tests/test_oracle.py), and the
 driver-canon contract of SURVEY.md §5.3 (scalar outputs only).
 """
 
@@ -17,9 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
-
-ROADMAP10: dict[str, tuple] = {}
 
 
 # --- q342: t-digest quantile sketch ------------------------------------------
@@ -60,7 +54,7 @@ _Q342_NOTES = (
     "rank error, mergeability, weight conservation, centroid bound"
 )
 
-ROADMAP10["q342_tdigest_quantiles"] = (q342_tdigest_quantiles, None, _Q342_NOTES)
+register("q342_tdigest_quantiles", None, _Q342_NOTES)(q342_tdigest_quantiles)
 
 
 # --- q343: density clustering on the LSH graph --------------------------------
@@ -131,11 +125,7 @@ _Q343_NOTES = (
     "and border min-labels order-independently"
 )
 
-ROADMAP10["q343_density_clusters"] = (
-    q343_density_clusters,
-    _q343_oracle(),
-    _Q343_NOTES,
-)
+register("q343_density_clusters", _q343_oracle(), _Q343_NOTES)(q343_density_clusters)
 
 
 # --- q344: identity stitching across id changes -------------------------------
@@ -213,11 +203,7 @@ _Q344_NOTES = (
     "recursive-CTE reachability, order-independently"
 )
 
-ROADMAP10["q344_identity_stitch"] = (
-    q344_identity_stitch,
-    _Q344_ORACLE,
-    _Q344_NOTES,
-)
+register("q344_identity_stitch", _Q344_ORACLE, _Q344_NOTES)(q344_identity_stitch)
 
 
 # --- q345: parquet bloom-filter write/read path --------------------------------
@@ -283,11 +269,7 @@ _Q345_NOTES = (
     "delta) and the predicate reaching the scan"
 )
 
-ROADMAP10["q345_bloom_point_lookup"] = (
-    q345_bloom_point_lookup,
-    _Q345_ORACLE,
-    _Q345_NOTES,
-)
+register("q345_bloom_point_lookup", _Q345_ORACLE, _Q345_NOTES)(q345_bloom_point_lookup)
 
 
 # --- q346: weighted reservoir sample -------------------------------------------
@@ -343,11 +325,7 @@ _Q346_NOTES = (
     "stratified_sample exchange shape"
 )
 
-ROADMAP10["q346_weighted_sample"] = (
-    q346_weighted_sample,
-    _Q346_ORACLE,
-    _Q346_NOTES,
-)
+register("q346_weighted_sample", _Q346_ORACLE, _Q346_NOTES)(q346_weighted_sample)
 
 
 # --- q347: audio content dedup across container re-encodings -------------------
@@ -419,10 +397,8 @@ _Q347_NOTES = (
     "energies, levels, groups digit-for-digit"
 )
 
-ROADMAP10["q347_audio_content_dedup"] = (
-    q347_audio_content_dedup,
-    _Q347_ORACLE,
-    _Q347_NOTES,
+register("q347_audio_content_dedup", _Q347_ORACLE, _Q347_NOTES)(
+    q347_audio_content_dedup
 )
 
 
@@ -500,10 +476,8 @@ _Q348_NOTES = (
     "generation rule, independent of the files"
 )
 
-ROADMAP10["q348_schema_evolution_read"] = (
-    q348_schema_evolution_read,
-    _Q348_ORACLE,
-    _Q348_NOTES,
+register("q348_schema_evolution_read", _Q348_ORACLE, _Q348_NOTES)(
+    q348_schema_evolution_read
 )
 
 
@@ -592,10 +566,8 @@ _Q349_NOTES = (
     "rides 2dp decimals"
 )
 
-ROADMAP10["q349_last_touch_attribution"] = (
-    q349_last_touch_attribution,
-    _Q349_ORACLE,
-    _Q349_NOTES,
+register("q349_last_touch_attribution", _Q349_ORACLE, _Q349_NOTES)(
+    q349_last_touch_attribution
 )
 
 
@@ -721,7 +693,7 @@ _Q350_NOTES = (
     "(strictly-greater counting, engine-exact)"
 )
 
-ROADMAP10["q350_rfm_segments"] = (q350_rfm_segments, _Q350_ORACLE, _Q350_NOTES)
+register("q350_rfm_segments", _Q350_ORACLE, _Q350_NOTES)(q350_rfm_segments)
 
 
 # --- q351: t-closeness audit -----------------------------------------------------
@@ -790,7 +762,7 @@ _Q351_NOTES = (
     "order-independent sum"
 )
 
-ROADMAP10["q351_t_closeness"] = (q351_t_closeness, _Q351_ORACLE, _Q351_NOTES)
+register("q351_t_closeness", _Q351_ORACLE, _Q351_NOTES)(q351_t_closeness)
 
 
 # --- q352: lift / gains chart ------------------------------------------------
@@ -922,7 +894,7 @@ _Q352_NOTES = (
     "integer products"
 )
 
-ROADMAP10["q352_lift_gains"] = (q352_lift_gains, _Q352_ORACLE, _Q352_NOTES)
+register("q352_lift_gains", _Q352_ORACLE, _Q352_NOTES)(q352_lift_gains)
 
 
 # --- q353: streaming dedup within watermark -------------------------------------
@@ -971,10 +943,8 @@ _Q353_NOTES = (
     "the streaming/batch parity discipline of SURVEY 5.2"
 )
 
-ROADMAP10["q353_stream_dedup_watermark"] = (
-    q353_stream_dedup_watermark,
-    _Q353_ORACLE,
-    _Q353_NOTES,
+register("q353_stream_dedup_watermark", _Q353_ORACLE, _Q353_NOTES)(
+    q353_stream_dedup_watermark
 )
 
 
@@ -1013,7 +983,7 @@ _Q354_NOTES = (
     "pytest pins reconstruction dominance + determinism given books"
 )
 
-ROADMAP10["q354_pq_encode"] = (q354_pq_encode, None, _Q354_NOTES)
+register("q354_pq_encode", None, _Q354_NOTES)(q354_pq_encode)
 
 
 # --- q355: keyed pseudonymization -------------------------------------------------
@@ -1066,7 +1036,7 @@ _Q355_NOTES = (
     "token and aggregates digit-for-digit"
 )
 
-ROADMAP10["q355_pseudonymize"] = (q355_pseudonymize, _Q355_ORACLE, _Q355_NOTES)
+register("q355_pseudonymize", _Q355_ORACLE, _Q355_NOTES)(q355_pseudonymize)
 
 
 # --- q356: PMI collocations ----------------------------------------------------
@@ -1140,11 +1110,7 @@ _Q356_NOTES = (
     "windows, pairs, marginals, and the log via lateral generate_series"
 )
 
-ROADMAP10["q356_pmi_collocations"] = (
-    q356_pmi_collocations,
-    _Q356_ORACLE,
-    _Q356_NOTES,
-)
+register("q356_pmi_collocations", _Q356_ORACLE, _Q356_NOTES)(q356_pmi_collocations)
 
 
 # --- q357: dedup pipeline quality audit ------------------------------------------
@@ -1211,11 +1177,7 @@ _Q357_NOTES = (
     "baseline in the q43/q44 class"
 )
 
-ROADMAP10["q357_dedup_quality"] = (
-    q357_dedup_quality,
-    _q357_oracle(),
-    _Q357_NOTES,
-)
+register("q357_dedup_quality", _q357_oracle(), _Q357_NOTES)(q357_dedup_quality)
 
 
 # --- q358: blocklist content filter ----------------------------------------------
@@ -1273,11 +1235,7 @@ _Q358_NOTES = (
     "the token instead (documented)"
 )
 
-ROADMAP10["q358_blocklist_filter"] = (
-    q358_blocklist_filter,
-    _Q358_ORACLE,
-    _Q358_NOTES,
-)
+register("q358_blocklist_filter", _Q358_ORACLE, _Q358_NOTES)(q358_blocklist_filter)
 
 
 # --- q359: high-diameter components via star contraction --------------------------
@@ -1353,10 +1311,8 @@ _Q359_NOTES = (
     "operator itself never sorts globally"
 )
 
-ROADMAP10["q359_components_contracting"] = (
-    q359_components_contracting,
-    _Q359_ORACLE,
-    _Q359_NOTES,
+register("q359_components_contracting", _Q359_ORACLE, _Q359_NOTES)(
+    q359_components_contracting
 )
 
 
@@ -1443,11 +1399,7 @@ _Q360_NOTES = (
     "terms, order-independent sums, 6dp outputs (the q258 rule)"
 )
 
-ROADMAP10["q360_feature_ranking"] = (
-    q360_feature_ranking,
-    _Q360_ORACLE,
-    _Q360_NOTES,
-)
+register("q360_feature_ranking", _Q360_ORACLE, _Q360_NOTES)(q360_feature_ranking)
 
 
 # --- q361: fighting-words log-odds term comparison ---------------------------------
@@ -1510,11 +1462,7 @@ _Q361_NOTES = (
     "sqrt on engine-identical operands, 6dp outputs"
 )
 
-ROADMAP10["q361_fighting_words"] = (
-    q361_fighting_words,
-    _Q361_ORACLE,
-    _Q361_NOTES,
-)
+register("q361_fighting_words", _Q361_ORACLE, _Q361_NOTES)(q361_fighting_words)
 
 
 # --- q362: ranking-stability RBO of int8 quantization -------------------------------
@@ -1609,8 +1557,4 @@ _Q362_NOTES = (
     "absmax+0.5) int8 rule"
 )
 
-ROADMAP10["q362_rbo_quantization"] = (
-    q362_rbo_quantization,
-    _q362_oracle(),
-    _Q362_NOTES,
-)
+register("q362_rbo_quantization", _q362_oracle(), _Q362_NOTES)(q362_rbo_quantization)

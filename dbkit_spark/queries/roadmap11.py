@@ -1,15 +1,10 @@
-"""Round-11 catalog queue (q363+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (imported at the
-bottom of ``roadmap7.py``; must not import roadmap7 back) and landed by
-``roadmap7_landed`` when the rotation arithmetic allows (round 12 —
-the staged-window discipline of the r8 verdict, queue capped at one
-driver window).
+"""Catalog queries q363–q374, each registered where it is defined.
 
 q363–q366 are the VERDICT r10 item-3 candidates; q367+ extend the
 experimentation family. Same template as the r9/r10 additions:
 operator + randomized/hand-case pytest (tests/test_round11.py) +
 oracle pre-verified at sf0.001 and sf0.01
-(tests/test_catalog.py::test_roadmap7_queue_preverified), and the
+(tests/test_oracle.py), and the
 driver-canon contract of SURVEY.md §5.3 (scalar outputs only).
 """
 
@@ -18,10 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..operators.aggregate import stable_avg_sql
 from ..sources import read_table
-
-ROADMAP11: dict[str, tuple] = {}
 
 
 # --- q363: MinHash band/row auto-tuner -----------------------------------------
@@ -100,11 +94,7 @@ _Q363_NOTES = (
     "NUM_BANDS/BAND_ROWS defaults, which is the point"
 )
 
-ROADMAP11["q363_minhash_autotune"] = (
-    q363_minhash_autotune,
-    _q363_oracle(),
-    _Q363_NOTES,
-)
+register("q363_minhash_autotune", _q363_oracle(), _Q363_NOTES)(q363_minhash_autotune)
 
 
 # --- q364: incremental (merge-only) t-digest ------------------------------------
@@ -152,11 +142,7 @@ _Q364_NOTES = (
     "weight conservation, and merge-vs-monolithic agreement"
 )
 
-ROADMAP11["q364_tdigest_incremental"] = (
-    q364_tdigest_incremental,
-    None,
-    _Q364_NOTES,
-)
+register("q364_tdigest_incremental", None, _Q364_NOTES)(q364_tdigest_incremental)
 
 
 # --- q365: delta-mode connected components --------------------------------------
@@ -238,11 +224,7 @@ _Q365_NOTES = (
     "incl. never-seen nodes"
 )
 
-ROADMAP11["q365_components_delta"] = (
-    q365_components_delta,
-    _Q365_ORACLE,
-    _Q365_NOTES,
-)
+register("q365_components_delta", _Q365_ORACLE, _Q365_NOTES)(q365_components_delta)
 
 
 # --- q366: PQ recall@k eval ------------------------------------------------------
@@ -279,11 +261,7 @@ _Q366_NOTES = (
     "n_hit <= k"
 )
 
-ROADMAP11["q366_pq_recall"] = (
-    q366_pq_recall,
-    None,
-    _Q366_NOTES,
-)
+register("q366_pq_recall", None, _Q366_NOTES)(q366_pq_recall)
 
 
 # --- q367: CUPED variance-reduced A/B readout -----------------------------------
@@ -390,11 +368,7 @@ _Q367_NOTES = (
     "on correlated synthetic data) pytest-pinned"
 )
 
-ROADMAP11["q367_cuped_lift"] = (
-    q367_cuped_lift,
-    _q367_oracle(),
-    _Q367_NOTES,
-)
+register("q367_cuped_lift", _q367_oracle(), _Q367_NOTES)(q367_cuped_lift)
 
 
 # --- q368: Holt linear (double-exponential) smoothing ----------------------------
@@ -462,11 +436,7 @@ _Q368_NOTES = (
     "converges to the next point while EWMA lags) pytest-pinned"
 )
 
-ROADMAP11["q368_holt_smoothing"] = (
-    q368_holt_smoothing,
-    _Q368_ORACLE,
-    _Q368_NOTES,
-)
+register("q368_holt_smoothing", _Q368_ORACLE, _Q368_NOTES)(q368_holt_smoothing)
 
 
 # --- q369: multi-touch (linear) attribution ---------------------------------------
@@ -556,11 +526,7 @@ _Q369_NOTES = (
     "pytest-pinned"
 )
 
-ROADMAP11["q369_linear_attribution"] = (
-    q369_linear_attribution,
-    _Q369_ORACLE,
-    _Q369_NOTES,
-)
+register("q369_linear_attribution", _Q369_ORACLE, _Q369_NOTES)(q369_linear_attribution)
 
 
 # --- q370: difference-in-differences --------------------------------------------
@@ -634,11 +600,7 @@ _Q370_NOTES = (
     "interaction sign and the trend-cancellation law"
 )
 
-ROADMAP11["q370_diff_in_diff"] = (
-    q370_diff_in_diff,
-    _q370_oracle(),
-    _Q370_NOTES,
-)
+register("q370_diff_in_diff", _q370_oracle(), _Q370_NOTES)(q370_diff_in_diff)
 
 
 # --- q371: winsorized (capped) metric readout -------------------------------------
@@ -704,10 +666,8 @@ _Q371_NOTES = (
     "the pooled-not-per-arm law"
 )
 
-ROADMAP11["q371_winsorized_metrics"] = (
-    q371_winsorized_metrics,
-    _q371_oracle(),
-    _Q371_NOTES,
+register("q371_winsorized_metrics", _q371_oracle(), _Q371_NOTES)(
+    q371_winsorized_metrics
 )
 
 
@@ -790,11 +750,7 @@ _Q372_NOTES = (
     "null as n grows along a prefix chain) pytest-pinned"
 )
 
-ROADMAP11["q372_msprt_sequential"] = (
-    q372_msprt_sequential,
-    _q372_oracle(),
-    _Q372_NOTES,
-)
+register("q372_msprt_sequential", _q372_oracle(), _Q372_NOTES)(q372_msprt_sequential)
 
 
 # --- q373: sample-ratio-mismatch guardrail ------------------------------------------
@@ -860,11 +816,7 @@ _Q373_NOTES = (
     "split-stays-quiet law pytest-pinned"
 )
 
-ROADMAP11["q373_srm_check"] = (
-    q373_srm_check,
-    _q373_oracle(),
-    _Q373_NOTES,
-)
+register("q373_srm_check", _q373_oracle(), _Q373_NOTES)(q373_srm_check)
 
 
 # --- q374: corpus-level boilerplate removal -----------------------------------------
@@ -957,8 +909,6 @@ _Q374_NOTES = (
     "anchors. Threshold/order/empty-doc laws pytest-pinned"
 )
 
-ROADMAP11["q374_boilerplate_removal"] = (
-    q374_boilerplate_removal,
-    _Q374_ORACLE,
-    _Q374_NOTES,
+register("q374_boilerplate_removal", _Q374_ORACLE, _Q374_NOTES)(
+    q374_boilerplate_removal
 )

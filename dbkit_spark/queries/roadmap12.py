@@ -1,9 +1,4 @@
-"""Round-12 catalog queue (q375+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (imported at the
-bottom of ``roadmap7.py``; must not import roadmap7 back) and landed by
-``roadmap7_landed`` when the rotation arithmetic allows (round 13 —
-the staged-window discipline of the r8 verdict, queue capped at one
-driver window).
+"""Catalog queries q375–q400, each registered where it is defined.
 
 q375–q378 are the VERDICT r11 item-3 candidates (SemDeDup, n-gram
 novelty, tokenizer-fertility drift, per-domain score-calibration
@@ -13,7 +8,7 @@ epoch planner, head/middle/tail buckets). Same template as the
 r9/r10/r11 additions: operator +
 randomized/hand-case pytest (tests/test_round12.py) + oracle
 pre-verified at sf0.001 and sf0.01
-(tests/test_catalog.py::test_roadmap7_queue_preverified), and the
+(tests/test_oracle.py), and the
 driver-canon contract of SURVEY.md §5.3 (scalar outputs only).
 """
 
@@ -22,9 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
-
-ROADMAP12: dict[str, tuple] = {}
 
 
 # --- q375: SemDeDup within-cluster semantic dedup --------------------------------
@@ -107,7 +101,7 @@ _Q375_NOTES = (
     "cosine 6dp (q43 rule). Never all-pairs, no corpus window"
 )
 
-ROADMAP12["q375_semdedup"] = (q375_semdedup, _q375_oracle(), _Q375_NOTES)
+register("q375_semdedup", _q375_oracle(), _Q375_NOTES)(q375_semdedup)
 
 
 # --- q376: n-gram novelty vs frozen reference corpus ------------------------------
@@ -167,7 +161,7 @@ _Q376_NOTES = (
     "byte-exact). Docs with < n tokens excluded (novelty undefined)"
 )
 
-ROADMAP12["q376_ngram_novelty"] = (q376_ngram_novelty, _q376_oracle(), _Q376_NOTES)
+register("q376_ngram_novelty", _q376_oracle(), _Q376_NOTES)(q376_ngram_novelty)
 
 
 # --- q377: tokenizer-fertility drift per domain over crawl batches ---------------
@@ -237,11 +231,7 @@ _Q377_NOTES = (
     "contract (feed bpe_encode output for the learned-BPE reading)"
 )
 
-ROADMAP12["q377_fertility_drift"] = (
-    q377_fertility_drift,
-    _q377_oracle(),
-    _Q377_NOTES,
-)
+register("q377_fertility_drift", _q377_oracle(), _Q377_NOTES)(q377_fertility_drift)
 
 
 # --- q378: per-domain score-calibration drift (grouped PSI) -----------------------
@@ -334,7 +324,7 @@ _Q378_NOTES = (
     "at 1e-6 so ln stays finite; psi repeated per row (q223 convention)"
 )
 
-ROADMAP12["q378_score_psi"] = (q378_score_psi, _q378_oracle(), _Q378_NOTES)
+register("q378_score_psi", _q378_oracle(), _Q378_NOTES)(q378_score_psi)
 
 
 # --- q379: CCNet-style bigram-LM perplexity gate ----------------------------------
@@ -412,11 +402,7 @@ _Q379_NOTES = (
     "tokens excluded (score undefined)"
 )
 
-ROADMAP12["q379_bigram_perplexity"] = (
-    q379_bigram_perplexity,
-    _q379_oracle(),
-    _Q379_NOTES,
-)
+register("q379_bigram_perplexity", _q379_oracle(), _Q379_NOTES)(q379_bigram_perplexity)
 
 
 # --- q380: DSIR hashed-feature importance weighting -------------------------------
@@ -485,11 +471,7 @@ _Q380_NOTES = (
     "resampling step"
 )
 
-ROADMAP12["q380_dsir_importance"] = (
-    q380_dsir_importance,
-    _q380_oracle(),
-    _Q380_NOTES,
-)
+register("q380_dsir_importance", _q380_oracle(), _Q380_NOTES)(q380_dsir_importance)
 
 
 # --- q381: data-constrained mixture epoch planner ---------------------------------
@@ -578,7 +560,7 @@ _Q381_NOTES = (
     "shortfall) and domains that cap at every fixture scale"
 )
 
-ROADMAP12["q381_epoch_plan"] = (q381_epoch_plan, _q381_oracle(), _Q381_NOTES)
+register("q381_epoch_plan", _q381_oracle(), _Q381_NOTES)(q381_epoch_plan)
 
 
 # --- q382: CCNet head/middle/tail perplexity buckets -------------------------------
@@ -684,10 +666,8 @@ _Q382_NOTES = (
     "DOWN (<=), deterministic under any row order"
 )
 
-ROADMAP12["q382_perplexity_buckets"] = (
-    q382_perplexity_buckets,
-    _q382_oracle(),
-    _Q382_NOTES,
+register("q382_perplexity_buckets", _q382_oracle(), _Q382_NOTES)(
+    q382_perplexity_buckets
 )
 
 
@@ -773,11 +753,7 @@ _Q383_NOTES = (
     "quality stack next to q45 repetition and q47 composite score"
 )
 
-ROADMAP12["q383_gopher_filters"] = (
-    q383_gopher_filters,
-    _q383_oracle(),
-    _Q383_NOTES,
-)
+register("q383_gopher_filters", _q383_oracle(), _Q383_NOTES)(q383_gopher_filters)
 
 
 # --- q384: Zipf-law fit per language -----------------------------------------------
@@ -848,7 +824,7 @@ _Q384_NOTES = (
     "folded sums"
 )
 
-ROADMAP12["q384_zipf_fit"] = (q384_zipf_fit, _q384_oracle(), _Q384_NOTES)
+register("q384_zipf_fit", _q384_oracle(), _Q384_NOTES)(q384_zipf_fit)
 
 
 # --- q385: per-domain unigram JS divergence ----------------------------------------
@@ -923,7 +899,7 @@ _Q385_NOTES = (
     "double"
 )
 
-ROADMAP12["q385_unigram_js"] = (q385_unigram_js, _q385_oracle(), _Q385_NOTES)
+register("q385_unigram_js", _q385_oracle(), _Q385_NOTES)(q385_unigram_js)
 
 
 # --- q386: cross-source near-dup leakage matrix ------------------------------------
@@ -984,11 +960,7 @@ _Q386_NOTES = (
     "pair-table sized, never corpus-sized, no window/collect"
 )
 
-ROADMAP12["q386_leakage_matrix"] = (
-    q386_leakage_matrix,
-    _q386_oracle(),
-    _Q386_NOTES,
-)
+register("q386_leakage_matrix", _q386_oracle(), _Q386_NOTES)(q386_leakage_matrix)
 
 
 # --- q387: fixed-context padding/truncation waste ----------------------------------
@@ -1047,11 +1019,7 @@ _Q387_NOTES = (
     "budget)"
 )
 
-ROADMAP12["q387_padding_waste"] = (
-    q387_padding_waste,
-    _q387_oracle(),
-    _Q387_NOTES,
-)
+register("q387_padding_waste", _q387_oracle(), _Q387_NOTES)(q387_padding_waste)
 
 
 # --- q388: dedup threshold sensitivity curve ---------------------------------------
@@ -1126,11 +1094,7 @@ _Q388_NOTES = (
     "the minhash/prefix-filter pair tables)"
 )
 
-ROADMAP12["q388_dedup_sensitivity"] = (
-    q388_dedup_sensitivity,
-    _q388_oracle(),
-    _Q388_NOTES,
-)
+register("q388_dedup_sensitivity", _q388_oracle(), _Q388_NOTES)(q388_dedup_sensitivity)
 
 
 # --- q389: quantile treatment effects ----------------------------------------------
@@ -1213,11 +1177,7 @@ _Q389_NOTES = (
     "winsorized means"
 )
 
-ROADMAP12["q389_quantile_lift"] = (
-    q389_quantile_lift,
-    _q389_oracle(),
-    _Q389_NOTES,
-)
+register("q389_quantile_lift", _q389_oracle(), _Q389_NOTES)(q389_quantile_lift)
 
 
 # --- q390: quality-aware dedup survivor selection ----------------------------------
@@ -1292,10 +1252,8 @@ _Q390_NOTES = (
     "composes q48's fingerprint clusters with q47's quality score"
 )
 
-ROADMAP12["q390_survivor_by_quality"] = (
-    q390_survivor_by_quality,
-    _q390_oracle(),
-    _Q390_NOTES,
+register("q390_survivor_by_quality", _q390_oracle(), _Q390_NOTES)(
+    q390_survivor_by_quality
 )
 
 
@@ -1350,11 +1308,7 @@ _Q391_NOTES = (
     "Map-only explode, one aggregate, no window"
 )
 
-ROADMAP12["q391_chunk_dedup_rate"] = (
-    q391_chunk_dedup_rate,
-    _q391_oracle(),
-    _Q391_NOTES,
-)
+register("q391_chunk_dedup_rate", _q391_oracle(), _Q391_NOTES)(q391_chunk_dedup_rate)
 
 
 # --- q392: hard-negative mining for contrastive training ---------------------------
@@ -1424,11 +1378,7 @@ _Q392_NOTES = (
     "candidate set. One bucket exchange + one anchor-keyed window"
 )
 
-ROADMAP12["q392_hard_negatives"] = (
-    q392_hard_negatives,
-    _q392_oracle(),
-    _Q392_NOTES,
-)
+register("q392_hard_negatives", _q392_oracle(), _Q392_NOTES)(q392_hard_negatives)
 
 
 # --- q393: experiment power / sample-size calculator -------------------------------
@@ -1489,11 +1439,7 @@ _Q393_NOTES = (
     "(q367/q370/q371/q389) -> stop (q372)"
 )
 
-ROADMAP12["q393_power_analysis"] = (
-    q393_power_analysis,
-    _q393_oracle(),
-    _Q393_NOTES,
-)
+register("q393_power_analysis", _q393_oracle(), _Q393_NOTES)(q393_power_analysis)
 
 
 # --- q394: clustering agreement (ARI) between k-means labels and LSH buckets -------
@@ -1569,10 +1515,8 @@ _Q394_NOTES = (
     "0 -> NULL by documented convention"
 )
 
-ROADMAP12["q394_clustering_agreement"] = (
-    q394_clustering_agreement,
-    _q394_oracle(),
-    _Q394_NOTES,
+register("q394_clustering_agreement", _q394_oracle(), _Q394_NOTES)(
+    q394_clustering_agreement
 )
 
 
@@ -1648,10 +1592,8 @@ _Q395_NOTES = (
     "shape (one interval per segment/model/horizon)"
 )
 
-ROADMAP12["q395_conformal_interval"] = (
-    q395_conformal_interval,
-    _q395_oracle(),
-    _Q395_NOTES,
+register("q395_conformal_interval", _q395_oracle(), _Q395_NOTES)(
+    q395_conformal_interval
 )
 
 
@@ -1776,11 +1718,7 @@ _Q396_NOTES = (
     "ratios are single IEEE divisions of exact LONGs"
 )
 
-ROADMAP12["q396_dedup_retention"] = (
-    q396_dedup_retention,
-    _q396_oracle(),
-    _Q396_NOTES,
-)
+register("q396_dedup_retention", _q396_oracle(), _Q396_NOTES)(q396_dedup_retention)
 
 
 # --- q397: merge-only incremental bigram-LM maintenance ----------------------------
@@ -1827,11 +1765,7 @@ _Q397_NOTES = (
     "can). Work scales with model tables, never corpora"
 )
 
-ROADMAP12["q397_bigram_lm_merged"] = (
-    q397_bigram_lm_merged,
-    _q379_oracle(),
-    _Q397_NOTES,
-)
+register("q397_bigram_lm_merged", _q379_oracle(), _Q397_NOTES)(q397_bigram_lm_merged)
 
 
 # --- q398: streaming ingest quality gate -------------------------------------------
@@ -1869,10 +1803,8 @@ _Q398_NOTES = (
     "map-only operators all lift to Structured Streaming unchanged"
 )
 
-ROADMAP12["q398_stream_quality_gate"] = (
-    q398_stream_quality_gate,
-    _q383_oracle(),
-    _Q398_NOTES,
+register("q398_stream_quality_gate", _q383_oracle(), _Q398_NOTES)(
+    q398_stream_quality_gate
 )
 
 
@@ -1958,10 +1890,8 @@ _Q399_NOTES = (
     "identity is exact only for within-bin-constant forecasts"
 )
 
-ROADMAP12["q399_brier_decomposition"] = (
-    q399_brier_decomposition,
-    _q399_oracle(),
-    _Q399_NOTES,
+register("q399_brier_decomposition", _q399_oracle(), _Q399_NOTES)(
+    q399_brier_decomposition
 )
 
 
@@ -2023,4 +1953,4 @@ _Q400_NOTES = (
     "fixture scale"
 )
 
-ROADMAP12["q400_weighted_ess"] = (q400_weighted_ess, _q400_oracle(), _Q400_NOTES)
+register("q400_weighted_ess", _q400_oracle(), _Q400_NOTES)(q400_weighted_ess)

@@ -1,9 +1,4 @@
-"""Round-13 catalog queue (q401+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (imported at the
-bottom of ``roadmap7.py``; must not import roadmap7 back) and landed by
-``roadmap7_landed`` when the rotation arithmetic allows (round 14 —
-the staged-window discipline of the r8 verdict, queue capped at one
-driver window).
+"""Catalog queries q401–q432, each registered where it is defined.
 
 q401–q404 are the VERDICT r12 item-4 candidates (fastText-style hashed
 linear quality classifier, contamination-aware eval-split carving,
@@ -22,7 +17,7 @@ jackknife, the Good-Turing unseen-mass audit, IPF raking weights,
 and unbiased pass@k. Same
 template as the r9–r12 additions: operator + randomized/hand-case
 pytest (tests/test_round13.py) + oracle pre-verified at sf0.001 and
-sf0.01 (tests/test_catalog.py::test_roadmap7_queue_preverified), and
+sf0.01 (tests/test_oracle.py), and
 the driver-canon contract of SURVEY.md §5.3 (scalar outputs only).
 """
 
@@ -31,9 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
 
-ROADMAP13: dict[str, tuple] = {}
 
 # DuckDB twin of the portable 24-bit md5 bucket rule (the q380 digit
 # replay) — parameterized on the hashed expression and the modulus.
@@ -135,10 +130,8 @@ _Q401_NOTES = (
     "oracle), exact LONG counts, ln 9dp, decimal per-doc sums"
 )
 
-ROADMAP13["q401_quality_classifier"] = (
-    q401_quality_classifier,
-    _q401_oracle(),
-    _Q401_NOTES,
+register("q401_quality_classifier", _q401_oracle(), _Q401_NOTES)(
+    q401_quality_classifier
 )
 
 
@@ -222,10 +215,8 @@ _Q402_NOTES = (
     "whose SQL replay the oracle shares). No corpus window, no collect"
 )
 
-ROADMAP13["q402_eval_holdout_carve"] = (
-    q402_eval_holdout_carve,
-    _q402_oracle(),
-    _Q402_NOTES,
+register("q402_eval_holdout_carve", _q402_oracle(), _Q402_NOTES)(
+    q402_eval_holdout_carve
 )
 
 
@@ -348,11 +339,7 @@ _Q403_NOTES = (
     "exactly to semdedup(new) (pytest law). Work scales with the batch"
 )
 
-ROADMAP13["q403_semdedup_delta"] = (
-    q403_semdedup_delta,
-    _q403_oracle(),
-    _Q403_NOTES,
-)
+register("q403_semdedup_delta", _q403_oracle(), _Q403_NOTES)(q403_semdedup_delta)
 
 
 # --- q404: per-domain token-budget water-filling -------------------------------------
@@ -477,10 +464,8 @@ _Q404_NOTES = (
     "Sum(allocated) = min(budget, sum caps) — pytest conservation law"
 )
 
-ROADMAP13["q404_token_budget_waterfill"] = (
-    q404_token_budget_waterfill,
-    _q404_oracle(),
-    _Q404_NOTES,
+register("q404_token_budget_waterfill", _q404_oracle(), _Q404_NOTES)(
+    q404_token_budget_waterfill
 )
 
 
@@ -571,10 +556,8 @@ _Q405_NOTES = (
     "as the SQL-replayable deviation from the paper's interval union"
 )
 
-ROADMAP13["q405_repetition_filters"] = (
-    q405_repetition_filters,
-    _q405_oracle(),
-    _Q405_NOTES,
+register("q405_repetition_filters", _q405_oracle(), _Q405_NOTES)(
+    q405_repetition_filters
 )
 
 
@@ -631,7 +614,7 @@ _Q406_NOTES = (
     "string dotted quads are a documented false-positive class"
 )
 
-ROADMAP13["q406_pii_scrub"] = (q406_pii_scrub, _q406_oracle(), _Q406_NOTES)
+register("q406_pii_scrub", _q406_oracle(), _Q406_NOTES)(q406_pii_scrub)
 
 
 # --- q407: Mann-Whitney U ------------------------------------------------------------
@@ -753,11 +736,7 @@ _Q407_NOTES = (
     "rejected compares the UNROUNDED adj_p (oracle mirrors)"
 )
 
-ROADMAP13["q407_fdr_battery"] = (
-    q407_fdr_battery,
-    _q407_oracle(),
-    _Q407_NOTES,
-)
+register("q407_fdr_battery", _q407_oracle(), _Q407_NOTES)(q407_fdr_battery)
 
 
 # --- q408: delta-method ratio metric -------------------------------------------------
@@ -886,10 +865,8 @@ _Q408_NOTES = (
     "NULL z / significant=false"
 )
 
-ROADMAP13["q408_ratio_metric_delta"] = (
-    q408_ratio_metric_delta,
-    _q408_oracle(),
-    _Q408_NOTES,
+register("q408_ratio_metric_delta", _q408_oracle(), _Q408_NOTES)(
+    q408_ratio_metric_delta
 )
 
 
@@ -965,10 +942,8 @@ _Q409_NOTES = (
     "degenerate inputs (J<2, N==J) report NULL diagnostics"
 )
 
-ROADMAP13["q409_cluster_design_effect"] = (
-    q409_cluster_design_effect,
-    _q409_oracle(),
-    _Q409_NOTES,
+register("q409_cluster_design_effect", _q409_oracle(), _Q409_NOTES)(
+    q409_cluster_design_effect
 )
 
 
@@ -1018,11 +993,7 @@ _Q410_NOTES = (
     "broadcastable"
 )
 
-ROADMAP13["q410_vocab_coverage"] = (
-    q410_vocab_coverage,
-    _q410_oracle(),
-    _Q410_NOTES,
-)
+register("q410_vocab_coverage", _q410_oracle(), _Q410_NOTES)(q410_vocab_coverage)
 
 
 # --- q411: prototypicality outliers --------------------------------------------------
@@ -1112,11 +1083,7 @@ _Q411_NOTES = (
     "zero-variance clusters report NULL z"
 )
 
-ROADMAP13["q411_prototypicality"] = (
-    q411_prototypicality,
-    _q411_oracle(),
-    _Q411_NOTES,
-)
+register("q411_prototypicality", _q411_oracle(), _Q411_NOTES)(q411_prototypicality)
 
 
 # --- q412: post-stratified lift ------------------------------------------------------
@@ -1221,11 +1188,7 @@ _Q412_NOTES = (
     "down, documented)"
 )
 
-ROADMAP13["q412_stratified_lift"] = (
-    q412_stratified_lift,
-    _q412_oracle(),
-    _Q412_NOTES,
-)
+register("q412_stratified_lift", _q412_oracle(), _Q412_NOTES)(q412_stratified_lift)
 
 
 # --- q413: mixture health ------------------------------------------------------------
@@ -1288,11 +1251,7 @@ _Q413_NOTES = (
     "a decimal fold"
 )
 
-ROADMAP13["q413_mixture_health"] = (
-    q413_mixture_health,
-    _q413_oracle(),
-    _Q413_NOTES,
-)
+register("q413_mixture_health", _q413_oracle(), _Q413_NOTES)(q413_mixture_health)
 
 
 # --- q414: streaming PII gate --------------------------------------------------------
@@ -1329,11 +1288,7 @@ _Q414_NOTES = (
     "curation operators lift to Structured Streaming unchanged"
 )
 
-ROADMAP13["q414_stream_pii_gate"] = (
-    q414_stream_pii_gate,
-    _q406_oracle(),
-    _Q414_NOTES,
-)
+register("q414_stream_pii_gate", _q406_oracle(), _Q414_NOTES)(q414_stream_pii_gate)
 
 
 # --- q415: JL projection + recall eval -----------------------------------------------
@@ -1438,10 +1393,8 @@ _Q415_NOTES = (
     "the JL lemma bounds"
 )
 
-ROADMAP13["q415_jl_projection_recall"] = (
-    q415_jl_projection_recall,
-    _q415_oracle(),
-    _Q415_NOTES,
+register("q415_jl_projection_recall", _q415_oracle(), _Q415_NOTES)(
+    q415_jl_projection_recall
 )
 
 
@@ -1500,11 +1453,7 @@ _Q416_NOTES = (
     "and fail the flag"
 )
 
-ROADMAP13["q416_char_class_mix"] = (
-    q416_char_class_mix,
-    _q416_oracle(),
-    _Q416_NOTES,
-)
+register("q416_char_class_mix", _q416_oracle(), _Q416_NOTES)(q416_char_class_mix)
 
 
 # --- q417: interpolated trigram LM gate ----------------------------------------------
@@ -1593,11 +1542,7 @@ _Q417_NOTES = (
     "zero out. ln 9dp, per-doc decimal sums, 6dp out"
 )
 
-ROADMAP13["q417_trigram_lm_gate"] = (
-    q417_trigram_lm_gate,
-    _q417_oracle(),
-    _Q417_NOTES,
-)
+register("q417_trigram_lm_gate", _q417_oracle(), _Q417_NOTES)(q417_trigram_lm_gate)
 
 
 # --- q418: end-to-end curation funnel -------------------------------------------------
@@ -1756,11 +1701,7 @@ _Q418_NOTES = (
     "stack"
 )
 
-ROADMAP13["q418_curation_funnel"] = (
-    q418_curation_funnel,
-    _q418_oracle(),
-    _Q418_NOTES,
-)
+register("q418_curation_funnel", _q418_oracle(), _Q418_NOTES)(q418_curation_funnel)
 
 
 # --- q419-q421: preference-data trio (RLHF / arena readouts) ------------------------
@@ -1899,11 +1840,7 @@ _Q419_NOTES = (
     "tiebreaker (SURVEY 5.3 rule 5)"
 )
 
-ROADMAP13["q419_bradley_terry"] = (
-    q419_bradley_terry,
-    _q419_oracle(),
-    _Q419_NOTES,
-)
+register("q419_bradley_terry", _q419_oracle(), _Q419_NOTES)(q419_bradley_terry)
 
 
 def q420_preference_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1967,11 +1904,7 @@ _Q420_NOTES = (
     "is one division"
 )
 
-ROADMAP13["q420_preference_cycles"] = (
-    q420_preference_cycles,
-    _Q420_ORACLE,
-    _Q420_NOTES,
-)
+register("q420_preference_cycles", _Q420_ORACLE, _Q420_NOTES)(q420_preference_cycles)
 
 
 def q421_pairwise_winrates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2033,11 +1966,7 @@ _Q421_NOTES = (
     "libm so bounds round at 6dp"
 )
 
-ROADMAP13["q421_pairwise_winrates"] = (
-    q421_pairwise_winrates,
-    _q421_oracle(),
-    _Q421_NOTES,
-)
+register("q421_pairwise_winrates", _q421_oracle(), _Q421_NOTES)(q421_pairwise_winrates)
 
 
 # --- q422: model-propensity IPW lift ---------------------------------------------------
@@ -2181,7 +2110,7 @@ _Q422_NOTES = (
     "convention), 6dp out"
 )
 
-ROADMAP13["q422_ipw_lift"] = (q422_ipw_lift, _q422_oracle(), _Q422_NOTES)
+register("q422_ipw_lift", _q422_oracle(), _Q422_NOTES)(q422_ipw_lift)
 
 
 # --- q423: code-corpus quality filters -------------------------------------------------
@@ -2248,11 +2177,7 @@ _Q423_NOTES = (
     "the Java-regex/RE2 common subset (q406 rule)"
 )
 
-ROADMAP13["q423_code_quality"] = (
-    q423_code_quality,
-    _Q423_ORACLE,
-    _Q423_NOTES,
-)
+register("q423_code_quality", _Q423_ORACLE, _Q423_NOTES)(q423_code_quality)
 
 
 # --- q424: Krippendorff's alpha --------------------------------------------------------
@@ -2363,10 +2288,8 @@ _Q424_NOTES = (
     "exact-integer-derived, 6dp out"
 )
 
-ROADMAP13["q424_krippendorff_alpha"] = (
-    q424_krippendorff_alpha,
-    _q424_oracle(),
-    _Q424_NOTES,
+register("q424_krippendorff_alpha", _q424_oracle(), _Q424_NOTES)(
+    q424_krippendorff_alpha
 )
 
 
@@ -2457,11 +2380,7 @@ _Q425_NOTES = (
     "rule); sqrt libm, 6dp out"
 )
 
-ROADMAP13["q425_jackknife_ratio"] = (
-    q425_jackknife_ratio,
-    _q425_oracle(),
-    _Q425_NOTES,
-)
+register("q425_jackknife_ratio", _q425_oracle(), _Q425_NOTES)(q425_jackknife_ratio)
 
 
 # --- q426: Good-Turing unseen-mass audit -----------------------------------------------
@@ -2525,11 +2444,7 @@ _Q426_NOTES = (
     "IEEE division of exact integers, 6dp out"
 )
 
-ROADMAP13["q426_good_turing"] = (
-    q426_good_turing,
-    _q426_oracle(),
-    _Q426_NOTES,
-)
+register("q426_good_turing", _q426_oracle(), _Q426_NOTES)(q426_good_turing)
 
 
 # --- q427/q428: preference bias audits ---------------------------------------------------
@@ -2658,10 +2573,8 @@ _Q427_NOTES = (
     "back to the raw rate (no variation = no estimable bias)"
 )
 
-ROADMAP13["q427_length_controlled_winrate"] = (
-    q427_length_controlled_winrate,
-    _q427_oracle(),
-    _Q427_NOTES,
+register("q427_length_controlled_winrate", _q427_oracle(), _Q427_NOTES)(
+    q427_length_controlled_winrate
 )
 
 
@@ -2709,11 +2622,7 @@ _Q428_NOTES = (
     "the verdict is computed IN the engine, no client-side CDF lookup"
 )
 
-ROADMAP13["q428_order_bias"] = (
-    q428_order_bias,
-    _q428_oracle(),
-    _Q428_NOTES,
-)
+register("q428_order_bias", _q428_oracle(), _Q428_NOTES)(q428_order_bias)
 
 
 # --- q429: propensity-overlap diagnostic ---------------------------------------------
@@ -2784,10 +2693,8 @@ _Q429_NOTES = (
     "shares single divisions 6dp"
 )
 
-ROADMAP13["q429_propensity_overlap"] = (
-    q429_propensity_overlap,
-    _q429_oracle(),
-    _Q429_NOTES,
+register("q429_propensity_overlap", _q429_oracle(), _Q429_NOTES)(
+    q429_propensity_overlap
 )
 
 
@@ -2888,11 +2795,7 @@ _Q430_NOTES = (
     "CTEs (the q419 lesson)"
 )
 
-ROADMAP13["q430_raking_weights"] = (
-    q430_raking_weights,
-    _q430_oracle(),
-    _Q430_NOTES,
-)
+register("q430_raking_weights", _q430_oracle(), _Q430_NOTES)(q430_raking_weights)
 
 
 # --- q431: unbiased pass@k -------------------------------------------------------------
@@ -2954,7 +2857,7 @@ _Q431_NOTES = (
     "pass@k exactly 1 whenever n-c < k"
 )
 
-ROADMAP13["q431_pass_at_k"] = (q431_pass_at_k, _Q431_ORACLE, _Q431_NOTES)
+register("q431_pass_at_k", _Q431_ORACLE, _Q431_NOTES)(q431_pass_at_k)
 
 
 # --- q432: best-of-n expected maximum ----------------------------------------------------
@@ -3026,4 +2929,4 @@ _Q432_NOTES = (
     "6dp out; n<k problems NULL and counted out"
 )
 
-ROADMAP13["q432_best_of_n"] = (q432_best_of_n, _Q432_ORACLE, _Q432_NOTES)
+register("q432_best_of_n", _Q432_ORACLE, _Q432_NOTES)(q432_best_of_n)

@@ -1,9 +1,4 @@
-"""Round-14 catalog queue (q433+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (imported at the
-bottom of ``roadmap7.py``; must not import roadmap7 back) and landed by
-``roadmap7_landed`` when the rotation arithmetic allows (round 15 —
-the staged-window discipline of the r8 verdict, queue capped at one
-driver window).
+"""Catalog queries q433–q460, each registered where it is defined.
 
 Theme: the GENERATION-EVALUATION layer (token-F1/EM, corpus BLEU,
 ROUGE-N, chrF, distinct-n diversity, pooled self-BLEU — the
@@ -15,7 +10,7 @@ both binnings, MAUVE-style divergence frontier, 2x2 factorial
 interaction, Kendall tau-b leaderboard stability). Same template as
 the r9-r13 additions: operator + law/hand-case pytests
 (tests/test_round14.py) + oracle pre-verified at sf0.001 and sf0.01
-(tests/test_catalog.py::test_roadmap7_queue_preverified) at the
+(tests/test_oracle.py) at the
 driver-canon contract of SURVEY.md Section 5.3 (scalar outputs only,
 identical aliases both engines, unique tiebreakers).
 
@@ -33,10 +28,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..functions.text import tokens
 from ..sources import read_table
 
-ROADMAP14: dict[str, tuple] = {}
 
 # DuckDB twin of functions/text.tokens
 _T = "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
@@ -154,7 +149,7 @@ _Q433_NOTES = (
     "(vacuous), one-empty 0"
 )
 
-ROADMAP14["q433_token_f1"] = (q433_token_f1, _q433_oracle(), _Q433_NOTES)
+register("q433_token_f1", _q433_oracle(), _Q433_NOTES)(q433_token_f1)
 
 
 # --- q434: corpus BLEU -------------------------------------------------------
@@ -231,7 +226,7 @@ _Q434_NOTES = (
     "one 4-row reduce + 1-row broadcasts"
 )
 
-ROADMAP14["q434_bleu_corpus"] = (q434_bleu_corpus, _q434_oracle(), _Q434_NOTES)
+register("q434_bleu_corpus", _q434_oracle(), _Q434_NOTES)(q434_bleu_corpus)
 
 
 # --- q435: ROUGE-N -----------------------------------------------------------
@@ -293,7 +288,7 @@ _Q435_NOTES = (
     "pair-keyed end-to-end"
 )
 
-ROADMAP14["q435_rouge_n"] = (q435_rouge_n, _q435_oracle(), _Q435_NOTES)
+register("q435_rouge_n", _q435_oracle(), _Q435_NOTES)(q435_rouge_n)
 
 
 # --- q436: chrF --------------------------------------------------------------
@@ -385,7 +380,7 @@ _Q436_NOTES = (
     "nothing corpus-global"
 )
 
-ROADMAP14["q436_chrf"] = (q436_chrf, _q436_oracle(), _Q436_NOTES)
+register("q436_chrf", _q436_oracle(), _Q436_NOTES)(q436_chrf)
 
 
 # --- q437: distinct-n diversity ----------------------------------------------
@@ -430,7 +425,7 @@ _Q437_NOTES = (
     "ONE IEEE division of exact LONGs, 6dp"
 )
 
-ROADMAP14["q437_distinct_n"] = (q437_distinct_n, _q437_oracle(), _Q437_NOTES)
+register("q437_distinct_n", _q437_oracle(), _Q437_NOTES)(q437_distinct_n)
 
 
 # --- q438: pooled self-BLEU --------------------------------------------------
@@ -481,7 +476,7 @@ _Q438_NOTES = (
     "LONG, one IEEE division, 6dp"
 )
 
-ROADMAP14["q438_self_bleu"] = (q438_self_bleu, _q438_oracle(), _Q438_NOTES)
+register("q438_self_bleu", _q438_oracle(), _Q438_NOTES)(q438_self_bleu)
 
 
 # --- q439: C4 line-filter battery --------------------------------------------
@@ -577,11 +572,7 @@ _Q439_NOTES = (
     "list-for-list"
 )
 
-ROADMAP14["q439_c4_line_filters"] = (
-    q439_c4_line_filters,
-    _q439_oracle(),
-    _Q439_NOTES,
-)
+register("q439_c4_line_filters", _q439_oracle(), _Q439_NOTES)(q439_c4_line_filters)
 
 
 # --- q440: Gopher duplicate line/paragraph fractions -------------------------
@@ -716,11 +707,7 @@ _Q440_NOTES = (
     "real duplicates), oracle replays the nested list construction"
 )
 
-ROADMAP14["q440_dup_segments"] = (
-    q440_dup_segments,
-    _q440_oracle(),
-    _Q440_NOTES,
-)
+register("q440_dup_segments", _q440_oracle(), _Q440_NOTES)(q440_dup_segments)
 
 
 # --- q441: expected calibration error ----------------------------------------
@@ -817,7 +804,7 @@ _Q441_NOTES = (
     "portable-hash rule so the oracle replays digit-for-digit"
 )
 
-ROADMAP14["q441_ece"] = (q441_ece, _q441_oracle(), _Q441_NOTES)
+register("q441_ece", _q441_oracle(), _Q441_NOTES)(q441_ece)
 
 
 # --- q442: MAUVE-style divergence frontier -----------------------------------
@@ -900,11 +887,7 @@ _Q442_NOTES = (
     "constant fixed at 1 (documented simplification of the paper's c)"
 )
 
-ROADMAP14["q442_mauve_frontier"] = (
-    q442_mauve_frontier,
-    _q442_oracle(),
-    _Q442_NOTES,
-)
+register("q442_mauve_frontier", _q442_oracle(), _Q442_NOTES)(q442_mauve_frontier)
 
 
 # --- q443: Heaps'-law vocabulary growth --------------------------------------
@@ -1011,7 +994,7 @@ _Q443_NOTES = (
     "moments (the q384 Zipf machinery)"
 )
 
-ROADMAP14["q443_heaps_fit"] = (q443_heaps_fit, _q443_oracle(), _Q443_NOTES)
+register("q443_heaps_fit", _q443_oracle(), _Q443_NOTES)(q443_heaps_fit)
 
 
 # --- q444: 2x2 factorial interaction -----------------------------------------
@@ -1111,7 +1094,7 @@ _Q444_NOTES = (
     "digit-for-digit"
 )
 
-ROADMAP14["q444_factorial"] = (q444_factorial, _q444_oracle(), _Q444_NOTES)
+register("q444_factorial", _q444_oracle(), _Q444_NOTES)(q444_factorial)
 
 
 # --- q445: Kendall tau-b leaderboard stability -------------------------------
@@ -1188,11 +1171,7 @@ _Q445_NOTES = (
     "(all-tied scoring) degrades to NULL"
 )
 
-ROADMAP14["q445_kendall_tau"] = (
-    q445_kendall_tau,
-    _q445_oracle(),
-    _Q445_NOTES,
-)
+register("q445_kendall_tau", _q445_oracle(), _Q445_NOTES)(q445_kendall_tau)
 
 
 # --- q446: generation-eval corpus report (composition) -----------------------
@@ -1270,11 +1249,7 @@ _Q446_NOTES = (
     "recombination via 1-row broadcasts"
 )
 
-ROADMAP14["q446_eval_report"] = (
-    q446_eval_report,
-    _q446_oracle(),
-    _Q446_NOTES,
-)
+register("q446_eval_report", _q446_oracle(), _Q446_NOTES)(q446_eval_report)
 
 
 # --- q447/q448: paired system comparison -------------------------------------
@@ -1418,11 +1393,7 @@ _Q447_NOTES = (
     "systems) joined on the item key, replayed list-for-list"
 )
 
-ROADMAP14["q447_wilcoxon_paired"] = (
-    q447_wilcoxon_paired,
-    _q447_oracle(),
-    _Q447_NOTES,
-)
+register("q447_wilcoxon_paired", _q447_oracle(), _Q447_NOTES)(q447_wilcoxon_paired)
 
 
 def q448_paired_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1498,11 +1469,7 @@ _Q448_NOTES = (
     "50-group agg, 50-row rank select"
 )
 
-ROADMAP14["q448_paired_bootstrap"] = (
-    q448_paired_bootstrap,
-    _q448_oracle(),
-    _Q448_NOTES,
-)
+register("q448_paired_bootstrap", _q448_oracle(), _Q448_NOTES)(q448_paired_bootstrap)
 
 
 # --- q449: streaming eval gate -----------------------------------------------
@@ -1574,11 +1541,7 @@ _Q449_NOTES = (
     "exercised (a pure subset would collapse min to |cand|)"
 )
 
-ROADMAP14["q449_stream_eval_gate"] = (
-    q449_stream_eval_gate,
-    _q449_oracle(),
-    _Q449_NOTES,
-)
+register("q449_stream_eval_gate", _q449_oracle(), _Q449_NOTES)(q449_stream_eval_gate)
 
 
 # --- q450: two-sample log-rank test ------------------------------------------
@@ -1697,7 +1660,7 @@ _Q450_NOTES = (
     "assignment digit-for-digit"
 )
 
-ROADMAP14["q450_logrank"] = (q450_logrank, _q450_oracle(), _Q450_NOTES)
+register("q450_logrank", _q450_oracle(), _Q450_NOTES)(q450_logrank)
 
 
 # --- q451: contingency chi-squared + Cramér's V ------------------------------
@@ -1783,11 +1746,7 @@ _Q451_NOTES = (
     "emitted so the caller can check the classic E>=5 validity rule"
 )
 
-ROADMAP14["q451_contingency"] = (
-    q451_contingency,
-    _q451_oracle(),
-    _Q451_NOTES,
-)
+register("q451_contingency", _q451_oracle(), _Q451_NOTES)(q451_contingency)
 
 
 # --- q452: readability battery -----------------------------------------------
@@ -1849,11 +1808,7 @@ _Q452_NOTES = (
     "derivation so the fixture has real sentence boundaries"
 )
 
-ROADMAP14["q452_readability"] = (
-    q452_readability,
-    _q452_oracle(),
-    _Q452_NOTES,
-)
+register("q452_readability", _q452_oracle(), _Q452_NOTES)(q452_readability)
 
 
 # --- q453: Min-K% membership / contamination probe ---------------------------
@@ -1943,11 +1898,7 @@ _Q453_NOTES = (
     "refactor precedent)"
 )
 
-ROADMAP14["q453_min_k_membership"] = (
-    q453_min_k_membership,
-    _q453_oracle(),
-    _Q453_NOTES,
-)
+register("q453_min_k_membership", _q453_oracle(), _Q453_NOTES)(q453_min_k_membership)
 
 
 # --- q454: cluster validity indices ------------------------------------------
@@ -2071,11 +2022,7 @@ _Q454_NOTES = (
     "degrades both indices to NULL"
 )
 
-ROADMAP14["q454_cluster_validity"] = (
-    q454_cluster_validity,
-    _q454_oracle(),
-    _Q454_NOTES,
-)
+register("q454_cluster_validity", _q454_oracle(), _Q454_NOTES)(q454_cluster_validity)
 
 
 # --- q455: DeLong correlated-AUC test ----------------------------------------
@@ -2224,7 +2171,7 @@ _Q455_NOTES = (
     "deterministic portable-hash scorers replay digit-for-digit"
 )
 
-ROADMAP14["q455_delong"] = (q455_delong, _q455_oracle(), _Q455_NOTES)
+register("q455_delong", _q455_oracle(), _Q455_NOTES)(q455_delong)
 
 
 # --- q456: two-proportion test with Newcombe interval ------------------------
@@ -2336,11 +2283,7 @@ _Q456_NOTES = (
     "doubles, sqrt at the 6dp emit"
 )
 
-ROADMAP14["q456_two_proportion"] = (
-    q456_two_proportion,
-    _q456_oracle(),
-    _Q456_NOTES,
-)
+register("q456_two_proportion", _q456_oracle(), _Q456_NOTES)(q456_two_proportion)
 
 
 # --- q457-q460: k-system comparison family -----------------------------------
@@ -2505,7 +2448,7 @@ _Q457_NOTES = (
     "(listwise, counted)"
 )
 
-ROADMAP14["q457_friedman"] = (q457_friedman, _q457_oracle(), _Q457_NOTES)
+register("q457_friedman", _q457_oracle(), _Q457_NOTES)(q457_friedman)
 
 
 def q458_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2577,7 +2520,7 @@ _Q458_NOTES = (
     "tail at k-1 dof; complete blocks only (listwise, counted)"
 )
 
-ROADMAP14["q458_cochran_q"] = (q458_cochran_q, _q458_oracle(), _Q458_NOTES)
+register("q458_cochran_q", _q458_oracle(), _Q458_NOTES)(q458_cochran_q)
 
 
 def q459_cronbach(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2638,7 +2581,7 @@ _Q459_NOTES = (
     "listwise NULL handling (documented)"
 )
 
-ROADMAP14["q459_cronbach"] = (q459_cronbach, _q459_oracle(), _Q459_NOTES)
+register("q459_cronbach", _q459_oracle(), _Q459_NOTES)(q459_cronbach)
 
 
 def q460_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2686,8 +2629,4 @@ _Q460_NOTES = (
     "diffs + squares, sample n-1 sd, the q421 z literal convention"
 )
 
-ROADMAP14["q460_bland_altman"] = (
-    q460_bland_altman,
-    _q460_oracle(),
-    _Q460_NOTES,
-)
+register("q460_bland_altman", _q460_oracle(), _Q460_NOTES)(q460_bland_altman)

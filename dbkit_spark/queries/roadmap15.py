@@ -1,10 +1,7 @@
-"""Round-15 queue additions (q461+): the rank-trend / reliability
-completions of the k-system comparison family (Kendall's W, Page's L,
-Jonckheere-Terpstra, one-way ICC) and the edit-distance /
-generation-eval closers. NOT registered — merged into
-``roadmap7.ROADMAP7`` (imported at the bottom of ``roadmap7.py``; must
-not import roadmap7 back) and landed by ``roadmap7_landed`` at the
-round-16 landing.
+"""Catalog queries q461–q475, each registered where it is defined: the
+rank-trend / reliability completions of the k-system comparison family
+(Kendall's W, Page's L, Jonckheere-Terpstra, one-way ICC) and the
+edit-distance / generation-eval closers.
 
 Fixture reuse: the k-system entries ride the q457-q460 four-system
 truncation eval frame (``roadmap14._multi_sys_scores`` — one row per
@@ -26,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
 from .roadmap14 import (
     _DENS,
@@ -34,8 +32,6 @@ from .roadmap14 import (
     _multi_sys_scores,
     _wh_p_sql,
 )
-
-ROADMAP15: dict[str, tuple] = {}
 
 
 def _long_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,7 +133,7 @@ _Q466_NOTES = (
     "(the ADVICE r14 friedman rule)"
 )
 
-ROADMAP15["q466_kendalls_w"] = (q466_kendalls_w, _q466_oracle(), _Q466_NOTES)
+register("q466_kendalls_w", _q466_oracle(), _Q466_NOTES)(q466_kendalls_w)
 
 
 # --- q467 Page's trend test --------------------------------------------------
@@ -218,7 +214,7 @@ _Q467_NOTES = (
     "treatment set"
 )
 
-ROADMAP15["q467_page_trend"] = (q467_page_trend, _q467_oracle(), _Q467_NOTES)
+register("q467_page_trend", _q467_oracle(), _Q467_NOTES)(q467_page_trend)
 
 
 # --- q468 Jonckheere-Terpstra ------------------------------------------------
@@ -327,7 +323,7 @@ _Q468_NOTES = (
     "tie-corrected variance from three closed-form count aggregates"
 )
 
-ROADMAP15["q468_jonckheere"] = (q468_jonckheere, _q468_oracle(), _Q468_NOTES)
+register("q468_jonckheere", _q468_oracle(), _Q468_NOTES)(q468_jonckheere)
 
 
 # --- q469 one-way ICC --------------------------------------------------------
@@ -402,11 +398,7 @@ _Q469_NOTES = (
     "scope, documented)"
 )
 
-ROADMAP15["q469_icc_oneway"] = (
-    q469_icc_oneway,
-    _q469_oracle(),
-    _Q469_NOTES,
-)
+register("q469_icc_oneway", _q469_oracle(), _Q469_NOTES)(q469_icc_oneway)
 
 
 # --- generation-eval closers: q461-q465 --------------------------------------
@@ -475,11 +467,7 @@ _Q461_NOTES = (
     "chr(300) probe); ref-empty cer degrades to NULL (documented)"
 )
 
-ROADMAP15["q461_edit_distance"] = (
-    q461_edit_distance,
-    _q461_oracle(),
-    _Q461_NOTES,
-)
+register("q461_edit_distance", _q461_oracle(), _Q461_NOTES)(q461_edit_distance)
 
 
 def q462_wer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -548,7 +536,7 @@ _Q462_NOTES = (
     "randomized cross-check vs a reference DP in tests/test_round15"
 )
 
-ROADMAP15["q462_wer"] = (q462_wer, _q462_oracle(), _Q462_NOTES)
+register("q462_wer", _q462_oracle(), _Q462_NOTES)(q462_wer)
 
 
 def q463_chrf_pp(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -660,7 +648,7 @@ _Q463_NOTES = (
     "F-beta"
 )
 
-ROADMAP15["q463_chrf_pp"] = (q463_chrf_pp, _q463_oracle(), _Q463_NOTES)
+register("q463_chrf_pp", _q463_oracle(), _Q463_NOTES)(q463_chrf_pp)
 
 
 def q464_detok_bleu(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -743,11 +731,7 @@ _Q464_NOTES = (
     "the same pairs is the tokenization-sensitivity readout"
 )
 
-ROADMAP15["q464_detok_bleu"] = (
-    q464_detok_bleu,
-    _q464_oracle(),
-    _Q464_NOTES,
-)
+register("q464_detok_bleu", _q464_oracle(), _Q464_NOTES)(q464_detok_bleu)
 
 
 def q465_curation_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -872,11 +856,7 @@ _Q465_NOTES = (
     "every stage's own oracle semantics nested verbatim in one SQL"
 )
 
-ROADMAP15["q465_curation_dag"] = (
-    q465_curation_dag,
-    _q465_oracle(),
-    _Q465_NOTES,
-)
+register("q465_curation_dag", _q465_oracle(), _Q465_NOTES)(q465_curation_dag)
 
 
 def q470_rouge_l(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -904,7 +884,7 @@ _Q470_NOTES = (
     "(tests/test_round15.py)"
 )
 
-ROADMAP15["q470_rouge_l"] = (q470_rouge_l, None, _Q470_NOTES)
+register("q470_rouge_l", None, _Q470_NOTES)(q470_rouge_l)
 
 
 # --- distribution-comparison battery: q471-q475 ------------------------------
@@ -986,11 +966,7 @@ _Q471_NOTES = (
     "decimal terms, pinned to 1 below lambda 0.3 (documented)"
 )
 
-ROADMAP15["q471_ks_two_sample"] = (
-    q471_ks_two_sample,
-    _q471_oracle(),
-    _Q471_NOTES,
-)
+register("q471_ks_two_sample", _q471_oracle(), _Q471_NOTES)(q471_ks_two_sample)
 
 
 def q472_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1040,11 +1016,7 @@ _Q472_NOTES = (
     "q471 carries the p story)"
 )
 
-ROADMAP15["q472_cvm_two_sample"] = (
-    q472_cvm_two_sample,
-    _q472_oracle(),
-    _Q472_NOTES,
-)
+register("q472_cvm_two_sample", _q472_oracle(), _Q472_NOTES)(q472_cvm_two_sample)
 
 
 def q473_levene_bf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1108,7 +1080,7 @@ _Q473_NOTES = (
     "broadcast-back + one moment agg + 1-row reduce"
 )
 
-ROADMAP15["q473_levene_bf"] = (q473_levene_bf, _q473_oracle(), _Q473_NOTES)
+register("q473_levene_bf", _q473_oracle(), _Q473_NOTES)(q473_levene_bf)
 
 
 def q474_bartlett(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1183,7 +1155,7 @@ _Q474_NOTES = (
     "excluded and counted; ONE group agg + ONE 1-row reduce"
 )
 
-ROADMAP15["q474_bartlett"] = (q474_bartlett, _q474_oracle(), _Q474_NOTES)
+register("q474_bartlett", _q474_oracle(), _Q474_NOTES)(q474_bartlett)
 
 
 def q475_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1251,8 +1223,4 @@ _Q475_NOTES = (
     "(documented F-tail convention; the rank twin carries the p)"
 )
 
-ROADMAP15["q475_anova_oneway"] = (
-    q475_anova_oneway,
-    _q475_oracle(),
-    _Q475_NOTES,
-)
+register("q475_anova_oneway", _q475_oracle(), _Q475_NOTES)(q475_anova_oneway)

@@ -1,24 +1,11 @@
-"""Round-7 catalog queue — WRITTEN AND PRE-VERIFIED in round 6, but NOT
-registered: the round-5 verdict froze the catalog at 200 until the
-driver's r06 sweep re-greens the stale q01–q41/q72–q82 window (new
-queries jump to the front of the never-checked-first rotation and would
-displace those slots again).
-
-To land in round 7: move each ``ROADMAP7`` entry to a ``@register``
-call (the dict already holds the exact name/oracle/notes triple) in a
-module imported by ``catalog.load_all`` — after confirming the r07
-window still leads with the remaining stale q42–q50.
-
-``tests/test_catalog.py::test_roadmap7_queue_preverified`` runs every
-entry through the same row/schema/hash/dtype compare the driver uses,
-so these are green before they ever reach the rotation.
-"""
+"""Catalog queries q201–q315, each registered where it is defined."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
 from .extended5 import _bucket_sql_t
 
@@ -973,62 +960,47 @@ _Q217_NOTES = (
 )
 
 
-# name -> (fn, oracle_sql_or_None, notes) — exactly the @register triple.
-ROADMAP7 = {
-    "q201_ann_incremental_dedup": (q201_ann_incremental_dedup, _Q201_ORACLE, _Q201_NOTES),
-    "q202_heavy_hitters_mg": (q202_heavy_hitters_mg, _Q202_ORACLE, _Q202_NOTES),
-    "q203_token_packing_auto": (q203_token_packing_auto, _Q203_ORACLE, _Q203_NOTES),
-    "q204_quantile_bin_sampled": (q204_quantile_bin_sampled, _Q204_ORACLE, _Q204_NOTES),
-    "q205_chunk_custom_tokenizer": (q205_chunk_custom_tokenizer, _Q205_ORACLE, _Q205_NOTES),
-    "q206_image_pixel_stats": (q206_image_pixel_stats, _Q206_ORACLE, _Q206_NOTES),
-    "q207_heavy_hitters_stream_replay": (
-        q207_heavy_hitters_stream_replay,
-        _Q202_ORACLE,
-        _Q207_NOTES,
-    ),
-    "q208_chunk_then_pack": (q208_chunk_then_pack, _Q208_ORACLE, _Q208_NOTES),
-    "q209_duplicated_spans": (q209_duplicated_spans, _Q209_ORACLE, _Q209_NOTES),
-    "q210_span_scrubbed_corpus": (
-        q210_span_scrubbed_corpus,
-        _Q210_ORACLE,
-        _Q210_NOTES,
-    ),
-    "q211_leakage_safe_split": (
-        q211_leakage_safe_split,
-        _q211_oracle(),
-        _Q211_NOTES,
-    ),
-    "q212_quantile_bin_grouped": (
-        q212_quantile_bin_grouped,
-        _Q212_ORACLE,
-        _Q212_NOTES,
-    ),
-    "q213_reconcile_row_diff": (
-        q213_reconcile_row_diff,
-        _q213_oracle(),
-        _Q213_NOTES,
-    ),
-    "q214_join_key_skew_profile": (
-        q214_join_key_skew_profile,
-        _Q214_ORACLE,
-        _Q214_NOTES,
-    ),
-    "q215_streaming_dedup_ingest": (
-        q215_streaming_dedup_ingest,
-        _q215_oracle(),
-        _Q215_NOTES,
-    ),
-    "q216_scd2_point_in_time_enrich": (
-        q216_scd2_point_in_time_enrich,
-        _Q216_ORACLE,
-        _Q216_NOTES,
-    ),
-    "q217_containment_relative_cap": (
-        q217_containment_relative_cap,
-        _Q217_ORACLE,
-        _Q217_NOTES,
-    ),
-}
+register("q201_ann_incremental_dedup", _Q201_ORACLE, _Q201_NOTES)(
+    q201_ann_incremental_dedup
+)
+register("q202_heavy_hitters_mg", _Q202_ORACLE, _Q202_NOTES)(q202_heavy_hitters_mg)
+register("q203_token_packing_auto", _Q203_ORACLE, _Q203_NOTES)(q203_token_packing_auto)
+register("q204_quantile_bin_sampled", _Q204_ORACLE, _Q204_NOTES)(
+    q204_quantile_bin_sampled
+)
+register("q205_chunk_custom_tokenizer", _Q205_ORACLE, _Q205_NOTES)(
+    q205_chunk_custom_tokenizer
+)
+register("q206_image_pixel_stats", _Q206_ORACLE, _Q206_NOTES)(q206_image_pixel_stats)
+register("q207_heavy_hitters_stream_replay", _Q202_ORACLE, _Q207_NOTES)(
+    q207_heavy_hitters_stream_replay
+)
+register("q208_chunk_then_pack", _Q208_ORACLE, _Q208_NOTES)(q208_chunk_then_pack)
+register("q209_duplicated_spans", _Q209_ORACLE, _Q209_NOTES)(q209_duplicated_spans)
+register("q210_span_scrubbed_corpus", _Q210_ORACLE, _Q210_NOTES)(
+    q210_span_scrubbed_corpus
+)
+register("q211_leakage_safe_split", _q211_oracle(), _Q211_NOTES)(
+    q211_leakage_safe_split
+)
+register("q212_quantile_bin_grouped", _Q212_ORACLE, _Q212_NOTES)(
+    q212_quantile_bin_grouped
+)
+register("q213_reconcile_row_diff", _q213_oracle(), _Q213_NOTES)(
+    q213_reconcile_row_diff
+)
+register("q214_join_key_skew_profile", _Q214_ORACLE, _Q214_NOTES)(
+    q214_join_key_skew_profile
+)
+register("q215_streaming_dedup_ingest", _q215_oracle(), _Q215_NOTES)(
+    q215_streaming_dedup_ingest
+)
+register("q216_scd2_point_in_time_enrich", _Q216_ORACLE, _Q216_NOTES)(
+    q216_scd2_point_in_time_enrich
+)
+register("q217_containment_relative_cap", _Q217_ORACLE, _Q217_NOTES)(
+    q217_containment_relative_cap
+)
 
 
 # --- round-7 additions (written during the continued freeze) -----------------
@@ -1469,24 +1441,14 @@ _Q224_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q218_grouped_auc": (q218_grouped_auc, _Q218_ORACLE, _Q218_NOTES),
-        "q219_triangle_count": (q219_triangle_count, _Q219_ORACLE, _Q219_NOTES),
-        "q220_join_size_estimate": (
-            q220_join_size_estimate,
-            _Q220_ORACLE,
-            _Q220_NOTES,
-        ),
-        "q221_temperature_mix": (q221_temperature_mix, _Q221_ORACLE, _Q221_NOTES),
-        "q222_l_diversity": (q222_l_diversity, _Q222_ORACLE, _Q222_NOTES),
-        "q223_psi_drift": (q223_psi_drift, _Q223_ORACLE, _Q223_NOTES),
-        "q224_returns_above_nation_avg": (
-            q224_returns_above_nation_avg,
-            _Q224_ORACLE,
-            _Q224_NOTES,
-        ),
-    }
+register("q218_grouped_auc", _Q218_ORACLE, _Q218_NOTES)(q218_grouped_auc)
+register("q219_triangle_count", _Q219_ORACLE, _Q219_NOTES)(q219_triangle_count)
+register("q220_join_size_estimate", _Q220_ORACLE, _Q220_NOTES)(q220_join_size_estimate)
+register("q221_temperature_mix", _Q221_ORACLE, _Q221_NOTES)(q221_temperature_mix)
+register("q222_l_diversity", _Q222_ORACLE, _Q222_NOTES)(q222_l_diversity)
+register("q223_psi_drift", _Q223_ORACLE, _Q223_NOTES)(q223_psi_drift)
+register("q224_returns_above_nation_avg", _Q224_ORACLE, _Q224_NOTES)(
+    q224_returns_above_nation_avg
 )
 
 
@@ -1664,17 +1626,9 @@ _Q227_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q225_copurchase_lift": (q225_copurchase_lift, _Q225_ORACLE, _Q225_NOTES),
-        "q226_radius_join": (q226_radius_join, _Q226_ORACLE, _Q226_NOTES),
-        "q227_calibration_brier": (
-            q227_calibration_brier,
-            _Q227_ORACLE,
-            _Q227_NOTES,
-        ),
-    }
-)
+register("q225_copurchase_lift", _Q225_ORACLE, _Q225_NOTES)(q225_copurchase_lift)
+register("q226_radius_join", _Q226_ORACLE, _Q226_NOTES)(q226_radius_join)
+register("q227_calibration_brier", _Q227_ORACLE, _Q227_NOTES)(q227_calibration_brier)
 
 
 def q228_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1714,11 +1668,7 @@ _Q228_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q228_jpeg_decode": (q228_jpeg_decode, _Q228_ORACLE, _Q228_NOTES),
-    }
-)
+register("q228_jpeg_decode", _Q228_ORACLE, _Q228_NOTES)(q228_jpeg_decode)
 
 
 def q229_windowed_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1825,11 +1775,7 @@ _Q229_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q229_windowed_psi": (q229_windowed_psi, _q229_oracle(), _Q229_NOTES),
-    }
-)
+register("q229_windowed_psi", _q229_oracle(), _Q229_NOTES)(q229_windowed_psi)
 
 
 def q230_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1896,15 +1842,7 @@ _Q230_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q230_label_propagation": (
-            q230_label_propagation,
-            _q230_oracle(),
-            _Q230_NOTES,
-        ),
-    }
-)
+register("q230_label_propagation", _q230_oracle(), _Q230_NOTES)(q230_label_propagation)
 
 
 def _ensure_range_files(spark: SparkSession, sf_dir: str) -> str:
@@ -1996,15 +1934,7 @@ _Q231_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q231_file_stats_pruning": (
-            q231_file_stats_pruning,
-            _Q231_ORACLE,
-            _Q231_NOTES,
-        ),
-    }
-)
+register("q231_file_stats_pruning", _Q231_ORACLE, _Q231_NOTES)(q231_file_stats_pruning)
 
 
 def q232_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2150,16 +2080,8 @@ _Q233_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q232_entity_resolution": (
-            q232_entity_resolution,
-            _Q232_ORACLE,
-            _Q232_NOTES,
-        ),
-        "q233_chi_square": (q233_chi_square, _Q233_ORACLE, _Q233_NOTES),
-    }
-)
+register("q232_entity_resolution", _Q232_ORACLE, _Q232_NOTES)(q232_entity_resolution)
+register("q233_chi_square", _Q233_ORACLE, _Q233_NOTES)(q233_chi_square)
 
 
 def q234_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2216,11 +2138,7 @@ _Q234_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q234_fd_discovery": (q234_fd_discovery, _q234_oracle(), _Q234_NOTES),
-    }
-)
+register("q234_fd_discovery", _q234_oracle(), _Q234_NOTES)(q234_fd_discovery)
 
 
 def q235_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2299,15 +2217,7 @@ _Q235_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q235_rolling_anomaly": (
-            q235_rolling_anomaly,
-            _Q235_ORACLE,
-            _Q235_NOTES,
-        ),
-    }
-)
+register("q235_rolling_anomaly", _Q235_ORACLE, _Q235_NOTES)(q235_rolling_anomaly)
 
 
 def q236_storage_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2344,11 +2254,7 @@ _Q236_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q236_storage_profile": (q236_storage_profile, None, _Q236_NOTES),
-    }
-)
+register("q236_storage_profile", None, _Q236_NOTES)(q236_storage_profile)
 
 
 def q237_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2427,11 +2333,7 @@ _Q237_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q237_bootstrap_ci": (q237_bootstrap_ci, _q237_oracle(), _Q237_NOTES),
-    }
-)
+register("q237_bootstrap_ci", _q237_oracle(), _Q237_NOTES)(q237_bootstrap_ci)
 
 
 def q238_retention_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2523,15 +2425,7 @@ _Q238_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q238_retention_survival": (
-            q238_retention_survival,
-            _Q238_ORACLE,
-            _Q238_NOTES,
-        ),
-    }
-)
+register("q238_retention_survival", _Q238_ORACLE, _Q238_NOTES)(q238_retention_survival)
 
 
 def q239_item_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2679,20 +2573,8 @@ _Q240_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q239_item_similarity": (
-            q239_item_similarity,
-            _Q239_ORACLE,
-            _Q239_NOTES,
-        ),
-        "q240_pmi_collocations": (
-            q240_pmi_collocations,
-            _Q240_ORACLE,
-            _Q240_NOTES,
-        ),
-    }
-)
+register("q239_item_similarity", _Q239_ORACLE, _Q239_NOTES)(q239_item_similarity)
+register("q240_pmi_collocations", _Q240_ORACLE, _Q240_NOTES)(q240_pmi_collocations)
 
 
 def q241_unigram_cross_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2820,20 +2702,10 @@ _Q242_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q241_unigram_cross_entropy": (
-            q241_unigram_cross_entropy,
-            _Q241_ORACLE,
-            _Q241_NOTES,
-        ),
-        "q242_vocab_coverage": (
-            q242_vocab_coverage,
-            _Q242_ORACLE,
-            _Q242_NOTES,
-        ),
-    }
+register("q241_unigram_cross_entropy", _Q241_ORACLE, _Q241_NOTES)(
+    q241_unigram_cross_entropy
 )
+register("q242_vocab_coverage", _Q242_ORACLE, _Q242_NOTES)(q242_vocab_coverage)
 
 
 # --------------------------------------------------------------------------
@@ -3175,33 +3047,17 @@ _Q249_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q243_embedding_covariance": (
-            q243_embedding_covariance,
-            _Q243_ORACLE,
-            _Q243_NOTES,
-        ),
-        "q244_pca_projection": (q244_pca_projection, None, _Q244_NOTES),
-        "q245_ks_drift_grid": (q245_ks_drift_grid, _Q245_ORACLE, _Q245_NOTES),
-        "q246_negative_sampling": (
-            q246_negative_sampling,
-            _Q246_ORACLE,
-            _Q246_NOTES,
-        ),
-        "q247_benford_audit": (q247_benford_audit, _Q247_ORACLE, _Q247_NOTES),
-        "q248_pattern_conversions": (
-            q248_pattern_conversions,
-            _Q248_ORACLE,
-            _Q248_NOTES,
-        ),
-        "q249_stable_row_number": (
-            q249_stable_row_number,
-            _Q249_ORACLE,
-            _Q249_NOTES,
-        ),
-    }
+register("q243_embedding_covariance", _Q243_ORACLE, _Q243_NOTES)(
+    q243_embedding_covariance
 )
+register("q244_pca_projection", None, _Q244_NOTES)(q244_pca_projection)
+register("q245_ks_drift_grid", _Q245_ORACLE, _Q245_NOTES)(q245_ks_drift_grid)
+register("q246_negative_sampling", _Q246_ORACLE, _Q246_NOTES)(q246_negative_sampling)
+register("q247_benford_audit", _Q247_ORACLE, _Q247_NOTES)(q247_benford_audit)
+register("q248_pattern_conversions", _Q248_ORACLE, _Q248_NOTES)(
+    q248_pattern_conversions
+)
+register("q249_stable_row_number", _Q249_ORACLE, _Q249_NOTES)(q249_stable_row_number)
 
 
 # --------------------------------------------------------------------------
@@ -3586,22 +3442,12 @@ _Q253_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q250_bigram_lm_score": (q250_bigram_lm_score, _Q250_ORACLE, _Q250_NOTES),
-        "q251_interpolate_gaps": (
-            q251_interpolate_gaps,
-            _Q251_ORACLE,
-            _Q251_NOTES,
-        ),
-        "q252_hybrid_retrieval_rrf": (
-            q252_hybrid_retrieval_rrf,
-            _Q252_ORACLE,
-            _Q252_NOTES,
-        ),
-        "q253_column_diff": (q253_column_diff, _Q253_ORACLE, _Q253_NOTES),
-    }
+register("q250_bigram_lm_score", _Q250_ORACLE, _Q250_NOTES)(q250_bigram_lm_score)
+register("q251_interpolate_gaps", _Q251_ORACLE, _Q251_NOTES)(q251_interpolate_gaps)
+register("q252_hybrid_retrieval_rrf", _Q252_ORACLE, _Q252_NOTES)(
+    q252_hybrid_retrieval_rrf
 )
+register("q253_column_diff", _Q253_ORACLE, _Q253_NOTES)(q253_column_diff)
 
 
 def q254_mixed_codec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3646,15 +3492,7 @@ _Q254_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q254_mixed_codec_decode": (
-            q254_mixed_codec_decode,
-            _Q254_ORACLE,
-            _Q254_NOTES,
-        ),
-    }
-)
+register("q254_mixed_codec_decode", _Q254_ORACLE, _Q254_NOTES)(q254_mixed_codec_decode)
 
 
 def q255_count_min_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3993,35 +3831,11 @@ _Q259_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q255_count_min_sketch": (
-            q255_count_min_sketch,
-            _q255_oracle(),
-            _Q255_NOTES,
-        ),
-        "q256_cusum_changepoints": (
-            q256_cusum_changepoints,
-            _Q256_ORACLE,
-            _Q256_NOTES,
-        ),
-        "q257_welch_ab_test": (
-            q257_welch_ab_test,
-            _Q257_ORACLE,
-            _Q257_NOTES,
-        ),
-        "q258_mutual_information": (
-            q258_mutual_information,
-            _Q258_ORACLE,
-            _Q258_NOTES,
-        ),
-        "q259_autocorrelation": (
-            q259_autocorrelation,
-            _Q259_ORACLE,
-            _Q259_NOTES,
-        ),
-    }
-)
+register("q255_count_min_sketch", _q255_oracle(), _Q255_NOTES)(q255_count_min_sketch)
+register("q256_cusum_changepoints", _Q256_ORACLE, _Q256_NOTES)(q256_cusum_changepoints)
+register("q257_welch_ab_test", _Q257_ORACLE, _Q257_NOTES)(q257_welch_ab_test)
+register("q258_mutual_information", _Q258_ORACLE, _Q258_NOTES)(q258_mutual_information)
+register("q259_autocorrelation", _Q259_ORACLE, _Q259_NOTES)(q259_autocorrelation)
 
 
 def q260_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4209,29 +4023,13 @@ _Q263_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q260_target_encoding": (
-            q260_target_encoding,
-            _Q260_ORACLE,
-            _Q260_NOTES,
-        ),
-        "q261_feature_hashing": (
-            q261_feature_hashing,
-            _q261_oracle(),
-            _Q261_NOTES,
-        ),
-        "q262_woe_information_value": (
-            q262_woe_information_value,
-            _Q262_ORACLE,
-            _Q262_NOTES,
-        ),
-        "q263_temporal_embargo_split": (
-            q263_temporal_embargo_split,
-            _Q263_ORACLE,
-            _Q263_NOTES,
-        ),
-    }
+register("q260_target_encoding", _Q260_ORACLE, _Q260_NOTES)(q260_target_encoding)
+register("q261_feature_hashing", _q261_oracle(), _Q261_NOTES)(q261_feature_hashing)
+register("q262_woe_information_value", _Q262_ORACLE, _Q262_NOTES)(
+    q262_woe_information_value
+)
+register("q263_temporal_embargo_split", _Q263_ORACLE, _Q263_NOTES)(
+    q263_temporal_embargo_split
 )
 
 
@@ -4458,29 +4256,15 @@ _Q267_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q264_spearman_correlation": (
-            q264_spearman_correlation,
-            _Q264_ORACLE,
-            _Q264_NOTES,
-        ),
-        "q265_conformal_intervals": (
-            q265_conformal_intervals,
-            _Q265_ORACLE,
-            _Q265_NOTES,
-        ),
-        "q266_gini_concentration": (
-            q266_gini_concentration,
-            _Q266_ORACLE,
-            _Q266_NOTES,
-        ),
-        "q267_isotonic_calibration": (
-            q267_isotonic_calibration,
-            _Q267_ORACLE,
-            _Q267_NOTES,
-        ),
-    }
+register("q264_spearman_correlation", _Q264_ORACLE, _Q264_NOTES)(
+    q264_spearman_correlation
+)
+register("q265_conformal_intervals", _Q265_ORACLE, _Q265_NOTES)(
+    q265_conformal_intervals
+)
+register("q266_gini_concentration", _Q266_ORACLE, _Q266_NOTES)(q266_gini_concentration)
+register("q267_isotonic_calibration", _Q267_ORACLE, _Q267_NOTES)(
+    q267_isotonic_calibration
 )
 
 
@@ -4571,15 +4355,7 @@ _Q268_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q268_cohort_retention": (
-            q268_cohort_retention,
-            _Q268_ORACLE,
-            _Q268_NOTES,
-        ),
-    }
-)
+register("q268_cohort_retention", _Q268_ORACLE, _Q268_NOTES)(q268_cohort_retention)
 
 
 def q269_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4643,14 +4419,8 @@ _Q269_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q269_kcore_decomposition": (
-            q269_kcore_decomposition,
-            _q269_oracle(),
-            _Q269_NOTES,
-        ),
-    }
+register("q269_kcore_decomposition", _q269_oracle(), _Q269_NOTES)(
+    q269_kcore_decomposition
 )
 
 
@@ -4713,15 +4483,7 @@ _Q270_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q270_rake_keywords": (
-            q270_rake_keywords,
-            _q270_oracle(),
-            _Q270_NOTES,
-        ),
-    }
-)
+register("q270_rake_keywords", _q270_oracle(), _Q270_NOTES)(q270_rake_keywords)
 
 
 def q271_bpe_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4753,11 +4515,7 @@ _Q271_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q271_bpe_vocabulary": (q271_bpe_vocabulary, None, _Q271_NOTES),
-    }
-)
+register("q271_bpe_vocabulary", None, _Q271_NOTES)(q271_bpe_vocabulary)
 
 
 def q272_fd_violation_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4814,14 +4572,8 @@ _Q272_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q272_fd_violation_repair": (
-            q272_fd_violation_repair,
-            _Q272_ORACLE,
-            _Q272_NOTES,
-        ),
-    }
+register("q272_fd_violation_repair", _Q272_ORACLE, _Q272_NOTES)(
+    q272_fd_violation_repair
 )
 
 
@@ -4935,15 +4687,7 @@ _Q273_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q273_streaming_cusum": (
-            q273_streaming_cusum,
-            _Q256_ORACLE,
-            _Q273_NOTES,
-        ),
-    }
-)
+register("q273_streaming_cusum", _Q256_ORACLE, _Q273_NOTES)(q273_streaming_cusum)
 
 
 def q274_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5003,15 +4747,7 @@ _Q274_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q274_truncation_recall": (
-            q274_truncation_recall,
-            _Q274_ORACLE,
-            _Q274_NOTES,
-        ),
-    }
-)
+register("q274_truncation_recall", _Q274_ORACLE, _Q274_NOTES)(q274_truncation_recall)
 
 
 def q275_compression_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5036,15 +4772,7 @@ _Q275_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q275_compression_quality": (
-            q275_compression_quality,
-            None,
-            _Q275_NOTES,
-        ),
-    }
-)
+register("q275_compression_quality", None, _Q275_NOTES)(q275_compression_quality)
 
 
 def q276_corpus_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5154,19 +4882,11 @@ _Q277_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q276_corpus_kl_divergence": (
-            q276_corpus_kl_divergence,
-            _Q276_ORACLE,
-            _Q276_NOTES,
-        ),
-        "q277_seasonal_naive_backtest": (
-            q277_seasonal_naive_backtest,
-            _Q277_ORACLE,
-            _Q277_NOTES,
-        ),
-    }
+register("q276_corpus_kl_divergence", _Q276_ORACLE, _Q276_NOTES)(
+    q276_corpus_kl_divergence
+)
+register("q277_seasonal_naive_backtest", _Q277_ORACLE, _Q277_NOTES)(
+    q277_seasonal_naive_backtest
 )
 
 
@@ -5253,15 +4973,7 @@ _Q278_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q278_expectation_report": (
-            q278_expectation_report,
-            _Q278_ORACLE,
-            _Q278_NOTES,
-        ),
-    }
-)
+register("q278_expectation_report", _Q278_ORACLE, _Q278_NOTES)(q278_expectation_report)
 
 
 def q279_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5316,15 +5028,7 @@ _Q279_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q279_quantile_normalize": (
-            q279_quantile_normalize,
-            _Q279_ORACLE,
-            _Q279_NOTES,
-        ),
-    }
-)
+register("q279_quantile_normalize", _Q279_ORACLE, _Q279_NOTES)(q279_quantile_normalize)
 
 
 # --- distributed prefix scan (round 8, batch 6) ------------------------------
@@ -5484,13 +5188,9 @@ _Q282_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q280_running_revenue": (q280_running_revenue, _Q280_ORACLE, _Q280_NOTES),
-        "q281_skyline_frontier": (q281_skyline_frontier, _Q281_ORACLE, _Q281_NOTES),
-        "q282_export_shards": (q282_export_shards, _Q282_ORACLE, _Q282_NOTES),
-    }
-)
+register("q280_running_revenue", _Q280_ORACLE, _Q280_NOTES)(q280_running_revenue)
+register("q281_skyline_frontier", _Q281_ORACLE, _Q281_NOTES)(q281_skyline_frontier)
+register("q282_export_shards", _Q282_ORACLE, _Q282_NOTES)(q282_export_shards)
 
 
 def q283_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5612,12 +5312,8 @@ _Q284_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q283_window_funnel": (q283_window_funnel, _Q283_ORACLE, _Q283_NOTES),
-        "q284_bfs_hops": (q284_bfs_hops, _Q284_ORACLE, _Q284_NOTES),
-    }
-)
+register("q283_window_funnel", _Q283_ORACLE, _Q283_NOTES)(q283_window_funnel)
+register("q284_bfs_hops", _Q284_ORACLE, _Q284_NOTES)(q284_bfs_hops)
 
 
 def q285_html_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5787,12 +5483,8 @@ _Q286_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q285_html_strip": (q285_html_strip, _Q285_ORACLE, _Q285_NOTES),
-        "q286_url_canonical": (q286_url_canonical, _Q286_ORACLE, _Q286_NOTES),
-    }
-)
+register("q285_html_strip", _Q285_ORACLE, _Q285_NOTES)(q285_html_strip)
+register("q286_url_canonical", _Q286_ORACLE, _Q286_NOTES)(q286_url_canonical)
 
 
 def q287_jw_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5874,14 +5566,8 @@ _Q287_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q287_jw_entity_resolution": (
-            q287_jw_entity_resolution,
-            _Q287_ORACLE,
-            _Q287_NOTES,
-        ),
-    }
+register("q287_jw_entity_resolution", _Q287_ORACLE, _Q287_NOTES)(
+    q287_jw_entity_resolution
 )
 
 
@@ -5939,15 +5625,7 @@ _Q288_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q288_weighted_quantiles": (
-            q288_weighted_quantiles,
-            _Q288_ORACLE,
-            _Q288_NOTES,
-        ),
-    }
-)
+register("q288_weighted_quantiles", _Q288_ORACLE, _Q288_NOTES)(q288_weighted_quantiles)
 
 
 def q289_postings_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6029,11 +5707,7 @@ _Q289_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q289_postings_index": (q289_postings_index, _Q289_ORACLE, _Q289_NOTES),
-    }
-)
+register("q289_postings_index", _Q289_ORACLE, _Q289_NOTES)(q289_postings_index)
 
 
 def q290_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6102,11 +5776,7 @@ _Q290_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q290_audio_features": (q290_audio_features, _Q290_ORACLE, _Q290_NOTES),
-    }
-)
+register("q290_audio_features", _Q290_ORACLE, _Q290_NOTES)(q290_audio_features)
 
 
 def q291_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6223,13 +5893,9 @@ _Q293_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q291_mad_outliers": (q291_mad_outliers, _Q291_ORACLE, _Q291_NOTES),
-        "q292_k_anonymity": (q292_k_anonymity, _Q292_ORACLE, _Q292_NOTES),
-        "q293_dp_counts": (q293_dp_counts, _Q293_ORACLE, _Q293_NOTES),
-    }
-)
+register("q291_mad_outliers", _Q291_ORACLE, _Q291_NOTES)(q291_mad_outliers)
+register("q292_k_anonymity", _Q292_ORACLE, _Q292_NOTES)(q292_k_anonymity)
+register("q293_dp_counts", _Q293_ORACLE, _Q293_NOTES)(q293_dp_counts)
 
 
 def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6355,15 +6021,7 @@ _Q294_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q294_streaming_funnel": (
-            q294_streaming_funnel,
-            _Q294_ORACLE,
-            _Q294_NOTES,
-        ),
-    }
-)
+register("q294_streaming_funnel", _Q294_ORACLE, _Q294_NOTES)(q294_streaming_funnel)
 
 
 def q295_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6430,11 +6088,7 @@ _Q295_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q295_link_prediction": (q295_link_prediction, _Q295_ORACLE, _Q295_NOTES),
-    }
-)
+register("q295_link_prediction", _Q295_ORACLE, _Q295_NOTES)(q295_link_prediction)
 
 
 def q296_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6483,11 +6137,7 @@ _Q296_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q296_set_cardinality": (q296_set_cardinality, _Q296_ORACLE, _Q296_NOTES),
-    }
-)
+register("q296_set_cardinality", _Q296_ORACLE, _Q296_NOTES)(q296_set_cardinality)
 
 
 def q297_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6515,11 +6165,7 @@ _Q297_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q297_audio_spectral": (q297_audio_spectral, None, _Q297_NOTES),
-    }
-)
+register("q297_audio_spectral", None, _Q297_NOTES)(q297_audio_spectral)
 
 
 def q298_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6674,11 +6320,7 @@ _Q298_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q298_curation_funnel": (q298_curation_funnel, _Q298_ORACLE, _Q298_NOTES),
-    }
-)
+register("q298_curation_funnel", _Q298_ORACLE, _Q298_NOTES)(q298_curation_funnel)
 
 
 def q299_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6737,11 +6379,7 @@ _Q299_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q299_incremental_agg": (q299_incremental_agg, _Q299_ORACLE, _Q299_NOTES),
-    }
-)
+register("q299_incremental_agg", _Q299_ORACLE, _Q299_NOTES)(q299_incremental_agg)
 
 
 def q300_geo_radius_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6818,11 +6456,7 @@ _Q300_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q300_geo_radius_join": (q300_geo_radius_join, _Q300_ORACLE, _Q300_NOTES),
-    }
-)
+register("q300_geo_radius_join", _Q300_ORACLE, _Q300_NOTES)(q300_geo_radius_join)
 
 
 def q301_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6881,14 +6515,8 @@ _Q301_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q301_cumulative_distinct": (
-            q301_cumulative_distinct,
-            _Q301_ORACLE,
-            _Q301_NOTES,
-        ),
-    }
+register("q301_cumulative_distinct", _Q301_ORACLE, _Q301_NOTES)(
+    q301_cumulative_distinct
 )
 
 
@@ -6917,11 +6545,7 @@ _Q302_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q302_join_advisor": (q302_join_advisor, None, _Q302_NOTES),
-    }
-)
+register("q302_join_advisor", None, _Q302_NOTES)(q302_join_advisor)
 
 
 def q303_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7023,11 +6647,7 @@ _Q303_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q303_ranking_metrics": (q303_ranking_metrics, _Q303_ORACLE, _Q303_NOTES),
-    }
-)
+register("q303_ranking_metrics", _Q303_ORACLE, _Q303_NOTES)(q303_ranking_metrics)
 
 
 def q304_video_features(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7060,11 +6680,7 @@ _Q304_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q304_video_features": (q304_video_features, None, _Q304_NOTES),
-    }
-)
+register("q304_video_features", None, _Q304_NOTES)(q304_video_features)
 
 
 def q305_int8_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7171,16 +6787,8 @@ _Q306_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q305_int8_quantization": (
-            q305_int8_quantization,
-            _Q305_ORACLE,
-            _Q305_NOTES,
-        ),
-        "q306_hamming_rerank": (q306_hamming_rerank, _Q306_ORACLE, _Q306_NOTES),
-    }
-)
+register("q305_int8_quantization", _Q305_ORACLE, _Q305_NOTES)(q305_int8_quantization)
+register("q306_hamming_rerank", _Q306_ORACLE, _Q306_NOTES)(q306_hamming_rerank)
 
 
 def q307_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7289,7 +6897,7 @@ def q308_conversion_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE no-grouping aggregate with per-variant conditional sums — no
     # per-variant frames, no join at all (a groupBy(variant) + self-join
-    # would plan a non-scalar BNLJ the queue gate rightly flags)
+    # would plan a non-scalar BNLJ the catalog-wide plan gate rightly flags)
     is_a = F.col("variant") == "A"
 
     def lv(cond, level):
@@ -7420,20 +7028,8 @@ _Q308_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q307_seasonal_anomaly": (
-            q307_seasonal_anomaly,
-            _Q307_ORACLE,
-            _Q307_NOTES,
-        ),
-        "q308_conversion_ab_test": (
-            q308_conversion_ab_test,
-            _Q308_ORACLE,
-            _Q308_NOTES,
-        ),
-    }
-)
+register("q307_seasonal_anomaly", _Q307_ORACLE, _Q307_NOTES)(q307_seasonal_anomaly)
+register("q308_conversion_ab_test", _Q308_ORACLE, _Q308_NOTES)(q308_conversion_ab_test)
 
 
 def q309_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7502,11 +7098,7 @@ _Q309_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q309_silhouette": (q309_silhouette, _Q309_ORACLE, _Q309_NOTES),
-    }
-)
+register("q309_silhouette", _Q309_ORACLE, _Q309_NOTES)(q309_silhouette)
 
 
 def q310_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7605,11 +7197,7 @@ _Q310_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q310_mmr_diversify": (q310_mmr_diversify, _Q310_ORACLE, _Q310_NOTES),
-    }
-)
+register("q310_mmr_diversify", _Q310_ORACLE, _Q310_NOTES)(q310_mmr_diversify)
 
 
 def q311_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7694,15 +7282,7 @@ _Q311_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q311_embedding_drift": (
-            q311_embedding_drift,
-            _Q311_ORACLE,
-            _Q311_NOTES,
-        ),
-    }
-)
+register("q311_embedding_drift", _Q311_ORACLE, _Q311_NOTES)(q311_embedding_drift)
 
 
 def q312_bot_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7812,16 +7392,8 @@ _Q313_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q312_bot_signature": (q312_bot_signature, _Q312_ORACLE, _Q312_NOTES),
-        "q313_wasserstein_drift": (
-            q313_wasserstein_drift,
-            _Q313_ORACLE,
-            _Q313_NOTES,
-        ),
-    }
-)
+register("q312_bot_signature", _Q312_ORACLE, _Q312_NOTES)(q312_bot_signature)
+register("q313_wasserstein_drift", _Q313_ORACLE, _Q313_NOTES)(q313_wasserstein_drift)
 
 
 def q314_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7916,11 +7488,7 @@ _Q314_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q314_image_near_dup": (q314_image_near_dup, None, _Q314_NOTES),
-    }
-)
+register("q314_image_near_dup", None, _Q314_NOTES)(q314_image_near_dup)
 
 
 def q315_psl_domain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8052,46 +7620,4 @@ _Q315_NOTES = (
 )
 
 
-ROADMAP7.update(
-    {
-        "q315_psl_domain": (q315_psl_domain, _q315_oracle(), _Q315_NOTES),
-    }
-)
-
-
-# Round-9 queue additions live in their own module (roadmap9.py imports
-# nothing from this one, so the merge is cycle-free); they share this
-# queue dict and the same pre-verification sweep / landing mechanism.
-from .roadmap9 import ROADMAP9 as _ROADMAP9  # noqa: E402
-
-ROADMAP7.update(_ROADMAP9)
-
-# Round-10 queue additions (same pattern).
-from .roadmap10 import ROADMAP10 as _ROADMAP10  # noqa: E402
-
-ROADMAP7.update(_ROADMAP10)
-
-# Round-11 queue additions (same pattern).
-from .roadmap11 import ROADMAP11 as _ROADMAP11  # noqa: E402
-
-ROADMAP7.update(_ROADMAP11)
-
-# Round-12 queue additions (same pattern).
-from .roadmap12 import ROADMAP12 as _ROADMAP12  # noqa: E402
-
-ROADMAP7.update(_ROADMAP12)
-
-# Round-13 queue additions (same pattern).
-from .roadmap13 import ROADMAP13 as _ROADMAP13  # noqa: E402
-
-ROADMAP7.update(_ROADMAP13)
-
-# Round-14 queue additions (same pattern).
-from .roadmap14 import ROADMAP14 as _ROADMAP14  # noqa: E402
-
-ROADMAP7.update(_ROADMAP14)
-
-# Round-15 queue additions (same pattern).
-from .roadmap15 import ROADMAP15 as _ROADMAP15  # noqa: E402
-
-ROADMAP7.update(_ROADMAP15)
+register("q315_psl_domain", _q315_oracle(), _Q315_NOTES)(q315_psl_domain)

@@ -1,8 +1,4 @@
-"""Round-9 catalog queue (q316+): written and pre-verified this round,
-NOT registered — merged into ``roadmap7.ROADMAP7`` (this module is
-imported at the bottom of ``roadmap7.py``; it must not import roadmap7
-back) and landed by ``roadmap7_landed`` when the rotation arithmetic
-allows (round 10, per the staged-50 discipline of the r8 verdict).
+"""Catalog queries q316–q341, each registered where it is defined.
 
 Fixture-noise rule for this module: deterministic INTEGER hashing
 ``(key * 2654435761) % m`` (Knuth multiplicative, BIGINT-safe in both
@@ -15,9 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import register
 from ..sources import read_table
 
-ROADMAP9: dict[str, tuple] = {}
 
 _MULT = 2654435761  # Knuth multiplicative constant (shared with llm/audio)
 
@@ -108,7 +104,7 @@ _Q316_NOTES = (
     "division per term, 9dp"
 )
 
-ROADMAP9["q316_cohen_kappa"] = (q316_cohen_kappa, _Q316_ORACLE, _Q316_NOTES)
+register("q316_cohen_kappa", _Q316_ORACLE, _Q316_NOTES)(q316_cohen_kappa)
 
 
 # --- q317: Fleiss' kappa ----------------------------------------------------
@@ -189,7 +185,7 @@ _Q317_NOTES = (
     "Scalar crossJoins only — passes the structural NLJ gate"
 )
 
-ROADMAP9["q317_fleiss_kappa"] = (q317_fleiss_kappa, _Q317_ORACLE, _Q317_NOTES)
+register("q317_fleiss_kappa", _Q317_ORACLE, _Q317_NOTES)(q317_fleiss_kappa)
 
 
 # --- q318: multiclass classification report ---------------------------------
@@ -297,10 +293,8 @@ _Q318_NOTES = (
     "gates) publishes"
 )
 
-ROADMAP9["q318_classification_report"] = (
-    q318_classification_report,
-    _Q318_ORACLE,
-    _Q318_NOTES,
+register("q318_classification_report", _Q318_ORACLE, _Q318_NOTES)(
+    q318_classification_report
 )
 
 
@@ -358,7 +352,7 @@ _Q319_NOTES = (
     "+ scalar total; deterministic (count desc, pattern) tiebreak"
 )
 
-ROADMAP9["q319_null_patterns"] = (q319_null_patterns, _Q319_ORACLE, _Q319_NOTES)
+register("q319_null_patterns", _Q319_ORACLE, _Q319_NOTES)(q319_null_patterns)
 
 
 # --- q320: Theil–Sen robust trend -------------------------------------------
@@ -408,7 +402,7 @@ _Q320_NOTES = (
     "IEEE parity, no interpolation ambiguity"
 )
 
-ROADMAP9["q320_theil_sen"] = (q320_theil_sen, _Q320_ORACLE, _Q320_NOTES)
+register("q320_theil_sen", _Q320_ORACLE, _Q320_NOTES)(q320_theil_sen)
 
 
 # --- q321: PSL-keyed per-domain curation quota ------------------------------
@@ -528,7 +522,7 @@ _Q321_NOTES = (
     "constants (q315 discipline)"
 )
 
-ROADMAP9["q321_domain_quota"] = (q321_domain_quota, _q321_oracle(), _Q321_NOTES)
+register("q321_domain_quota", _q321_oracle(), _Q321_NOTES)(q321_domain_quota)
 
 
 # --- q322: real image resize ------------------------------------------------
@@ -640,7 +634,7 @@ _Q322_NOTES = (
     "rule. Map-only Arrow pipeline, shuffle-free"
 )
 
-ROADMAP9["q322_image_resize"] = (q322_image_resize, _Q322_ORACLE, _Q322_NOTES)
+register("q322_image_resize", _Q322_ORACLE, _Q322_NOTES)(q322_image_resize)
 
 
 # --- q323: audio resample ---------------------------------------------------
@@ -710,7 +704,7 @@ _Q323_NOTES = (
     "block means + stats in SQL. Map-only Arrow, shuffle-free"
 )
 
-ROADMAP9["q323_audio_resample"] = (q323_audio_resample, _Q323_ORACLE, _Q323_NOTES)
+register("q323_audio_resample", _Q323_ORACLE, _Q323_NOTES)(q323_audio_resample)
 
 
 # --- q324: distributed BPE encode -------------------------------------------
@@ -745,7 +739,7 @@ _Q324_NOTES = (
     "encode==bpe_segment parity pytest-pinned"
 )
 
-ROADMAP9["q324_bpe_encode"] = (q324_bpe_encode, None, _Q324_NOTES)
+register("q324_bpe_encode", None, _Q324_NOTES)(q324_bpe_encode)
 
 
 # --- q325: XML source round-trip ---------------------------------------------
@@ -814,7 +808,7 @@ _Q325_NOTES = (
     "documented boundary, not a stub"
 )
 
-ROADMAP9["q325_xml_source"] = (q325_xml_source, _Q325_ORACLE, _Q325_NOTES)
+register("q325_xml_source", _Q325_ORACLE, _Q325_NOTES)(q325_xml_source)
 
 
 # --- q326: Mann-Whitney U test ----------------------------------------------
@@ -897,7 +891,7 @@ _Q326_NOTES = (
     "fixture forces heavy ties"
 )
 
-ROADMAP9["q326_mann_whitney"] = (q326_mann_whitney, _Q326_ORACLE, _Q326_NOTES)
+register("q326_mann_whitney", _Q326_ORACLE, _Q326_NOTES)(q326_mann_whitney)
 
 
 # --- q327: Markov transition matrix -----------------------------------------
@@ -946,11 +940,7 @@ _Q327_NOTES = (
     "tiny broadcast agg, no collect"
 )
 
-ROADMAP9["q327_markov_transitions"] = (
-    q327_markov_transitions,
-    _Q327_ORACLE,
-    _Q327_NOTES,
-)
+register("q327_markov_transitions", _Q327_ORACLE, _Q327_NOTES)(q327_markov_transitions)
 
 
 # --- q328: CDC log apply ----------------------------------------------------
@@ -1035,7 +1025,7 @@ _Q328_NOTES = (
     "from semantics (CASE/UNION), independent of the plan"
 )
 
-ROADMAP9["q328_cdc_apply"] = (q328_cdc_apply, _Q328_ORACLE, _Q328_NOTES)
+register("q328_cdc_apply", _Q328_ORACLE, _Q328_NOTES)(q328_cdc_apply)
 
 
 # --- q329: unigram-LM tokenizer training ------------------------------------
@@ -1076,7 +1066,7 @@ _Q329_NOTES = (
     "vs the single-threaded reference pytest-pinned"
 )
 
-ROADMAP9["q329_unigram_tokenizer"] = (q329_unigram_tokenizer, None, _Q329_NOTES)
+register("q329_unigram_tokenizer", None, _Q329_NOTES)(q329_unigram_tokenizer)
 
 
 # --- q330: permutation test -------------------------------------------------
@@ -1168,11 +1158,7 @@ _Q330_NOTES = (
     "decimal-stabilized sums"
 )
 
-ROADMAP9["q330_permutation_test"] = (
-    q330_permutation_test,
-    _Q330_ORACLE,
-    _Q330_NOTES,
-)
+register("q330_permutation_test", _Q330_ORACLE, _Q330_NOTES)(q330_permutation_test)
 
 
 # --- q331: graph modularity -------------------------------------------------
@@ -1256,11 +1242,7 @@ _Q331_NOTES = (
     "window, no collect, output communities-sized"
 )
 
-ROADMAP9["q331_graph_modularity"] = (
-    q331_graph_modularity,
-    _Q331_ORACLE,
-    _Q331_NOTES,
-)
+register("q331_graph_modularity", _Q331_ORACLE, _Q331_NOTES)(q331_graph_modularity)
 
 
 # --- q332: Benjamini-Hochberg FDR -------------------------------------------
@@ -1334,7 +1316,7 @@ _Q332_NOTES = (
     "deterministic test-name tiebreak"
 )
 
-ROADMAP9["q332_fdr_bh"] = (q332_fdr_bh, _Q332_ORACLE, _Q332_NOTES)
+register("q332_fdr_bh", _Q332_ORACLE, _Q332_NOTES)(q332_fdr_bh)
 
 
 # --- q333: Neyman-allocation stratified sample ------------------------------
@@ -1420,7 +1402,7 @@ _Q333_NOTES = (
     "on the stratum key"
 )
 
-ROADMAP9["q333_neyman_sample"] = (q333_neyman_sample, _Q333_ORACLE, _Q333_NOTES)
+register("q333_neyman_sample", _Q333_ORACLE, _Q333_NOTES)(q333_neyman_sample)
 
 
 # --- q334: Kruskal-Wallis H -------------------------------------------------
@@ -1506,11 +1488,7 @@ _Q334_NOTES = (
     "ships at 6dp. Statistic only; chi-square CDF is client-side"
 )
 
-ROADMAP9["q334_kruskal_wallis"] = (
-    q334_kruskal_wallis,
-    _Q334_ORACLE,
-    _Q334_NOTES,
-)
+register("q334_kruskal_wallis", _Q334_ORACLE, _Q334_NOTES)(q334_kruskal_wallis)
 
 
 # --- q335: McNemar paired test ----------------------------------------------
@@ -1571,7 +1549,7 @@ _Q335_NOTES = (
     "divisions, bit-portable unrounded"
 )
 
-ROADMAP9["q335_mcnemar"] = (q335_mcnemar, _Q335_ORACLE, _Q335_NOTES)
+register("q335_mcnemar", _Q335_ORACLE, _Q335_NOTES)(q335_mcnemar)
 
 
 # --- q336: precision-recall AP ----------------------------------------------
@@ -1647,11 +1625,7 @@ _Q336_NOTES = (
     "per-segment float sum is the only order-sensitive reduce -> 6dp"
 )
 
-ROADMAP9["q336_average_precision"] = (
-    q336_average_precision,
-    _Q336_ORACLE,
-    _Q336_NOTES,
-)
+register("q336_average_precision", _Q336_ORACLE, _Q336_NOTES)(q336_average_precision)
 
 
 # --- q337: degree assortativity ---------------------------------------------
@@ -1721,10 +1695,8 @@ _Q337_NOTES = (
     "crossJoin is metadata-sized (q316 discipline)"
 )
 
-ROADMAP9["q337_degree_assortativity"] = (
-    q337_degree_assortativity,
-    _Q337_ORACLE,
-    _Q337_NOTES,
+register("q337_degree_assortativity", _Q337_ORACLE, _Q337_NOTES)(
+    q337_degree_assortativity
 )
 
 
@@ -1852,11 +1824,7 @@ _Q338_NOTES = (
     "literally), one hash agg. frac = n/total exact-int IEEE division"
 )
 
-ROADMAP9["q338_format_inference"] = (
-    q338_format_inference,
-    _Q338_ORACLE,
-    _Q338_NOTES,
-)
+register("q338_format_inference", _Q338_ORACLE, _Q338_NOTES)(q338_format_inference)
 
 
 # --- q339: CIDR enrichment join ---------------------------------------------
@@ -1953,7 +1921,7 @@ _Q339_NOTES = (
     "blocks, flat in block count. All-integer, bit-portable"
 )
 
-ROADMAP9["q339_cidr_enrich"] = (q339_cidr_enrich, _Q339_ORACLE, _Q339_NOTES)
+register("q339_cidr_enrich", _Q339_ORACLE, _Q339_NOTES)(q339_cidr_enrich)
 
 
 # --- q340: audio VAD segmentation -------------------------------------------
@@ -2046,7 +2014,7 @@ _Q340_NOTES = (
     "Map-only, shuffle-free, per-row cost linear in duration"
 )
 
-ROADMAP9["q340_audio_vad"] = (q340_audio_vad, _Q340_ORACLE, _Q340_NOTES)
+register("q340_audio_vad", _Q340_ORACLE, _Q340_NOTES)(q340_audio_vad)
 
 
 # --- q341: image gray histogram + entropy -----------------------------------
@@ -2165,8 +2133,4 @@ _Q341_NOTES = (
     "sum order. Map-only Arrow decode, one tiny agg exchange"
 )
 
-ROADMAP9["q341_image_histogram"] = (
-    q341_image_histogram,
-    _Q341_ORACLE,
-    _Q341_NOTES,
-)
+register("q341_image_histogram", _Q341_ORACLE, _Q341_NOTES)(q341_image_histogram)

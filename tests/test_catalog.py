@@ -72,107 +72,9 @@ def test_readme_count_matches_catalog():
     assert int(m.group(1)) == len(catalog)
 
 
-def test_roadmap7_queue_preverified(spark):
-    """Whatever remains QUEUED (round-15 additions q461+ after the
-    round-15 landing of q433–q460) must ALREADY pass the driver's
-    compare at the driver's scale — landing is then a pure registration
-    move. load_all() runs first so the landed entries are moved out of
-    the queue dict before the sweep."""
-    from oracle_utils import check_dtype_parity, compare_query
-
-    from dbkit_spark.catalog import load_all
-    assert len(load_all()) == 460  # 432 + the 28 landed q433–q460
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
-    # Round-15 additions (q461+); the queue is capped at one driver
-    # window. An empty queue (between addition batches) is legal.
-    assert len(ROADMAP7) <= 50
-    assert all(qnum(n)[0] >= 461 for n in ROADMAP7)
-    # BOTH driver scales: the round-7 q245 near-miss (6dp edge rounding
-    # diverged at sf0.001 only) showed sf0.01-only pre-verification is
-    # not enough.
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        for name, (fn, oracle, notes) in ROADMAP7.items():
-            assert notes
-            if oracle is None:
-                assert fn(spark, sf).count() > 0, name
-            else:
-                compare_query(spark, name, fn, oracle, sf)
-                check_dtype_parity(spark, name, fn, oracle, sf)
-
-
-GUARD_ROUND = 15  # the driver round whose rotation window this guard pins
-
-# The 22 least-recently-verified greens that top up the r15 window after
-# the q433–q460 landing: q168–q189, the r5 cohort minus its last eleven
-# (all last driver-green CORRECTNESS_r05; q190–q200 spill to r16).
-# Computed by load_all() rotation order at landing time and pinned
-# literally so a registration or artifact change that shifts the window
-# fails HERE, not in the driver sweep. The oracle-converted stragglers
-# (q38/q72/q79 last-green r7, q204/q212 r8, q267 r9, q310 r10) still do
-# NOT fit — the r5 cohort is older and fills all 22 slots — they reach
-# the window at r16 behind q190–q200 (the ordering re-stated in
-# queries/roadmap7_landed.py per VERDICT r14 item 3).
-R15_REFRESH = {
-    "q168_tpch_q15_top_supplier", "q169_tpch_q16_supplier_cnt",
-    "q170_grouped_regression", "q171_winsorized_stats",
-    "q172_document_chunking", "q173_tfidf_topk_terms",
-    "q174_domain_quota_sample", "q175_table_reconciliation",
-    "q176_hll_sketch_rollup", "q177_pagerank",
-    "q178_sql_recursive_cte", "q179_variant_extraction",
-    "q180_bitwise_surface", "q181_dynamic_session_gap",
-    "q182_url_parsing", "q183_time_weighted_avg",
-    "q184_quantile_binning", "q185_binary_encodings",
-    "q186_containment_pairs", "q187_stream_join_then_window",
-    "q188_array_set_ops", "q189_last_touch_attribution",
-}
-
-
-def _latest_artifact_round() -> int:
-    rounds = [0]
-    for path in REPO.glob("CORRECTNESS_r*.json"):
-        m = re.search(r"r(\d+)", path.name)
-        if m:
-            rounds.append(int(m.group(1)))
-    return max(rounds)
-
-
-def test_r15_window_is_exactly_the_landed_batch(spark):
-    """Round-14 pre-computation guard, artifact-aware: with driver
-    artifacts through r14 present (49 hash-green + q65 rows-only-by-
-    design, fifth consecutive zero-failure sweep, so no failure
-    re-enters), the 50-slot r15 rotation window must be exactly the 28
-    newly landed never-driver-checked queries q433–q460 plus the 22
-    least-recently-verified greens — q168–q189, pinned literally in
-    R15_REFRESH. If a future registration or CORRECTNESS file breaks
-    this arithmetic, fail HERE.
-
-    Artifact-aware (the round-8 lesson: a window guard goes red the
-    moment the driver deposits the round's CORRECTNESS file): once an
-    artifact at/after GUARD_ROUND exists, the window has legitimately
-    rotated past this guard's arithmetic — the guard is spent, and the
-    live invariant it protected is re-checked in its artifact-independent
-    form (test_rotation_never_green_first)."""
-    window = list(load_all())[:50]
-    if _latest_artifact_round() >= GUARD_ROUND:
-        # Spent guard: the r15 (or later) sweep already landed. The
-        # durable invariant — rotation always spends slots on the
-        # least-evidenced queries first — is pinned artifact-
-        # independently by test_rotation_never_green_first; just ensure
-        # the window is full-size and deterministic here.
-        assert len(window) == 50
-        return
-    landed = {n for n in window if 433 <= qnum(n)[0] <= 460}
-    assert len(landed) == 28, sorted(landed)
-    expected = landed | R15_REFRESH
-    assert set(window) == expected and len(window) == 50, sorted(
-        set(window) ^ expected
-    )
-
-
 def test_no_nested_output_columns_anywhere(spark):
     """Driver-canon structural gate (VERDICT r9 items 1 & 5): no
-    registered or queued query may emit an Array/Map/Struct column.
+    registered query may emit an Array/Map/Struct column.
 
     The driver's canonicalizer pandas-sorts and hashes every output
     column; a nested value is unhashable and fails the whole query (the
@@ -189,14 +91,10 @@ def test_no_nested_output_columns_anywhere(spark):
     catalog-wide guarantee and is paid at the smallest fixture."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
     sf = "/root/testdata/sf0.001"
-    everything = {name: spec.fn for name, spec in load_all().items()}
-    everything.update({name: fn for name, (fn, _o, _n) in ROADMAP7.items()})
     offenders = []
-    for name, fn in sorted(everything.items()):
-        for field in fn(spark, sf).schema.fields:
+    for name, spec in sorted(load_all().items()):
+        for field in spec.fn(spark, sf).schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
     assert not offenders, offenders

@@ -580,6 +580,25 @@ def test_jaccard_prefix_filter_equal_results_fewer_candidates(spark, sf_dir):
     assert n_prefix < 0.6 * n_all, (n_prefix, n_all)
 
 
+def test_jaccard_prefix_filter_borderline_size_ratio(spark):
+    """A 7-shingle doc fully inside a 100-shingle doc has J = 7/100,
+    exactly the threshold 0.07 — but 0.07 * 100 is 7.000000000000001 in
+    binary FP, so an unrounded size-ratio filter drops the pair."""
+    from dbkit_spark.llm.dedup import jaccard_prefix_filter_pairs, ngram_jaccard_pairs
+
+    words = [f"w{i}" for i in range(102)]  # 3-word shingles: 100 distinct
+    docs = spark.createDataFrame(
+        [(1, " ".join(words[:9])), (2, " ".join(words))], "doc_id long, text string"
+    )
+
+    def pairs(df):
+        return {(r.doc_a, r.doc_b, r.jaccard) for r in df.collect()}
+
+    full = pairs(ngram_jaccard_pairs(docs, threshold=0.07))
+    assert full == {(1, 2, 0.07)}
+    assert pairs(jaccard_prefix_filter_pairs(docs, threshold=0.07)) == full
+
+
 def test_quadratic_baselines_guarded(spark):
     """The declared O(n²) verify-baselines must refuse over-limit inputs
     (pointing at their scalable twins) rather than silently launching a

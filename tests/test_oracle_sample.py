@@ -1,9 +1,9 @@
 """Bounded oracle sample for the DEFAULT test collection
 (OPTIMIZATION_r16 / VERDICT r15 item 2).
 
-The whole-catalog differential sweep (``test_oracle.py``: 443 oracle
-compares + 443 dtype parities + 17 rows-only, ~31 min on a quiet
-machine) crossed the driver's `pytest tests/` budget at r15 the moment
+The whole-catalog differential sweep (``test_oracle.py``: every oracle
+compare + dtype parity + rows-only run, ~31 min on a quiet machine at
+460 queries) crossed the `pytest tests/` time budget at r15 the moment
 the host slowed — the run timed out at ~38% with zero failures. The
 sweep is the round-close gate, not an every-run gate, so it now lives
 behind ``-m full`` (see pytest.ini / conftest) and THIS module keeps a
@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import pytest
 
-from dbkit_spark.catalog import load_all
+from dbkit_spark.catalog import load_all, qnum
 from tests.oracle_utils import check_dtype_parity, compare_query
 
 CATALOG = load_all()
@@ -46,8 +46,17 @@ BENCH = [
 ]
 
 _STRIDE = 9
+# The stride runs separately over the catalog as first sampled (q-number
+# <= 460) and over later additions, so registering a query never
+# reshuffles the existing slice.
 _REST = [n for n in WITH_ORACLE if n not in BENCH]
-SAMPLE = [n for n in BENCH if n in set(WITH_ORACLE)] + _REST[::_STRIDE]
+_FIRST = [n for n in _REST if qnum(n)[0] <= 460]
+_LATER = [n for n in _REST if qnum(n)[0] > 460]
+SAMPLE = (
+    [n for n in BENCH if n in set(WITH_ORACLE)]
+    + _FIRST[::_STRIDE]
+    + _LATER[::_STRIDE]
+)
 
 
 @pytest.mark.parametrize("name", SAMPLE)

@@ -104,15 +104,10 @@ _INTENTIONAL_CROSS = {
     "q167_tpch_q11_important_stock",
     "q173_tfidf_topk_terms",
     "q192_balanced_downsample",
-    # landed with the round-9 staged q242-q291 registration: truncation
-    # recall's require_small-guarded exact all-pairs baseline (probe-
-    # subset contract; full-dim recall==1.0 invariant needs the exact
-    # pairs) — same justification it carried in the queue gate's
-    # intentional set while it was queued
+    #   q274 — truncation recall's require_small-guarded exact
+    #          all-pairs baseline (probe-subset contract; full-dim
+    #          recall==1.0 invariant needs the exact pairs)
     "q274_truncation_recall",
-    # landed with the round-10 staged q292-q340 registration, carrying
-    # the same per-entry justification they held in the queue gate's
-    # intentional set while queued:
     #   q306 — hamming rerank broadcasts the QUERY SET (bounded by
     #          contract, the q43 discipline) against the packed corpus;
     #          the shortlist needs every query x corpus hamming
@@ -121,27 +116,19 @@ _INTENTIONAL_CROSS = {
     #          definition requires all centroids per vector)
     "q306_hamming_rerank",
     "q309_silhouette",
-    # landed with the round-11 staged q341-q362 registration, same
-    # justification it held in the queue gate's intentional set:
     #   q362 — RBO of int8-vs-exact retrieval runs BOTH rankings
     #          through cosine_topk's broadcast probe-subset crossJoin
     #          (vec_id % 100 queries — the q43 bounded-contract class)
     "q362_rbo_quantization",
-    # landed with the round-12 q363-q374 registration, same
-    # justification it held in the queue gate's intentional set:
     #   q366 — PQ recall@k's EXACT arm is the q43 bounded-probe
     #          broadcast crossJoin (5 query vectors vs corpus, the
     #          designed same-metric baseline); the ADC arm under test
     #          is map-only over codes and joins nothing
     "q366_pq_recall",
-    # landed with the round-14 q401-q432 registration, same
-    # justification it held in the queue gate's intentional set:
     #   q415 — projection_recall's require_small-guarded exact
     #          pairwise baseline (probe-subset contract at scale), the
-    #          same justification q274 carried while queued
+    #          same justification as q274
     "q415_jl_projection_recall",
-    # landed with the round-15 q433-q460 registration, same
-    # justification it held in the queue gate's intentional set:
     #   q445 — kendall_tau_b's i<j pair enumeration is a THETA join,
     #          so Spark plans a BNLJ — over an ITEMS-SIZED frame by
     #          input contract (the q419/q420 bounded leaderboard
@@ -155,7 +142,7 @@ def test_catalog_wide_no_accidental_nlj(spark):
     """Every batch catalog query's physical plan must be free of
     BroadcastNestedLoopJoin/CartesianProduct — the §7.4 failure mode where
     a non-equi join silently degrades to O(n*m). One regression gate for
-    the whole catalog, STRUCTURAL like the queue gate: a BNLJ passes iff
+    the whole catalog, STRUCTURAL: a BNLJ passes iff
     its broadcast side is provably one row (no-grouping-key aggregate /
     one-row relation). ``_INTENTIONAL_CROSS`` remains only for the legacy
     shapes whose tiny side is a FILTER or literal small table rather than
@@ -442,51 +429,6 @@ def test_duplicated_spans_plan_shape(spark, sf_dir):
     assert "SinglePartition" not in p2
     for p in (p1, p2):
         assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-
-
-def test_queue_wide_no_accidental_nlj(spark):
-    """The pre-verified queue gets the same NLJ regression gate as the
-    registered catalog BEFORE it lands — and the gate is STRUCTURAL
-    (VERDICT r7 item 1): a BroadcastNestedLoopJoin is acceptable iff its
-    broadcast side is provably one row (a no-grouping-key aggregate or a
-    literal one-row relation); any other BNLJ, and every
-    CartesianProduct, fails. No allowlist — adding a new scalar
-    crossJoin can never make this gate go stale, and adding a quadratic
-    one can never sneak past it."""
-    from dbkit_spark.catalog import load_all
-    from dbkit_spark.plans.explain_utils import nlj_offenders
-
-    load_all()  # move landed entries out of the queue first
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
-    # streaming replays execute rather than plan (q273 runs its
-    # availableNow replay inside the query fn — plan it would hang on
-    # the unstarted stream)
-    skip = {
-        "q207_heavy_hitters_stream_replay",
-        "q215_streaming_dedup_ingest",
-        "q273_streaming_cusum",
-        "q294_streaming_funnel",
-    }
-    # the q43/q44 class: require_small-guarded exact all-pairs
-    # baselines whose crossJoin is the DESIGNED plan (probe-subset
-    # contract at scale) — same documented set as the catalog gate's
-    # _INTENTIONAL_CROSS, kept tiny and justified per entry
-    # (q274 moved to _INTENTIONAL_CROSS with the round-9 landing;
-    # q306/q309 moved there with the round-10 landing; q362 with the
-    # round-11 landing; q366 with the round-12 landing; q415 with the
-    # round-14 landing; q445 with the round-15 landing). No round-15
-    # queue entries currently carry a justified BNLJ.
-    intentional: set[str] = set()
-    sf = "/root/testdata/sf0.001"
-    offenders = {}
-    for name, (fn, oracle, notes) in ROADMAP7.items():
-        if name in skip or name in intentional:
-            continue
-        bad = nlj_offenders(fn(spark, sf))
-        if bad:
-            offenders[name] = bad
-    assert not offenders, f"accidental NLJ/cartesian in queue: {offenders}"
 
 
 def test_headline_plans_no_cartesian_no_single_partition(spark):

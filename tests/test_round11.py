@@ -77,7 +77,7 @@ def test_fixture_once_crash_leaves_no_fresh_marker(tmp_path):
     assert not os.path.exists(path + ".lock")
 
 
-# --- round-11 operators (q363-q366 queue) -----------------------------------
+# --- round-11 operators (q363-q366) -----------------------------------------
 
 import math
 import random

@@ -175,7 +175,7 @@ def test_fixture_fresh_steal_is_restored(tmp_path):
     assert _fixtures.MARKER  # module import sanity
 
 
-# --- round-12 queue operators (q375-q379) -----------------------------------
+# --- round-12 operators (q375-q379) -----------------------------------------
 
 
 def _emb_df(spark, rows):
@@ -929,8 +929,6 @@ def test_dedup_retention_conservation(spark, sf_dir):
     sums it reports."""
     from dbkit_spark.catalog import load_all
 
-    # landed with the r13 registration: read from the catalog, not the
-    # queue dict (the landing pops queue entries)
     fn = load_all()["q396_dedup_retention"].fn
     rows = fn(spark, sf_dir).collect()
     assert rows
@@ -984,8 +982,6 @@ def test_stream_quality_gate_equals_batch(spark, sf_dir):
     from dbkit_spark.catalog import load_all
     from dbkit_spark.sources import read_table
 
-    # landed with the r13 registration: read from the catalog, not the
-    # queue dict (the landing pops queue entries)
     fn = load_all()["q398_stream_quality_gate"].fn
     streamed = sorted(map(tuple, fn(spark, sf_dir).collect()))
     batch = sorted(

@@ -1,8 +1,7 @@
-"""Law / hand-case tests for the round-13 queue operators (q401–q431).
+"""Law / hand-case tests for the round-13 operators (q401–q431).
 
-Oracle parity for the queued queries themselves is swept by
-tests/test_catalog.py::test_roadmap7_queue_preverified at both driver
-scales; these tests pin the operator SEMANTICS — closed-form hand
+Oracle parity for the queries themselves is swept by
+tests/test_oracle.py; these tests pin the operator SEMANTICS — closed-form hand
 cases, invariance laws, degenerate inputs — independently of the
 fixtures.
 """
@@ -773,12 +772,9 @@ def test_curation_funnel_monotone_and_stage_chaining(spark, sf_dir):
     non-increasing; each stage's n_in equals the previous stage's
     n_pass; stage 1 sees the whole corpus; pass_rate is consistent."""
     from dbkit_spark.catalog import load_all
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
     from dbkit_spark.sources import read_table
 
-    catalog = load_all()
-    name = "q418_curation_funnel"
-    fn = catalog[name].fn if name in catalog else ROADMAP7[name][0]
+    fn = load_all()["q418_curation_funnel"].fn
     rows = fn(spark, sf_dir).collect()
     assert [r["stage_idx"] for r in rows] == [1, 2, 3, 4]
     n_docs = read_table(spark, sf_dir, "documents").count()

@@ -1,7 +1,7 @@
 """Law/hand-case tests for the round-14 operators (generation-eval
 metrics, C4/Gopher segment rules, ECE, MAUVE frontier, Heaps fit,
-factorial interaction, Kendall tau-b). Every queued q433-q446 entry
-has its oracle pre-verified by test_catalog's queue sweep; these pin
+factorial interaction, Kendall tau-b). Oracle parity for q433-q446
+is swept by tests/test_oracle.py; these pin
 the operator-level semantics on hand-built frames."""
 
 from __future__ import annotations
@@ -529,16 +529,17 @@ def test_kendall_all_tied_null(spark):
     assert kendall_tau_b(items, "x", "y").collect()[0]["tau_b"] is None
 
 
-# --- queue integrity ------------------------------------------------------------------------
+# --- catalog integrity ----------------------------------------------------------------------
 
 
 def test_roadmap14_entries_well_formed():
-    from dbkit_spark.queries.roadmap14 import ROADMAP14
+    from dbkit_spark.catalog import load_all, qnum
 
-    assert len(ROADMAP14) == 28
-    for name, (fn, oracle, notes) in ROADMAP14.items():
-        assert callable(fn) and notes
-        assert oracle is None or "SELECT" in oracle.upper()
+    specs = {n: s for n, s in load_all().items() if 433 <= qnum(n)[0] <= 460}
+    assert len(specs) == 28
+    for name, spec in specs.items():
+        assert callable(spec.fn) and spec.notes
+        assert spec.oracle is None or "SELECT" in spec.oracle.upper()
 
 
 # --- Wilcoxon signed-rank ---------------------------------------------------------------
@@ -657,8 +658,8 @@ def test_token_f1_inline_matches_batch(spark):
 
 
 def test_truncation_gate_stream_equals_batch(spark, sf_dir):
+    from dbkit_spark.catalog import load_all
     from dbkit_spark.llm.texteval import truncation_eval_gate
-    from dbkit_spark.queries.roadmap14 import ROADMAP14
     from dbkit_spark.sources import read_table
 
     batch = sorted(
@@ -669,7 +670,7 @@ def test_truncation_gate_stream_equals_batch(spark, sf_dir):
     )
     streamed = sorted(
         tuple(r)
-        for r in ROADMAP14["q449_stream_eval_gate"][0](spark, sf_dir).collect()
+        for r in load_all()["q449_stream_eval_gate"].fn(spark, sf_dir).collect()
     )
     assert streamed == batch and len(batch) > 0
 

@@ -1,7 +1,7 @@
 """Round-15 regression tests: the four ADVICE r14 NULL/separator edge
 fixes (friedman NULL-row rank shift, kendall_tau_b NULL scores,
 wilcoxon all-tied zero reporting, literal split separators), plus
-law/hand-case tests for the round-15 queue operators."""
+law/hand-case tests for the round-15 operators."""
 
 from __future__ import annotations
 
@@ -442,10 +442,7 @@ def test_curation_dag_plan_shape(spark):
     past it)."""
     from dbkit_spark.catalog import load_all
 
-    load_all()
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
-    fn = ROADMAP7["q465_curation_dag"][0]
+    fn = load_all()["q465_curation_dag"].fn
     df = fn(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan

@@ -743,19 +743,26 @@ def test_lpa_deterministic_under_repartition(spark):
     assert a == b
 
 
-# --- engine facade: queued queries -------------------------------------------
+# --- engine facade -----------------------------------------------------------
 
 
-def test_engine_resolves_queued_queries(spark):
+def test_engine_run_and_oracle_contract(spark, sf_dir):
+    """Engine.run/oracle resolve exactly the registered catalog: a
+    catalog name (q461 included) works, an unknown name raises
+    KeyError."""
     from dbkit_spark.engine import Engine
 
     eng = Engine(spark)
-    df = eng.run("q222_l_diversity", "/root/testdata/sf0.001")
+    df = eng.run("q222_l_diversity", sf_dir)
     assert df.collect()[0]["n_cells"] > 0
-    assert "l_diversity" not in eng.catalog  # still frozen out of the catalog
+    assert eng.oracle("q222_l_diversity") == eng.catalog["q222_l_diversity"].oracle
     assert eng.oracle("q222_l_diversity") is not None
-    # registered queries keep working through the same entry point
-    assert eng.run("q01_pricing_summary", "/root/testdata/sf0.001").count() > 0
+    assert eng.run("q461_edit_distance", sf_dir).count() > 0
+    assert eng.oracle("q461_edit_distance") is not None
+    with pytest.raises(KeyError):
+        eng.run("q999_unknown", sf_dir)
+    with pytest.raises(KeyError):
+        eng.oracle("q999_unknown")
 
 
 # --- parquet footer-stats pruning --------------------------------------------

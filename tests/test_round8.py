@@ -717,8 +717,6 @@ def test_isotonic_laws(spark):
 def test_cohort_retention_laws(spark, sf_dir):
     """Offset-0 retention is exactly 1.0 for every cohort; retention
     never exceeds 1; n_active <= cohort_size."""
-    # q268 LANDED in the round-9 staged registration — look it up via
-    # the catalog (roadmap7_landed pops landed names out of ROADMAP7)
     from dbkit_spark.catalog import load_all
 
     fn = load_all()["q268_cohort_retention"].fn
@@ -2014,9 +2012,7 @@ def test_prefix_family_exchange_budgets(spark, sf_dir):
 
     from dbkit_spark.catalog import load_all
 
-    catalog = load_all()  # lands q242-q291; queue holds the remainder
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
+    catalog = load_all()
     budgets = {
         "q280_running_revenue": 5,
         "q281_skyline_frontier": 6,
@@ -2025,8 +2021,7 @@ def test_prefix_family_exchange_budgets(spark, sf_dir):
         "q301_cumulative_distinct": 9,
     }
     for name, budget in budgets.items():
-        fn = catalog[name].fn if name in catalog else ROADMAP7[name][0]
-        plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        plan = catalog[name].fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
         final = plan.split("== Initial Plan ==")[0]
         # structural SinglePartition rule (the NLJ-gate discipline): an
         # Exchange SinglePartition is benign iff it merges map-side

@@ -130,15 +130,9 @@ def test_q315_heuristic_disagreement_is_visible(spark):
     """The anchor's agree column must actually expose heuristic
     mis-keys (github.io, gob.mx tenants) — if the PSL and the heuristic
     always agreed the operator would be dead weight."""
-    # q315 landed with the round-10 registration: resolve from the
-    # catalog first, queue as fallback (the test_round8 lookup pattern —
-    # a bare queue lookup KeyErrors once another test triggers landing)
     from dbkit_spark.catalog import load_all
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
 
-    catalog = load_all()
-    name = "q315_psl_domain"
-    fn = catalog[name].fn if name in catalog else ROADMAP7[name][0]
+    fn = load_all()["q315_psl_domain"].fn
     out = fn(spark, "/root/testdata/sf0.001")
     counts = dict(out.groupBy("agree").count().collect())
     assert counts.get(True, 0) > 0 and counts.get(False, 0) > 0, counts

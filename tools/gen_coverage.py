@@ -31,20 +31,6 @@ validated by dedicated pytest checks instead (noted per query).
 """
 
 
-QUEUED_HEADER = """
-## Queued (pre-verified, not yet registered)
-
-{n} anchors staged in ``queries/roadmap7.py``'s queue — each already
-passes the driver compare at sf0.001 + sf0.01
-(tests/test_catalog.py::test_roadmap7_queue_preverified) and the
-structural plan/schema gates; they land next round so the driver's
-50-slot rotation window never holds a registered-but-evidence-less
-query. Listed with a distinct prefix so the registered-table parity
-check above cannot confuse them with live catalog rows.
-
-"""
-
-
 def main() -> None:
     catalog = load_all()
     rows = []
@@ -54,19 +40,8 @@ def main() -> None:
         notes = " ".join(spec.notes.split())
         rows.append(f"| {name} | {kind} | {notes} |")
     out = HEADER.format(n=len(catalog)) + "\n".join(rows) + "\n"
-
-    from dbkit_spark.queries.roadmap7 import ROADMAP7
-
-    if ROADMAP7:
-        queued = []
-        for name in sorted(ROADMAP7, key=qnum):
-            _fn, oracle, notes = ROADMAP7[name]
-            kind = "DuckDB-matched" if oracle is not None else "rows-only"
-            queued.append(f"- **{name}** ({kind}): {' '.join(notes.split())}")
-        out += QUEUED_HEADER.format(n=len(ROADMAP7)) + "\n".join(queued) + "\n"
-
     (REPO / "COVERAGE.md").write_text(out)
-    print(f"wrote COVERAGE.md: {len(catalog)} queries, {len(ROADMAP7)} queued")
+    print(f"wrote COVERAGE.md: {len(catalog)} queries")
 
 
 if __name__ == "__main__":
