@@ -92,11 +92,12 @@ def prefix_agg(
     lead column's NUMERIC image (days for DATE, microseconds for
     timestamps, the value itself otherwise) — e.g. from
     ``sources.readers.footer_lead_boundaries``, which estimates them
-    from parquet footer statistics with zero data read. When given, the
-    ``approxQuantile`` boundary pass (one full scan per execution) is
-    skipped. Results are IDENTICAL for any monotone boundary set — the
-    bucket-local + cross-bucket-offset combine is exact regardless of
-    balance (OPTIMIZATION_r16); boundary quality affects only skew.
+    from the footer statistics of every file of a parquet dataset with
+    zero data read. When given, the ``approxQuantile`` boundary pass
+    (one full scan per execution) is skipped. Results are IDENTICAL for
+    any monotone boundary set — the bucket-local + cross-bucket-offset
+    combine is exact regardless of balance (OPTIMIZATION_r16); boundary
+    quality affects only skew.
     """
     if agg not in _AGGS:
         raise ValueError(f"agg must be one of {sorted(_AGGS)}, got {agg!r}")

@@ -5046,9 +5046,9 @@ def q280_running_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.col("o_totalprice").cast("decimal(28,2)").alias("_p"),
     )
-    # Bucket boundaries from the parquet footer's row-group statistics
-    # (OPTIMIZATION_r16 / VERDICT r15 item 6): metadata-only, replacing
-    # the approxQuantile pass that cost one full scan + one extra
+    # Bucket boundaries from the row-group statistics in the footers of
+    # every file of the orders dataset (OPTIMIZATION_r16): metadata-only,
+    # replacing the approxQuantile pass that cost one full scan + one extra
     # driver-blocking job per execution. Results are identical for any
     # monotone boundary set (prefix_agg's combine is exact regardless of
     # balance); None falls back to the approxQuantile pass.

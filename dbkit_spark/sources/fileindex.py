@@ -1,5 +1,10 @@
-"""Parquet footer-statistics index: manifest-style data skipping on raw
-parquet directories.
+"""Parquet footers: the engine's one footer reader, and manifest-style
+data skipping on raw parquet directories built from it.
+
+``footer_manifest(path)`` is the one footer reader: the footers of every
+file of a dataset (a file or a directory), cached on file list + mtimes.
+Row counts, the timestamp-unit sniff and prefix-scan boundaries
+(``sources.readers``) derive from it, so all read multi-file datasets.
 
 Table formats (Iceberg, Delta, Hudi) all converge on the same 100 TB
 primitive: a small MANIFEST of per-file column min/max stats, consulted
@@ -13,18 +18,20 @@ pruned file list.
 
 Scale design: the footer harvest is DISTRIBUTED — the file listing
 (metadata-sized) parallelizes across executors and each task reads only
-its files' footers via pyarrow, so indexing a million-file dataset is a
-map-only job whose output is O(files × indexed columns) rows: tiny, and
-itself a DataFrame to persist next to the data. Pruning intersects the
+its files' footers (``_read_footer``, as the manifest does), so
+indexing a million-file dataset is a map-only job whose output is
+O(files × indexed columns) rows: tiny, and a DataFrame to persist next to the data. Pruning intersects the
 predicate's [lo, hi] with each file's [min, max] — files with NULL
-stats (no footer stats for the column) are conservatively KEPT, so
-pruning can only skip files that provably contain no match (never
-drops rows).
+stats (no footer stats for the column, or stats with no numeric image
+such as strings) are conservatively KEPT, so pruning can only skip
+files that provably contain no match (never drops rows).
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+from decimal import Decimal as _Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,14 +51,113 @@ FILE_STATS_SCHEMA = T.StructType(
 
 
 def list_parquet_files(path: str) -> list[str]:
-    """Recursive listing of data files (metadata-sized; a real lake
-    would read this from the table format's manifest)."""
+    """``[path]`` for a single file, else a sorted recursive listing of
+    data files (metadata-sized; a real lake would read this from the
+    table format's manifest)."""
+    if os.path.isfile(path):
+        return [path]
     out = []
     for root, _, names in os.walk(path):
         for f in names:
             if f.endswith(".parquet") and not f.startswith("_"):
                 out.append(os.path.join(root, f))
     return sorted(out)
+
+
+def _data_files(path: str) -> list[str]:
+    files = list_parquet_files(path)
+    if not files:
+        raise ValueError(f"no parquet files under {path!r}")
+    return files
+
+
+def _read_footer(file: str):
+    """The engine's only footer open, on the driver (``footer_manifest``)
+    and in harvest tasks alike."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(file)
+
+
+# path -> (((file, mtime), ...), (FileMetaData, ...)): a dataset rewritten
+# in place is never served a stale footer
+_FOOTER_CACHE: dict[str, tuple[tuple, tuple]] = {}
+
+
+def footer_manifest(path: str) -> tuple:
+    """The ``FileMetaData`` of every data file of the dataset at ``path``,
+    in listing order. Raises ``ValueError`` when there are no parquet
+    files or a footer is corrupt, ``OSError`` when a file cannot be
+    read; failed reads are not cached."""
+    files = _data_files(path)
+    stamp = tuple((f, os.path.getmtime(f)) for f in files)
+    hit = _FOOTER_CACHE.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = (stamp, tuple(_read_footer(f) for f in files))
+        _FOOTER_CACHE[path] = hit
+    return hit[1]
+
+
+def _num(v) -> float | None:
+    """Numeric image of a footer statistic: days for DATE, microseconds
+    for timestamps, float for numbers, None otherwise (strings, bools)."""
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, _dt.datetime):
+        return (v.replace(tzinfo=None) - _dt.datetime(1970, 1, 1)).total_seconds() * 1e6
+    if isinstance(v, _dt.date):
+        return float((v - _dt.date(1970, 1, 1)).days)
+    if isinstance(v, (int, float, _Decimal)):
+        return float(v)
+    return None
+
+
+def _column_chunks(md) -> dict[str, list]:
+    """A footer's column-chunk metadata grouped by column path, in
+    row-group order — the per-file walk every harvest shares."""
+    chunks: dict[str, list] = {}
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        for ci in range(rg.num_columns):
+            c = rg.column(ci)
+            chunks.setdefault(c.path_in_schema, []).append(c)
+    return chunks
+
+
+def _numeric_ranges(chunks: list) -> list[tuple[float, float, int]] | None:
+    """``(min, max, values)`` per column chunk in ``_num`` images; None
+    when any chunk lacks min/max statistics or a numeric image."""
+    out = []
+    for c in chunks:
+        st = c.statistics
+        ok = st is not None and st.has_min_max
+        lo, hi = (_num(st.min), _num(st.max)) if ok else (None, None)
+        if lo is None or hi is None:
+            return None
+        out.append((lo, hi, c.num_values))
+    return out
+
+
+def _footer_job(
+    spark: SparkSession, files: list[str], schema: T.StructType, rows_of
+) -> DataFrame:
+    """Map-only distributed harvest over a file list: each task reads
+    its files' footers and emits ``rows_of(file, footer)`` rows of
+    ``schema`` — never a data page."""
+    import pandas as pd
+
+    names = schema.fieldNames()
+
+    def harvest(batches):
+        for pdf in batches:
+            rows = [r for f in pdf["file"] for r in rows_of(f, _read_footer(f))]
+            yield pd.DataFrame(rows, columns=names)
+
+    file_df = spark.createDataFrame(
+        [(f,) for f in files],
+        T.StructType([T.StructField("file", T.StringType())]),
+    ).repartition(min(len(files), 32))
+    return file_df.mapInPandas(harvest, schema)
 
 
 def build_file_stats_index(
@@ -65,10 +171,7 @@ def build_file_stats_index(
     The harvest is a map-only distributed job over the FILE LIST —
     footers only, never data pages.
     """
-    files = list_parquet_files(path)
-    if not files:
-        raise ValueError(f"no parquet files under {path!r}")
-    return _harvest_stats(spark, files, list(columns))
+    return _harvest_stats(spark, _data_files(path), list(columns))
 
 
 def prune_files(
@@ -129,44 +232,17 @@ def build_storage_profile(spark: SparkSession, path: str) -> DataFrame:
     Same distributed footer-harvest shape as ``build_file_stats_index``;
     cross-validated against DuckDB's independent ``parquet_metadata()``
     reader in tests (two engines, one footer — byte-exact agreement)."""
-    files = (
-        list_parquet_files(path)
-        if os.path.isdir(path)
-        else [path]
-    )
-    if not files:
-        raise ValueError(f"no parquet files under {path!r}")
-    import pandas as pd
+    def rows_of(file, md):
+        for col, cs in sorted(_column_chunks(md).items()):
+            yield (
+                file,
+                col,
+                sum(int(c.total_compressed_size) for c in cs),
+                sum(int(c.total_uncompressed_size) for c in cs),
+                sum(int(c.num_values) for c in cs),
+            )
 
-    def harvest(batches):
-        import pyarrow.parquet as pq
-
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in STORAGE_SCHEMA}
-            for fname in pdf["file"]:
-                md = pq.ParquetFile(fname).metadata
-                acc: dict[str, list[int]] = {}
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        a = acc.setdefault(c.path_in_schema, [0, 0, 0])
-                        a[0] += int(c.total_compressed_size)
-                        a[1] += int(c.total_uncompressed_size)
-                        a[2] += int(c.num_values)
-                for col, (comp, uncomp, nv) in sorted(acc.items()):
-                    rows["file"].append(fname)
-                    rows["column"].append(col)
-                    rows["compressed_bytes"].append(comp)
-                    rows["uncompressed_bytes"].append(uncomp)
-                    rows["n_values"].append(nv)
-            yield pd.DataFrame(rows)
-
-    file_df = spark.createDataFrame(
-        [(f,) for f in files],
-        T.StructType([T.StructField("file", T.StringType())]),
-    ).repartition(min(len(files), 32))
-    return file_df.mapInPandas(harvest, STORAGE_SCHEMA)
+    return _footer_job(spark, _data_files(path), STORAGE_SCHEMA, rows_of)
 
 
 def update_file_stats_index(
@@ -194,63 +270,36 @@ def update_file_stats_index(
     kept = existing.filter(F.col("file").isin(list(current)))
     if not new_files:
         return kept
-    import pandas as pd  # noqa: F401  (harvest dependency)
-
-    tmp_index = _harvest_stats(spark, new_files, columns)
-    return kept.unionByName(tmp_index)
+    return kept.unionByName(_harvest_stats(spark, new_files, columns))
 
 
 def _harvest_stats(
     spark: SparkSession, files: list[str], columns: list[str]
 ) -> DataFrame:
     """Footer harvest over an explicit file list (shared by full build
-    and incremental update)."""
-    import pandas as pd
-
+    and incremental update). min/max are ``_numeric_ranges`` images,
+    NULL where those are unknown (``prune_files`` keeps such files)."""
     cols = list(columns)
 
-    def harvest(batches):
-        import pyarrow.parquet as pq
+    def rows_of(file, md):
+        chunks = _column_chunks(md)
+        for col in cols:
+            if col not in chunks:
+                continue
+            stats = [c.statistics for c in chunks[col]]
+            have = all(s is not None and s.has_min_max for s in stats)
+            ranges = _numeric_ranges(chunks[col])
+            yield (
+                file,
+                col,
+                int(md.num_rows),
+                int(md.num_row_groups),
+                min(lo for lo, _, _ in ranges) if ranges else None,
+                max(hi for _, hi, _ in ranges) if ranges else None,
+                sum(int(s.null_count or 0) for s in stats) if have else None,
+            )
 
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in FILE_STATS_SCHEMA}
-            for fname in pdf["file"]:
-                md = pq.ParquetFile(fname).metadata
-                chunks: dict[str, list] = {}
-                for rg in range(md.num_row_groups):
-                    g = md.row_group(rg)
-                    for ci in range(g.num_columns):
-                        c = g.column(ci)
-                        chunks.setdefault(c.path_in_schema, []).append(
-                            c.statistics
-                        )
-                for col in cols:
-                    if col not in chunks:
-                        continue
-                    stats = chunks[col]
-                    have = all(s is not None and s.has_min_max for s in stats)
-                    rows["file"].append(fname)
-                    rows["column"].append(col)
-                    rows["n_rows"].append(int(md.num_rows))
-                    rows["n_row_groups"].append(int(md.num_row_groups))
-                    rows["min_val"].append(
-                        min(float(s.min) for s in stats) if have else None
-                    )
-                    rows["max_val"].append(
-                        max(float(s.max) for s in stats) if have else None
-                    )
-                    rows["null_count"].append(
-                        sum(int(s.null_count or 0) for s in stats)
-                        if have
-                        else None
-                    )
-            yield pd.DataFrame(rows)
-
-    file_df = spark.createDataFrame(
-        [(f,) for f in files],
-        T.StructType([T.StructField("file", T.StringType())]),
-    ).repartition(min(len(files), 32))
-    return file_df.mapInPandas(harvest, FILE_STATS_SCHEMA)
+    return _footer_job(spark, files, FILE_STATS_SCHEMA, rows_of)
 
 
 def schema_diff(spark: SparkSession, path_a: str, path_b: str) -> DataFrame:

@@ -25,6 +25,7 @@ from pyspark.sql import types as T
 
 from ..errors import AttributeMissing, AttributeNullability, AttributeType, RowOutOfBounds
 from ..schema import TABLE_SCHEMAS
+from .fileindex import _column_chunks, _numeric_ranges, footer_manifest
 
 
 def read_parquet(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -122,8 +123,6 @@ def read_binary_files(
     return reader.load(path)
 
 
-_TS_UNIT_CACHE: dict[tuple[str, float], str | None] = {}
-
 # --- adaptive scan parallelization (OPTIMIZATION_r15) -----------------------
 # A parquet row group is Spark's atomic scan unit: byte-range splits cannot
 # divide one, so a file with fewer row groups than the session has cores
@@ -135,24 +134,22 @@ _TS_UNIT_CACHE: dict[tuple[str, float], str | None] = {}
 # immediately after the read (spark_optimization_guide.md §2.5 "input skew").
 #
 # ``_maybe_split_scan`` does that on an OPT-IN basis (``split=True``), and
-# adaptively even then: only when the file's row-group count is below the
+# adaptively even then: only when the table's row-group count is below the
 # session's default parallelism AND the table is big enough for the extra
 # exchange to pay (>= _SPLIT_ROWS_PER_CORE rows per core). On a real 100 TB
 # table (thousands of row groups >> cores) this is a no-op — the knob
 # self-disables at scale, so nothing here is tuned to local[32].
 #
-# Opt-in, not default (revised from the first r15 cut, which defaulted it
-# on): the split pays exactly where the scan feeds HEAVY MAP-SIDE CPU
-# (tokenize/shingle/hash pipelines, wide partial aggregates) and is pure
-# overhead where the query's first real operation is already an exchange —
-# which is most of the catalog, and is also why the engine's zero-exchange
-# map-only operator contracts (plan-gated in tests/test_plans.py) must not
-# acquire a reader-injected shuffle. The repartition hashes on the table's
-# unique key (deterministic, skew-free, and — unlike round-robin — free of
-# the sort-before-repartition pass); results are partitioning-independent by
-# the engine-wide decimal discipline (operators/aggregate.py), which the
-# oracle suite pins. ``SPARK_GRAFT_SCAN_SPLIT=off`` is the global
-# kill-switch.
+# Opt-in, not default: the split pays exactly where the scan feeds HEAVY
+# MAP-SIDE CPU (tokenize/shingle/hash pipelines, wide partial aggregates)
+# and is pure overhead where the query's first real operation is already an
+# exchange — which is most of the catalog, and is also why the engine's
+# zero-exchange map-only operator contracts (plan-gated in
+# tests/test_plans.py) must not acquire a reader-injected shuffle. The
+# repartition hashes on the table's unique key (deterministic, skew-free,
+# and — unlike round-robin — free of the sort-before-repartition pass);
+# results are partitioning-independent by the engine-wide decimal
+# discipline (operators/aggregate.py), which the oracle suite pins.
 _SPREAD_KEYS: dict[str, list[str]] = {
     "region": ["r_regionkey"],
     "nation": ["n_nationkey"],
@@ -175,29 +172,18 @@ _SPLIT_ROWS_PER_CORE = 4
 # partitions 1.18-2.45 across two blocks). Scale-adaptive by
 # construction: any table big enough to use all cores still gets them.
 _SPLIT_MIN_ROWS_PER_TASK = 256
-_SCAN_META_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
 
 
 def _scan_metadata(path: str) -> tuple[int, int]:
-    """(num_row_groups, num_rows) from the parquet footer — driver-side,
-    metadata-only, cached per (path, mtime) like ``parquet_ts_unit``."""
-    key = (path, os.path.getmtime(path))
-    if key not in _SCAN_META_CACHE:
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(path).metadata
-        _SCAN_META_CACHE[key] = (meta.num_row_groups, meta.num_rows)
-    return _SCAN_META_CACHE[key]
+    """(num_row_groups, num_rows) over every file of the dataset at ``path``."""
+    footers = footer_manifest(path)
+    return sum(md.num_row_groups for md in footers), sum(md.num_rows for md in footers)
 
 
 def _maybe_split_scan(
-    spark: SparkSession,
-    df: DataFrame,
-    path: str,
-    name: str,
-    split: bool | None = None,
+    spark: SparkSession, df: DataFrame, path: str, name: str, split: bool = False
 ) -> DataFrame:
-    if not split or os.environ.get("SPARK_GRAFT_SCAN_SPLIT", "auto") == "off":
+    if not split:
         return df
     cores = spark.sparkContext.defaultParallelism
     row_groups, rows = _scan_metadata(path)
@@ -216,15 +202,12 @@ def _maybe_split_scan(
     return df.repartition(target)
 
 
-_FOOTER_BOUNDS_CACHE: dict[tuple[str, float, str, int], list[float] | None] = {}
-
-
 def footer_lead_boundaries(path: str, column: str, k: int) -> list[float] | None:
     """Metadata-only equi-depth boundary ESTIMATE for a prefix-scan lead
-    column: k-1 split points derived from the parquet footer's
-    per-row-group (min, max, rows) statistics — zero data read, replacing
-    the ``approxQuantile`` pass that costs one full scan per execution
-    (OPTIMIZATION_r16 / VERDICT r15 item 6; guide §1.2 "remove
+    column: k-1 split points derived from the per-row-group (min, max,
+    rows) footer statistics of every file of the dataset at ``path`` —
+    zero data read, replacing the ``approxQuantile`` pass that costs one
+    full scan per execution (OPTIMIZATION_r16; guide §1.2 "remove
     unnecessary passes" and §6 "min/max statistics").
 
     Method: each row group contributes a uniform mass of ``rows`` between
@@ -236,104 +219,68 @@ def footer_lead_boundaries(path: str, column: str, k: int) -> list[float] | None
     bucket-local + offset combine is exact for ANY monotone bucketing
     (same class as its documented equal-key skew caveat).
 
-    Returns None (caller falls back to approxQuantile) when the column
-    has no usable min/max statistics or an unsupported logical type.
-    Values are in prefix_agg's numeric lead domain (days for DATE,
-    microseconds for timestamps, float otherwise). Cached per
-    (path, mtime, column, k) like the other footer sniffs.
+    Never raises: returns None (caller falls back to approxQuantile)
+    when the dataset is missing, empty or has an unreadable footer, or
+    any file lacks the column or usable numeric min/max statistics.
+    Values are in prefix_agg's numeric lead domain (``fileindex._num``:
+    days for DATE, microseconds for timestamps, float otherwise).
     """
-    import datetime as _dt
-    from decimal import Decimal as _Dec
-
-    try:
-        key = (path, os.path.getmtime(path), column, k)
-    except OSError:
+    if k <= 1:
         return None
-    if key in _FOOTER_BOUNDS_CACHE:
-        return _FOOTER_BOUNDS_CACHE[key]
-
-    def _num(v) -> float | None:
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, _dt.datetime):
-            return (
-                v.replace(tzinfo=None) - _dt.datetime(1970, 1, 1)
-            ).total_seconds() * 1e6
-        if isinstance(v, _dt.date):
-            return float((v - _dt.date(1970, 1, 1)).days)
-        if isinstance(v, (int, float, _Dec)):
-            return float(v)
-        return None
-
-    result: list[float] | None = None
+    segs: list[tuple[float, float, int]] = []
     try:
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(path).metadata
-        names = [meta.schema.column(i).path for i in range(meta.num_columns)]
-        ci = names.index(column)
-        segs: list[tuple[float, float, int]] = []
-        ok = True
-        for g in range(meta.num_row_groups):
-            rg = meta.row_group(g)
-            st = rg.column(ci).statistics
-            lo = _num(st.min) if st is not None and st.has_min_max else None
-            hi = _num(st.max) if st is not None and st.has_min_max else None
-            if lo is None or hi is None:
-                ok = False
-                break
-            segs.append((lo, hi, rg.num_rows))
-        if ok and segs and k > 1:
-            total = float(sum(n for _, _, n in segs))
-            xmin = min(lo for lo, _, _ in segs)
-            xmax = max(hi for _, hi, _ in segs)
-            if total > 0 and xmax > xmin:
-
-                def cdf(x: float) -> float:
-                    acc = 0.0
-                    for lo, hi, n in segs:
-                        if hi <= lo:
-                            acc += n if x >= lo else 0.0
-                        else:
-                            acc += n * min(max((x - lo) / (hi - lo), 0.0), 1.0)
-                    return acc
-
-                bounds = []
-                for i in range(1, k):
-                    target = total * i / k
-                    a, b = xmin, xmax
-                    for _ in range(60):
-                        mid = (a + b) / 2
-                        if cdf(mid) < target:
-                            a = mid
-                        else:
-                            b = mid
-                    bounds.append((a + b) / 2)
-                result = bounds
+        for md in footer_manifest(path):
+            ranges = _numeric_ranges(_column_chunks(md)[column])
+            if ranges is None:
+                return None
+            segs += ranges
     except (OSError, ValueError, KeyError):
-        result = None
-    _FOOTER_BOUNDS_CACHE[key] = result
-    return result
+        return None
+    total = float(sum(n for _, _, n in segs))
+    xmin = min((lo for lo, _, _ in segs), default=0.0)
+    xmax = max((hi for _, hi, _ in segs), default=0.0)
+    if total <= 0 or xmax <= xmin:
+        return None
+
+    def cdf(x: float) -> float:
+        acc = 0.0
+        for lo, hi, n in segs:
+            if hi <= lo:
+                acc += n if x >= lo else 0.0
+            else:
+                acc += n * min(max((x - lo) / (hi - lo), 0.0), 1.0)
+        return acc
+
+    bounds = []
+    for i in range(1, k):
+        target = total * i / k
+        a, b = xmin, xmax
+        for _ in range(60):
+            mid = (a + b) / 2
+            if cdf(mid) < target:
+                a = mid
+            else:
+                b = mid
+        bounds.append((a + b) / 2)
+    return bounds
 
 
 def parquet_ts_unit(path: str, column: str = "ts") -> str | None:
-    """Physical timestamp unit ('ns'/'us'/'ms') of ``column`` in a parquet
-    file, read from the footer (driver-side, metadata-only). Returns None
-    when the column isn't a timestamp. Cached per (path, mtime): this runs
-    on every read_table call, but the very scenario the sniff exists for —
-    a fixture regenerated in place with a different encoding — must not be
-    served a stale unit, so the file's mtime participates in the key."""
-    key = (path, os.path.getmtime(path))
-    if key not in _TS_UNIT_CACHE:
-        import pyarrow.parquet as pq
-
-        typ = pq.read_schema(path).field(column).type
-        _TS_UNIT_CACHE[key] = getattr(typ, "unit", None)
-    return _TS_UNIT_CACHE[key]
+    """Physical timestamp unit ('ns'/'us'/'ms') of ``column`` in the
+    parquet dataset at ``path``, from the footer manifest (metadata-only).
+    None when the column isn't a timestamp; ``ValueError`` when files
+    disagree."""
+    units = {
+        getattr(md.schema.to_arrow_schema().field(column).type, "unit", None)
+        for md in footer_manifest(path)
+    }
+    if len(units) > 1:
+        raise ValueError(f"{path!r}: files disagree on the type of {column!r}")
+    return units.pop()
 
 
 def read_table(
-    spark: SparkSession, sf_dir: str, name: str, split: bool | None = None
+    spark: SparkSession, sf_dir: str, name: str, split: bool = False
 ) -> DataFrame:
     """Load one fixture table by name with its explicit schema.
 
@@ -343,17 +290,17 @@ def read_table(
     — the right choice where the scan feeds heavy map-side CPU before
     the query's first exchange (tokenize/shingle/hash pipelines, wide
     partial aggregates over many columns; measured at sf0.1: q01
-    1.43 s → 0.60, q40 1.53 → 0.71, q43 0.61 → 0.34). ``None``/
-    ``False`` (default) keep the raw scan — measured the right choice
+    1.43 s → 0.60, q40 1.53 → 0.71, q43 0.61 → 0.34). ``False``
+    (default) keeps the raw scan — measured the right choice
     whenever the first real operation is already an exchange (window/
     groupBy/join/sort on a key) with only thin map work before it:
     there the engine's own first shuffle parallelizes everything
     downstream and a split exchange is pure overhead (A/B at sf0.1:
     q12 0.31 s vs 0.71, q22 0.34 vs 0.64 with the split forced on) —
     and it keeps the zero-exchange plan contracts of map-only
-    operators intact. ``False`` is stronger than ``None`` only as
-    documentation: call sites that MEASURED the split net-negative pin
-    it explicitly so a future default flip cannot regress them.
+    operators intact. Call sites that MEASURED the split net-negative
+    pass ``split=False`` explicitly so a future default flip cannot
+    regress them. A table may be one parquet file or a directory.
 
     ``events.ts`` has shipped in two physical encodings across fixture
     generations: TIMESTAMP(NANOS) — which Spark cannot read as a timestamp

@@ -7,8 +7,6 @@ path must produce bit-identical results to the shape it replaced
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 SF001 = "/root/testdata/sf0.01"
@@ -59,24 +57,14 @@ def test_scan_split_skips_tiny_tables(spark):
 
 
 def test_scan_split_preserves_rows_vs_off(spark):
-    """SPARK_GRAFT_SCAN_SPLIT=off must yield the exact same multiset of
-    rows — the repartition is placement-only."""
+    """``split=True`` must yield the exact same multiset of rows as
+    ``split=False`` — the repartition is placement-only."""
     from dbkit_spark.sources import read_table
 
-    on_rows = _rows(
-        read_table(spark, SF001, "orders", split=True),
-        "o_orderkey",
-        "o_totalprice",
+    on_rows, off_rows = (
+        _rows(read_table(spark, SF001, "orders", split=split), "o_orderkey", "o_totalprice")
+        for split in (True, False)
     )
-    os.environ["SPARK_GRAFT_SCAN_SPLIT"] = "off"
-    try:
-        off_rows = _rows(
-            read_table(spark, SF001, "orders", split=True),
-            "o_orderkey",
-            "o_totalprice",
-        )
-    finally:
-        del os.environ["SPARK_GRAFT_SCAN_SPLIT"]
     assert on_rows == off_rows
 
 

@@ -8,6 +8,8 @@ monotone split points (or decline cleanly).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from dbkit_spark.operators.prefix import prefix_agg
@@ -58,11 +60,11 @@ def test_prefix_agg_explicit_boundaries_result_invariant(spark):
     assert base_max == skew_max
 
 
-def test_footer_lead_boundaries_shape_and_fallbacks():
+def test_footer_lead_boundaries_shape_and_fallbacks(sf_dir, tmp_path):
     """The metadata-only boundary estimate must be monotone, inside the
     column's [min, max], and of length k-1; unsupported inputs must
     return None (the approxQuantile fallback signal), never raise."""
-    path = "/root/testdata/sf0.001/orders.parquet"
+    path = os.path.join(sf_dir, "orders.parquet")
     b = footer_lead_boundaries(path, "o_orderdate", 8)
     assert b is not None and len(b) == 7
     assert all(x <= y for x, y in zip(b, b[1:]))
@@ -74,6 +76,13 @@ def test_footer_lead_boundaries_shape_and_fallbacks():
     assert footer_lead_boundaries(path, "o_orderstatus", 8) is None
     # unknown column / missing file -> None, not an exception
     assert footer_lead_boundaries(path, "no_such_column", 8) is None
-    assert footer_lead_boundaries("/root/testdata/nope.parquet", "x", 8) is None
+    assert footer_lead_boundaries(os.path.join(sf_dir, "nope.parquet"), "x", 8) is None
+    # truncated footer / directory without parquet files -> None
+    truncated = tmp_path / "truncated.parquet"
+    with open(path, "rb") as f:
+        truncated.write_bytes(f.read(100))
+    assert footer_lead_boundaries(str(truncated), "o_orderdate", 8) is None
+    (tmp_path / "empty").mkdir()
+    assert footer_lead_boundaries(str(tmp_path / "empty"), "o_orderdate", 8) is None
     # k == 1 -> no split points
     assert footer_lead_boundaries(path, "o_orderdate", 1) is None
