@@ -80,7 +80,9 @@ def _driver_green_rounds() -> dict[str, int]:
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side-effect: registration) and return
-    the full catalog in coverage-rotation order.
+    the full catalog in coverage-rotation order. Query modules are found
+    by listing the ``queries`` package; ``_``-prefixed modules hold
+    shared helpers and are imported only by the modules that use them.
 
     The driver's correctness sweep checks a fixed-size window of the
     catalog in iteration order, so a static numeric sort would re-verify
@@ -90,29 +92,14 @@ def load_all() -> dict[str, QuerySpec]:
     from committed CORRECTNESS_r*.json files, so every machine computes
     the same order for a given commit.
     """
-    from .queries import (  # noqa: F401
-        aggregates,
-        events,
-        extended,
-        extended2,
-        extended3,
-        extended4,
-        extended5,
-        extended6,
-        joins,
-        llm,
-        relational,
-        roadmap7,
-        roadmap9,
-        roadmap10,
-        roadmap11,
-        roadmap12,
-        roadmap13,
-        roadmap14,
-        roadmap15,
-        scalars,
-        windows,
-    )
+    import importlib
+    import pkgutil
+
+    from . import queries
+
+    for mod in pkgutil.iter_modules(queries.__path__):
+        if not mod.name.startswith("_"):
+            importlib.import_module(f"{queries.__name__}.{mod.name}")
 
     green = _driver_green_rounds()
     return dict(

@@ -6,7 +6,7 @@ than chance? Pointwise mutual information over a bounded co-occurrence
 window, PMI(a,b) = log( P(a,b) / (P(a)·P(b)) ) with probabilities taken
 over the pair universe (the word2vec-style window counting).
 
-Relationship to the registered q240 (queries/roadmap7.py
+Relationship to the registered q240 (queries/relational.py
 q240_pmi_collocations): q240 is the ADJACENT-BIGRAM special case —
 ordered pairs at distance exactly 1, the phrase-detection form. This
 operator generalizes to a ±``window`` neighborhood with UNORDERED

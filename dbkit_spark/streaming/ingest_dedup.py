@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..llm.cluster import dedup_survivors
 from ..llm.dedup import (
@@ -71,15 +72,25 @@ def ingest_batch(
     import os
 
     p = _paths(state_dir)
-    sh_new = shingle_docs(batch, "text", "doc_id").persist()
-    bands_new = lsh_band_keys(minhash_signatures(sh_new)).persist()
-
     if first_batch is None:
         first_batch = not os.path.isdir(p["bands"])
+    if not first_batch:
+        # a state written with another band-key type would fail the join
+        # mid-job (ANSI) or silently match nothing (non-ANSI)
+        bands_c = spark.read.parquet(p["bands"])
+        found = bands_c.schema["band_key"].dataType
+        if found != T.LongType():
+            raise ValueError(
+                f"incompatible ingest state {state_dir!r}: bands.band_key "
+                f"found {found.simpleString()}, expected "
+                f"{T.LongType().simpleString()}"
+            )
+
+    sh_new = shingle_docs(batch, "text", "doc_id").persist()
+    bands_new = lsh_band_keys(minhash_signatures(sh_new)).persist()
     if first_batch:
         survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
     else:
-        bands_c = spark.read.parquet(p["bands"])
         sh_c = spark.read.parquet(p["shingles"])
         a = bands_new.select(F.col("doc_id").alias("doc_a"), "band_key")
         b = bands_c.select(F.col("doc_id").alias("doc_b"), "band_key")

@@ -27,7 +27,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.readers import parquet_ts_unit
 
-    legacy_ns = parquet_ts_unit(os.path.join(sf_dir, "events.parquet")) == "ns"
+    path = os.path.join(sf_dir, "events.parquet")
+    legacy_ns = parquet_ts_unit(path) == "ns"
     if legacy_ns:
         schema = T.StructType(
             [
@@ -37,14 +38,13 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     else:
         schema = TABLE_SCHEMAS["events"]
-    # the file stream source requires a directory: scan sf_dir but admit
-    # only the events file
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+    if os.path.isdir(path):
+        raw = reader.parquet(path)
+    else:
+        # the file stream source requires a directory: scan sf_dir but
+        # admit only the events file
+        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     if legacy_ns:
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw

@@ -23,6 +23,7 @@ from dbkit_spark.sources.readers import (
     footer_lead_boundaries,
     parquet_ts_unit,
 )
+from dbkit_spark.streaming.runner import read_events_stream, run_available_now
 
 
 def _rows(df):
@@ -57,6 +58,16 @@ def test_multi_file_dataset_reads_like_the_single_file(spark, sf_dir, multi_sf):
     assert _rows(read_table(spark, multi_sf, "events")) == _rows(
         read_table(spark, sf_dir, "events")
     )
+
+
+def test_events_stream_reads_a_multi_file_dataset(spark, sf_dir, multi_sf):
+    """The streaming events source reads every file of an
+    ``events.parquet`` directory, like the batch reader."""
+    expected = _rows(read_table(spark, sf_dir, "events"))
+    batch = _rows(read_table(spark, multi_sf, "events"))
+    stream = _rows(run_available_now(read_events_stream(spark, multi_sf), "append"))
+    assert (len(batch), len(stream)) == (len(expected), len(expected))
+    assert stream == expected
 
 
 def test_file_stats_index_non_numeric_columns(spark, multi_sf):

@@ -376,7 +376,9 @@ def test_linear_attribution_conserves_revenue(spark):
 def test_linear_attribution_hand_case(spark):
     from pyspark.sql import functions as SF
 
-    from dbkit_spark.queries.roadmap11 import q369_linear_attribution  # noqa: F401
+    from dbkit_spark.catalog import load_all
+
+    assert "q369_linear_attribution" in load_all()
     # hand case goes through the same plan shape via a local frame
     from dbkit_spark.operators.aggregate import dec
     from pyspark.sql import Window

@@ -723,7 +723,7 @@ def test_q389_oracle_empty_arm_parity(spark):
     import pandas as pd
 
     from dbkit_spark.operators.mlmetrics import quantile_lift
-    from dbkit_spark.queries.roadmap12 import _q389_oracle
+    from dbkit_spark.queries.evaluation import _q389_oracle
 
     fixture = pd.DataFrame(
         {"user_id": [2 * i for i in range(1, 41)],

@@ -343,7 +343,9 @@ def test_l_diversity_flags_injected_monoculture(spark):
 def test_returns_query_threshold_law(spark, sf_dir):
     """Every emitted customer's total really exceeds 1.2x the nation
     average recomputed independently (no window)."""
-    from dbkit_spark.queries.roadmap7 import q224_returns_above_nation_avg
+    from dbkit_spark.catalog import load_all
+
+    q224_returns_above_nation_avg = load_all()["q224_returns_above_nation_avg"].fn
 
     out = q224_returns_above_nation_avg(spark, sf_dir)
     rows = out.collect()
@@ -896,7 +898,9 @@ def test_blocked_link_validates(spark):
 def test_chi_square_independence_extremes(spark):
     """Perfectly independent layout -> chi2 == 0; perfectly dependent
     layout -> chi2 == n * (min(r,c) - 1)."""
-    from dbkit_spark.queries.roadmap7 import q233_chi_square  # noqa: F401
+    from dbkit_spark.catalog import load_all
+
+    assert "q233_chi_square" in load_all()
 
     rows = [(t, c, 1) for t in ("a", "b") for c in (0, 1) for _ in range(5)]
     df = spark.createDataFrame(rows, ["t", "c", "one"])
@@ -976,7 +980,9 @@ def test_fd_discovery_validates(spark, sf_dir):
 
 
 def test_rolling_anomaly_flags_injected_spike(spark):
-    from dbkit_spark.queries.roadmap7 import q235_rolling_anomaly  # noqa: F401
+    from dbkit_spark.catalog import load_all
+
+    assert "q235_rolling_anomaly" in load_all()
     from pyspark.sql import Window
 
     # 30 calm points then one spike for a single user
@@ -1120,7 +1126,9 @@ def test_km_all_censored_yields_no_steps(spark):
 
 
 def test_km_monotone_nonincreasing(spark, sf_dir):
-    from dbkit_spark.queries.roadmap7 import q238_retention_survival
+    from dbkit_spark.catalog import load_all
+
+    q238_retention_survival = load_all()["q238_retention_survival"].fn
 
     rows = q238_retention_survival(spark, sf_dir).collect()
     assert rows
@@ -1213,7 +1221,9 @@ def test_cross_entropy_flags_rare_token_docs(spark):
 
 
 def test_vocab_coverage_monotone_and_bounded(spark, sf_dir):
-    from dbkit_spark.queries.roadmap7 import q242_vocab_coverage
+    from dbkit_spark.catalog import load_all
+
+    q242_vocab_coverage = load_all()["q242_vocab_coverage"].fn
 
     rows = q242_vocab_coverage(spark, sf_dir).collect()
     assert [r["coverage"] for r in rows] == [0.5, 0.8, 0.9, 0.95, 0.99]
@@ -1700,7 +1710,9 @@ def test_column_diff_single_aggregation_plan(spark, sf_dir):
 def test_bigram_lm_flags_shuffled_doc(spark):
     """A doc made of common words in a NEVER-SEEN order must score worse
     (higher cross-entropy) than the repeated natural phrase it permutes."""
-    from dbkit_spark.queries.roadmap7 import q250_bigram_lm_score
+    from dbkit_spark.catalog import load_all
+
+    q250_bigram_lm_score = load_all()["q250_bigram_lm_score"].fn
     import os, tempfile
 
     natural = "the quick brown fox jumps over the lazy dog"

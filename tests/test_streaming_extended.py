@@ -535,3 +535,32 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
         0.5,
     )
     assert n == 0  # id 5 < 100, but 100 arrived first and wins
+
+
+def test_dedup_ingest_rejects_incompatible_band_key_state(spark, tmp_path):
+    """A state whose band index holds string band keys (the format before
+    band keys became 64-bit longs) fails with an error that names the
+    state, the found type and the expected one, before any join."""
+    import pytest
+
+    from dbkit_spark.streaming.ingest_dedup import ingest_batch
+
+    state = str(tmp_path / "state")
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
+    ingest_batch(
+        spark, spark.createDataFrame([(1, text)], "doc_id long, text string"), state
+    )
+    rows = (
+        spark.read.parquet(f"{state}/bands")
+        .select("doc_id", F.lower(F.hex("band_key")).alias("band_key"))
+        .collect()
+    )
+    assert rows
+    spark.createDataFrame(rows, "doc_id long, band_key string").write.mode(
+        "overwrite"
+    ).parquet(f"{state}/bands")
+    batch = spark.createDataFrame([(2, text + " nu")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="band_key") as err:
+        ingest_batch(spark, batch, state)
+    assert state in str(err.value)
+    assert "found string, expected bigint" in str(err.value)
