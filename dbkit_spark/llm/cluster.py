@@ -32,21 +32,16 @@ building plan trees on higher-diameter graphs. A 100 TB job swaps in
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # assign_clusters broadcast cap for the component table (rows; two int64
 # columns ≈ 16 B/row, but the BUILT HashedRelation is several times that
-# and is collected through the driver). The default 2M rows keeps the
-# built relation in the low-hundreds-of-MB band even on stock 1g
-# driver/executor configs (ADVICE r15: the earlier 8M default assumed
-# this repo's 8g driver session); clusters with bigger driver budgets
-# raise it via the env override.
-_BROADCAST_COMP_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_COMP_MAX_ROWS", str(2_000_000))
-)
+# and is collected through the driver). 2M rows keeps the built
+# relation in the low-hundreds-of-MB band even on stock 1g
+# driver/executor configs (ADVICE r15: the earlier 8M cap assumed this
+# repo's 8g driver session).
+_BROADCAST_COMP_MAX_ROWS = 2_000_000
 
 
 def connected_components(

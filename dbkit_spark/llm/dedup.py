@@ -168,13 +168,11 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     tests/test_plans.py) — an unconditional broadcast hint would be
     unsafe for corpora whose candidate set exceeds driver memory.
 
-    Measured A/B vs the cacheless single-pass alternative
-    (``lsh_candidate_pairs_grouped``) at sf0.1, cache dropped between
-    reps: join+persist 2.94 s vs grouped 3.86 s median — the codegen'd
-    hash join over cached fixed-width rows beats the object-hash
-    collect_set aggregation + nested-lambda pair expansion. Prefer the
-    grouped variant only where executor storage memory is the binding
-    constraint."""
+    Measured A/B vs a cacheless single pass (collect_set per bucket,
+    then in-bucket pair expansion) at sf0.1, cache dropped between
+    reps: join+persist 2.94 s vs 3.86 s median — the codegen'd hash
+    join over cached fixed-width rows beats the object-hash
+    aggregation + nested-lambda pair expansion."""
     band_keys = band_keys.persist()
     a = band_keys.select(F.col("doc_id").alias("doc_a"), "band_key")
     b = band_keys.select(F.col("doc_id").alias("doc_b"), "band_key")
@@ -182,37 +180,6 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
         a.join(b, "band_key")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
-        .distinct()
-    )
-
-
-def lsh_candidate_pairs_grouped(band_keys: DataFrame) -> DataFrame:
-    """Cacheless single-pass variant of ``lsh_candidate_pairs``: ONE
-    map-side-combined collect_set aggregation per bucket followed by an
-    in-bucket pair expansion — same pair set, single upstream execution,
-    no persist (so no executor storage memory and no cache
-    materialization). Measured slower than join+persist at sf0.1 (see
-    ``lsh_candidate_pairs``); the right choice when caching the band
-    table is not an option (memory-constrained executors, corpus far
-    exceeding cluster storage). Per-bucket pair fanout is identical to
-    the join's (an equi-join also lands each hot key in one task)."""
-    grouped = (
-        band_keys.groupBy("band_key")
-        .agg(F.array_sort(F.collect_set("doc_id")).alias("docs"))
-        .filter(F.size("docs") > 1)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            "docs",
-            lambda x, i: F.transform(
-                F.slice("docs", i + F.lit(2), F.size("docs")),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    return (
-        grouped.select(F.explode(pair_structs).alias("p"))
-        .select("p.doc_a", "p.doc_b")
         .distinct()
     )
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import iterate_until_fixpoint
+
 
 def canonical_edges(
     df: DataFrame, src_col: str, dst_col: str
@@ -182,39 +184,38 @@ def k_core(
     in the CURRENT subgraph is < k, then drops edges touching them;
     fixpoint when no node is dropped. Each round is one degree
     aggregation + one semi-join on each edge endpoint — two keyed
-    shuffles, no NLJ — and the edge set only shrinks. Lineage is
-    truncated per round (eager localCheckpoint, the iterate-family
-    rule) so round N's plan does not replay rounds 1..N-1; rounds are
-    bounded by ``max_rounds`` as a runaway stop (real graphs peel in
-    a handful of rounds — the fixture converges in ≤ 5).
+    shuffles, no NLJ — and the edge set only shrinks, so the edge
+    count is a monotone convergence measure. The loop is
+    :func:`~dbkit_spark.operators.iterate.iterate_until_fixpoint`
+    (per-round lineage truncation, one count per round); it raises
+    ``RuntimeError`` when ``max_rounds`` peels do not reach the
+    fixpoint (real graphs peel in a handful of rounds — the fixture
+    converges in ≤ 5; a path of n nodes needs about n/2).
 
     Input: canonical (a, b) edges (see :func:`canonical_edges`).
     Output: the surviving node set with its core degree
     (node, degree) — degree ≥ k by construction.
     """
-    cur = edges.localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        deg = (
-            cur.select(F.col("a").alias("node"))
-            .unionAll(cur.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("degree"))
-        )
-        keep = deg.filter(F.col("degree") >= k).select("node")
-        nxt = (
+    def peel(cur: DataFrame) -> DataFrame:
+        keep = _degrees(cur).filter(F.col("degree") >= k).select("node")
+        return (
             cur.join(
                 keep.withColumnRenamed("node", "a"), "a", "left_semi"
             ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
         ).select("a", "b")
-        nxt = nxt.localCheckpoint(eager=True)
-        # O(1) convergence probe on the checkpointed frame
-        if nxt.count() == cur.count():
-            cur = nxt
-            break
-        cur = nxt
+
+    return _degrees(
+        iterate_until_fixpoint(
+            edges, peel, measure=DataFrame.count, max_iter=max_rounds
+        )
+    )
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(node, degree) over canonical (a, b) edges."""
     return (
-        cur.select(F.col("a").alias("node"))
-        .unionAll(cur.select(F.col("b").alias("node")))
+        edges.select(F.col("a").alias("node"))
+        .unionAll(edges.select(F.col("b").alias("node")))
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
     )

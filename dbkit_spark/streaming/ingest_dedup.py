@@ -55,13 +55,12 @@ def ingest_batch(
     batch: DataFrame,
     state_dir: str,
     threshold: float = 0.5,
-    first_batch: bool | None = None,
 ) -> int:
     """Admit one batch of (doc_id, text) into the corpus state; returns
     the number of admitted docs. Driver-sequential (call from
     foreachBatch or a backfill loop).
 
-    ``first_batch`` defaults to state-existence detection — IMPORTANT
+    The first batch is detected from the state directory — IMPORTANT
     for restart safety: foreachBatch is at-least-once, and a replayed
     batch 0 that skipped the corpus checks would double-append its
     docs. With detection, a replayed batch re-checks against the
@@ -72,8 +71,7 @@ def ingest_batch(
     import os
 
     p = _paths(state_dir)
-    if first_batch is None:
-        first_batch = not os.path.isdir(p["bands"])
+    first_batch = not os.path.isdir(p["bands"])
     if not first_batch:
         # a state written with another band-key type would fail the join
         # mid-job (ANSI) or silently match nothing (non-ANSI)

@@ -2,7 +2,9 @@
 
 A function moved to a module that lacks one of its globals only fails when
 it runs; these checks turn that latent ``NameError`` into a collection-time
-failure, and catch a merge that silently rebinds a top-level name.
+failure, and catch a merge that silently rebinds a top-level name (a
+second ``def test_x`` in one module hides the first test). Both scan
+``dbkit_spark/`` and ``tests/``.
 """
 
 from __future__ import annotations
@@ -13,8 +15,9 @@ import re
 import symtable
 from pathlib import Path
 
-PKG = Path(__file__).resolve().parent.parent / "dbkit_spark"
-MODULES = sorted(PKG.rglob("*.py"))
+TESTS = Path(__file__).resolve().parent
+PKG = TESTS.parent / "dbkit_spark"
+MODULES = sorted(PKG.rglob("*.py")) + sorted(TESTS.glob("*.py"))
 _ALLOWED = set(dir(builtins)) | {"__file__", "__name__"}
 
 
@@ -83,8 +86,9 @@ def _rebound_names(path: Path) -> list[str]:
 
 
 def test_function_globals_are_bound():
-    """Every global a function, lambda or method reads is bound at the
-    module's top level, imported there, or a builtin."""
+    """Every global a function, lambda or method reads in ``dbkit_spark/``
+    or ``tests/`` is bound at the module's top level, imported there, or a
+    builtin."""
     assert [h for p in MODULES for h in _unbound_global_reads(p)] == []
 
 

@@ -433,3 +433,16 @@ def test_skew_profile_diagnoses_hot_keys(spark):
 
     with _pytest.raises(ValueError, match="key_cols"):
         skew_profile(df, [], top=3)
+
+
+def test_kcore_raises_when_rounds_run_out(spark):
+    """A 12-node path peels two end nodes per round, so its (empty)
+    2-core takes 6 rounds; with 3 it must raise, not return a partly
+    peeled graph whose end nodes have degree 1 < k."""
+    from dbkit_spark.operators.graph import canonical_edges, k_core
+
+    path = [(i, i + 1) for i in range(1, 12)]
+    ce = canonical_edges(spark.createDataFrame(path, "s int, d int"), "s", "d")
+    assert k_core(ce, 2).count() == 0
+    with pytest.raises(RuntimeError):
+        k_core(ce, 2, max_rounds=3).collect()

@@ -483,10 +483,8 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
         key=os.path.getmtime,
     )
     ref_state = str(tmp_path / "state_ref")
-    for i, f in enumerate(files):
-        ingest_batch(
-            spark, spark.read.parquet(f), ref_state, 0.5, first_batch=(i == 0)
-        )
+    for f in files:
+        ingest_batch(spark, spark.read.parquet(f), ref_state, 0.5)
     want = sorted(
         r.doc_id
         for r in spark.read.parquet(ref_state + "/docs").collect()
@@ -524,7 +522,6 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
         spark.createDataFrame([(100, shared)], "doc_id long, text string"),
         first_state,
         0.5,
-        first_batch=True,
     )
     n = ingest_batch(
         spark,
