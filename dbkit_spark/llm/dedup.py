@@ -264,25 +264,31 @@ def minhash_near_dup_pairs(
     cache then trades 2 recompute scans for one in-memory write+read
     during that single materialization — measured a ~0.4 s edge at
     sf0.1, within the host band but consistently signed). In this mode
-    the PAIR SET is eagerly localCheckpoint-ed so the shingle cache can
-    be released before returning — without that, no caller could ever
-    unpersist it and each invocation would pin the pipeline's widest
-    intermediate for the session (the graph.py ADVICE-r9 lesson); the
-    eager materialization is exactly the work the caller's own barrier
-    was about to do anyway. Default stays False (fully lazy):
-    one-shot consumers (q40, bench semantics) pay cache
-    materialization with no reuse to amortize it.
+    the PAIR SET is eagerly localCheckpoint-ed so the shingle cache and
+    ``lsh_candidate_pairs``' band-key cache can be released before
+    returning — without that, no caller could ever unpersist them and
+    each invocation would pin them for the session (the graph.py
+    ADVICE-r9 lesson); the eager materialization is exactly the work the
+    caller's own barrier was about to do anyway. Callers: q40, q87 and
+    q88 pass True (q40 since OPTIMIZATION_r15: with the split scan the
+    cache fills in parallel and saves the verify's two extra scans).
+    The default False keeps the result fully lazy for callers that fold
+    the pairs into a larger plan they materialize once — q198, q211,
+    q343, q357 — and for plan inspection (tests/test_plans.py); the
+    band-key cache then stays with the session.
     """
     shingled = shingle_docs(docs, text_col, id_col)
     if persist_shingles:
         shingled = shingled.persist()
-    sigs = minhash_signatures(shingled)
-    cands = lsh_candidate_pairs(lsh_band_keys(sigs))
-    pairs = jaccard_verify(cands, shingled, threshold)
-    if persist_shingles:
-        pairs = pairs.localCheckpoint(eager=True)
+    bands = lsh_band_keys(minhash_signatures(shingled))
+    pairs = jaccard_verify(lsh_candidate_pairs(bands), shingled, threshold)
+    if not persist_shingles:
+        return pairs
+    try:
+        return pairs.localCheckpoint(eager=True)
+    finally:
+        bands.unpersist()  # persisted by lsh_candidate_pairs
         shingled.unpersist()
-    return pairs
 
 
 def simhash_signatures(
@@ -491,29 +497,44 @@ def minhash_incremental_pairs(
     sh_new = shingle_docs(new_docs, text_col, id_col).persist()
     bands_c = lsh_band_keys(minhash_signatures(sh_corpus))
     bands_n = lsh_band_keys(minhash_signatures(sh_new))
+    cross, all_shingles = _batch_vs_corpus(bands_n, bands_c, sh_new, sh_corpus)
+    cands = cross.unionByName(lsh_candidate_pairs(bands_n)).distinct()
+    return jaccard_verify(cands, all_shingles, threshold)
 
-    a = bands_n.select(F.col("doc_id").alias("doc_a"), "band_key")
-    b = bands_c.select(F.col("doc_id").alias("doc_b"), "band_key")
-    # doc_a != doc_b: a re-ingested doc whose id already exists in the
-    # corpus must not pair with itself (it would "verify" at jaccard 1.0
-    # and get itself deleted as its own duplicate)
+
+def _batch_vs_corpus(
+    bands_new: DataFrame,
+    bands_corpus: DataFrame,
+    sh_new: DataFrame,
+    sh_corpus: DataFrame,
+) -> tuple[DataFrame, DataFrame]:
+    """The re-ingest rule of a new batch against an existing corpus, shared
+    by ``minhash_incremental_pairs`` and the streaming ingest
+    (``streaming/ingest_dedup.ingest_batch``). Returns
+    ``(cross candidates, verify shingles)``:
+
+    - distinct (doc_a=new id, doc_b=corpus id) pairs sharing a band key,
+      with doc_a != doc_b: a re-ingested doc whose id already exists in
+      the corpus must not pair with itself (it would "verify" at jaccard
+      1.0 and get itself deleted as its own duplicate);
+    - the batch's shingle sets plus the corpus's, the batch winning on
+      id collision: a re-ingested doc_id present in both sides would
+      otherwise contribute two shingle rows, and jaccard_verify's joins
+      would emit duplicate (doc_a, doc_b) pairs — with conflicting
+      jaccard values if the text changed.
+    """
+    a = bands_new.select(F.col("doc_id").alias("doc_a"), "band_key")
+    b = bands_corpus.select(F.col("doc_id").alias("doc_b"), "band_key")
     cross = (
         a.join(b, "band_key")
         .filter(F.col("doc_a") != F.col("doc_b"))
         .select("doc_a", "doc_b")
         .distinct()
     )
-    in_batch = lsh_candidate_pairs(bands_n)
-    cands = cross.unionByName(in_batch).distinct()
-
-    # New batch wins on id collision: a re-ingested doc_id present in both
-    # sides would otherwise contribute two shingle rows, and jaccard_verify's
-    # joins would emit duplicate (doc_a, doc_b) pairs — with conflicting
-    # jaccard values if the text changed.
-    all_shingles = sh_new.unionByName(
+    shingles = sh_new.unionByName(
         sh_corpus.join(sh_new.select("doc_id"), "doc_id", "left_anti")
     )
-    return jaccard_verify(cands, all_shingles, threshold)
+    return cross, shingles
 
 
 def jaccard_prefix_filter_pairs(

@@ -5,10 +5,13 @@
   higher-order functions, per-query top-k via window. Corpus side never
   shuffles except for the final per-query top-k (tiny).
 - ``ann_bucketed``: the scale path — random-hyperplane LSH. Each vector
-  gets a B-bit sign bucket; candidates are same-bucket pairs, then exact
-  cosine verifies. Hyperplane signs are md5-derived (portable to the SQL
-  oracle). At 100 TB: bucket count 2^B shards the n² problem; increase B
-  with corpus size, union multiple hash tables for recall.
+  gets a B-bit sign bucket per hash table; candidates are same-bucket
+  pairs, then exact cosine verifies. Hyperplane signs are md5-derived
+  (portable to the SQL oracle). At 100 TB: bucket count 2^B shards the
+  n² problem; increase B with corpus size, and ``n_tables`` for recall.
+  ``save_hyperplane_index`` / ``load_hyperplane_index`` /
+  ``ann_query_index`` / ``ann_incremental_pairs`` serve query batches
+  from a persisted index of the same tables.
 - ``embedding_near_dup``: all-pairs cosine >= threshold (exact verify
   baseline over a self-join; use only post-bucketing at scale).
 """
@@ -16,6 +19,7 @@
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -114,32 +118,6 @@ def hyperplane_bucket(
     return df.withColumn(bucket_col, bucket)
 
 
-def ann_bucketed(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = ANN_BITS,
-    dim: int = 64,
-) -> DataFrame:
-    """Approximate near-neighbor pairs: same LSH bucket AND cosine >=
-    threshold. Bucket equi-join replaces the n² cross product."""
-    bucketed = hyperplane_bucket(df, vec_col, bits, dim)
-    a = bucketed.select(
-        F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), "bucket"
-    )
-    b = bucketed.select(
-        F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket"
-    )
-    return (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim"))
-        .filter(F.col("cos_sim") >= threshold)
-        .distinct()
-    )
-
-
 def hyperplane_bucket_multi(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -163,46 +141,85 @@ def hyperplane_bucket_multi(
     return out
 
 
-def ann_bucketed_multi(
+def _self_pairs(
+    bucketed: DataFrame, bucket_col: str, threshold: float, id_col: str, vec_col: str
+) -> DataFrame:
+    """Same-bucket self-join of one table: (id_a < id_b, cos_sim) for
+    rows sharing ``bucket_col``, exact cosine (6dp) >= threshold."""
+    a = bucketed.select(
+        F.col(id_col).alias("id_a"),
+        F.col(vec_col).alias("va"),
+        F.col(bucket_col).alias("bk"),
+    )
+    b = bucketed.select(
+        F.col(id_col).alias("id_b"),
+        F.col(vec_col).alias("vb"),
+        F.col(bucket_col).alias("bk"),
+    )
+    return (
+        a.join(b, "bk")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim"))
+        .filter(F.col("cos_sim") >= threshold)
+    )
+
+
+def _probe_pairs(
+    probe: DataFrame,
+    bucket_col: str,
+    index: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    names: tuple[str, str] = ("query_id", "cand_id"),
+) -> DataFrame:
+    """Broadcast probe of one loaded index table: ``probe`` rows meet the
+    index rows whose precomputed ``bucket`` equals their ``bucket_col``;
+    self-matches excluded, exact cosine (6dp) >= threshold. Emits
+    (probe id, index id, cos_sim) under ``names``. The probe side is
+    broadcast, so the index never shuffles."""
+    probe_id, index_id = names
+    qb = probe.select(
+        F.col(id_col).alias(probe_id),
+        F.col(vec_col).alias("qv"),
+        F.col(bucket_col).alias("bucket"),
+    )
+    c = index.select(
+        F.col(id_col).alias(index_id), F.col(vec_col).alias("cv"), "bucket"
+    )
+    return (
+        c.join(F.broadcast(qb), "bucket")
+        .filter(F.col(index_id) != F.col(probe_id))
+        .select(
+            probe_id, index_id, F.round(cosine("qv", "cv"), 6).alias("cos_sim")
+        )
+        .filter(F.col("cos_sim") >= threshold)
+    )
+
+
+def ann_bucketed(
     df: DataFrame,
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     bits: int = ANN_BITS,
     dim: int = 64,
-    n_tables: int = 2,
+    n_tables: int = 1,
 ) -> DataFrame:
-    """Approximate near-neighbor pairs with multi-table recall: candidate
-    = same bucket in ANY of ``n_tables`` hash tables, then exact cosine
-    verify. One corpus scan computes all H bucket columns; each table
-    contributes one bucket equi-self-join (shuffled on its own bucket
-    key); union + DISTINCT dedups pairs found by several tables before
-    emission. At 100 TB: H× the join work of ``ann_bucketed`` for
-    geometrically better recall — the standard LSH cost/recall dial
-    alongside ``bits``."""
+    """Approximate near-neighbor pairs: same LSH bucket in ANY of
+    ``n_tables`` hash tables AND cosine >= threshold. The bucket
+    equi-join replaces the n² cross product. One corpus scan computes
+    all H bucket columns; each table contributes one bucket
+    equi-self-join (shuffled on its own bucket key); DISTINCT dedups
+    pairs found by several tables before emission. At 100 TB: H× the
+    join work of one table for geometrically better recall — the
+    standard LSH cost/recall dial alongside ``bits``."""
     bucketed = hyperplane_bucket_multi(df, vec_col, bits, dim, n_tables)
-    cands = None
-    for t in range(n_tables):
-        a = bucketed.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("va"),
-            F.col(f"bucket_{t}").alias("bk"),
-        )
-        b = bucketed.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vb"),
-            F.col(f"bucket_{t}").alias("bk"),
-        )
-        c = (
-            a.join(b, "bk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim")
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-        cands = c if cands is None else cands.unionByName(c)
-    return cands.distinct()
+    pairs = [
+        _self_pairs(bucketed, f"bucket_{t}", threshold, id_col, vec_col)
+        for t in range(n_tables)
+    ]
+    return reduce(DataFrame.unionByName, pairs).distinct()
 
 
 def ivf_index(
@@ -314,14 +331,20 @@ def save_hyperplane_index(
     vec_col: str = "embedding",
     bits: int = ANN_BITS,
     dim: int = 64,
+    n_tables: int = 1,
 ) -> None:
-    """Materialize the LSH bucket index to parquet, partitioned by an
-    integer bucket id so later reads prune to probed buckets.
+    """Materialize ``n_tables`` LSH tables to parquet, each under
+    ``path/table_{t}`` and partitioned by an integer bucket id so later
+    reads prune to probed buckets.
 
     A 100 TB corpus hashes ONCE and serves every subsequent query batch
     from this index (``ann_query_index``) — re-deriving buckets per query
-    batch re-scans the corpus. The partition key is the bucket's integer
-    value (``conv(bucket, 2, 10)``), not the raw bit-string: Spark's
+    batch re-scans the corpus. All H bucket columns are computed in one
+    corpus pass; with several tables the hashed corpus is persisted
+    across the per-table writes, so it is scanned and hashed once.
+    Storage is H× one table: the multi-table recall trade, paid in cheap
+    parquet. The partition key is the bucket's integer value
+    (``conv(bucket, 2, 10)``), not the raw bit-string: Spark's
     partition-column type inference parses an all-digit string like
     '00010110' back as the integer 10110, silently corrupting bit-string
     partition values on load. The exact bit-string rides along as a data
@@ -335,46 +358,10 @@ def save_hyperplane_index(
             f"save_hyperplane_index supports at most 63 bits (got {bits}): "
             "bucket_id is conv(bucket, 2, 10) cast to long"
         )
-    bucketed = hyperplane_bucket(df, vec_col, bits, dim).select(
-        id_col,
-        vec_col,
-        "bucket",
-        F.conv("bucket", 2, 10).cast("long").alias("bucket_id"),
-    )
-    write_parquet(bucketed, path, partition_by=["bucket_id"])
-
-
-def load_hyperplane_index(spark, path: str) -> DataFrame:
-    """Load a ``save_hyperplane_index`` output: (id, vec, bucket,
-    bucket_id). No hashing happens — the plan is a pure parquet scan."""
-    return spark.read.parquet(path)
-
-
-def save_hyperplane_index_multi(
-    df: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = ANN_BITS,
-    dim: int = 64,
-    n_tables: int = 2,
-) -> None:
-    """Persist ``n_tables`` independent LSH tables, each under
-    ``path/table_{t}`` partitioned by its own integer bucket id (same
-    layout + 63-bit cap as ``save_hyperplane_index``). All H bucket
-    columns are computed in ONE corpus pass (``hyperplane_bucket_multi``)
-    before the per-table writes — the corpus is scanned once, hashed
-    once, and every later query batch probes each table with partition
-    pruning. Storage is H× the single-table index: that is the
-    multi-table recall trade, paid in cheap parquet, not in re-hashing
-    a 100 TB corpus per query batch."""
-    from ..sources.writers import write_parquet
-
-    if bits > 63:
-        raise ValueError(
-            f"save_hyperplane_index_multi supports at most 63 bits (got {bits})"
-        )
-    bucketed = hyperplane_bucket_multi(df, vec_col, bits, dim, n_tables).persist()
+    bucketed = hyperplane_bucket_multi(df, vec_col, bits, dim, n_tables)
+    shared = n_tables > 1
+    if shared:
+        bucketed = bucketed.persist()
     try:
         for t in range(n_tables):
             one = bucketed.select(
@@ -385,16 +372,18 @@ def save_hyperplane_index_multi(
             )
             write_parquet(one, f"{path}/table_{t}", partition_by=["bucket_id"])
     finally:
-        bucketed.unpersist()
+        if shared:
+            bucketed.unpersist()
 
 
-def load_hyperplane_index_multi(spark, path: str, n_tables: int = 2) -> list[DataFrame]:
-    """Load a ``save_hyperplane_index_multi`` output as one DataFrame per
-    table. Pure parquet scans — no hashing."""
+def load_hyperplane_index(spark, path: str, n_tables: int = 1) -> list[DataFrame]:
+    """Load a ``save_hyperplane_index`` output as one (id, vec, bucket,
+    bucket_id) DataFrame per table. No hashing happens — each plan is a
+    pure parquet scan."""
     return [spark.read.parquet(f"{path}/table_{t}") for t in range(n_tables)]
 
 
-def ann_query_index_multi(
+def ann_query_index(
     queries: DataFrame,
     tables: list[DataFrame],
     threshold: float,
@@ -403,59 +392,30 @@ def ann_query_index_multi(
     bits: int = ANN_BITS,
     dim: int = 64,
 ) -> DataFrame:
-    """Query a multi-table LSH index: the query batch is hashed once per
-    table (tiny, map-side, broadcast); each table contributes its
-    same-bucket candidates; union + DISTINCT dedups pairs found in
-    several tables. The corpus-side tables never shuffle and prune to
-    the probed bucket partitions."""
-    out = None
-    for t, index in enumerate(tables):
-        qb = hyperplane_bucket(queries, vec_col, bits, dim, table=t).select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
-        )
-        c = index.select(
-            F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "bucket"
-        )
-        one = (
-            c.join(F.broadcast(qb), "bucket")
-            .filter(F.col("cand_id") != F.col("query_id"))
-            .select(
-                "query_id", "cand_id", F.round(cosine("qv", "cv"), 6).alias("cos_sim")
+    """Query a loaded LSH index: only the query batch is hashed, once per
+    table (tiny, map-side, broadcast); the corpus side reads each table's
+    precomputed ``bucket`` column, never shuffles and prunes to the
+    probed bucket partitions. Emits (query_id, cand_id, cos_sim >=
+    threshold) for same-bucket candidates, self-matches excluded. One
+    table emits each pair once; with several, the per-table candidates
+    union + DISTINCT to dedup pairs found in more than one table."""
+    if not tables:
+        raise ValueError("tables must be a non-empty list of loaded LSH tables")
+    pairs = reduce(
+        DataFrame.unionByName,
+        [
+            _probe_pairs(
+                hyperplane_bucket(queries, vec_col, bits, dim, table=t),
+                "bucket",
+                index,
+                threshold,
+                id_col,
+                vec_col,
             )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-        out = one if out is None else out.unionByName(one)
-    return out.distinct()
-
-
-def ann_query_index(
-    queries: DataFrame,
-    index: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits: int = ANN_BITS,
-    dim: int = 64,
-) -> DataFrame:
-    """Query a loaded LSH index: only the query batch is hashed (tiny,
-    map-side); the corpus side reads its precomputed ``bucket`` column.
-    Emits (query_id, cand_id, cos_sim >= threshold) for same-bucket
-    candidates, self-matches excluded. The query side is broadcast: the
-    corpus index never shuffles."""
-    qb = hyperplane_bucket(queries, vec_col, bits, dim).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"), "bucket"
+            for t, index in enumerate(tables)
+        ],
     )
-    c = index.select(
-        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("cv"), "bucket"
-    )
-    return (
-        c.join(F.broadcast(qb), "bucket")
-        .filter(F.col("cand_id") != F.col("query_id"))
-        .select(
-            "query_id", "cand_id", F.round(cosine("qv", "cv"), 6).alias("cos_sim")
-        )
-        .filter(F.col("cos_sim") >= threshold)
-    )
+    return pairs.distinct() if len(tables) > 1 else pairs
 
 
 def save_ivf_index(
@@ -549,6 +509,34 @@ def dequantize_embeddings(
         ),
     )
 
+def _incremental_plan(
+    new_batch: DataFrame,
+    tables: list[DataFrame],
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    bits: int,
+    dim: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The lazy plan of ``ann_incremental_pairs``: (the persisted hashed
+    batch, the distinct candidate pairs). The caller owns the persisted
+    batch and must unpersist it."""
+    if not tables:
+        raise ValueError("tables must be a non-empty list of loaded LSH tables")
+    hashed = hyperplane_bucket_multi(
+        new_batch, vec_col, bits, dim, n_tables=len(tables)
+    ).persist()
+    pairs = []
+    for t, index in enumerate(tables):
+        bucket_col = f"bucket_{t}"
+        cross = _probe_pairs(
+            hashed, bucket_col, index, threshold, id_col, vec_col, ("id_a", "id_b")
+        )
+        in_batch = _self_pairs(hashed, bucket_col, threshold, id_col, vec_col)
+        pairs += [cross, in_batch]
+    return hashed, reduce(DataFrame.unionByName, pairs).distinct()
+
+
 def ann_incremental_pairs(
     new_batch: DataFrame,
     tables: list[DataFrame],
@@ -557,21 +545,20 @@ def ann_incremental_pairs(
     vec_col: str = "embedding",
     bits: int = ANN_BITS,
     dim: int = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """Append-batch EMBEDDING dedup: near-dup pairs of new vectors vs a
-    PERSISTED multi-table LSH index (``save_hyperplane_index_multi``
-    output loaded by ``load_hyperplane_index_multi``), plus pairs within
-    the new batch — never corpus × corpus, and the corpus is never
-    re-hashed (its side of every join is a pure parquet scan of the
-    precomputed ``bucket`` column).
+    PERSISTED LSH index (``save_hyperplane_index`` output loaded by
+    ``load_hyperplane_index``), plus pairs within the new batch — never
+    corpus × corpus, and the corpus is never re-hashed (its side of
+    every join is a pure parquet scan of the precomputed ``bucket``
+    column).
 
     The embedding twin of ``dedup.minhash_incremental_pairs`` (the
     daily-ingest shape): a 100 TB corpus hashes once at index-build
     time; each day's batch is hashed once per table (tiny, map-side,
     broadcast), probes each table's same-bucket partitions, and adds
-    its own in-batch multi-table candidates. Work scales with the
-    batch, not the corpus.
+    its own in-batch candidates. Work scales with the batch, not the
+    corpus.
 
     Emits (id_a=new id, id_b=corpus id) for cross pairs — a re-ingested
     id present in both sides never pairs with itself — and
@@ -585,58 +572,14 @@ def ann_incremental_pairs(
     self-joins; without the barrier each join re-runs the hash pass.
     The persist is released before return (the pair-sized result is
     eagerly localCheckpoint-ed, the containment_pairs discipline).
-    ``materialize=False`` skips the checkpoint/unpersist lifecycle and
-    returns the lazy plan — for plan inspection/tests only (the caller
-    then owns the persisted batch's lifetime).
     """
-    if not tables:
-        raise ValueError("tables must be a non-empty list of loaded LSH tables")
-    hashed = hyperplane_bucket_multi(
-        new_batch, vec_col, bits, dim, n_tables=len(tables)
-    ).persist()
-    out = None
-    for t, index in enumerate(tables):
-        qb = hashed.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("va"),
-            F.col(f"bucket_{t}").alias("bucket"),
-        )
-        c = index.select(
-            F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), "bucket"
-        )
-        cross = (
-            c.join(F.broadcast(qb), "bucket")
-            .filter(F.col("id_a") != F.col("id_b"))
-            .select(
-                "id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim")
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-        a = hashed.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("va"),
-            F.col(f"bucket_{t}").alias("bk"),
-        )
-        b = hashed.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vb"),
-            F.col(f"bucket_{t}").alias("bk"),
-        )
-        in_batch = (
-            a.join(b, "bk")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select(
-                "id_a", "id_b", F.round(cosine("va", "vb"), 6).alias("cos_sim")
-            )
-            .filter(F.col("cos_sim") >= threshold)
-        )
-        both = cross.unionByName(in_batch)
-        out = both if out is None else out.unionByName(both)
-    if not materialize:
-        return out.distinct()
-    result = out.distinct().localCheckpoint(eager=True)
-    hashed.unpersist()
-    return result
+    hashed, pairs = _incremental_plan(
+        new_batch, tables, threshold, id_col, vec_col, bits, dim
+    )
+    try:
+        return pairs.localCheckpoint(eager=True)
+    finally:
+        hashed.unpersist()
 
 
 def truncation_recall(

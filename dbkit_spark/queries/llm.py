@@ -535,7 +535,7 @@ def q87_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents", split=True)
     # persist_shingles: the component pipeline materializes the pair
     # set once into its own edge persist — the shingle cache pays here
-    # (see minhash_near_dup_pairs docstring), unlike the one-shot q40
+    # (see minhash_near_dup_pairs docstring)
     pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
     # LSH pairs are distinct (doc_a < doc_b) by construction: skip the
     # edge-dedup shuffle (OPTIMIZATION_r15; fixpoint identical)
@@ -843,8 +843,8 @@ def q127_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(tempfile.gettempdir(), f"dbkit_ann_index_{sf_tag}")
     save_hyperplane_index(emb, path)
-    index = load_hyperplane_index(spark, path)
-    return ann_query_index(emb.filter(F.col("vec_id") < 50), index, threshold=0.1)
+    tables = load_hyperplane_index(spark, path)
+    return ann_query_index(emb.filter(F.col("vec_id") < 50), tables, threshold=0.1)
 
 
 # --- multimodal: four-format header decode ---------------------------------

@@ -296,7 +296,7 @@ def _bucket_sql_t(table: int, bits: int = 8) -> str:
       ON a.vec_id < b.vec_id AND (a.b0 = b.b0 OR a.b1 = b.b1)
     WHERE round(list_cosine_similarity(a.v, b.v), 6) >= 0.25
     """,
-    notes="MULTI-TABLE LSH ANN (llm/similarity.ann_bucketed_multi, "
+    notes="MULTI-TABLE LSH ANN (llm/similarity.ann_bucketed, n_tables=2, "
     "closing the single-table recall cap): two independent md5-derived "
     "hyperplane tables computed in one corpus pass; a pair is a "
     "candidate if it collides in ANY table (union + DISTINCT before "
@@ -306,10 +306,10 @@ def _bucket_sql_t(table: int, bits: int = 8) -> str:
     "at equal candidate budget is measured in tests/test_llm.py",
 )
 def q159_ann_multi_table_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..llm.similarity import ann_bucketed_multi
+    from ..llm.similarity import ann_bucketed
 
     emb = read_table(spark, sf_dir, "embeddings")
-    return ann_bucketed_multi(emb, threshold=0.25, n_tables=2)
+    return ann_bucketed(emb, threshold=0.25, n_tables=2)
 
 
 @register(
@@ -343,19 +343,17 @@ def q161_ann_multi_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..llm.similarity import (
-        ann_query_index_multi,
-        load_hyperplane_index_multi,
-        save_hyperplane_index_multi,
+        ann_query_index,
+        load_hyperplane_index,
+        save_hyperplane_index,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
     sf_tag = os.path.basename(sf_dir.rstrip("/"))
     path = os.path.join(tempfile.gettempdir(), f"dbkit_ann_multi_{sf_tag}")
-    save_hyperplane_index_multi(emb, path, n_tables=2)
-    tables = load_hyperplane_index_multi(spark, path, n_tables=2)
-    return ann_query_index_multi(
-        emb.filter(F.col("vec_id") < 50), tables, threshold=0.1
-    )
+    save_hyperplane_index(emb, path, n_tables=2)
+    tables = load_hyperplane_index(spark, path, n_tables=2)
+    return ann_query_index(emb.filter(F.col("vec_id") < 50), tables, threshold=0.1)
 
 
 # --- embedding near-dup dedup (end-to-end composition) ----------------------
@@ -608,8 +606,8 @@ def q201_ann_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..llm.similarity import (
         ann_incremental_pairs,
-        load_hyperplane_index_multi,
-        save_hyperplane_index_multi,
+        load_hyperplane_index,
+        save_hyperplane_index,
     )
 
     emb = read_table(spark, sf_dir, "embeddings")
@@ -626,9 +624,9 @@ def q201_ann_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture_once(
         path,
         source_stamp(sf_dir, "embeddings"),
-        lambda: save_hyperplane_index_multi(corpus, path, n_tables=2),
+        lambda: save_hyperplane_index(corpus, path, n_tables=2),
     )
-    tables = load_hyperplane_index_multi(spark, path, n_tables=2)
+    tables = load_hyperplane_index(spark, path, n_tables=2)
     return ann_incremental_pairs(batch, tables, threshold=0.2)
 
 

@@ -38,6 +38,7 @@ from pyspark.sql import types as T
 
 from ..llm.cluster import dedup_survivors
 from ..llm.dedup import (
+    _batch_vs_corpus,
     jaccard_verify,
     lsh_band_keys,
     lsh_candidate_pairs,
@@ -90,19 +91,7 @@ def ingest_batch(
         survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
     else:
         sh_c = spark.read.parquet(p["shingles"])
-        a = bands_new.select(F.col("doc_id").alias("doc_a"), "band_key")
-        b = bands_c.select(F.col("doc_id").alias("doc_b"), "band_key")
-        # re-ingest rule: same id never pairs with itself
-        cands = (
-            a.join(b, "band_key")
-            .filter(F.col("doc_a") != F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        # verify against batch ∪ corpus shingles (batch wins id collisions)
-        all_sh = sh_new.unionByName(
-            sh_c.join(sh_new.select("doc_id"), "doc_id", "left_anti")
-        )
+        cands, all_sh = _batch_vs_corpus(bands_new, bands_c, sh_new, sh_c)
         rejected = (
             jaccard_verify(cands, all_sh, threshold)
             .select(F.col("doc_a").alias("doc_id"))

@@ -34,6 +34,26 @@ def test_minhash_pairs_subset_of_exact_with_high_recall(spark, sf_dir):
     )
 
 
+def test_minhash_persist_shingles_releases_its_caches(spark):
+    """persist_shingles=True checkpoints the pairs and then releases every
+    cache the pipeline made (the shingle sets and the band-key table
+    lsh_candidate_pairs persists): the session holds as many cached
+    plans after the call as before."""
+    docs = spark.createDataFrame(
+        [
+            (1, "cache release probe alpha beta gamma delta epsilon zeta"),
+            (2, "cache release probe alpha beta gamma delta epsilon theta"),
+            (3, "an unrelated sentence about rivers mountains and weather"),
+        ],
+        "doc_id long, text string",
+    )
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.cachedData().size()
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 2)}
+    assert cache_manager.cachedData().size() == before
+
+
 def test_exact_dedup_idempotent_and_deterministic(spark):
     df = spark.createDataFrame(
         [(1, "Hello  World"), (2, "hello world"), (3, "different")],
@@ -696,7 +716,7 @@ def test_hyperplane_index_partition_pruning(spark, sf_dir, tmp_path):
     emb = read_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "lsh")
     save_hyperplane_index(emb, path)
-    index = load_hyperplane_index(spark, path)
+    (index,) = load_hyperplane_index(spark, path)
     one = index.filter(F.col("bucket_id") == 3)
     plan = one._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket_id" in plan.split("PartitionFilters")[1][:120]
@@ -827,22 +847,22 @@ def test_multi_table_index_roundtrip(spark, sf_dir, tmp_path):
     directly-computed multi-table candidates for the same query set,
     and each table's loaded plan must prune by bucket_id partitions."""
     from dbkit_spark.llm.similarity import (
-        ann_query_index_multi,
+        ann_query_index,
         hyperplane_bucket,
-        load_hyperplane_index_multi,
-        save_hyperplane_index_multi,
+        load_hyperplane_index,
+        save_hyperplane_index,
     )
     from dbkit_spark.sources import read_table
 
     emb = read_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "lsh_multi")
-    save_hyperplane_index_multi(emb, path, n_tables=2)
-    tables = load_hyperplane_index_multi(spark, path, n_tables=2)
+    save_hyperplane_index(emb, path, n_tables=2)
+    tables = load_hyperplane_index(spark, path, n_tables=2)
 
     queries = emb.filter(F.col("vec_id") < 20)
     got = {
         (r.query_id, r.cand_id, r.cos_sim)
-        for r in ann_query_index_multi(queries, tables, threshold=0.1).collect()
+        for r in ann_query_index(queries, tables, threshold=0.1).collect()
     }
 
     # reference: recompute both tables from scratch and union
@@ -1112,10 +1132,11 @@ def test_ann_incremental_pairs_batch_vs_index(spark, tmp_path):
     (no re-hash), and a re-ingested id never pairs with itself."""
     from dbkit_spark.functions.vectors import cosine
     from dbkit_spark.llm.similarity import (
+        _incremental_plan,
         ann_incremental_pairs,
         hyperplane_bucket,
-        load_hyperplane_index_multi,
-        save_hyperplane_index_multi,
+        load_hyperplane_index,
+        save_hyperplane_index,
     )
     from dbkit_spark.sources import read_table
 
@@ -1126,8 +1147,8 @@ def test_ann_incremental_pairs_batch_vs_index(spark, tmp_path):
         emb.filter(F.col("vec_id") == 60)
     )
     path = str(tmp_path / "inc_idx")
-    save_hyperplane_index_multi(corpus, path, n_tables=2)
-    tables = load_hyperplane_index_multi(spark, path, n_tables=2)
+    save_hyperplane_index(corpus, path, n_tables=2)
+    tables = load_hyperplane_index(spark, path, n_tables=2)
 
     got = {
         (r.id_a, r.id_b, r.cos_sim)
@@ -1173,9 +1194,11 @@ def test_ann_incremental_pairs_batch_vs_index(spark, tmp_path):
 
     # no-re-hash plan gate (q127 style): the corpus side is exactly two
     # parquet scans whose ReadSchema carries the PRECOMPUTED bucket column
-    plan = ann_incremental_pairs(
-        batch, tables, threshold=0.2, materialize=False
-    )._jdf.queryExecution().executedPlan().toString()
+    hashed, pairs = _incremental_plan(
+        batch, tables, 0.2, "vec_id", "embedding", 8, 64
+    )
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    hashed.unpersist()
     # index scans are the ones whose ReadSchema carries the PRECOMPUTED
     # bucket_id partition column (the batch side has no such column)
     idx_scans = [
@@ -1429,8 +1452,8 @@ def test_ann_incremental_precision_and_recall_monotone(spark, tmp_path):
     from dbkit_spark.functions.vectors import cosine
     from dbkit_spark.llm.similarity import (
         ann_incremental_pairs,
-        load_hyperplane_index_multi,
-        save_hyperplane_index_multi,
+        load_hyperplane_index,
+        save_hyperplane_index,
     )
     from dbkit_spark.sources import read_table
 
@@ -1438,8 +1461,8 @@ def test_ann_incremental_precision_and_recall_monotone(spark, tmp_path):
     corpus = emb.filter(F.col("vec_id") >= 300)
     batch = emb.filter(F.col("vec_id") < 300)
     path = str(tmp_path / "rec_idx")
-    save_hyperplane_index_multi(corpus, path, n_tables=2)
-    tables = load_hyperplane_index_multi(spark, path, n_tables=2)
+    save_hyperplane_index(corpus, path, n_tables=2)
+    tables = load_hyperplane_index(spark, path, n_tables=2)
     got2 = {
         (r.id_a, r.id_b)
         for r in ann_incremental_pairs(batch, tables, threshold=0.25).collect()

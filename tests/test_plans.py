@@ -233,7 +233,8 @@ def test_lsh_candidates_broadcast_verify(spark, sf_dir):
     (OPTIMIZATION_r15 #6), whose eager localCheckpoint truncates the
     returned frame's executed plan to a bare ``Scan ExistingRDD`` — the
     verify-join shape would be invisible there, not absent (ADVICE r15).
-    The verify joins themselves are identical in both modes."""
+    The verify joins themselves are identical in both modes, and the
+    catalog q40's rows equal the gated pipeline's on the same input."""
     import re
 
     from dbkit_spark.llm.dedup import minhash_near_dup_pairs
@@ -247,6 +248,12 @@ def test_lsh_candidates_broadcast_verify(spark, sf_dir):
     assert len(re.findall(r"BroadcastHashJoin", final)) >= 2
     assert "BroadcastNestedLoopJoin" not in final
     assert "CartesianProduct" not in final
+
+    gated = df.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
+    q40 = CATALOG["q40_dedup_minhash"].fn(spark, sf_dir)
+    gated_rows = sorted(tuple(r) for r in gated.collect())
+    assert sorted(tuple(r) for r in q40.collect()) == gated_rows
+    assert gated_rows
 
 
 def test_bucketed_join_plans_zero_exchanges(spark, sf_dir):
