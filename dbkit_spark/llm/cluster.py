@@ -618,10 +618,11 @@ def _centroid_distances(
     label_col: str,
 ) -> DataFrame:
     """(_id, label, _v, cdist): per-vector Euclidean distance to its
-    label's centroid — the shared inner step of semdedup /
-    semdedup_delta / prototypicality. Centroid table broadcasts
-    (labels-sized); squared terms round at 9dp and ride a DECIMAL fold
-    (order-free), the distance rounds at 6dp (engine exactness rule)."""
+    label's centroid — the shared inner step of semdedup,
+    semdedup_delta, prototypicality and cluster_validity. Centroid
+    table broadcasts (labels-sized); squared terms round at 9dp and
+    ride a DECIMAL fold (order-free), the distance rounds at 6dp
+    (engine exactness rule)."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     return (
         emb.select(
@@ -652,6 +653,53 @@ def _centroid_distances(
                 6,
             ).alias("cdist"),
         )
+    )
+
+
+def _join_side(with_dist: DataFrame, s: str) -> DataFrame:
+    """(_id{s}, label, _v{s}, _d{s}): one side of a within-cluster
+    join over :func:`_centroid_distances` rows."""
+    return with_dist.select(
+        F.col("_id").alias(f"_id{s}"),
+        "label",
+        F.col("_v").alias(f"_v{s}"),
+        F.col("cdist").alias(f"_d{s}"),
+    )
+
+
+def _dominated_within(with_dist: DataFrame, threshold: float) -> DataFrame:
+    """(_id) of every vector dominated inside its own cluster: some
+    same-label vector with higher priority (cdist DESC, id ASC) has
+    6dp cosine >= threshold to it — the within-cluster self-equi-join
+    on the label key shared by semdedup and semdedup_delta. Ids repeat
+    once per dominator; callers dedupe."""
+    from ..functions.vectors import cosine
+
+    return (
+        _join_side(with_dist, "a")
+        .join(_join_side(with_dist, "b"), "label")
+        .filter(F.col("_ida") != F.col("_idb"))
+        .filter(F.round(cosine("_va", "_vb"), 6) >= F.lit(threshold))
+        .filter(
+            (F.col("_da") > F.col("_db"))
+            | ((F.col("_da") == F.col("_db")) & (F.col("_ida") < F.col("_idb")))
+        )
+        .select(F.col("_idb").alias("_id"))
+    )
+
+
+def _semdedup_kept(
+    with_dist: DataFrame, dominated: DataFrame, id_col: str, label_col: str
+) -> DataFrame:
+    """(id, label, cdist, kept): kept = the vector's id is not in the
+    distinct ``dominated`` id set."""
+    return with_dist.join(
+        dominated.withColumn("_dom", F.lit(True)), "_id", "left"
+    ).select(
+        F.col("_id").alias(id_col),
+        F.col("label").alias(label_col),
+        "cdist",
+        F.coalesce(~F.col("_dom"), F.lit(True)).alias("kept"),
     )
 
 
@@ -695,41 +743,10 @@ def semdedup(
 
     Output: one row per vector — (id, label, cdist 6dp, kept boolean).
     """
-    from ..functions.vectors import cosine
-
     cents = label_centroids(emb, vec_col, label_col)
     with_dist = _centroid_distances(emb, cents, id_col, vec_col, label_col)
-    a = with_dist.select(
-        F.col("_id").alias("_ida"),
-        F.col("label").alias("label"),
-        F.col("_v").alias("_va"),
-        F.col("cdist").alias("_da"),
-    )
-    b = with_dist.select(
-        F.col("_id").alias("_idb"),
-        F.col("label").alias("label"),
-        F.col("_v").alias("_vb"),
-        F.col("cdist").alias("_db"),
-    )
-    dominated = (
-        a.join(b, "label")
-        .filter(F.col("_ida") != F.col("_idb"))
-        .filter(F.round(cosine("_va", "_vb"), 6) >= F.lit(threshold))
-        .filter(
-            (F.col("_da") > F.col("_db"))
-            | ((F.col("_da") == F.col("_db")) & (F.col("_ida") < F.col("_idb")))
-        )
-        .select(F.col("_idb").alias("_id"))
-        .distinct()
-    )
-    return with_dist.join(
-        dominated.withColumn("_dom", F.lit(True)), "_id", "left"
-    ).select(
-        F.col("_id").alias(id_col),
-        F.col("label").alias(label_col),
-        "cdist",
-        F.coalesce(~F.col("_dom"), F.lit(True)).alias("kept"),
-    )
+    dominated = _dominated_within(with_dist, threshold).distinct()
+    return _semdedup_kept(with_dist, dominated, id_col, label_col)
 
 
 def adjusted_rand_index(
@@ -906,49 +923,17 @@ def semdedup_delta(
     from ..functions.vectors import cosine
 
     nd = _centroid_distances(new, centroids, id_col, vec_col, label_col)
-    a = nd.select(
-        F.col("_id").alias("_ida"),
-        "label",
-        F.col("_v").alias("_va"),
-        F.col("cdist").alias("_da"),
-    )
-    b = nd.select(
-        F.col("_id").alias("_idb"),
-        "label",
-        F.col("_v").alias("_vb"),
-        F.col("cdist").alias("_db"),
-    )
-    dom_new = (
-        a.join(b, "label")
-        .filter(F.col("_ida") != F.col("_idb"))
-        .filter(F.round(cosine("_va", "_vb"), 6) >= F.lit(threshold))
-        .filter(
-            (F.col("_da") > F.col("_db"))
-            | (
-                (F.col("_da") == F.col("_db"))
-                & (F.col("_ida") < F.col("_idb"))
-            )
-        )
-        .select(F.col("_idb").alias("_id"))
-    )
     o = old_kept.select(
         F.col(label_col).alias("label"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_vo"),
     )
     dom_old = (
-        o.join(b, "label")
+        o.join(_join_side(nd, "b"), "label")
         .filter(F.round(cosine("_vo", "_vb"), 6) >= F.lit(threshold))
         .select(F.col("_idb").alias("_id"))
     )
-    dominated = dom_new.union(dom_old).distinct()
-    return nd.join(
-        dominated.withColumn("_dom", F.lit(True)), "_id", "left"
-    ).select(
-        F.col("_id").alias(id_col),
-        F.col("label").alias(label_col),
-        "cdist",
-        F.coalesce(~F.col("_dom"), F.lit(True)).alias("kept"),
-    )
+    dominated = _dominated_within(nd, threshold).union(dom_old).distinct()
+    return _semdedup_kept(nd, dominated, id_col, label_col)
 
 
 def cluster_validity(

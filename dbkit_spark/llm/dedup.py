@@ -486,12 +486,16 @@ def minhash_incremental_pairs(
     with the batch, not the corpus. Emits (doc_a=new id, doc_b=corpus id)
     for cross pairs and (doc_a < doc_b, both new) for in-batch pairs.
 
-    Cache lifecycle: this convenience wrapper persists the shingle sets
-    for the duration of the returned DataFrame's evaluation and does not
-    unpersist (the caller owns the action). A long-running ingest driver
-    should instead materialize the corpus bands/shingles to storage once
-    (write_bucketed on band_key) and call spark.catalog.clearCache()
-    between batches — per-batch in-session caches otherwise accumulate.
+    Cache lifecycle: both shingle sets are persisted (each feeds its
+    signatures and the verify), and ``lsh_candidate_pairs`` persists
+    the batch's band keys. The verified pair set is eagerly
+    localCheckpoint-ed and all three caches are released before
+    returning — the ``minhash_near_dup_pairs(persist_shingles=True)``
+    rule: no caller can reach those frames to unpersist them, so
+    without it every call would pin them for the session. A
+    long-running ingest driver should still materialize the corpus
+    bands/shingles to storage once (write_bucketed on band_key) rather
+    than re-shingle the corpus per batch.
     """
     sh_corpus = shingle_docs(corpus, text_col, id_col).persist()
     sh_new = shingle_docs(new_docs, text_col, id_col).persist()
@@ -499,7 +503,14 @@ def minhash_incremental_pairs(
     bands_n = lsh_band_keys(minhash_signatures(sh_new))
     cross, all_shingles = _batch_vs_corpus(bands_n, bands_c, sh_new, sh_corpus)
     cands = cross.unionByName(lsh_candidate_pairs(bands_n)).distinct()
-    return jaccard_verify(cands, all_shingles, threshold)
+    try:
+        return jaccard_verify(cands, all_shingles, threshold).localCheckpoint(
+            eager=True
+        )
+    finally:
+        bands_n.unpersist()  # persisted by lsh_candidate_pairs
+        sh_new.unpersist()
+        sh_corpus.unpersist()
 
 
 def _batch_vs_corpus(

@@ -24,10 +24,13 @@ corpus-global, no windows over the corpus.
 
 from __future__ import annotations
 
+import re
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_from_tokens, tokens
+from ..functions.text import TOKEN_SPLIT_RE, shingles_from_tokens, tokens
 
 __all__ = [
     "token_f1",
@@ -44,13 +47,6 @@ __all__ = [
 ]
 
 
-def _norm_tokens(col: str) -> Column:
-    """The engine tokenizer (functions/text.tokens): lowercase,
-    [^a-z0-9]+ split, empties dropped — also SQuAD's normalization
-    stand-in (lower + punctuation strip)."""
-    return tokens(col)
-
-
 def _ws_tokens(col: str) -> Column:
     """Whitespace-only tokenizer: case and punctuation PRESERVED —
     the 'detokenized' eval convention (sacrebleu's refusal to
@@ -61,13 +57,245 @@ def _ws_tokens(col: str) -> Column:
 
 def _tok(col: str, tokenizer: str) -> Column:
     """Tokenizer dispatch for the tokenizer-parameterized metrics:
-    'norm' = the engine tokenizer (_norm_tokens), 'ws' = whitespace
-    split preserving case/punctuation (detokenized eval)."""
+    'norm' = the engine tokenizer (functions/text.tokens: lowercase,
+    [^a-z0-9]+ split, empties dropped — also SQuAD's normalization
+    stand-in, lower + punctuation strip), 'ws' = whitespace split
+    preserving case/punctuation (detokenized eval)."""
     if tokenizer == "norm":
-        return _norm_tokens(col)
+        return tokens(col)
     if tokenizer == "ws":
         return _ws_tokens(col)
     raise ValueError(f"unknown tokenizer {tokenizer!r} (use 'norm'|'ws')")
+
+
+def _chars(col: str) -> Column:
+    """chrF's unit: the lowercased text with all whitespace stripped."""
+    return F.regexp_replace(F.lower(F.col(col)), r"\s+", "")
+
+
+def _word_grams(toks: Column, n: int) -> Column:
+    """Order-n word grams of a token array (n = 1: the tokens)."""
+    return toks if n == 1 else shingles_from_tokens(toks, n)
+
+
+def _char_grams(s: Column, n: int) -> Column:
+    """Order-n char grams of a string: its length-n substrings."""
+    return F.when(F.length(s) < n, F.array().cast("array<string>")).otherwise(
+        F.transform(
+            F.sequence(F.lit(1), F.length(s) - (n - 1)),
+            lambda i: s.substr(i, F.lit(n)),
+        )
+    )
+
+
+_GramCutter = Callable[[Column, int], Column]
+
+
+def _gram_counts(
+    units: DataFrame, key: str, ns: tuple[int, ...], grams: _GramCutter, out: str
+) -> DataFrame:
+    """(key, n, _g, out): how often each order-n gram of the unit column
+    ``_u`` occurs per key, for every n in ``ns`` — the per-order
+    explodes are unioned into ONE (key, n, gram) count aggregate.
+    ``grams(unit, n)`` cuts a unit into its order-n grams
+    (:func:`_word_grams` for token arrays, :func:`_char_grams` for
+    strings). Counts are LONG."""
+    if not ns or any(n < 1 for n in ns):
+        raise ValueError("ns must be non-empty positive n-gram orders")
+    per_n = None
+    for n in ns:
+        g = units.select(
+            key, F.lit(n).alias("n"), F.explode(grams(F.col("_u"), n)).alias("_g")
+        )
+        per_n = g if per_n is None else per_n.unionByName(g)
+    count = F.count("*").cast("long").alias(out)
+    if len(ns) == 1:
+        # one order: n is a literal, and a literal grouping key hides the
+        # (key, gram) uniqueness the planner's join size estimates use —
+        # the clipped-overlap join then reads as a cross join and loses
+        # its broadcast
+        return per_n.groupBy(key, "_g").agg(count).withColumn("n", F.lit(ns[0]))
+    return per_n.groupBy(key, "n", "_g").agg(count)
+
+
+def _clipped_overlap(
+    pairs: DataFrame,
+    id_col: str,
+    cand: Column,
+    ref: Column,
+    ns: tuple[int, ...],
+    grams: _GramCutter,
+) -> DataFrame:
+    """(id, n, overlap): the CLIPPED gram overlap
+    Σ_gram min(count_cand, count_ref) per (pair, order) — one count
+    aggregate per side, an inner equi-join on (id, n, gram) and one
+    (id, n)-keyed reduce. Orders with no shared gram have no row."""
+
+    def side(unit: Column, out: str) -> DataFrame:
+        units = pairs.select(F.col(id_col), unit.alias("_u"))
+        return _gram_counts(units, id_col, ns, grams, out)
+
+    return (
+        side(cand, "_cc")
+        .join(side(ref, "_rc"), [id_col, "n", "_g"])
+        .groupBy(id_col, "n")
+        .agg(F.sum(F.least("_cc", "_rc")).cast("long").alias("overlap"))
+    )
+
+
+def _clipped_stats(
+    pairs: DataFrame,
+    id_col: str,
+    cand: Column,
+    ref: Column,
+    ns: tuple[int, ...],
+    grams: _GramCutter,
+    length: Callable[[Column], Column],
+) -> DataFrame:
+    """(id, n, overlap, cand_grams, ref_grams), all LONG: the
+    :func:`_clipped_overlap` of every order next to both sides' gram
+    totals greatest(length(unit) − n + 1, 0) — map-side arithmetic over
+    an ns-sized literal explode, left-joined so that orders without a
+    shared gram carry overlap 0. ``length`` measures a unit (F.size
+    for token arrays, F.length for strings)."""
+    n_lit = F.explode(F.array(*[F.lit(n) for n in ns])).alias("n")
+    totals = pairs.select(
+        F.col(id_col),
+        length(cand).cast("long").alias("_nc"),
+        length(ref).cast("long").alias("_nr"),
+    ).select(id_col, n_lit, "_nc", "_nr").select(
+        id_col,
+        "n",
+        F.greatest(F.col("_nc") - F.col("n") + 1, F.lit(0))
+        .cast("long")
+        .alias("cand_grams"),
+        F.greatest(F.col("_nr") - F.col("n") + 1, F.lit(0))
+        .cast("long")
+        .alias("ref_grams"),
+    )
+    ov = _clipped_overlap(pairs, id_col, cand, ref, ns, grams)
+    return totals.join(ov, [id_col, "n"], "left").select(
+        id_col,
+        "n",
+        F.coalesce("overlap", F.lit(0)).cast("long").alias("overlap"),
+        "cand_grams",
+        "ref_grams",
+    )
+
+
+def _chrf_reduce(
+    per_n: DataFrame, id_col: str, beta: float
+) -> tuple[DataFrame, Column, Column, Column]:
+    """The per-pair reduce of chrF and chrF++ over (id, n, overlap,
+    cand_grams, ref_grams) rows: chrP/chrR = DECIMAL(25,9) sums of the
+    9dp per-order ratios over the orders where that side has grams,
+    divided once by that order count; chrF = (1+β²)·chrP·chrR /
+    (β²·chrP + chrR). Returns the per-pair frame and the unrounded
+    (chr_p, chr_r, chrf) columns with the empty-side conventions
+    applied (both sides empty → 1, one side empty → 0): each caller
+    rounds them with its own emit."""
+    if beta <= 0:
+        raise ValueError("beta must be > 0")
+    dec = "decimal(25,9)"
+    ov, cg, rg = F.col("overlap"), F.col("cand_grams"), F.col("ref_grams")
+    per_pair = per_n.groupBy(id_col).agg(
+        F.sum(F.when(cg > 0, F.round(ov / cg, 9).cast(dec))).alias("_psum"),
+        F.count(F.when(cg > 0, 1)).alias("_pk"),
+        F.sum(F.when(rg > 0, F.round(ov / rg, 9).cast(dec))).alias("_rsum"),
+        F.count(F.when(rg > 0, 1)).alias("_rk"),
+        F.max(cg).alias("_anyc"),
+        F.max(rg).alias("_anyr"),
+    )
+    chrp = F.col("_psum").cast("double") / F.col("_pk")
+    chrr = F.col("_rsum").cast("double") / F.col("_rk")
+    b2 = float(beta) * float(beta)
+    chrf = F.lit(1.0 + b2) * chrp * chrr / (F.lit(b2) * chrp + chrr)
+    both_empty = (F.col("_anyc") == 0) & (F.col("_anyr") == 0)
+    one_empty = (F.col("_anyc") == 0) | (F.col("_anyr") == 0)
+    zero_denom = (F.col("_pk") == 0) | (F.col("_rk") == 0)
+    return (
+        per_pair,
+        F.when(both_empty, 1.0).when(F.col("_pk") == 0, 0.0).otherwise(chrp),
+        F.when(both_empty, 1.0).when(F.col("_rk") == 0, 0.0).otherwise(chrr),
+        F.when(both_empty, 1.0)
+        .when(one_empty | zero_denom, 0.0)
+        .when((chrp == 0) | (chrr == 0), 0.0)
+        .otherwise(chrf),
+    )
+
+
+_TOKEN_SPLIT = re.compile(TOKEN_SPLIT_RE)
+
+
+def _py_tokens(s: str | None) -> list[str]:
+    """Python twin of functions/text.tokens for the per-row DP metrics."""
+    if s is None:
+        return []
+    return [t for t in _TOKEN_SPLIT.split(s.lower()) if t]
+
+
+def _align_dist(a: list[str], b: list[str], substitute: bool) -> int:
+    """Word-alignment edit distance between token lists: Levenshtein
+    when ``substitute`` (a substitution costs 1), else the
+    insertion/deletion-only distance (a mismatched diagonal costs more
+    than any alignment, so it is never taken). Two-row numpy DP,
+    vectorized per row of ``a``; the insertion recurrence collapses to
+    a running min via the (m−j)+j accumulate identity."""
+    import numpy as np
+
+    n, m = len(a), len(b)
+    if n == 0:
+        return m
+    if m == 0:
+        return n
+    # integer-code b once; per row of a, vectorized DP update
+    code = {}
+    bb = np.fromiter((code.setdefault(t, len(code)) for t in b),
+                     dtype=np.int64, count=m)
+    miss = 1 if substitute else n + m + 1
+    idx = np.arange(1, m + 1, dtype=np.int64)
+    prev = np.arange(m + 1, dtype=np.int64)
+    for i, t in enumerate(a, 1):
+        diag = prev[:-1] + miss * (bb != code.get(t, -1))
+        m_arr = np.minimum(diag, prev[1:] + 1)
+        # insertion smoothing: cur[j] = min_k<=j (m[k] + (j-k))
+        cur = np.empty(m + 1, dtype=np.int64)
+        cur[0] = i
+        cur[1:] = np.minimum.accumulate(
+            np.minimum(m_arr, np.concatenate(([i], m_arr[:-1])) + 1) - idx
+        ) + idx
+        prev = cur
+    return int(prev[-1])
+
+
+def _score_pair_rows(
+    pairs: DataFrame,
+    cand_col: str,
+    ref_col: str,
+    id_col: str,
+    schema: str,
+    score: Callable[[list[str], list[str]], tuple],
+) -> DataFrame:
+    """Per-pair Python scoring as an Arrow-batched mapInPandas: each
+    row's cand/ref are tokenized with :func:`_py_tokens` and
+    ``score(cand_tokens, ref_tokens)`` returns the row's values after
+    the id, in the order of ``schema`` (the output columns after the
+    LONG id)."""
+    cols = [id_col] + [f.split()[0] for f in schema.split(",")]
+
+    def kernel(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [
+                (pid, *score(_py_tokens(c), _py_tokens(r)))
+                for pid, c, r in zip(pdf[id_col], pdf[cand_col], pdf[ref_col])
+            ]
+            yield pd.DataFrame(rows, columns=cols)
+
+    return pairs.select(id_col, cand_col, ref_col).mapInPandas(
+        kernel, f"{id_col} long, {schema}"
+    )
 
 
 def token_f1(
@@ -90,8 +318,9 @@ def token_f1(
     P/R/F1 = 1 and EM on the empty strings (the SQuAD no-answer
     convention); one empty → 0.
 
-    Plan: token explode on each side → one (id, tok) count aggregate
-    per side → inner equi-join on (id, tok) → one id-keyed reduce; the
+    Plan: the clipped overlap of :func:`clipped_ngram_stats` at n = 1
+    (token explode on each side → one (id, tok) count aggregate per
+    side → inner equi-join on (id, tok) → one id-keyed reduce); the
     per-pair totals are map-side expressions joined back on id. Every
     exchange is pair- or (pair,token)-keyed — scales per pair, never
     corpus-global.
@@ -99,10 +328,9 @@ def token_f1(
     Output per pair: (id, n_cand, n_ref, overlap, precision, recall,
     f1, exact_match) — counts LONG, ratios 6dp, exact_match 0/1.
     """
+    ct, rt = tokens(cand_col), tokens(ref_col)
     base = pairs.select(
-        F.col(id_col),
-        _norm_tokens(cand_col).alias("_ct"),
-        _norm_tokens(ref_col).alias("_rt"),
+        F.col(id_col), ct.alias("_ct"), rt.alias("_rt")
     ).select(
         id_col,
         F.size("_ct").cast("long").alias("n_cand"),
@@ -112,19 +340,7 @@ def token_f1(
         ).cast("int").alias("exact_match"),
     )
 
-    def side_counts(col: str, out: str) -> DataFrame:
-        return (
-            pairs.select(F.col(id_col), F.explode(_norm_tokens(col)).alias("_tok"))
-            .groupBy(id_col, "_tok")
-            .agg(F.count("*").cast("long").alias(out))
-        )
-
-    ov = (
-        side_counts(cand_col, "_cc")
-        .join(side_counts(ref_col, "_rc"), [id_col, "_tok"])
-        .groupBy(id_col)
-        .agg(F.sum(F.least("_cc", "_rc")).cast("long").alias("overlap"))
-    )
+    ov = _clipped_overlap(pairs, id_col, ct, rt, (1,), _word_grams).drop("n")
     nc, nr, o = F.col("n_cand"), F.col("n_ref"), F.col("overlap")
     return (
         base.join(ov, id_col, "left")
@@ -180,60 +396,14 @@ def clipped_ngram_stats(
 
     Output: (id, n, overlap, cand_grams, ref_grams) — all LONG.
     """
-    if not ns or any(n < 1 for n in ns):
-        raise ValueError("ns must be non-empty positive n-gram orders")
-
-    def side_counts(col: str, out: str) -> DataFrame:
-        toked = pairs.select(F.col(id_col), _tok(col, tokenizer).alias("_t"))
-        per_n = None
-        for n in ns:
-            grams = (
-                F.col("_t") if n == 1 else shingles_from_tokens(F.col("_t"), n)
-            )
-            g = toked.select(
-                id_col, F.lit(n).alias("n"), F.explode(grams).alias("_g")
-            )
-            per_n = g if per_n is None else per_n.unionByName(g)
-        return (
-            per_n.groupBy(id_col, "n", "_g")
-            .agg(F.count("*").cast("long").alias(out))
-        )
-
-    ov = (
-        side_counts(cand_col, "_cc")
-        .join(side_counts(ref_col, "_rc"), [id_col, "n", "_g"])
-        .groupBy(id_col, "n")
-        .agg(F.sum(F.least("_cc", "_rc")).cast("long").alias("overlap"))
-    )
-    n_lit = F.explode(F.array(*[F.lit(n) for n in ns])).alias("n")
-    totals = pairs.select(
-        F.col(id_col),
-        F.size(_tok(cand_col, tokenizer)).cast("long").alias("_nc"),
-        F.size(_tok(ref_col, tokenizer)).cast("long").alias("_nr"),
-    ).select(
+    return _clipped_stats(
+        pairs,
         id_col,
-        n_lit,
-        F.col("_nc"),
-        F.col("_nr"),
-    ).select(
-        id_col,
-        "n",
-        F.greatest(F.col("_nc") - F.col("n") + 1, F.lit(0))
-        .cast("long")
-        .alias("cand_grams"),
-        F.greatest(F.col("_nr") - F.col("n") + 1, F.lit(0))
-        .cast("long")
-        .alias("ref_grams"),
-    )
-    return (
-        totals.join(ov, [id_col, "n"], "left")
-        .select(
-            id_col,
-            "n",
-            F.coalesce("overlap", F.lit(0)).cast("long").alias("overlap"),
-            "cand_grams",
-            "ref_grams",
-        )
+        _tok(cand_col, tokenizer),
+        _tok(ref_col, tokenizer),
+        ns,
+        _word_grams,
+        F.size,
     )
 
 
@@ -379,72 +549,6 @@ def rouge_n(
     )
 
 
-def _chr_order_stats(
-    pairs: DataFrame,
-    cand_col: str,
-    ref_col: str,
-    id_col: str,
-    ns: tuple[int, ...],
-) -> DataFrame:
-    """Per (pair, char-order n): clipped char-gram overlap and both
-    sides' gram totals over whitespace-stripped lowercased text — the
-    shared primitive under chrF (chrf_score) and chrF++ (chrf_pp).
-    Output: (id, n, _ov, _cg, _rg) — all LONG."""
-
-    def chars(col: str) -> Column:
-        return F.regexp_replace(F.lower(F.col(col)), r"\s+", "")
-
-    def side_counts(col: str, out: str) -> DataFrame:
-        base = pairs.select(F.col(id_col), chars(col).alias("_s"))
-        per_n = None
-        for n in ns:
-            g = base.select(
-                id_col,
-                F.lit(n).alias("n"),
-                F.explode(
-                    F.when(
-                        F.length("_s") < n, F.array().cast("array<string>")
-                    ).otherwise(
-                        F.transform(
-                            F.sequence(F.lit(1), F.length("_s") - (n - 1)),
-                            lambda i: F.col("_s").substr(i, F.lit(n)),
-                        )
-                    )
-                ).alias("_g"),
-            )
-            per_n = g if per_n is None else per_n.unionByName(g)
-        return (
-            per_n.groupBy(id_col, "n", "_g")
-            .agg(F.count("*").cast("long").alias(out))
-        )
-
-    cc = side_counts(cand_col, "_cc")
-    rc = side_counts(ref_col, "_rc")
-    ov = (
-        cc.join(rc, [id_col, "n", "_g"])
-        .groupBy(id_col, "n")
-        .agg(F.sum(F.least("_cc", "_rc")).cast("long").alias("_ov"))
-    )
-    n_lit = F.explode(F.array(*[F.lit(n) for n in ns])).alias("n")
-    totals = pairs.select(
-        F.col(id_col),
-        F.length(chars(cand_col)).cast("long").alias("_lc"),
-        F.length(chars(ref_col)).cast("long").alias("_lr"),
-    ).select(id_col, n_lit, "_lc", "_lr").select(
-        id_col,
-        "n",
-        F.greatest(F.col("_lc") - F.col("n") + 1, F.lit(0)).alias("_cg"),
-        F.greatest(F.col("_lr") - F.col("n") + 1, F.lit(0)).alias("_rg"),
-    )
-    return totals.join(ov, [id_col, "n"], "left").select(
-        id_col,
-        "n",
-        F.coalesce("_ov", F.lit(0)).alias("_ov"),
-        "_cg",
-        "_rg",
-    )
-
-
 def chrf_score(
     pairs: DataFrame,
     cand_col: str = "cand",
@@ -477,59 +581,16 @@ def chrf_score(
     """
     if max_n < 1:
         raise ValueError("max_n must be >= 1")
-    if beta <= 0:
-        raise ValueError("beta must be > 0")
     ns = tuple(range(1, max_n + 1))
-    per_n = _chr_order_stats(pairs, cand_col, ref_col, id_col, ns)
-    dec = "decimal(25,9)"
-    per_pair = per_n.groupBy(id_col).agg(
-        F.sum(
-            F.when(
-                F.col("_cg") > 0,
-                F.round(F.col("_ov") / F.col("_cg"), 9).cast(dec),
-            )
-        ).alias("_psum"),
-        F.count(F.when(F.col("_cg") > 0, 1)).alias("_pk"),
-        F.sum(
-            F.when(
-                F.col("_rg") > 0,
-                F.round(F.col("_ov") / F.col("_rg"), 9).cast(dec),
-            )
-        ).alias("_rsum"),
-        F.count(F.when(F.col("_rg") > 0, 1)).alias("_rk"),
-        F.max("_cg").alias("_anyc"),
-        F.max("_rg").alias("_anyr"),
+    per_n = _clipped_stats(
+        pairs, id_col, _chars(cand_col), _chars(ref_col), ns, _char_grams, F.length
     )
-    chrp = F.col("_psum").cast("double") / F.col("_pk")
-    chrr = F.col("_rsum").cast("double") / F.col("_rk")
-    b2 = float(beta) * float(beta)
-    chrf = (
-        F.lit(1.0 + b2) * chrp * chrr / (F.lit(b2) * chrp + chrr)
-    )
-    both_empty = (F.col("_anyc") == 0) & (F.col("_anyr") == 0)
-    one_empty = (F.col("_anyc") == 0) | (F.col("_anyr") == 0)
-    zero_denom = (F.col("_pk") == 0) | (F.col("_rk") == 0)
+    per_pair, chr_p, chr_r, chrf = _chrf_reduce(per_n, id_col, beta)
     return per_pair.select(
         id_col,
-        F.round(
-            F.when(both_empty, 1.0)
-            .when(F.col("_pk") == 0, 0.0)
-            .otherwise(chrp),
-            6,
-        ).alias("chr_p"),
-        F.round(
-            F.when(both_empty, 1.0)
-            .when(F.col("_rk") == 0, 0.0)
-            .otherwise(chrr),
-            6,
-        ).alias("chr_r"),
-        F.round(
-            F.when(both_empty, 1.0)
-            .when(one_empty | zero_denom, 0.0)
-            .when((chrp == 0) | (chrr == 0), 0.0)
-            .otherwise(chrf),
-            6,
-        ).alias("chrf"),
+        F.round(chr_p, 6).alias("chr_p"),
+        F.round(chr_r, 6).alias("chr_r"),
+        F.round(chrf, 6).alias("chrf"),
     )
 
 
@@ -552,19 +613,10 @@ def distinct_n(
 
     Output: (group, n, total_grams, distinct_grams, distinct_ratio).
     """
-    if not ns or any(n < 1 for n in ns):
-        raise ValueError("ns must be non-empty positive n-gram orders")
-    toked = docs.select(
-        F.col(group_col).alias("grp"), tokens(text_col).alias("_t")
+    units = docs.select(
+        F.col(group_col).alias("grp"), tokens(text_col).alias("_u")
     )
-    per_n = None
-    for n in ns:
-        grams = F.col("_t") if n == 1 else shingles_from_tokens(F.col("_t"), n)
-        g = toked.select("grp", F.lit(n).alias("n"), F.explode(grams).alias("_g"))
-        per_n = g if per_n is None else per_n.unionByName(g)
-    counted = per_n.groupBy("grp", "n", "_g").agg(
-        F.count("*").cast("long").alias("_c")
-    )
+    counted = _gram_counts(units, "grp", ns, _word_grams, "_c")
     return (
         counted.groupBy("grp", "n")
         .agg(
@@ -611,19 +663,8 @@ def self_bleu_pool(
 
     Output: (id, n, doc_grams, pool_overlap, self_p) per (doc, n).
     """
-    if not ns or any(n < 1 for n in ns):
-        raise ValueError("ns must be non-empty positive n-gram orders")
-    toked = docs.select(F.col(id_col), tokens(text_col).alias("_t"))
-    per_n = None
-    for n in ns:
-        grams = F.col("_t") if n == 1 else shingles_from_tokens(F.col("_t"), n)
-        g = toked.select(
-            id_col, F.lit(n).alias("n"), F.explode(grams).alias("_g")
-        )
-        per_n = g if per_n is None else per_n.unionByName(g)
-    doc_counts = per_n.groupBy(id_col, "n", "_g").agg(
-        F.count("*").cast("long").alias("_c")
-    )
+    units = docs.select(F.col(id_col), tokens(text_col).alias("_u"))
+    doc_counts = _gram_counts(units, id_col, ns, _word_grams, "_c")
     pool = doc_counts.groupBy("n", "_g").agg(
         F.sum("_c").cast("long").alias("_cp")
     )
@@ -808,72 +849,20 @@ def word_error_rate(
     Output per pair: (id, n_cand, n_ref, word_dist, wer) — counts and
     dist LONG, wer 6dp.
     """
-    import re as _re
 
-    out_schema = (
-        f"{id_col} long, n_cand long, n_ref long, "
-        "word_dist long, wer double"
-    )
-    tok_re = _re.compile("[^a-z0-9]+")
+    def score(a: list[str], b: list[str]) -> tuple:
+        d = _align_dist(a, b, substitute=True)
+        if not a and not b:
+            wer = 0.0
+        elif not b:
+            wer = None
+        else:
+            wer = round(d / len(b), 6)
+        return len(a), len(b), d, wer
 
-    def _toks(s):
-        if s is None:
-            return []
-        return [t for t in tok_re.split(s.lower()) if t]
-
-    def _dist(a, b):
-        import numpy as np
-
-        n, m = len(a), len(b)
-        if n == 0:
-            return m
-        if m == 0:
-            return n
-        # integer-code b once; per row of a, vectorized DP update
-        code = {}
-        bb = np.fromiter((code.setdefault(t, len(code)) for t in b),
-                         dtype=np.int64, count=m)
-        idx = np.arange(1, m + 1, dtype=np.int64)
-        prev = np.arange(m + 1, dtype=np.int64)
-        for i, t in enumerate(a, 1):
-            ca = code.get(t, -1)
-            sub = prev[:-1] + (bb != ca)
-            dele = prev[1:] + 1
-            m_arr = np.minimum(sub, dele)
-            # insertion smoothing: cur[j] = min_k<=j (m[k] + (j-k))
-            cur = np.empty(m + 1, dtype=np.int64)
-            cur[0] = i
-            cur[1:] = np.minimum.accumulate(
-                np.minimum(m_arr, np.concatenate(([i], m_arr[:-1] + 0)) + 1)
-                - idx
-            ) + idx
-            prev = cur
-        return int(prev[-1])
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for pid, c, r in zip(
-                pdf[id_col], pdf[cand_col], pdf[ref_col]
-            ):
-                a, b = _toks(c), _toks(r)
-                d = _dist(a, b)
-                if not a and not b:
-                    wer = 0.0
-                elif not b:
-                    wer = None
-                else:
-                    wer = round(d / len(b), 6)
-                rows.append((pid, len(a), len(b), d, wer))
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "n_cand", "n_ref", "word_dist", "wer"],
-            )
-
-    return pairs.select(id_col, cand_col, ref_col).mapInPandas(
-        kernel, out_schema
+    return _score_pair_rows(
+        pairs, cand_col, ref_col, id_col,
+        "n_cand long, n_ref long, word_dist long, wer double", score,
     )
 
 
@@ -895,13 +884,15 @@ def chrf_pp(
     effective-order convention, extended to the pooled order set);
     chrF++ = (1+β²)·chrP·chrR / (β²·chrP + chrR).
 
-    Word grams use the engine tokenizer (the documented stand-in for
-    the paper's punctuation tokenizer — llm/texteval._norm_tokens).
+    Word grams use the engine tokenizer (functions/text.tokens, the
+    documented stand-in for the paper's punctuation tokenizer).
 
-    Plan: the chrf char-order frame unioned with the
-    clipped_ngram_stats word-order frame (orders offset by 100 to
-    keep the keys distinct) → ONE pair-keyed reduce. Pair-keyed
-    end-to-end, exactly chrf_score's shape plus one union arm.
+    Plan: chrf_score's char-order frame unioned with
+    :func:`clipped_ngram_stats`' word-order frame — both are the same
+    (id, n, overlap, cand_grams, ref_grams) shape, the word orders
+    offset by 100 to keep the keys distinct — → chrf_score's ONE
+    pair-keyed reduce. Pair-keyed end-to-end, exactly chrf_score's
+    shape plus one union arm; only the emit differs (below).
 
     Output per pair: (id, chr_p, chr_r, chrf_pp) — 6dp; empty-side
     conventions exactly as chrf_score (both empty → 1, one side empty
@@ -909,47 +900,17 @@ def chrf_pp(
     """
     if max_n < 1 or word_order < 1:
         raise ValueError("max_n and word_order must be >= 1")
-    if beta <= 0:
-        raise ValueError("beta must be > 0")
     ns = tuple(range(1, max_n + 1))
     wns = tuple(range(1, word_order + 1))
-    chars_part = _chr_order_stats(pairs, cand_col, ref_col, id_col, ns)
+    chars_part = _clipped_stats(
+        pairs, id_col, _chars(cand_col), _chars(ref_col), ns, _char_grams, F.length
+    )
     words_part = clipped_ngram_stats(
         pairs, cand_col, ref_col, id_col, wns
-    ).select(
-        id_col,
-        (F.col("n") + 100).alias("n"),
-        F.col("overlap").alias("_ov"),
-        F.col("cand_grams").alias("_cg"),
-        F.col("ref_grams").alias("_rg"),
+    ).withColumn("n", F.col("n") + 100)
+    per_pair, chr_p, chr_r, chrf = _chrf_reduce(
+        chars_part.unionByName(words_part), id_col, beta
     )
-    per_n = chars_part.unionByName(words_part)
-    dec = "decimal(25,9)"
-    per_pair = per_n.groupBy(id_col).agg(
-        F.sum(
-            F.when(
-                F.col("_cg") > 0,
-                F.round(F.col("_ov") / F.col("_cg"), 9).cast(dec),
-            )
-        ).alias("_psum"),
-        F.count(F.when(F.col("_cg") > 0, 1)).alias("_pk"),
-        F.sum(
-            F.when(
-                F.col("_rg") > 0,
-                F.round(F.col("_ov") / F.col("_rg"), 9).cast(dec),
-            )
-        ).alias("_rsum"),
-        F.count(F.when(F.col("_rg") > 0, 1)).alias("_rk"),
-        F.max("_cg").alias("_anyc"),
-        F.max("_rg").alias("_anyr"),
-    )
-    chrp = F.col("_psum").cast("double") / F.col("_pk")
-    chrr = F.col("_rsum").cast("double") / F.col("_rk")
-    b2 = float(beta) * float(beta)
-    chrf = F.lit(1.0 + b2) * chrp * chrr / (F.lit(b2) * chrp + chrr)
-    both_empty = (F.col("_anyc") == 0) & (F.col("_anyr") == 0)
-    one_empty = (F.col("_anyc") == 0) | (F.col("_anyr") == 0)
-    zero_denom = (F.col("_pk") == 0) | (F.col("_rk") == 0)
 
     # emit through a 9dp decimal: the order means are decimal-sum/k
     # doubles that can land EXACTLY on a 6dp half boundary (a 7-digit
@@ -963,22 +924,9 @@ def chrf_pp(
 
     return per_pair.select(
         id_col,
-        emit(
-            F.when(both_empty, 1.0)
-            .when(F.col("_pk") == 0, 0.0)
-            .otherwise(chrp)
-        ).alias("chr_p"),
-        emit(
-            F.when(both_empty, 1.0)
-            .when(F.col("_rk") == 0, 0.0)
-            .otherwise(chrr)
-        ).alias("chr_r"),
-        emit(
-            F.when(both_empty, 1.0)
-            .when(one_empty | zero_denom, 0.0)
-            .when((chrp == 0) | (chrr == 0), 0.0)
-            .otherwise(chrf)
-        ).alias("chrf_pp"),
+        emit(chr_p).alias("chr_p"),
+        emit(chr_r).alias("chr_r"),
+        emit(chrf).alias("chrf_pp"),
     )
 
 
@@ -1009,75 +957,23 @@ def rouge_l(
     rouge_l_f) — counts LONG, ratios 6dp; both sides empty → F 1
     (vacuous), one empty → 0.
     """
-    import re as _re
 
-    out_schema = (
-        f"{id_col} long, n_cand long, n_ref long, lcs long, "
-        "rouge_l_p double, rouge_l_r double, rouge_l_f double"
-    )
-    tok_re = _re.compile("[^a-z0-9]+")
-
-    def _toks(s):
-        if s is None:
-            return []
-        return [t for t in tok_re.split(s.lower()) if t]
-
-    def _indel(a, b):
-        import numpy as np
-
+    def score(a: list[str], b: list[str]) -> tuple:
         n, m = len(a), len(b)
-        if n == 0:
-            return m
-        if m == 0:
-            return n
-        code = {}
-        bb = np.fromiter((code.setdefault(t, len(code)) for t in b),
-                         dtype=np.int64, count=m)
-        big = np.int64(n + m + 1)
-        idx = np.arange(1, m + 1, dtype=np.int64)
-        prev = np.arange(m + 1, dtype=np.int64)
-        for i, t in enumerate(a, 1):
-            ca = code.get(t, -1)
-            match = np.where(bb == ca, prev[:-1], big)
-            dele = prev[1:] + 1
-            m_arr = np.minimum(match, dele)
-            cur = np.empty(m + 1, dtype=np.int64)
-            cur[0] = i
-            cur[1:] = np.minimum.accumulate(
-                np.minimum(m_arr, np.concatenate(([i], m_arr[:-1])) + 1)
-                - idx
-            ) + idx
-            prev = cur
-        return int(prev[-1])
+        lcs = (n + m - _align_dist(a, b, substitute=False)) // 2
+        if n == 0 and m == 0:
+            p = r = f = 1.0
+        elif n == 0 or m == 0:
+            p = r = f = 0.0
+        else:
+            p = round(lcs / n, 6)
+            r = round(lcs / m, 6)
+            f = round(2 * lcs / (n + m), 6)
+        return n, m, lcs, p, r, f
 
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for pid, c, r in zip(
-                pdf[id_col], pdf[cand_col], pdf[ref_col]
-            ):
-                a, b = _toks(c), _toks(r)
-                n, m = len(a), len(b)
-                lcs = (n + m - _indel(a, b)) // 2
-                if n == 0 and m == 0:
-                    p = r_ = f = 1.0
-                elif n == 0 or m == 0:
-                    p = r_ = f = 0.0
-                else:
-                    p = round(lcs / n, 6)
-                    r_ = round(lcs / m, 6)
-                    f = round(2 * lcs / (n + m), 6)
-                rows.append((pid, n, m, lcs, p, r_, f))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "n_cand", "n_ref", "lcs",
-                    "rouge_l_p", "rouge_l_r", "rouge_l_f",
-                ],
-            )
-
-    return pairs.select(id_col, cand_col, ref_col).mapInPandas(
-        kernel, out_schema
+    return _score_pair_rows(
+        pairs, cand_col, ref_col, id_col,
+        "n_cand long, n_ref long, lcs long, "
+        "rouge_l_p double, rouge_l_r double, rouge_l_f double",
+        score,
     )

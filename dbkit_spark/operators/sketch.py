@@ -257,23 +257,7 @@ def tdigest_build(
     partial = src.groupBy(*group_cols, "_s").applyInPandas(
         build_partial, gschema("mean double, weight double")
     )
-
-    def merge_final(pdf: pd.DataFrame) -> pd.DataFrame:
-        pairs = sorted(zip(pdf["mean"], pdf["weight"]))
-        cents = _tdigest_compress([(m, w) for m, w in pairs], delta)
-        head = pdf.iloc[0]
-        return pd.DataFrame(
-            {
-                **{g: [head[g]] * len(cents) for g in group_cols},
-                "centroid": list(range(len(cents))),
-                "mean": [m for m, _w in cents],
-                "weight": [w for _m, w in cents],
-            }
-        )
-
-    return partial.groupBy(*group_cols).applyInPandas(
-        merge_final, gschema("centroid int, mean double, weight double")
-    )
+    return tdigest_merge(partial, group_cols, delta)
 
 
 def tdigest_quantiles(
@@ -347,14 +331,14 @@ def tdigest_merge(
 
     Input: any union of digest outputs — (group..., mean, weight)
     (a ``centroid`` index column is ignored if present). Output:
-    (group..., centroid, mean, weight), same contract as the final
-    level of ``tdigest_build``. Deterministic: centroid pairs are
-    consumed in (mean, weight) sorted order, so the same input rows
-    merge identically under any partitioning. The shuffle carries
-    centroid rows only; an Arrow batch per group holds the unioned
-    centroids (n_batches · O(delta) rows — metadata-sized for any
-    sane batch count; re-merge hierarchically if batches outnumber
-    ~10^4)."""
+    (group..., centroid, mean, weight) — this is also the final level
+    of ``tdigest_build``, over its level-1 partials. Deterministic:
+    centroid pairs are consumed in (mean, weight) sorted order, so the
+    same input rows merge identically under any partitioning. The
+    shuffle carries centroid rows only; an Arrow batch per group holds
+    the unioned centroids (n_batches · O(delta) rows — metadata-sized
+    for any sane batch count; re-merge hierarchically if batches
+    outnumber ~10^4)."""
     import pandas as pd
 
     def gschema(extra: str) -> str:

@@ -4896,7 +4896,7 @@ _Q464_NOTES = (
     "tokenizer='ws' — the sacrebleu convention: score the raw "
     "detokenized text, whitespace split, case and punctuation "
     "PRESERVED; the q434 pipeline with the tokenizer swapped, "
-    "pinning the swap the _norm_tokens docstring documents): "
+    "pinning the swap the _tok docstring documents): "
     "identical exactness contract (exact LONG counts, 9dp p_n, "
     "decimal ln-sum, unsmoothed zero-pinning); the ws/norm DELTA on "
     "the same pairs is the tokenization-sensitivity readout"

@@ -38,7 +38,10 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     """persist_shingles=True checkpoints the pairs and then releases every
     cache the pipeline made (the shingle sets and the band-key table
     lsh_candidate_pairs persists): the session holds as many cached
-    plans after the call as before."""
+    plans after the call as before. minhash_incremental_pairs (both
+    shingle sets plus the batch's band keys) follows the same rule."""
+    from dbkit_spark.llm.dedup import minhash_incremental_pairs
+
     docs = spark.createDataFrame(
         [
             (1, "cache release probe alpha beta gamma delta epsilon zeta"),
@@ -51,6 +54,11 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     before = cache_manager.cachedData().size()
     pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 2)}
+    assert cache_manager.cachedData().size() == before
+    incremental = minhash_incremental_pairs(
+        docs.filter(F.col("doc_id") != 2), docs.filter(F.col("doc_id") == 2)
+    )
+    assert {(r.doc_a, r.doc_b) for r in incremental.collect()} == {(2, 1)}
     assert cache_manager.cachedData().size() == before
 
 
@@ -1636,3 +1644,31 @@ def test_reconcile_rows_localizes_damage(spark):
     # clean tables: stage 1 reports nothing, stage 2 diffs nothing
     clean = reconcile_buckets(left, bucket_summary(ev, F.col("event_id"), fp, 64))
     assert reconcile_rows(ev, ev, F.col("event_id"), fp, clean, 64).count() == 0
+
+
+def test_chrf_emits_its_6dp_round_on_a_half_boundary(spark):
+    """chrf_score rounds its chrP/chrR/chrF doubles straight to 6dp;
+    chrf_pp emits through a 9dp decimal. The two rules split on this
+    pair (pair 83 of the sf0.001 eval pairs): the raw chrR is
+    0.50069749966…, which rounds to 0.500697 directly but reads
+    0.500697500 at 9dp and then HALF_UP-rounds to 0.500698. q436's
+    oracle pins the direct rule, so the chrF emit must stay its own."""
+    from dbkit_spark.llm.texteval import chrf_score
+
+    cand = (
+        "filter agg row join join column column row vector window big "
+        "column scan slow hash group order scan row a part merge line "
+        "vector sort order agg order part window column part row small "
+        "query agg join key row big customer"
+    )
+    ref = cand + (
+        " fast stream customer a small agg table order fast hash slow agg "
+        "hash scan spark value part part agg part stream batch big big key "
+        "agg agg merge stream stream stream part scan slow vector fast "
+        "spark batch slow a batch"
+    )
+    pairs = spark.createDataFrame(
+        [(83, cand, ref)], "pair_id long, cand string, ref string"
+    )
+    (row,) = chrf_score(pairs).collect()
+    assert (row.chr_p, row.chr_r, row.chrf) == (1.0, 0.500697, 0.556244)
