@@ -141,6 +141,13 @@ def token_hash24(tok: Column) -> Column:
     return F.conv(F.substring(F.md5(tok), 1, 6), 16, 10).cast("long")
 
 
+def _hash24_u01(key: Column) -> Column:
+    """Deterministic uniform strictly inside (0, 1): the md5-24 value of
+    ``key`` shifted to its bucket midpoint, ``(h + 0.5) / 2^24``, so
+    ln(u) and ln(1 - u) stay finite. Portable digit-for-digit."""
+    return (token_hash24(key) + F.lit(0.5)) / F.lit(float(16**6))
+
+
 def rolling_fingerprint(toks: Column | str) -> Column:
     """Order-SENSITIVE Rabin-Karp rolling hash over the token sequence:
     h = fold(h * B + md5_24(tok) mod M). Complements the order-invariant

@@ -1,17 +1,17 @@
 """Real audio decode for the multimodal surface — WAV/RIFF PCM.
 
-``llm/multimodal.py`` upgraded all four image containers from stubs to
-real decodes; this module does the same for AUDIO: a from-spec RIFF/WAVE
-parser (chunk walk, 'fmt ' + 'data') decoding integer PCM at 8/16/24/32
-bits, mono or multi-channel, with zero codec dependency — the payload
+``llm/multimodal.py`` decodes all four image containers to real pixels;
+this module does the same for AUDIO: a from-spec RIFF/WAVE parser
+(chunk walk, 'fmt ' + 'data') decoding integer PCM at 8/16/24/32 bits,
+mono or multi-channel, with zero codec dependency — the payload
 format every recording pipeline can emit and the one torchaudio-class
 libraries would otherwise be needed for. Format 3 (IEEE float WAV, the
 common ML-corpus export at float32/float64) decodes too, mapped to the
 16-bit integer domain via ``round(x * 2^15)`` so the exact-stats
 contract holds unchanged (documented below). Compressed codecs (MP3
 inside RIFF, ADPCM, ...) raise NotImplementedError and degrade to
-header metadata in :func:`audio_stats` — the same decoded=false
-contract as ``image_pixel_stats``.
+decoded=false rows with NULL stats in :func:`audio_stats` — the
+multimodal degradation contract.
 
 Feature extraction is EXACT-INTEGER where it matters: peak and
 zero-crossings are integers, the mean square is one IEEE division of an
@@ -27,14 +27,14 @@ plumbing to the image path.
 
 from __future__ import annotations
 
+import hashlib
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .multimodal import _BLOB_SCHEMA, _decode_rows, _synth_payloads
 
 _SYNTH_MULT = 2654435761  # Knuth multiplicative constant; fits BIGINT math
 
@@ -219,33 +219,31 @@ def audio_stats(payloads: DataFrame) -> DataFrame:
     failing the batch — the image_pixel_stats contract. Arrow-batched,
     map-only, shuffle-free."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in AUDIO_STATS_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, ch, bits, samples = decode_wav(
-                        None if payload is None else bytes(payload)
-                    )
-                    flat = samples.ravel().astype(np.int64)
-                    n = int(flat.size)
-                    nonneg = flat >= 0
-                    zc = int(np.count_nonzero(nonneg[1:] != nonneg[:-1]))
-                    vals = (
-                        did, rate, ch, bits, samples.shape[0],
-                        samples.shape[0] / rate,
-                        int(np.abs(flat).max()),
-                        float(int((flat * flat).sum()) / n),
-                        zc, True,
-                    )
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, None, None, None,
-                            None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def stats(raw: bytes) -> tuple:
+        rate, ch, bits, samples = decode_wav(raw)
+        flat = samples.ravel().astype(np.int64)
+        n = int(flat.size)
+        nonneg = flat >= 0
+        zc = int(np.count_nonzero(nonneg[1:] != nonneg[:-1]))
+        return (
+            rate, ch, bits, samples.shape[0],
+            samples.shape[0] / rate,
+            int(np.abs(flat).max()),
+            float(int((flat * flat).sum()) / n),
+            zc,
+        )
 
-    return payloads.mapInPandas(do, AUDIO_STATS_SCHEMA)
+    return _decode_rows(payloads, AUDIO_STATS_SCHEMA, stats)
+
+
+def _synth_wav(n: int, seed: int, arm: int) -> bytes:
+    """The fixture waveform ``synth_samples(seed, n)`` at 8 kHz mono in
+    fmt arm 0 (integer PCM16), 1 (IEEE float32) or 2 (IEEE float64)."""
+    if arm == 0:
+        return encode_wav(n, sample_rate=8000, channels=1, seed=seed, bits=16)
+    return encode_wav_float(
+        n, sample_rate=8000, channels=1, seed=seed, bits=32 if arm == 1 else 64
+    )
 
 
 def with_wav_payload(
@@ -257,33 +255,11 @@ def with_wav_payload(
     over the SAME waveform, so every arm decodes to identical samples
     and only the reported ``bits`` differs; ``every`` keeps 1-in-N rows
     for fixture-size control. Arrow-batched, map-only."""
-
-    def one(i: int) -> bytes:
-        n = 800 + (i % 7) * 160
-        arm = i % 3
-        if arm == 0:
-            return encode_wav(n, sample_rate=8000, channels=1, seed=i, bits=16)
-        return encode_wav_float(
-            n, sample_rate=8000, channels=1, seed=i, bits=32 if arm == 1 else 64
-        )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col] if int(i) % every == 0]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [bytearray(one(i)) for i in ids],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
+    return _synth_payloads(
+        docs, id_col, _BLOB_SCHEMA,
+        lambda i: (_synth_wav(800 + (i % 7) * 160, i, i % 3),),
+        every,
     )
-    return docs.select(F.col(id_col)).mapInPandas(gen, schema)
 
 
 SPECTRAL_SCHEMA = T.StructType(
@@ -320,44 +296,29 @@ def audio_spectral(payloads: DataFrame, n_fft: int = 256) -> DataFrame:
     if n_fft < 8 or n_fft & (n_fft - 1):
         raise ValueError("n_fft must be a power of two >= 8")
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in SPECTRAL_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    rate, ch, bits, samples = decode_wav(
-                        None if payload is None else bytes(payload)
-                    )
-                    x = samples[:, 0].astype(np.float64)
-                    n_frames = x.size // n_fft
-                    if n_frames == 0:
-                        raise ValueError("shorter than one frame")
-                    frames = x[: n_frames * n_fft].reshape(n_frames, n_fft)
-                    mag = np.abs(np.fft.rfft(frames, axis=1)).mean(axis=0)
-                    freqs = np.fft.rfftfreq(n_fft, d=1.0 / rate)
-                    tot = mag.sum()
-                    if tot == 0.0:
-                        raise ValueError("silent payload")
-                    centroid = float((freqs * mag).sum() / tot)
-                    bandwidth = float(
-                        np.sqrt(((freqs - centroid) ** 2 * mag).sum() / tot)
-                    )
-                    cum = np.cumsum(mag)
-                    roll_idx = int(np.searchsorted(cum, 0.85 * tot))
-                    rolloff = float(freqs[min(roll_idx, freqs.size - 1)])
-                    power = mag[1:] ** 2  # DC excluded
-                    nz = power[power > 0]
-                    flat = float(
-                        np.exp(np.log(nz).mean()) / nz.mean()
-                    ) if nz.size else 0.0
-                    vals = (did, centroid, bandwidth, rolloff, flat, True)
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def spectral(raw: bytes) -> tuple:
+        rate, ch, bits, samples = decode_wav(raw)
+        x = samples[:, 0].astype(np.float64)
+        n_frames = x.size // n_fft
+        if n_frames == 0:
+            raise ValueError("shorter than one frame")
+        frames = x[: n_frames * n_fft].reshape(n_frames, n_fft)
+        mag = np.abs(np.fft.rfft(frames, axis=1)).mean(axis=0)
+        freqs = np.fft.rfftfreq(n_fft, d=1.0 / rate)
+        tot = mag.sum()
+        if tot == 0.0:
+            raise ValueError("silent payload")
+        centroid = float((freqs * mag).sum() / tot)
+        bandwidth = float(np.sqrt(((freqs - centroid) ** 2 * mag).sum() / tot))
+        cum = np.cumsum(mag)
+        roll_idx = int(np.searchsorted(cum, 0.85 * tot))
+        rolloff = float(freqs[min(roll_idx, freqs.size - 1)])
+        power = mag[1:] ** 2  # DC excluded
+        nz = power[power > 0]
+        flat = float(np.exp(np.log(nz).mean()) / nz.mean()) if nz.size else 0.0
+        return centroid, bandwidth, rolloff, flat
 
-    return payloads.mapInPandas(do, SPECTRAL_SCHEMA)
+    return _decode_rows(payloads, SPECTRAL_SCHEMA, spectral)
 
 
 def encode_wav_tone(
@@ -393,6 +354,19 @@ def _wav_format_code(payload: bytes) -> int:
     raise ValueError("missing fmt chunk")
 
 
+def _decode_wav16(payload: bytes) -> tuple[int, int, int, np.ndarray]:
+    """:func:`decode_wav` with every arm normalized to the 16-bit domain
+    as int64: integer PCM decodes at SOURCE scale (8→<<8, 24→>>8,
+    32→>>16), float arms already land in the 16-bit domain. The fmt code
+    tells bits=32 PCM from bits=32 float."""
+    rate, ch, bits, samples = decode_wav(payload)
+    samples = samples.astype(np.int64)
+    if _wav_format_code(payload) == 1:
+        shift = {8: -8, 16: 0, 24: 8, 32: 16}[bits]
+        samples = samples << 8 if shift == -8 else samples >> shift
+    return rate, ch, bits, samples
+
+
 def resample_wav(payload: bytes, factor: int) -> bytes:
     """REAL integer-factor downsample (decimation with a box
     anti-alias filter): decode any supported WAV arm (integer PCM or
@@ -404,16 +378,8 @@ def resample_wav(payload: bytes, factor: int) -> bytes:
     frames short of a full block are dropped."""
     if factor < 1:
         raise ValueError("factor must be >= 1")
-    rate, ch, bits, samples = decode_wav(payload)
-    samples = samples.astype(np.int64)
-    # Normalize every arm to the 16-bit domain before filtering:
-    # integer PCM decodes at SOURCE scale (8→[-128,127], 24→<<8,
-    # 32→<<16), float arms already map to the 16-bit domain. The fmt
-    # code disambiguates bits=32 PCM from bits=32 float.
-    fmt_code = _wav_format_code(payload)
-    if fmt_code == 1:
-        shift = {8: -8, 16: 0, 24: 8, 32: 16}[bits]
-        samples = samples << 8 if shift == -8 else samples >> shift
+    # filter in the 16-bit domain, whatever the source arm
+    rate, ch, bits, samples = _decode_wav16(payload)
     n_out = samples.shape[0] // factor
     if n_out < 1:
         raise ValueError("stream shorter than one block")
@@ -440,29 +406,11 @@ def resample_payloads(payloads: DataFrame, factor: int = 4) -> DataFrame:
     shuffle-free; undecodable payloads degrade to decoded=false with a
     NULL payload (the audio_stats contract)."""
     schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("decoded", T.BooleanType()),
-        ]
+        [*_BLOB_SCHEMA, T.StructField("decoded", T.BooleanType())]
     )
-
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {"doc_id": [], "payload": [], "decoded": []}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    out = resample_wav(bytes(payload), factor)
-                    rows["doc_id"].append(did)
-                    rows["payload"].append(bytearray(out))
-                    rows["decoded"].append(True)
-                except (NotImplementedError, ValueError):
-                    rows["doc_id"].append(did)
-                    rows["payload"].append(None)
-                    rows["decoded"].append(False)
-            yield pd.DataFrame(rows)
-
-    return payloads.mapInPandas(do, schema)
+    return _decode_rows(
+        payloads, schema, lambda raw: (bytearray(resample_wav(raw, factor)),)
+    )
 
 
 VAD_SCHEMA = T.StructType(
@@ -510,41 +458,24 @@ def vad_segments(
     off by up to 2^32 — garbage stats with no error.
     """
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in VAD_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = None if payload is None else bytes(payload)
-                    _rate, _ch, bits, samples = decode_wav(raw)
-                    flat = samples.ravel().astype(np.int64)
-                    if _wav_format_code(raw) == 1:
-                        shift = {8: -8, 16: 0, 24: 8, 32: 16}[bits]
-                        flat = flat << 8 if shift == -8 else flat >> shift
-                    m = flat.size // frame
-                    fr = flat[: m * frame].reshape(m, frame)
-                    energy = (fr * fr).sum(axis=1)
-                    active = energy >= threshold * frame
-                    n_active = int(active.sum())
-                    # run-length stats stay vectorized — hour-long
-                    # recordings mean 10^5+ frames per row
-                    padded = np.concatenate(([False], active, [False]))
-                    edges = np.flatnonzero(padded[1:] != padded[:-1])
-                    starts, ends = edges[::2], edges[1::2]
-                    n_seg = int(starts.size)
-                    longest = int((ends - starts).max()) if n_seg else 0
-                    first = int(starts[0]) if n_seg else None
-                    vals = (
-                        did, m, n_active, n_seg, longest, first,
-                        n_active / m if m else None, True,
-                    )
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def vad(raw: bytes) -> tuple:
+        flat = _decode_wav16(raw)[3].ravel()
+        m = flat.size // frame
+        fr = flat[: m * frame].reshape(m, frame)
+        energy = (fr * fr).sum(axis=1)
+        active = energy >= threshold * frame
+        n_active = int(active.sum())
+        # run-length stats stay vectorized — hour-long
+        # recordings mean 10^5+ frames per row
+        padded = np.concatenate(([False], active, [False]))
+        edges = np.flatnonzero(padded[1:] != padded[:-1])
+        starts, ends = edges[::2], edges[1::2]
+        n_seg = int(starts.size)
+        longest = int((ends - starts).max()) if n_seg else 0
+        first = int(starts[0]) if n_seg else None
+        return m, n_active, n_seg, longest, first, n_active / m if m else None
 
-    return payloads.mapInPandas(do, VAD_SCHEMA)
+    return _decode_rows(payloads, VAD_SCHEMA, vad)
 
 
 def with_wav_payload_grouped(
@@ -556,43 +487,19 @@ def with_wav_payload_grouped(
     arms (PCM16 / float32 / float64). The arm index is ``(i // every)
     % 3``, NOT ``i % 3``: the kept ids are the multiples of ``every``,
     so an id-modulus arm would collapse to a single container whenever
-    ``every % 3 == 0`` (the round-10 q347 coverage flaw — every=3 made
-    every payload PCM16 and the anchor never exercised cross-container
-    dedup; ADVICE r10). Dividing by ``every`` first makes consecutive
-    kept ids cycle all three arms for ANY ``every``. That is exactly
-    the re-encoded-duplicate case a byte-hash dedup misses and a
+    ``every % 3 == 0`` (every=3 would make every payload PCM16, and no
+    duplicate would cross containers). Dividing by ``every`` first makes
+    consecutive kept ids cycle all three arms for ANY ``every``. That is
+    exactly the re-encoded-duplicate case a byte-hash dedup misses and a
     content fingerprint must catch. Container choice never affects the
     fingerprint (that invariance is the point), so oracles that
     regenerate the waveform from (seed, n) are arm-independent."""
 
-    def one(i: int) -> bytes:
+    def row(i: int) -> tuple:
         seed = i % group_mod
-        n = 800 + (seed % 7) * 160
-        arm = (i // every) % 3
-        if arm == 0:
-            return encode_wav(n, sample_rate=8000, channels=1, seed=seed, bits=16)
-        return encode_wav_float(
-            n, sample_rate=8000, channels=1, seed=seed,
-            bits=32 if arm == 1 else 64,
-        )
+        return (_synth_wav(800 + (seed % 7) * 160, seed, (i // every) % 3),)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col] if int(i) % every == 0]
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [bytearray(one(i)) for i in ids],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-        ]
-    )
-    return docs.select(F.col(id_col)).mapInPandas(gen, schema)
+    return _synth_payloads(docs, id_col, _BLOB_SCHEMA, row, every)
 
 
 FP_SCHEMA = T.StructType(
@@ -624,31 +531,12 @@ def audio_fingerprint(
     Arrow-batched mapInPandas; downstream dedup is one groupBy on fp —
     the exact-dedup shape, never pairwise.
     """
+    def fingerprint(raw: bytes) -> tuple:
+        flat = _decode_wav16(raw)[3].ravel()
+        m = flat.size // frame
+        fr = flat[: m * frame].reshape(m, frame)
+        levels = ((fr * fr).sum(axis=1) >> shift).tolist()
+        fp = hashlib.md5(",".join(str(x) for x in levels).encode()).hexdigest()
+        return fp, m
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in FP_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    raw = None if payload is None else bytes(payload)
-                    _rate, _ch, bits, samples = decode_wav(raw)
-                    flat = samples.ravel().astype(np.int64)
-                    if _wav_format_code(raw) == 1:
-                        sh = {8: -8, 16: 0, 24: 8, 32: 16}[bits]
-                        flat = flat << 8 if sh == -8 else flat >> sh
-                    m = flat.size // frame
-                    fr = flat[: m * frame].reshape(m, frame)
-                    levels = ((fr * fr).sum(axis=1) >> shift).tolist()
-                    fp = hashlib.md5(
-                        ",".join(str(x) for x in levels).encode()
-                    ).hexdigest()
-                    vals = (did, fp, m, True)
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return payloads.mapInPandas(do, FP_SCHEMA)
+    return _decode_rows(payloads, FP_SCHEMA, fingerprint)

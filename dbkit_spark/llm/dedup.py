@@ -445,8 +445,10 @@ def ngram_jaccard_pairs(
     pairs``. Pass ``max_rows=None`` to force the quadratic plan.
 
     The shingle set feeds the inverted index and both verify-join sides,
-    so it is persisted (the checkpoint analogue, as in
-    ``minhash_near_dup_pairs``)."""
+    so it is persisted; the verified pair set is eagerly
+    localCheckpoint-ed and the shingle cache released before returning
+    (the ``minhash_incremental_pairs`` rule: no caller can reach the
+    shingle frame to unpersist it)."""
     require_small(docs, max_rows, "ngram_jaccard_pairs", "jaccard_prefix_filter_pairs")
     shingled = shingle_docs(docs, text_col, id_col).persist()
     # inverted index on xxhash64 images, not shingle strings — the same
@@ -467,7 +469,12 @@ def ngram_jaccard_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return jaccard_verify(cands, shingled, threshold)
+    try:
+        return jaccard_verify(cands, shingled, threshold).localCheckpoint(
+            eager=True
+        )
+    finally:
+        shingled.unpersist()
 
 
 def minhash_incremental_pairs(

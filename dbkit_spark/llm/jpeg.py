@@ -1,7 +1,5 @@
 """Baseline JPEG codec in pure numpy + stdlib — no codec library.
 
-Closes the last honest stub in the multimodal family
-(`multimodal.py`'s round-5/6 note: "JPEG remains the honest stub").
 Baseline sequential DCT JPEG (ITU-T T.81) is self-contained math:
 8×8 forward/inverse DCT, the Annex-K quantization and Huffman tables,
 zigzag ordering, and a bit reader that honors 0xFF00 byte stuffing and
@@ -425,20 +423,26 @@ def encode_jpeg_pixels(pixels: np.ndarray, sampling: str = "4:4:4") -> bytes:
     return bytes(out)
 
 
-def synth_jpeg(
-    width: int, height: int, seed: int = 0, sampling: str = "4:4:4"
-) -> bytes:
-    """Deterministic smooth-gradient RGB fixture encoded as a real,
-    decodable baseline JPEG (optionally chroma-subsampled). Gradients
-    are CLIPPED, not wrapped — a modulo wrap is a hard edge, and hard
-    edges ring under the coarse Annex-K chroma table; smooth ramps keep
-    the round-trip error in a tight band (pinned by tests)."""
+def _gradient_rgb(width: int, height: int, seed: int) -> np.ndarray:
+    """The seeded smooth-gradient (height, width, 3) uint8 image of the
+    JPEG fixtures. Gradients are CLIPPED, not wrapped — a modulo wrap is
+    a hard edge, and hard edges ring under the coarse Annex-K chroma
+    table; smooth ramps keep the round-trip error in a tight band
+    (pinned by tests)."""
     ys, xs = np.mgrid[0:height, 0:width]
     r = np.clip(xs * 4 + (seed % 64), 0, 255)
     g = np.clip(ys * 4 + (seed % 32), 0, 255)
     b = np.clip((xs + ys) * 2 + (seed % 16), 0, 255)
+    return np.stack([r, g, b], axis=-1).astype(np.uint8)
+
+
+def synth_jpeg(
+    width: int, height: int, seed: int = 0, sampling: str = "4:4:4"
+) -> bytes:
+    """Deterministic smooth-gradient RGB fixture encoded as a real,
+    decodable baseline JPEG (optionally chroma-subsampled)."""
     return encode_jpeg_pixels(
-        np.stack([r, g, b], axis=-1).astype(np.uint8), sampling=sampling
+        _gradient_rgb(width, height, seed), sampling=sampling
     )
 
 
@@ -1283,12 +1287,8 @@ def encode_jpeg_progressive(
 def synth_jpeg_progressive(
     width: int, height: int, seed: int = 0, sampling: str = "4:4:4"
 ) -> bytes:
-    """Deterministic smooth-gradient RGB fixture as a real, decodable
-    PROGRESSIVE JPEG (clipped ramps, same rationale as synth_jpeg)."""
-    ys, xs = np.mgrid[0:height, 0:width]
-    r = np.clip(xs * 4 + (seed % 64), 0, 255)
-    g = np.clip(ys * 4 + (seed % 32), 0, 255)
-    b = np.clip((xs + ys) * 2 + (seed % 16), 0, 255)
+    """The :func:`synth_jpeg` gradient fixture as a real, decodable
+    PROGRESSIVE JPEG."""
     return encode_jpeg_progressive(
-        np.stack([r, g, b], axis=-1).astype(np.uint8), sampling=sampling
+        _gradient_rgb(width, height, seed), sampling=sampling
     )

@@ -10,8 +10,8 @@ codec dependency — BMP/PPM as raw bytes, PNG via stdlib zlib
 (inflate + unfilter), and baseline sequential JPEG via the pure-numpy
 codec in ``llm/jpeg.py`` (Huffman + IDCT + Annex-K tables) — including
 progressive (SOF2) multi-scan streams and 4:2:0/4:2:2 chroma
-subsampling (round 8). Arithmetic-coded/hierarchical/12-bit JPEG
-degrades to header metadata.
+subsampling. Arithmetic-coded/hierarchical/12-bit JPEG degrades to
+header metadata.
 AUDIO decodes for real too: ``llm/audio.py`` parses RIFF/WAVE integer
 PCM (8/16/24/32-bit, multi-channel), and VIDEO decodes for real in the
 Motion-JPEG class: ``llm/video.py`` demuxes AVI with the same RIFF
@@ -25,7 +25,8 @@ feature for payloads that are not a supported container.
 
 from __future__ import annotations
 
-from typing import Iterator
+from functools import partial
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -40,6 +41,71 @@ PAYLOAD_SCHEMA = T.StructType(
         T.StructField("payload_len", T.LongType()),
     ]
 )
+
+# the fixture container of the audio and video generators
+_BLOB_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def _synth_payloads(
+    docs: DataFrame,
+    id_col: str,
+    schema: T.StructType,
+    row: Callable[[int], tuple],
+    every: int = 1,
+) -> DataFrame:
+    """The one fixture generator loop: keep the ids with ``id % every ==
+    0`` and emit ``(id, *row(id))`` per kept id, one frame per Arrow
+    batch. Each public generator owns only its per-id rule and schema."""
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids = [i for i in map(int, pdf["doc_id"]) if i % every == 0]
+            out = [(i, *row(i)) for i in ids]
+            yield pd.DataFrame(
+                {f.name: [r[k] for r in out] for k, f in enumerate(schema)}
+            )
+
+    return docs.select(F.col(id_col).alias("doc_id")).mapInPandas(gen, schema)
+
+
+def _decode_rows(
+    payloads: DataFrame,
+    schema: T.StructType,
+    decode: Callable[[bytes], tuple],
+    fallback: Callable[[bytes], tuple] | None = None,
+) -> DataFrame:
+    """The one decode loop of the multimodal columns. ``schema`` runs
+    ``doc_id, <middle values>, decoded``; ``decode(raw)`` returns the
+    middle values of one payload. A payload ``decode`` rejects with
+    NotImplementedError/ValueError emits decoded=false with NULL middle
+    values, or with ``fallback(raw)`` when given (header metadata). A
+    NULL payload emits the all-NULL row without calling either, so no
+    batch fails on a row it was documented to degrade."""
+    nulls = (None,) * (len(schema) - 2)
+
+    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: dict[str, list] = {f.name: [] for f in schema}
+            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
+                mid, ok = nulls, False
+                if payload is not None:
+                    raw = bytes(payload)
+                    try:
+                        mid, ok = decode(raw), True
+                    except (NotImplementedError, ValueError):
+                        if fallback is not None:
+                            mid = fallback(raw)
+                for k, v in zip(rows, (did, *mid, ok)):
+                    rows[k].append(v)
+            yield pd.DataFrame(rows)
+
+    return payloads.mapInPandas(do, schema)
+
 
 FEATURE_SCHEMA = T.StructType(
     [
@@ -471,38 +537,33 @@ def parse_image_meta(payload: bytes) -> tuple[str, int | None, int | None, int |
     return "unknown", None, None, None
 
 
+# (encoder, media type) arms of the id-derived image fixtures
+_IMAGE_ARMS = (
+    (encode_bmp, "image/bmp"),
+    (encode_ppm, "image/x-portable-pixmap"),
+    (encode_png, "image/png"),
+    (encode_jpeg_header, "image/jpeg"),
+)
+
+
+def _image_row(arms: tuple, did: int, w: int, h: int) -> tuple:
+    """One ``PAYLOAD_SCHEMA`` fixture row after doc_id: arm
+    ``did % len(arms)`` encodes a w x h image with pixel seed
+    ``did % 251``."""
+    encode, mt = arms[did % len(arms)]
+    p = encode(w, h, seed=did % 251)
+    return p, mt, len(p)
+
+
 def with_image_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Synthesize a REAL image payload per row (BMP for even ids, PPM for
     odd), dimensions derived deterministically from the id — so an oracle
     can independently derive the expected metadata and any writer/parser
     bug shows up as a differential mismatch. Runs in mapInPandas (encode
     is per-row Python, the exact shape a real ingest decoder uses)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mtypes, lens = [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                if did % 2 == 0:
-                    p = encode_bmp(w, h, seed=did % 251)
-                    mtypes.append("image/bmp")
-                else:
-                    p = encode_ppm(w, h, seed=did % 251)
-                    mtypes.append("image/x-portable-pixmap")
-                payloads.append(p)
-                lens.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": mtypes,
-                    "payload_len": lens,
-                }
-            )
-
-    return docs.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        gen, PAYLOAD_SCHEMA
+    return _synth_payloads(
+        docs, id_col, PAYLOAD_SCHEMA,
+        lambda did: _image_row(_IMAGE_ARMS[:2], did, 4 + did % 13, 3 + did % 7),
     )
 
 
@@ -513,36 +574,9 @@ def with_multiformat_image_payload(
     formats — doc_id % 4: BMP, PPM, PNG, JPEG — dims derived from the id
     (same formula as ``with_image_payload``) so an oracle derives the
     expected metadata independently of the writer AND the parser."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mtypes, lens = [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 13, 3 + did % 7
-                fmt = did % 4
-                if fmt == 0:
-                    p, m = encode_bmp(w, h, seed=did % 251), "image/bmp"
-                elif fmt == 1:
-                    p, m = encode_ppm(w, h, seed=did % 251), "image/x-portable-pixmap"
-                elif fmt == 2:
-                    p, m = encode_png(w, h, seed=did % 251), "image/png"
-                else:
-                    p, m = encode_jpeg_header(w, h, seed=did % 251), "image/jpeg"
-                payloads.append(p)
-                mtypes.append(m)
-                lens.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": mtypes,
-                    "payload_len": lens,
-                }
-            )
-
-    return docs.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        gen, PAYLOAD_SCHEMA
+    return _synth_payloads(
+        docs, id_col, PAYLOAD_SCHEMA,
+        lambda did: _image_row(_IMAGE_ARMS, did, 4 + did % 13, 3 + did % 7),
     )
 
 
@@ -619,23 +653,18 @@ def decode_features_arrow(payloads: DataFrame) -> DataFrame:
     return payloads.mapInArrow(do, FEATURE_SCHEMA)
 
 # --- full-pixel decoders (PNG/BMP/PPM, pure stdlib) --------------------------
-# Round-5 left full-pixel decode behind honest NotImplementedError stubs
-# "unless the environment gains codec libs" — but PNG needs only stdlib
-# zlib (inflate + per-scanline unfilter), BMP/PPM are raw bytes, and
-# round 7 closed the last gap: baseline sequential JPEG is pure math
-# (Huffman + IDCT + Annex-K tables, implemented in llm/jpeg.py on bare
-# numpy), so all four containers decode to real pixels with no codec
-# dependency, incl. 4:2:0/4:2:2 subsampling AND progressive SOF2
-# multi-scan streams (round 8). Arithmetic coding stays honestly
-# unsupported.
+# PNG needs only stdlib zlib (inflate + per-scanline unfilter), BMP/PPM
+# are raw bytes, and baseline/progressive JPEG is pure math in
+# llm/jpeg.py, so all four containers decode to real pixels with no
+# codec dependency. Arithmetic coding stays unsupported.
 
 
 def decode_png_pixels(payload: bytes) -> tuple[int, int, int, bytes]:
     """Decode a non-interlaced PNG to (width, height, channels, raw
     pixel bytes, row-major, no padding). Supports 8-bit color types
     0 (gray), 2 (RGB), 4 (gray+alpha), 6 (RGBA) AND palette type 3 at
-    bit depths 1/2/4/8 (round 8 — palette PNGs are common in web
-    scrapes): indices expand through PLTE to RGB, or to RGBA when a
+    bit depths 1/2/4/8 (palette PNGs are common in web scrapes):
+    indices expand through PLTE to RGB, or to RGBA when a
     tRNS chunk carries per-entry alpha. Every filter type
     (None/Sub/Up/Average/Paeth), CRC-verified chunks.
 
@@ -917,34 +946,26 @@ def image_pixel_stats(payloads: DataFrame) -> DataFrame:
     subset is queryable. Arrow-batched, map-only, shuffle-free;
     partition count controls decode parallelism."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k.name: [] for k in PIXEL_STATS_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, w, h, ch, px = decode_image_pixels(payload)
-                    n = w * h
-                    sums = [0, 0, 0]
-                    if ch >= 3:
-                        for i in range(0, len(px), ch):
-                            sums[0] += px[i]
-                            sums[1] += px[i + 1]
-                            sums[2] += px[i + 2]
-                    else:  # gray / gray+alpha: replicate luma across RGB
-                        for i in range(0, len(px), ch):
-                            sums[0] += px[i]
-                        sums[1] = sums[2] = sums[0]
-                    vals = (did, fmt, w, h, ch, sums[0] / n, sums[1] / n,
-                            sums[2] / n, True)
-                except (NotImplementedError, ValueError):
-                    meta = parse_image_meta(payload)
-                    vals = (did, meta[0], meta[1], meta[2], None, None, None,
-                            None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def stats(raw: bytes) -> tuple:
+        fmt, w, h, ch, px = decode_image_pixels(raw)
+        n = w * h
+        sums = [0, 0, 0]
+        if ch >= 3:
+            for i in range(0, len(px), ch):
+                sums[0] += px[i]
+                sums[1] += px[i + 1]
+                sums[2] += px[i + 2]
+        else:  # gray / gray+alpha: replicate luma across RGB
+            for i in range(0, len(px), ch):
+                sums[0] += px[i]
+            sums[1] = sums[2] = sums[0]
+        return fmt, w, h, ch, sums[0] / n, sums[1] / n, sums[2] / n
 
-    return payloads.mapInPandas(do, PIXEL_STATS_SCHEMA)
+    def header(raw: bytes) -> tuple:
+        fmt, w, h, _bpp = parse_image_meta(raw)
+        return fmt, w, h, None, None, None, None
+
+    return _decode_rows(payloads, PIXEL_STATS_SCHEMA, stats, header)
 
 
 def with_real_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -956,34 +977,18 @@ def with_real_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame
     by exercising the full Huffman+IDCT decode."""
     from .jpeg import synth_jpeg
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mtypes, lens = [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                p = synth_jpeg(w, h, seed=did % 251)
-                payloads.append(p)
-                mtypes.append("image/jpeg")
-                lens.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": mtypes,
-                    "payload_len": lens,
-                }
-            )
-
-    return docs.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        gen, PAYLOAD_SCHEMA
+    return _synth_payloads(
+        docs, id_col, PAYLOAD_SCHEMA,
+        lambda did: _image_row(
+            ((synth_jpeg, "image/jpeg"),), did, 16 + did % 17, 16 + did % 13
+        ),
     )
 
 
 def with_mixed_codec_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Synthesize the round-8 REAL-decode corpus: per row, doc_id % 5
-    rotates through the codec shapes that used to degrade to
-    header-only — 4:2:0 JPEG (the web default), 4:2:2 JPEG, a 4-bit
+    """Synthesize the full-decode codec corpus: per row, doc_id % 5
+    rotates through the codec shapes a header-only decoder cannot read —
+    4:2:0 JPEG (the web default), 4:2:2 JPEG, a 4-bit
     palette PNG, an 8-bit palette PNG with tRNS alpha (decodes to
     RGBA), and a PROGRESSIVE (SOF2) 4:2:0 JPEG (the web's other
     default shape). Every payload is a real, spec-conforming stream
@@ -991,46 +996,16 @@ def with_mixed_codec_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFra
     (16+id%17 x 16+id%13, multi-MCU / multi-scanline)."""
     from .jpeg import synth_jpeg, synth_jpeg_progressive
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, mtypes, lens = [], [], []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 16 + did % 17, 16 + did % 13
-                arm = did % 5
-                if arm == 0:
-                    p = synth_jpeg(w, h, seed=did % 251, sampling="4:2:0")
-                    mt = "image/jpeg"
-                elif arm == 1:
-                    p = synth_jpeg(w, h, seed=did % 251, sampling="4:2:2")
-                    mt = "image/jpeg"
-                elif arm == 2:
-                    p = encode_png_palette(w, h, seed=did % 251, depth=4)
-                    mt = "image/png"
-                elif arm == 3:
-                    p = encode_png_palette(
-                        w, h, seed=did % 251, depth=8, with_trns=True
-                    )
-                    mt = "image/png"
-                else:
-                    p = synth_jpeg_progressive(
-                        w, h, seed=did % 251, sampling="4:2:0"
-                    )
-                    mt = "image/jpeg"
-                payloads.append(p)
-                mtypes.append(mt)
-                lens.append(len(p))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "media_type": mtypes,
-                    "payload_len": lens,
-                }
-            )
-
-    return docs.select(F.col(id_col).alias("doc_id")).mapInPandas(
-        gen, PAYLOAD_SCHEMA
+    arms = (
+        (partial(synth_jpeg, sampling="4:2:0"), "image/jpeg"),
+        (partial(synth_jpeg, sampling="4:2:2"), "image/jpeg"),
+        (partial(encode_png_palette, depth=4), "image/png"),
+        (partial(encode_png_palette, depth=8, with_trns=True), "image/png"),
+        (partial(synth_jpeg_progressive, sampling="4:2:0"), "image/jpeg"),
+    )
+    return _synth_payloads(
+        docs, id_col, PAYLOAD_SCHEMA,
+        lambda did: _image_row(arms, did, 16 + did % 17, 16 + did % 13),
     )
 
 
@@ -1063,48 +1038,25 @@ def image_dhash(payloads: DataFrame, grid: int = 8) -> DataFrame:
     if grid != 8:
         raise ValueError("grid must be 8 (64-bit dhash contract)")
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in PHASH_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, w, h, ch, px = decode_image_pixels(bytes(payload))
-                    a = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
-                    if ch >= 3:
-                        luma = (
-                            0.299 * a[..., 0]
-                            + 0.587 * a[..., 1]
-                            + 0.114 * a[..., 2]
-                        )
-                    else:
-                        luma = a[..., 0].astype(np.float64)
-                    gw, gh = grid + 1, grid
-                    if w < gw or h < gh:
-                        raise ValueError("image smaller than the hash grid")
-                    cw, chh = (w // gw) * gw, (h // gh) * gh
-                    crop = luma[:chh, :cw]
-                    small = crop.reshape(
-                        gh, chh // gh, gw, cw // gw
-                    ).mean(axis=(1, 3))
-                    bits = (small[:, :-1] > small[:, 1:]).ravel()
-                    lo = int(
-                        sum(1 << i for i in range(32) if bits[i])
-                    )
-                    hi = int(
-                        sum(1 << (i - 32) for i in range(32, 64) if bits[i])
-                    )
-                    rows["doc_id"].append(did)
-                    rows["dhash_lo"].append(lo)
-                    rows["dhash_hi"].append(hi)
-                    rows["decoded"].append(True)
-                except (NotImplementedError, ValueError):
-                    rows["doc_id"].append(did)
-                    rows["dhash_lo"].append(None)
-                    rows["dhash_hi"].append(None)
-                    rows["decoded"].append(False)
-            yield pd.DataFrame(rows)
+    def dhash(raw: bytes) -> tuple:
+        fmt, w, h, ch, px = decode_image_pixels(raw)
+        a = np.frombuffer(px, dtype=np.uint8).reshape(h, w, ch)
+        if ch >= 3:
+            luma = 0.299 * a[..., 0] + 0.587 * a[..., 1] + 0.114 * a[..., 2]
+        else:
+            luma = a[..., 0].astype(np.float64)
+        gw, gh = grid + 1, grid
+        if w < gw or h < gh:
+            raise ValueError("image smaller than the hash grid")
+        cw, chh = (w // gw) * gw, (h // gh) * gh
+        crop = luma[:chh, :cw]
+        small = crop.reshape(gh, chh // gh, gw, cw // gw).mean(axis=(1, 3))
+        bits = (small[:, :-1] > small[:, 1:]).ravel()
+        lo = int(sum(1 << i for i in range(32) if bits[i]))
+        hi = int(sum(1 << (i - 32) for i in range(32, 64) if bits[i]))
+        return lo, hi
 
-    return payloads.mapInPandas(do, PHASH_SCHEMA)
+    return _decode_rows(payloads, PHASH_SCHEMA, dhash)
 
 
 def image_near_dup_pairs(
@@ -1241,20 +1193,11 @@ def resize_image_payloads(payloads: DataFrame, factor: int = 2) -> DataFrame:
     pixels end-to-end). Undecodable payloads emit decoded=false with
     NULL payload — the image_pixel_stats degradation contract."""
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in RESIZE_REAL_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fmt, ow, oh, out = resize_image(bytes(payload), factor)
-                    vals = (did, bytearray(out), fmt, ow, oh, True)
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def resize(raw: bytes) -> tuple:
+        fmt, ow, oh, out = resize_image(raw, factor)
+        return bytearray(out), fmt, ow, oh
 
-    return payloads.mapInPandas(do, RESIZE_REAL_SCHEMA)
+    return _decode_rows(payloads, RESIZE_REAL_SCHEMA, resize)
 
 
 GRAY_HIST_SCHEMA = T.StructType(
@@ -1288,36 +1231,23 @@ def image_gray_histogram(payloads: DataFrame, n_bins: int = 16) -> DataFrame:
         raise ValueError("n_bins must divide 256")
     width = 256 // n_bins
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def histogram(raw: bytes) -> tuple:
         import numpy as np
 
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in GRAY_HIST_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    _fmt, w, h, ch, px = decode_image_pixels(payload)
-                    arr = np.frombuffer(bytes(px), dtype=np.uint8).astype(
-                        np.int64
-                    )
-                    if ch >= 3:
-                        pix = arr.reshape(-1, ch)
-                        gray = (pix[:, 0] + pix[:, 1] + pix[:, 2]) // 3
-                    else:
-                        gray = arr.reshape(-1, ch)[:, 0]
-                    counts = np.bincount(gray // width, minlength=n_bins)
-                    vals = (
-                        did,
-                        int(gray.size),
-                        int(gray.min()),
-                        int(gray.max()),
-                        int(np.count_nonzero(counts)),
-                        [int(c) for c in counts],
-                        True,
-                    )
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+        _fmt, w, h, ch, px = decode_image_pixels(raw)
+        arr = np.frombuffer(bytes(px), dtype=np.uint8).astype(np.int64)
+        if ch >= 3:
+            pix = arr.reshape(-1, ch)
+            gray = (pix[:, 0] + pix[:, 1] + pix[:, 2]) // 3
+        else:
+            gray = arr.reshape(-1, ch)[:, 0]
+        counts = np.bincount(gray // width, minlength=n_bins)
+        return (
+            int(gray.size),
+            int(gray.min()),
+            int(gray.max()),
+            int(np.count_nonzero(counts)),
+            [int(c) for c in counts],
+        )
 
-    return payloads.mapInPandas(do, GRAY_HIST_SCHEMA)
+    return _decode_rows(payloads, GRAY_HIST_SCHEMA, histogram)

@@ -18,7 +18,7 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import shingles_from_tokens, tokens
+from ..functions.text import shingles_from_tokens, token_hash24, tokens
 
 
 def repetition_scores(
@@ -515,9 +515,7 @@ def _hashed_features(
     )
     return docs.select(*keep_cols, F.explode(grams).alias("_f")).select(
         *keep_cols,
-        (
-            F.conv(F.substring(F.md5("_f"), 1, 6), 16, 10).cast("long") % m
-        ).alias("bucket"),
+        (token_hash24(F.col("_f")) % m).alias("bucket"),
     )
 
 

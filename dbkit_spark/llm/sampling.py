@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import _hash24_u01, token_hash24
+
 SPLIT_BUCKETS = 10_000
 
 
@@ -28,7 +30,7 @@ def _hash_bucket(id_col: Column, salt: str) -> Column:
     row kept by a 50% sample would land in an 80% train split), which
     silently destroys stratification when the two compose."""
     keyed = F.concat(id_col.cast("string"), F.lit(":" + salt))
-    return F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long") % SPLIT_BUCKETS
+    return token_hash24(keyed) % SPLIT_BUCKETS
 
 
 def split_assign(
@@ -183,8 +185,7 @@ def pack_by_token_budget(
         keyed = F.concat(F.col(id_col).cast("string"), F.lit(":pack"))
         df = df.withColumn(
             "shard",
-            F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-            % n_shards,
+            token_hash24(keyed) % n_shards,
         )
         shard_by = "shard"
     if shard_by is None:
@@ -207,9 +208,7 @@ def _hash_uniform(id_col: Column, salt: str) -> Column:
     """Deterministic uniform in (0,1): first 6 md5 hex digits as an
     integer in [0, 16^6), midpoint-shifted — strictly inside (0,1) so
     ln() is always finite. Portable digit-for-digit to other engines."""
-    keyed = F.concat(id_col.cast("string"), F.lit(":" + salt))
-    raw = F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-    return (raw + F.lit(0.5)) / F.lit(float(16**6))
+    return _hash24_u01(F.concat(id_col.cast("string"), F.lit(":" + salt)))
 
 
 def weighted_sample_topk(
@@ -728,10 +727,7 @@ def dsir_log_importance(
         toks = df.select(*cols, F.explode(tokens(text_col)).alias("_tok"))
         return toks.select(
             *cols,
-            (
-                F.conv(F.substring(F.md5("_tok"), 1, 6), 16, 10).cast("long")
-                % m
-            ).alias("bucket"),
+            (token_hash24(F.col("_tok")) % m).alias("bucket"),
         )
 
     raw_b = bucketed(raw, [id_col])

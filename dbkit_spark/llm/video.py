@@ -1,14 +1,13 @@
 """Real video decode for the multimodal surface — Motion-JPEG AVI.
 
-The last ``_fake_decode`` stub falls: AVI is a RIFF container (the
-same chunk grammar ``llm/audio.py`` walks for WAV) and Motion-JPEG
-frames are baseline JPEGs — which ``llm/jpeg.py`` already decodes for
-real (Huffman + IDCT, 4:2:0/4:2:2/progressive). Composing the two
-gives genuinely real video decode with zero codec dependency for the
-MJPEG class (the capture format of webcams, dashcams, and lab
-equipment; inter-frame codecs like H.264 remain honestly out of scope
-— they degrade to decoded=false header rows, the image/audio
-contract).
+AVI is a RIFF container (the same chunk grammar ``llm/audio.py`` walks
+for WAV) and Motion-JPEG frames are baseline JPEGs, which
+``llm/jpeg.py`` decodes for real (Huffman + IDCT,
+4:2:0/4:2:2/progressive). Composing the two gives real video decode
+with zero codec dependency for the MJPEG class (the capture format of
+webcams, dashcams, and lab equipment; inter-frame codecs like H.264
+remain out of scope — they degrade to decoded=false rows, the
+image/audio contract).
 
 Container surface: RIFF 'AVI ' → LIST hdrl (avih main header: frame
 period, dims, count) → LIST movi ('00dc' compressed-frame chunks).
@@ -26,13 +25,12 @@ video's full length.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .multimodal import _BLOB_SCHEMA, _decode_rows, _synth_payloads
 
 
 def encode_mjpeg_avi(
@@ -160,43 +158,31 @@ def video_frame_stats(payloads: DataFrame, every: int = 2) -> DataFrame:
     if every <= 0:
         raise ValueError("every must be positive")
 
-    def do(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {f.name: [] for f in VIDEO_STATS_SCHEMA}
-            for did, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    fps, w, h, n, frames = decode_mjpeg_avi(bytes(payload))
-                    sampled = frames[::every]
-                    pix = []
-                    for fpay in sampled:
-                        fw, fh, fc, raw = decode_jpeg_pixels(fpay)
-                        pix.append(
-                            np.frombuffer(raw, dtype=np.uint8)
-                            .reshape(fh, fw, fc)
-                            .astype(np.float64)
-                        )
-                    stack = np.stack(pix)
-                    means = stack.reshape(-1, 3).mean(axis=0)
-                    motion = (
-                        float(np.abs(np.diff(stack, axis=0)).mean())
-                        if len(pix) > 1
-                        else 0.0
-                    )
-                    vals = (
-                        did, fps, w, h, n,
-                        n / fps if fps else None,
-                        len(sampled),
-                        float(means[0]), float(means[1]), float(means[2]),
-                        motion, True,
-                    )
-                except (NotImplementedError, ValueError):
-                    vals = (did, None, None, None, None, None, None,
-                            None, None, None, None, False)
-                for k, v in zip(rows, vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
+    def stats(raw: bytes) -> tuple:
+        fps, w, h, n, frames = decode_mjpeg_avi(raw)
+        sampled = frames[::every]
+        pix = []
+        for fpay in sampled:
+            fw, fh, fc, px = decode_jpeg_pixels(fpay)
+            pix.append(
+                np.frombuffer(px, dtype=np.uint8)
+                .reshape(fh, fw, fc)
+                .astype(np.float64)
+            )
+        stack = np.stack(pix)
+        means = stack.reshape(-1, 3).mean(axis=0)
+        motion = (
+            float(np.abs(np.diff(stack, axis=0)).mean()) if len(pix) > 1 else 0.0
+        )
+        return (
+            fps, w, h, n,
+            n / fps if fps else None,
+            len(sampled),
+            float(means[0]), float(means[1]), float(means[2]),
+            motion,
+        )
 
-    return payloads.mapInPandas(do, VIDEO_STATS_SCHEMA)
+    return _decode_rows(payloads, VIDEO_STATS_SCHEMA, stats)
 
 
 def with_mjpeg_payload(
@@ -206,36 +192,20 @@ def with_mjpeg_payload(
     frames whose offsets shift per frame, so motion > 0; dims vary with
     the id across MCU boundaries)."""
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col] if int(i) % every == 0]
-            out = []
-            for i in ids:
-                w, h = 16 + i % 9, 16 + i % 7
-                nf = 4 + i % 3
-                frames = []
-                for t in range(nf):
-                    ys, xs = np.mgrid[0:h, 0:w]
-                    frames.append(
-                        np.stack(
-                            [
-                                ((xs * 4 + i + 7 * t) % 256),
-                                ((ys * 4 + 2 * i) % 256),
-                                ((xs + ys + 3 * t) % 256),
-                            ],
-                            axis=-1,
-                        ).astype(np.uint8)
-                    )
-                out.append((i, bytearray(encode_mjpeg_avi(frames, fps=10))))
-            yield pd.DataFrame(
-                {"doc_id": [r[0] for r in out],
-                 "payload": [r[1] for r in out]}
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
+    def row(i: int) -> tuple:
+        w, h = 16 + i % 9, 16 + i % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        frames = [
+            np.stack(
+                [
+                    ((xs * 4 + i + 7 * t) % 256),
+                    ((ys * 4 + 2 * i) % 256),
+                    ((xs + ys + 3 * t) % 256),
+                ],
+                axis=-1,
+            ).astype(np.uint8)
+            for t in range(4 + i % 3)
         ]
-    )
-    return docs.select(F.col(id_col)).mapInPandas(gen, schema)
+        return (encode_mjpeg_avi(frames, fps=10),)
+
+    return _synth_payloads(docs, id_col, _BLOB_SCHEMA, row, every)

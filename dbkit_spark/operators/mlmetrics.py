@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import _hash24_u01, token_hash24
+
 
 def auc_by_group(
     df: DataFrame,
@@ -281,8 +283,7 @@ def bootstrap_mean_ci(
         F.col("_rep").cast("string"),
         F.lit(":" + salt),
     )
-    raw = F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-    u = (raw + F.lit(0.5)) / F.lit(float(16**6))
+    u = _hash24_u01(keyed)
     w = F.lit(len(thresholds))
     for k in reversed(range(len(thresholds))):
         w = F.when(u < F.lit(thresholds[k]), k).otherwise(w)
@@ -480,10 +481,7 @@ def conformal_intervals(
     correctly-rounded arithmetic → bit-portable without rounding."""
     dec = "decimal(38,9)"
     keyed = F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))
-    is_fit = (
-        F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long") % 2
-        == 0
-    )
+    is_fit = token_hash24(keyed) % 2 == 0
     tagged = df.withColumn("_fit", is_fit)
     pred = (
         tagged.filter(F.col("_fit"))
@@ -3030,8 +3028,7 @@ def paired_bootstrap_delta(
         F.col("_rep").cast("string"),
         F.lit(":" + salt),
     )
-    raw = F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-    u = (raw + F.lit(0.5)) / F.lit(float(16**6))
+    u = _hash24_u01(keyed)
     wgt = F.lit(len(thresholds))
     for k in reversed(range(len(thresholds))):
         wgt = F.when(u < F.lit(thresholds[k]), k).otherwise(wgt)

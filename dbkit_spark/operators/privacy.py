@@ -29,6 +29,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import _hash24_u01
+
 
 def k_anonymity_audit(
     df: DataFrame,
@@ -57,9 +59,7 @@ def _hash_u01(key: Column, salt: str) -> Column:
     """Deterministic uniform in (0,1): first 6 md5 hex digits (the
     engine-wide portable hash rule), offset by 0.5 so u is never 0 or
     1 and ln(1−2|u−½|) stays finite."""
-    keyed = F.concat(key.cast("string"), F.lit(":" + salt))
-    raw = F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-    return (raw.cast("double") + 0.5) / F.lit(float(1 << 24))
+    return _hash24_u01(F.concat(key.cast("string"), F.lit(":" + salt)))
 
 
 def dp_counts(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import token_hash24
+
 
 def _cm_bucket(key: Column, row_idx: Column, salt: str, width: int) -> Column:
     """Portable md5 bucket for hash row ``row_idx``: first 6 hex digits
@@ -42,10 +44,7 @@ def _cm_bucket(key: Column, row_idx: Column, salt: str, width: int) -> Column:
         F.lit(":" + salt + ":"),
         row_idx.cast("string"),
     )
-    return (
-        F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-        % F.lit(width)
-    )
+    return token_hash24(keyed) % F.lit(width)
 
 
 def cm_sketch(

@@ -55,6 +55,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.text import token_hash24
+
 HH_OUTPUT_SCHEMA = StructType(
     [
         StructField("shard", LongType()),
@@ -134,10 +136,7 @@ def _sharded(events: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     # the counts — a silent bound violation.
     keyed = F.concat(F.col(key_col).cast("string"), F.lit(":hh"))
     return events.filter(F.col(key_col).isNotNull()).select(
-        (
-            F.conv(F.substring(F.md5(keyed), 1, 6), 16, 10).cast("long")
-            % n_shards
-        ).alias("shard"),
+        (token_hash24(keyed) % n_shards).alias("shard"),
         F.col(key_col).cast("string").alias("key"),
     )
 

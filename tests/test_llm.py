@@ -39,7 +39,8 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     cache the pipeline made (the shingle sets and the band-key table
     lsh_candidate_pairs persists): the session holds as many cached
     plans after the call as before. minhash_incremental_pairs (both
-    shingle sets plus the batch's band keys) follows the same rule."""
+    shingle sets plus the batch's band keys) and ngram_jaccard_pairs
+    (its shingle set) follow the same rule."""
     from dbkit_spark.llm.dedup import minhash_incremental_pairs
 
     docs = spark.createDataFrame(
@@ -59,6 +60,9 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
         docs.filter(F.col("doc_id") != 2), docs.filter(F.col("doc_id") == 2)
     )
     assert {(r.doc_a, r.doc_b) for r in incremental.collect()} == {(2, 1)}
+    assert cache_manager.cachedData().size() == before
+    exact = ngram_jaccard_pairs(docs, threshold=0.5)
+    assert {(r.doc_a, r.doc_b) for r in exact.collect()} == {(1, 2)}
     assert cache_manager.cachedData().size() == before
 
 
@@ -203,6 +207,53 @@ def test_multimodal_resize_and_frames(spark, sf_dir):
     # frames partition-align with input: fan-out adds no shuffle
     plan = frames._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan.split("== Initial Plan ==")[0]
+
+
+_PAYLOAD_DECODERS = [
+    ("multimodal", "image_pixel_stats"),
+    ("multimodal", "image_dhash"),
+    ("multimodal", "resize_image_payloads"),
+    ("multimodal", "image_gray_histogram"),
+    ("audio", "audio_stats"),
+    ("audio", "audio_spectral"),
+    ("audio", "resample_payloads"),
+    ("audio", "vad_segments"),
+    ("audio", "audio_fingerprint"),
+    ("video", "video_frame_stats"),
+]
+
+
+@pytest.mark.parametrize(
+    "module,decoder", _PAYLOAD_DECODERS, ids=[d for _, d in _PAYLOAD_DECODERS]
+)
+def test_decoders_degrade_null_and_garbage_payloads(spark, module, decoder):
+    """Every payload decoder degrades a NULL payload and an undecodable
+    one to decoded=false rows with NULL values, next to a valid payload
+    of its medium, without failing the batch."""
+    import importlib
+
+    from dbkit_spark.llm.audio import encode_wav
+    from dbkit_spark.llm.multimodal import encode_bmp
+    from dbkit_spark.llm.video import with_mjpeg_payload
+
+    if module == "multimodal":
+        valid = encode_bmp(16, 16, seed=3)
+    elif module == "audio":
+        valid = encode_wav(800, seed=3)
+    else:
+        ids = spark.createDataFrame([(3,)], "doc_id long")
+        valid = with_mjpeg_payload(ids).collect()[0].payload
+    payloads = spark.createDataFrame(
+        [(1, bytearray(valid)), (2, None), (3, bytearray(b"garbage!"))],
+        "doc_id long, payload binary",
+    )
+    fn = getattr(importlib.import_module(f"dbkit_spark.llm.{module}"), decoder)
+    rows = sorted(fn(payloads).collect(), key=lambda r: r.doc_id)
+    assert [r.decoded for r in rows] == [True, False, False]
+    null_row = {
+        k: v for k, v in rows[1].asDict().items() if k not in ("doc_id", "decoded")
+    }
+    assert null_row == dict.fromkeys(null_row)
 
 
 def test_map_in_arrow_parity_with_pandas(spark, sf_dir):

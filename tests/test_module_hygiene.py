@@ -102,6 +102,17 @@ def test_no_round_named_query_modules():
     assert [n for n in names if pattern.fullmatch(n)] == []
 
 
+def test_multimodal_decode_fallback_and_pcm_shift_written_once():
+    """The multimodal decoders share one degradation branch (the
+    ``_decode_rows`` loop) and one 16-bit-domain PCM normalizer."""
+    text = "".join(
+        (PKG / "llm" / name).read_text()
+        for name in ("multimodal.py", "audio.py", "video.py")
+    )
+    assert text.count("except (NotImplementedError, ValueError)") == 1
+    assert text.count("{8: -8, 16: 0, 24: 8, 32: 16}") == 1
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The two scanners flag an undefined name read in a lambda and in a
     method, and a second top-level binding."""
