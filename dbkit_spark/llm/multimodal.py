@@ -526,6 +526,8 @@ def parse_image_meta(payload: bytes) -> tuple[str, int | None, int | None, int |
                 j = i
                 while j < len(payload) and not payload[j : j + 1].isspace():
                     j += 1
+                if not payload[i:j].isdigit():
+                    return "unknown", None, None, None
                 tokens.append(int(payload[i:j]))
                 i = j
         if len(tokens) < 3:

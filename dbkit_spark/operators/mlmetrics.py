@@ -8,10 +8,19 @@ grouped ROC-AUC via the Mann-Whitney rank-sum identity, plus a
 histogram-binned approximation for corpora where even a per-group sort
 is too much.
 
-Cross-engine exactness: average ranks are multiples of 0.5, carried as
-DECIMAL(25,1) so the rank-sum is order-independent and bit-exact at any
-parallelism; the final AUC is a single IEEE division of exact operands,
-so no rounding is needed for the oracle hash.
+Cross-engine exactness: average ranks are multiples of 0.5, carried
+doubled as exact LONGs so the rank-sum is order-independent and
+bit-exact at any parallelism; the final AUC is a single IEEE division
+of exact operands, so no rounding is needed for the oracle hash.
+
+The statistical tests share four private kernels, one per job:
+``_avg_rank2`` (doubled average rank and tie size from one window),
+``_value_scan`` (per-value counts with exact cumulative-before counts
+over the distinct-value frame), ``_complete_blocks`` (the listwise
+complete-block filter) and ``_poisson_bootstrap`` (Poisson-bootstrap
+replicate means and the percentile select). Each kernel drops the rows
+whose ranked, scanned, blocked or resampled value is NULL, and keeps
+its arithmetic integer- or decimal-exact.
 """
 
 from __future__ import annotations
@@ -20,6 +29,152 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import _hash24_u01, token_hash24
+
+
+def _avg_rank2(
+    df: DataFrame, part_cols: list[str], value_col: str, out: str
+) -> DataFrame:
+    """``df`` without its NULL ``value_col`` rows, plus ``out`` = the
+    DOUBLED average rank 2·rank + t − 1 of ``value_col`` within
+    ``part_cols`` (ascending; a tie group shares the mean of its rank
+    range) and ``out + "_t"`` = the tie size t, both exact LONGs. The
+    tie count is a RANGE CURRENT ROW frame over the rank's own sort, so
+    Catalyst evaluates both in a single Window operator."""
+    w = Window.partitionBy(*part_cols).orderBy(F.col(value_col).asc())
+    t = F.count(F.lit(1)).over(
+        w.rangeBetween(Window.currentRow, Window.currentRow)
+    )
+    return df.filter(F.col(value_col).isNotNull()).select(
+        "*", (2 * F.rank().over(w) + t - 1).alias(out), t.alias(f"{out}_t")
+    )
+
+
+def _value_scan(
+    df: DataFrame, part_cols: list[str], value_col: str, counts: list[str]
+) -> DataFrame:
+    """The distinct-value scan under the rank-sum tests. Drops NULL
+    ``value_col`` rows, sums each ``counts`` column (as LONG) per
+    distinct combination of the remaining columns — ``part_cols``,
+    ``value_col`` and any extra grain key — then runs ONE ordered
+    window per partition over that compressed frame. For each count
+    ``c`` it adds ``c_at`` (the total at this (partition, value), i.e.
+    the tie size when ``c`` counts rows), ``c_below`` (the total over
+    strictly smaller values) and ``c_all`` (the partition total). RANGE
+    frames make ``c_at``/``c_below`` per value even when an extra grain
+    key splits a value over several rows."""
+    grain = [c for c in df.columns if c not in counts]
+    w = Window.partitionBy(*part_cols).orderBy(value_col)
+    at = w.rangeBetween(Window.currentRow, Window.currentRow)
+    upto = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    every = w.rangeBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    per = (
+        df.filter(F.col(value_col).isNotNull())
+        .groupBy(*grain)
+        .agg(*(F.sum(c).cast("long").alias(c) for c in counts))
+    )
+    scans = []
+    for c in counts:
+        scans += [
+            F.sum(c).over(at).alias(f"{c}_at"),
+            (F.sum(c).over(upto) - F.sum(c).over(at)).alias(f"{c}_below"),
+            F.sum(c).over(every).alias(f"{c}_all"),
+        ]
+    return per.select(*grain, *counts, *scans)
+
+
+def _complete_blocks(
+    base: DataFrame, block_col: str, member_col: str, value_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The listwise complete-block filter of the blocked rank tests:
+    (k frame, complete blocks, n_incomplete frame). k (``_k``) counts
+    the distinct members over ALL of ``base``; a block is complete when
+    its non-NULL ``value_col`` rows number exactly k over exactly k
+    distinct members. The complete frame carries ``block_col`` and the
+    block's value total ``_bsum``; incomplete blocks are only counted."""
+    k_frame = base.agg(F.countDistinct(member_col).cast("long").alias("_k"))
+    per_block = (
+        base.filter(F.col(value_col).isNotNull())
+        .groupBy(block_col)
+        .agg(
+            F.count(F.lit(1)).alias("_cnt"),
+            F.countDistinct(member_col).alias("_nm"),
+            F.sum(value_col).alias("_bsum"),
+        )
+        .crossJoin(F.broadcast(k_frame))
+    )
+    ok = (F.col("_cnt") == F.col("_k")) & (F.col("_nm") == F.col("_k"))
+    n_bad = per_block.filter(~ok).agg(
+        F.count(F.lit(1)).cast("long").alias("n_incomplete")
+    )
+    return k_frame, per_block.filter(ok).select(block_col, "_bsum"), n_bad
+
+
+def _poisson_bootstrap(
+    base: DataFrame, n_replicates: int, alpha: float, salt: str
+) -> DataFrame:
+    """Percentile-bootstrap kernel over ``base`` = (``_id``, ``_x``
+    DECIMAL): each row draws a Poisson(1) weight per replicate from an
+    inverse-CDF ladder over the engine-wide md5 uniform of
+    ``id:replicate:salt``, so every engine draws the same resamples.
+    Per replicate the weighted mean is ONE IEEE division of an exact
+    decimal sum by an exact weight total. A replicate whose weights are
+    all zero has no mean and is dropped; the lo/hi percentile ranks
+    ceil(α/2·B') and ceil((1 − α/2)·B') come from the B' replicates
+    that remain. One row: (``_lo``, ``_hi``, ``_frac_pos`` = share of
+    replicate means above zero).
+
+    Plan: a map-side ×B explode of the projected pair, one B-group hash
+    agg (map-side combined), one B'-row rank select."""
+    if n_replicates < 2:
+        raise ValueError("n_replicates must be >= 2")
+    if not 0.0 < alpha < 1.0:
+        raise ValueError("alpha must be in (0, 1)")
+    thresholds = _poisson1_thresholds()
+    rep = base.select(
+        "_id",
+        "_x",
+        F.explode(F.sequence(F.lit(1), F.lit(n_replicates))).alias("_rep"),
+    )
+    u = _hash24_u01(
+        F.concat(
+            F.col("_id").cast("string"),
+            F.lit(":"),
+            F.col("_rep").cast("string"),
+            F.lit(":" + salt),
+        )
+    )
+    w = F.lit(len(thresholds))
+    for k in reversed(range(len(thresholds))):
+        w = F.when(u < F.lit(thresholds[k]), k).otherwise(w)
+    means = (
+        rep.select("_rep", w.alias("_w"), (F.col("_x") * F.col("_w")).alias("_wx"))
+        .groupBy("_rep")
+        .agg(
+            F.sum("_w").cast("long").alias("_wsum"),
+            F.sum("_wx").alias("_wxsum"),
+        )
+        .filter(F.col("_wsum") > 0)
+        .select(
+            "_rep", (F.col("_wxsum").cast("double") / F.col("_wsum")).alias("_m")
+        )
+    )
+    order = Window.orderBy(F.col("_m").asc(), F.col("_rep").asc())
+    ranked = means.select(
+        "_m",
+        F.row_number().over(order).alias("_rk"),
+        F.count(F.lit(1))
+        .over(order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("_b"),
+    )
+    lo_rank = F.greatest(F.lit(1), F.ceil(F.lit(alpha / 2) * F.col("_b")))
+    hi_rank = F.least(F.col("_b"), F.ceil(F.lit(1 - alpha / 2) * F.col("_b")))
+    return ranked.agg(
+        F.max(F.when(F.col("_rk") == lo_rank, F.col("_m"))).alias("_lo"),
+        F.max(F.when(F.col("_rk") == hi_rank, F.col("_m"))).alias("_hi"),
+        (F.count(F.when(F.col("_m") > 0, 1)) / F.count(F.lit(1))).alias(
+            "_frac_pos"
+        ),
+    )
 
 
 def auc_by_group(
@@ -35,12 +190,10 @@ def auc_by_group(
     share the mean of their rank range — the textbook tie correction,
     without which AUC of an all-tied group ≠ 0.5).
 
-    Plan: ONE window (partition by group, sort by score) computes both
-    rank() and the tie count — the tie count uses a RANGE CURRENT ROW
-    frame over the same sort, so Catalyst evaluates both in a single
-    Window operator over a single exchange — then one hash aggregation
-    that REUSES the window's partitioning (group key == partition key):
-    one exchange total, plan-gated. The per-group sort is the
+    Plan: the ``_avg_rank2`` window (partition by group, sort by score)
+    over a single exchange, then one hash aggregation that REUSES the
+    window's partitioning (group key == partition key): one exchange
+    total, plan-gated. The per-group sort is the
     unavoidable cost of exact AUC (see ``auc_by_group_binned`` for the
     sort-free variant).
 
@@ -49,25 +202,21 @@ def auc_by_group(
 
     Output: group cols + (n_pos, n_neg, auc).
     """
-    w_rank = Window.partitionBy(*group_cols).orderBy(F.col(score_col).asc())
-    w_tie = (
-        Window.partitionBy(*group_cols)
-        .orderBy(F.col(score_col).asc())
-        .rangeBetween(Window.currentRow, Window.currentRow)
-    )
-    # average rank of a tie group = min-rank + (tie_size - 1)/2; always a
-    # multiple of 0.5, so DECIMAL(25,1) carries it exactly
-    avg_rank = (
-        F.rank().over(w_rank) + (F.count("*").over(w_tie) - F.lit(1)) / F.lit(2.0)
-    ).cast("decimal(25,1)")
     y = F.col(label_col).cast("int")
-    scored = (
-        df.filter(F.col(score_col).isNotNull() & F.col(label_col).isNotNull())
-        .select(*group_cols, y.alias("_y"), F.col(score_col))
-        .withColumn("_ar", avg_rank)
+    scored = _avg_rank2(
+        df.filter(F.col(label_col).isNotNull()).select(
+            *group_cols, y.alias("_y"), F.col(score_col)
+        ),
+        group_cols,
+        score_col,
+        "_ar2",
     )
+    # the doubled rank sum is an exact LONG; halving its double is exact
     agg = scored.groupBy(*group_cols).agg(
-        F.sum(F.when(F.col("_y") == 1, F.col("_ar"))).cast("double").alias("_rpos"),
+        (
+            F.sum(F.when(F.col("_y") == 1, F.col("_ar2"))).cast("double")
+            / F.lit(2.0)
+        ).alias("_rpos"),
         F.sum(F.when(F.col("_y") == 1, 1).otherwise(0)).cast("long").alias("n_pos"),
         F.sum(F.when(F.col("_y") == 0, 1).otherwise(0)).cast("long").alias("n_neg"),
     )
@@ -250,79 +399,29 @@ def bootstrap_mean_ci(
     resampling n rows with replacement (which needs global coordination),
     each row independently receives a Poisson(1) weight per replicate —
     the classic single-pass approximation whose replicate sizes
-    concentrate at n. Weights come from an inverse-CDF ladder over the
-    engine-wide md5 uniform, so every engine draws the same resamples.
+    concentrate at n. Resampling and the percentile select are the
+    ``_poisson_bootstrap`` kernel over values carried as DECIMAL(25,2).
 
     Output: one row — (n, point_mean, ci_lo, ci_hi, n_replicates).
 
-    Plan: the replicate fan-out is a map-side explode (×B on the
-    projected value column only), the per-replicate weighted means are
-    one hash agg with decimal-carried exact sums (division is the only
-    FP op), and the CI is a rank-select over the B replicate means —
-    B is metadata-sized, so the quantile step is trivially cheap. At
-    100 TB the ×B blowup is the honest cost; B=50 on a projected
+    At 100 TB the ×B explode is the honest cost; B=50 on a projected
     (value, weight) pair is map-side-combinable and shuffle-light
     (B groups total).
     """
-    if n_replicates < 2:
-        raise ValueError("n_replicates must be >= 2")
-    if not 0.0 < alpha < 1.0:
-        raise ValueError("alpha must be in (0, 1)")
-    thresholds = _poisson1_thresholds()
     base = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(id_col).alias("_id"), F.col(value_col).alias("_v")
+        F.col(id_col).alias("_id"),
+        F.col(value_col).cast("decimal(25,2)").alias("_x"),
     )
-    rep = base.select(
-        "_id",
-        "_v",
-        F.explode(F.sequence(F.lit(1), F.lit(n_replicates))).alias("_rep"),
-    )
-    keyed = F.concat(
-        F.col("_id").cast("string"),
-        F.lit(":"),
-        F.col("_rep").cast("string"),
-        F.lit(":" + salt),
-    )
-    u = _hash24_u01(keyed)
-    w = F.lit(len(thresholds))
-    for k in reversed(range(len(thresholds))):
-        w = F.when(u < F.lit(thresholds[k]), k).otherwise(w)
-    weighted = rep.select(
-        "_rep",
-        w.alias("_w"),
-        (F.col("_v").cast("decimal(25,2)") * F.col("_w")).alias("_wv"),
-    )
-    means = weighted.groupBy("_rep").agg(
-        (F.sum("_wv").cast("double") / F.sum("_w")).alias("_m")
-    )
-    import math
-
-    b = n_replicates
-    lo_rank = max(1, math.ceil(alpha / 2 * b))
-    hi_rank = min(b, math.ceil((1 - alpha / 2) * b))
-    from pyspark.sql import Window
-
-    ranked = means.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.orderBy(F.col("_m").asc(), F.col("_rep").asc())
-        ),
-    )
-    ci = ranked.agg(
-        F.max(F.when(F.col("_rk") == lo_rank, F.col("_m"))).alias("ci_lo"),
-        F.max(F.when(F.col("_rk") == hi_rank, F.col("_m"))).alias("ci_hi"),
-    )
+    ci = _poisson_bootstrap(base, n_replicates, alpha, salt)
     point = base.agg(
         F.count("*").cast("long").alias("n"),
-        (F.sum(F.col("_v").cast("decimal(25,2)")).cast("double") / F.count("*")).alias(
-            "point_mean"
-        ),
+        (F.sum("_x").cast("double") / F.count("*")).alias("point_mean"),
     )
     return point.crossJoin(F.broadcast(ci)).select(
         "n",
         "point_mean",
-        "ci_lo",
-        "ci_hi",
+        F.col("_lo").alias("ci_lo"),
+        F.col("_hi").alias("ci_hi"),
         F.lit(n_replicates).cast("long").alias("n_replicates"),
     )
 
@@ -416,28 +515,22 @@ def spearman_by_group(
     Pearson/regr_ family: rank both columns inside each group, then
     Pearson over the ranks.
 
-    avg_rank = min_rank + (n_ties - 1)/2 from one rank window + one
-    tie-count window per column (both share the group partitioning —
-    ONE exchange total); the Pearson moments ride 9dp decimals. Ranks
-    are exact halves and every downstream op (+,−,×,÷,sqrt) is
-    correctly-rounded IEEE, so the output doubles are bit-identical
-    across engines with NO rounding (unlike ln()-based metrics).
-    Output: (group, n, rho).
+    Only pairs with both values non-NULL are ranked. One
+    ``_avg_rank2`` window per column (both share the group
+    partitioning — ONE exchange total); the Pearson moments ride 9dp
+    decimals. Ranks are exact halves and every downstream op
+    (+,−,×,÷,sqrt) is correctly-rounded IEEE, so the output doubles are
+    bit-identical across engines with NO rounding (unlike ln()-based
+    metrics). Output: (group, n, rho).
     """
     dec = "decimal(38,9)"
-
-    def avg_rank(col: str, out: str):
-        wr = Window.partitionBy(group_col).orderBy(col)
-        wt = Window.partitionBy(group_col, col)
-        return (
-            F.rank().over(wr).cast("double")
-            + (F.count("*").over(wt) - 1) / 2.0
-        ).alias(out)
-
-    ranked = df.select(
+    pairs = df.filter(F.col(y_col).isNotNull()).select(group_col, x_col, y_col)
+    ranked = _avg_rank2(
+        _avg_rank2(pairs, [group_col], x_col, "_rx2"), [group_col], y_col, "_ry2"
+    ).select(
         F.col(group_col),
-        avg_rank(x_col, "rx"),
-        avg_rank(y_col, "ry"),
+        (F.col("_rx2") / 2.0).alias("rx"),
+        (F.col("_ry2") / 2.0).alias("ry"),
     )
     agg = ranked.groupBy(group_col).agg(
         F.count("*").alias("n"),
@@ -694,37 +787,26 @@ def mann_whitney_u(
     Same engine contract as welch_ttest: the statistic, not the
     p-value (the normal CDF lookup is a client-side table).
 
-    Scale + portability: ONE hash agg by (segment, value) first — the
-    rank window then runs over DISTINCT values per segment, not rows
-    (tied corpora compress massively; the window partitions by segment,
-    so segments rank in parallel). All rank arithmetic stays INTEGER:
-    average ranks are half-integers, so 2·R_a =
-    Σ n_a(v)·(2·cum_before(v) + c(v) + 1) is an exact long, and U, z
-    are IEEE doubles of exact integers — bit-identical across engines
-    with no decimal stabilization. One exchange total (agg and window
-    share the segment hash partitioning).
+    Scale + portability: the ``_value_scan`` of each segment's DISTINCT
+    values (tied corpora compress massively; segments rank in
+    parallel). All rank arithmetic stays INTEGER: average ranks are
+    half-integers, so 2·R_a = Σ n_a(v)·(2·cum_before(v) + c(v) + 1) is
+    an exact long, and U, z are IEEE doubles of exact integers —
+    bit-identical across engines with no decimal stabilization.
     """
-    both = df.filter(F.col(group_col).isin([group_a, group_b]))
-    per_v = both.groupBy(segment_col, value_col).agg(
-        F.sum(F.when(F.col(group_col) == group_a, 1).otherwise(0))
-        .cast("long")
-        .alias("na_v"),
-        F.sum(F.when(F.col(group_col) == group_b, 1).otherwise(0))
-        .cast("long")
-        .alias("nb_v"),
+    both = df.filter(F.col(group_col).isin([group_a, group_b])).select(
+        segment_col,
+        value_col,
+        (F.col(group_col) == group_a).cast("long").alias("na_v"),
+        (F.col(group_col) == group_b).cast("long").alias("nb_v"),
     )
     c = F.col("na_v") + F.col("nb_v")
-    w = (
-        Window.partitionBy(segment_col)
-        .orderBy(value_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = per_v.select(
+    ranked = _value_scan(both, [segment_col], value_col, ["na_v", "nb_v"]).select(
         F.col(segment_col),
         "na_v",
         "nb_v",
         c.alias("c"),
-        (F.sum(c).over(w) - c).alias("cum_before"),
+        (F.col("na_v_below") + F.col("nb_v_below")).alias("cum_before"),
     )
     agg = ranked.groupBy(segment_col).agg(
         F.sum("na_v").alias("n_a"),
@@ -961,38 +1043,22 @@ def kruskal_wallis(
     fixed-arm contract like the two-sample tests). Engine contract ends
     at the statistic; the chi-square CDF lookup is client-side.
 
-    Scale + portability: one hash agg to (segment, value, group) grain,
-    then ONE window (partition by segment, RANGE frames over the value
-    sort) yields both the tie count c(v) (RANGE CURRENT..CURRENT) and
-    the cumulative rank offset (RANGE UNBOUNDED..CURRENT) without a
-    second exchange. All rank arithmetic INTEGER (2R_g =
+    Scale + portability: the ``_value_scan`` at (segment, value, group)
+    grain yields both the tie count c(v) and the cumulative rank offset
+    per value. All rank arithmetic INTEGER (2R_g =
     Σ n_g(v)·(2·cum_before + c + 1) exact long); the only
     order-sensitive float reduce is the k-term Σ R_g²/n_g, so H is
     rounded to 6dp (k ≤ dozens — error << grid). Output per segment:
     (k_groups, n_total, h_stat, h_tie_corrected).
     """
-    gv = df.groupBy(segment_col, value_col, group_col).agg(
-        F.count("*").cast("long").alias("n_gv")
-    )
-    w_tie = (
-        Window.partitionBy(segment_col)
-        .orderBy(value_col)
-        .rangeBetween(Window.currentRow, Window.currentRow)
-    )
-    w_cum = (
-        Window.partitionBy(segment_col)
-        .orderBy(value_col)
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    framed = gv.select(
+    gv = df.select(segment_col, value_col, group_col, F.lit(1).alias("n_gv"))
+    framed = _value_scan(gv, [segment_col], value_col, ["n_gv"]).select(
         F.col(segment_col),
         F.col(group_col),
         F.col(value_col),
         "n_gv",
-        F.sum("n_gv").over(w_tie).alias("c"),
-        (F.sum("n_gv").over(w_cum) - F.sum("n_gv").over(w_tie)).alias(
-            "cum_before"
-        ),
+        F.col("n_gv_at").alias("c"),
+        F.col("n_gv_below").alias("cum_before"),
     )
     per_g = framed.groupBy(segment_col, group_col).agg(
         F.sum("n_gv").alias("n_g"),
@@ -1107,33 +1173,30 @@ def average_precision(
     thresholds. Complements :func:`auc_by_group` (ROC) and
     :func:`classification_report` (fixed threshold).
 
-    Scale + portability: one hash agg to (segment, score) grain, ONE
-    window (RANGE frame, descending score) for cumulative TP/total —
-    ties collapse to a single threshold so the curve is
-    deterministic under any row order. AP terms are exact-int ratios
+    Scale + portability: the ``_value_scan`` of each segment's distinct
+    scores gives cumulative TP/total — ties collapse to a single
+    threshold so the curve is deterministic under any row order; the
+    descending cumulative at s is the segment total minus the ascending
+    total strictly below s. AP terms are exact-int ratios
     n_pos(s)·cumTP(s)/cumTot(s); their per-segment float sum is the
     only order-sensitive reduce → rounded to 6dp. best_f1 uses the
     identity F1_t = 2·TP_t/(cumTot_t + n_pos): a MAX of exact-operand
     IEEE ratios, order-independent, so it ships unrounded.
     """
-    sv = df.groupBy(segment_col, score_col).agg(
-        F.count("*").cast("long").alias("n_s"),
-        F.sum(F.col(label_col).cast("long")).alias("pos_s"),
+    sv = df.select(
+        segment_col,
+        score_col,
+        F.lit(1).alias("n_s"),
+        F.col(label_col).cast("long").alias("pos_s"),
     )
-    w = (
-        Window.partitionBy(segment_col)
-        .orderBy(F.col(score_col).desc())
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wseg = Window.partitionBy(segment_col)
-    cum = sv.select(
+    cum = _value_scan(sv, [segment_col], score_col, ["n_s", "pos_s"]).select(
         F.col(segment_col),
         "n_s",
         "pos_s",
-        F.sum("n_s").over(w).alias("cum_tot"),
-        F.sum("pos_s").over(w).alias("cum_pos"),
-        F.sum("n_s").over(wseg).alias("n_total"),
-        F.sum("pos_s").over(wseg).alias("n_pos"),
+        (F.col("n_s_all") - F.col("n_s_below")).alias("cum_tot"),
+        (F.col("pos_s_all") - F.col("pos_s_below")).alias("cum_pos"),
+        F.col("n_s_all").alias("n_total"),
+        F.col("pos_s_all").alias("n_pos"),
     )
     term = (
         F.col("pos_s").cast("double")
@@ -2901,12 +2964,10 @@ def wilcoxon_signed_rank(
     z = (W+ − n(n+1)/4) / σ, σ² = n(n+1)(2n+1)/24 − Σ(t³−t)/48, and
     the q407 closed-form two-sided p.
 
-    Integer-exact rank arithmetic (the mann_whitney_u discipline): one
-    hash agg by |d| VALUE, the rank scan runs over DISTINCT values;
-    average ranks are half-integers so 2·W+ =
+    Integer-exact rank arithmetic: the ``_value_scan`` of the distinct
+    |d| values; average ranks are half-integers so 2·W+ =
     Σ npos(v)·(2·cum_before + c + 1) is an exact LONG; W+, z are IEEE
-    doubles of exact integers. ONE exchange (value agg + ordered scan
-    over the distinct-values frame), then a 1-row reduce.
+    doubles of exact integers. Then a 1-row reduce.
 
     Output: ONE row — (n_pairs, n_zero, w_plus, w_minus, z,
     p_two_sided); n_pairs < 1 (all pairs tied) degrades z/p to NULL.
@@ -2918,20 +2979,13 @@ def wilcoxon_signed_rank(
     zeros = base.agg(
         F.count(F.when(F.col("_d") == 0, 1)).cast("long").alias("n_zero")
     )
-    nz = base.filter(F.col("_d") != 0)
-    per_v = nz.groupBy(F.abs(F.col("_d")).alias("_av")).agg(
-        F.count("*").cast("long").alias("_c"),
-        F.sum(F.when(F.col("_d") > 0, 1).otherwise(0))
-        .cast("long")
-        .alias("_npos"),
+    nz = base.filter(F.col("_d") != 0).select(
+        F.abs(F.col("_d")).alias("_av"),
+        F.lit(1).alias("_c"),
+        (F.col("_d") > 0).cast("long").alias("_npos"),
     )
-    w = Window.orderBy("_av").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    ranked = per_v.select(
-        "_c",
-        "_npos",
-        (F.sum("_c").over(w) - F.col("_c")).alias("_cum_before"),
+    ranked = _value_scan(nz, [], "_av", ["_c", "_npos"]).select(
+        "_c", "_npos", F.col("_c_below").alias("_cum_before")
     )
     # coalesce: an all-tied input leaves the nonzero-diff frame EMPTY,
     # and sums over an empty agg are NULL — the documented degradation
@@ -2987,98 +3041,36 @@ def paired_bootstrap_delta(
     read off how often A beats B and the delta's percentile CI; the
     pairing cancels per-item difficulty, which unpaired tests throw
     away): deterministic distributed form via the Poisson(1) bootstrap
-    over the engine-wide md5 uniform (the ``bootstrap_mean_ci``
-    machinery — every engine draws the same resamples), applied to the
-    per-item delta d = a − b.
+    over the engine-wide md5 uniform (the ``_poisson_bootstrap``
+    kernel of ``bootstrap_mean_ci`` — every engine draws the same
+    resamples), applied to the per-item delta d = a − b.
 
-    Exactness: deltas 9dp on DECIMAL(25,9); per-replicate weighted
-    means are single IEEE divisions of decimal sums; the CI is a rank
-    select over the B replicate means (metadata-sized); frac_a_wins
-    counts strict mean_delta > 0 replicates.
-
-    Plan: ×B map-side explode of the projected delta column, one
-    B-group hash agg (map-side combined), one B-row rank select — the
-    bootstrap_mean_ci shape, deltas instead of values.
+    Exactness: deltas 9dp on DECIMAL(25,9); frac_a_wins counts strict
+    mean_delta > 0 replicates.
 
     Output: ONE row — (n, point_delta, delta_ci_lo, delta_ci_hi,
     frac_a_wins, n_replicates).
     """
-    if n_replicates < 2:
-        raise ValueError("n_replicates must be >= 2")
-    if not 0.0 < alpha < 1.0:
-        raise ValueError("alpha must be in (0, 1)")
-    import math
-
-    thresholds = _poisson1_thresholds()
     dec = "decimal(25,9)"
     d = F.round(
         F.col(a_col).cast("double") - F.col(b_col).cast("double"), 9
     )
     base = df.select(F.col(id_col).alias("_id"), d.alias("_d")).filter(
         F.col("_d").isNotNull()
-    )
-    rep = base.select(
-        "_id",
-        "_d",
-        F.explode(F.sequence(F.lit(1), F.lit(n_replicates))).alias("_rep"),
-    )
-    keyed = F.concat(
-        F.col("_id").cast("string"),
-        F.lit(":"),
-        F.col("_rep").cast("string"),
-        F.lit(":" + salt),
-    )
-    u = _hash24_u01(keyed)
-    wgt = F.lit(len(thresholds))
-    for k in reversed(range(len(thresholds))):
-        wgt = F.when(u < F.lit(thresholds[k]), k).otherwise(wgt)
-    weighted = rep.select(
-        "_rep",
-        wgt.alias("_w"),
-        (F.col("_d").cast(dec) * F.col("_w")).alias("_wd"),
-    )
-    means = weighted.groupBy("_rep").agg(
-        F.sum("_w").cast("long").alias("_wsum"),
-        F.sum("_wd").alias("_wdsum"),
-    ).select(
-        "_rep",
-        F.when(
-            F.col("_wsum") > 0,
-            F.col("_wdsum").cast("double") / F.col("_wsum"),
-        ).alias("_m"),
-    ).filter(F.col("_m").isNotNull())
-    b = n_replicates
-    lo_rank = max(1, math.ceil(alpha / 2 * b))
-    hi_rank = min(b, math.ceil((1 - alpha / 2) * b))
-    ranked = means.withColumn(
-        "_rk",
-        F.row_number().over(
-            Window.orderBy(F.col("_m").asc(), F.col("_rep").asc())
-        ),
-    )
-    ci = ranked.agg(
-        F.round(
-            F.max(F.when(F.col("_rk") == lo_rank, F.col("_m"))), 6
-        ).alias("delta_ci_lo"),
-        F.round(
-            F.max(F.when(F.col("_rk") == hi_rank, F.col("_m"))), 6
-        ).alias("delta_ci_hi"),
-        F.round(
-            F.count(F.when(F.col("_m") > 0, 1)) / F.count("*"), 6
-        ).alias("frac_a_wins"),
-    )
+    ).select("_id", F.col("_d").cast(dec).alias("_x"))
+    ci = _poisson_bootstrap(base, n_replicates, alpha, salt)
     point = base.agg(
         F.count("*").cast("long").alias("n"),
-        F.round(
-            F.sum(F.col("_d").cast(dec)).cast("double") / F.count("*"), 6
-        ).alias("point_delta"),
+        F.round(F.sum("_x").cast("double") / F.count("*"), 6).alias(
+            "point_delta"
+        ),
     )
     return point.crossJoin(F.broadcast(ci)).select(
         "n",
         "point_delta",
-        "delta_ci_lo",
-        "delta_ci_hi",
-        "frac_a_wins",
+        F.round("_lo", 6).alias("delta_ci_lo"),
+        F.round("_hi", 6).alias("delta_ci_hi"),
+        F.round("_frac_pos", 6).alias("frac_a_wins"),
         F.lit(n_replicates).cast("long").alias("n_replicates"),
     )
 
@@ -3186,11 +3178,10 @@ def delong_auc_test(
     placement values (sample n−1 denominators, the paper's form);
     z = ΔAUC/SE and the q407 closed-form two-sided p.
 
-    Plan: per scorer, ONE (value) group-count + a rank scan over the
-    DISTINCT-values frame (the mann_whitney discipline — tied score
-    grids compress massively), one value-keyed join back to items for
-    per-item placements, then ONE 1-row covariance reduce over the
-    paired placements. Placements are exact rationals: numerators
+    Plan: per scorer, ONE ``_value_scan`` over the DISTINCT values
+    (tied score grids compress massively), one value-keyed join back to
+    items for per-item placements, then ONE 1-row covariance reduce
+    over the paired placements. Placements are exact rationals: numerators
     2·(cum_below) + ties are exact LONGs, one IEEE division each at
     9dp; covariance moments ride DECIMAL(25,9)/(38,18).
 
@@ -3208,40 +3199,27 @@ def delong_auc_test(
         & F.col("_sa").isNotNull()
         & F.col("_sb").isNotNull()
     )
-    tot = base.agg(
-        F.sum("_y").cast("long").alias("_np"),
-        F.sum(1 - F.col("_y")).cast("long").alias("_nn"),
-    )
 
     def placements(col: str, out: str) -> DataFrame:
         """(value v, placement for a positive at v [p10], placement
-        for a negative at v [p01]) — from cumulative class counts over
-        the distinct-value frame."""
-        per_v = base.groupBy(F.col(col).alias("_v")).agg(
-            F.sum("_y").cast("long").alias("_pv"),
-            F.sum(1 - F.col("_y")).cast("long").alias("_nv"),
+        for a negative at v [p01]) — from the class counts of the
+        ``_value_scan`` over the distinct values."""
+        per_v = base.select(
+            F.col(col).alias("_v"),
+            F.col("_y").alias("_pv"),
+            (1 - F.col("_y")).alias("_nv"),
         )
-        w = Window.orderBy("_v").rowsBetween(
-            Window.unboundedPreceding, Window.currentRow
-        )
-        cum = per_v.select(
-            "_v",
-            "_pv",
-            "_nv",
-            (F.sum("_pv").over(w) - F.col("_pv")).alias("_pb"),
-            (F.sum("_nv").over(w) - F.col("_nv")).alias("_nb"),
-        )
-        return cum.crossJoin(F.broadcast(tot)).select(
+        return _value_scan(per_v, [], "_v", ["_pv", "_nv"]).select(
             F.col("_v").alias(f"{out}_v"),
             F.round(
-                (2 * F.col("_nb") + F.col("_nv"))
-                / (F.lit(2.0) * F.col("_nn")),
+                (2 * F.col("_nv_below") + F.col("_nv"))
+                / (F.lit(2.0) * F.col("_nv_all")),
                 9,
             ).alias(f"{out}_p10"),
             F.round(
-                (2 * (F.col("_np") - F.col("_pb") - F.col("_pv"))
+                (2 * (F.col("_pv_all") - F.col("_pv_below") - F.col("_pv"))
                  + F.col("_pv"))
-                / (F.lit(2.0) * F.col("_np")),
+                / (F.lit(2.0) * F.col("_pv_all")),
                 9,
             ).alias(f"{out}_p01"),
         )
@@ -3451,11 +3429,10 @@ def friedman_test(
     statistic when tie-free), upper-tail p via Wilson-Hilferty at
     k−1 dof.
 
-    Only COMPLETE blocks count (items with exactly one non-NULL value
-    per treatment — listwise, the classical treatment; incomplete
-    items are counted and dropped). Average ranks are half-integers
-    (exact: 2·rank_min + ties − 1 over 2), so rank sums and A₁ ride
-    DECIMAL(25,9) exactly.
+    Only COMPLETE blocks count (``_complete_blocks``: items with
+    exactly one non-NULL value per treatment — listwise, the classical
+    treatment; incomplete items are counted and dropped). Average ranks
+    are half-integers, so rank sums and A₁ ride DECIMAL(25,9) exactly.
 
     Plan: item-keyed rank windows over k-row partitions (k = a
     handful of systems — partitions are tiny and uniform), one
@@ -3469,39 +3446,10 @@ def friedman_test(
         F.col(treatment_col).alias("_t"),
         F.col(value_col).cast("double").alias("_v"),
     )
-    k_frame = base.agg(
-        F.countDistinct("_t").cast("long").alias("_k")
-    )
-    per_item = base.filter(F.col("_v").isNotNull()).groupBy("_i").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct("_t").alias("_nt"),
-    )
-    complete = per_item.crossJoin(F.broadcast(k_frame)).filter(
-        (F.col("_cnt") == F.col("_k")) & (F.col("_nt") == F.col("_k"))
-    )
-    n_bad = per_item.crossJoin(F.broadcast(k_frame)).filter(
-        (F.col("_cnt") != F.col("_k")) | (F.col("_nt") != F.col("_k"))
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_incomplete"))
-    # NULL-value rows must not reach the rank window: completeness is
-    # judged on non-NULL values only, so an item with k non-NULL values
-    # plus a stray NULL row still passes the filter — and Spark sorts
-    # NULLs FIRST, which would shift every rank in that item (ADVICE
-    # r14). Listwise means NULL rows simply don't exist for ranking.
-    rows = base.filter(F.col("_v").isNotNull()).join(complete.select("_i"), "_i")
-    w_rank = Window.partitionBy("_i").orderBy("_v")
-    w_tie = Window.partitionBy("_i", "_v")
-    ranked = rows.select(
-        "_i",
-        "_t",
-        (
-            (
-                2 * F.rank().over(w_rank)
-                + F.count(F.lit(1)).over(w_tie)
-                - 1
-            )
-            / F.lit(2.0)
-        ).alias("_r"),
-    )
+    _, complete, n_bad = _complete_blocks(base, "_i", "_t", "_v")
+    ranked = _avg_rank2(
+        base.join(complete.select("_i"), "_i"), ["_i"], "_v", "_r2"
+    ).select("_i", "_t", (F.col("_r2") / F.lit(2.0)).alias("_r"))
     dec = "decimal(25,9)"
     per_t = ranked.groupBy("_t").agg(
         F.count(F.lit(1)).cast("long").alias("n_items"),
@@ -3586,23 +3534,11 @@ def cochran_q_test(
         F.col(treatment_col).alias("_t"),
         F.col(success_col).cast("int").alias("_x"),
     )
-    k_frame = base.agg(F.countDistinct("_t").cast("long").alias("_k"))
-    per_item = base.filter(F.col("_x").isNotNull()).groupBy("_i").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct("_t").alias("_nt"),
-        F.sum("_x").cast("long").alias("_li"),
-    )
-    with_k = per_item.crossJoin(F.broadcast(k_frame))
-    complete = with_k.filter(
-        (F.col("_cnt") == F.col("_k")) & (F.col("_nt") == F.col("_k"))
-    )
-    n_bad = with_k.filter(
-        (F.col("_cnt") != F.col("_k")) | (F.col("_nt") != F.col("_k"))
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_incomplete"))
+    k_frame, complete, n_bad = _complete_blocks(base, "_i", "_t", "_x")
     item_stats = complete.agg(
         F.count(F.lit(1)).cast("long").alias("_n"),
-        F.sum("_li").cast("long").alias("_nn"),
-        F.sum(F.col("_li") * F.col("_li")).cast("long").alias("_l2"),
+        F.sum("_bsum").cast("long").alias("_nn"),
+        F.sum(F.col("_bsum") * F.col("_bsum")).cast("long").alias("_l2"),
     )
     g = (
         base.join(complete.select("_i"), "_i")
@@ -3659,10 +3595,9 @@ def kendalls_w(
     over judge j's tie groups. chi2 = k(n-1)W at n-1 dof
     (Wilson-Hilferty p, the q457 rule).
 
-    Only COMPLETE judges count (exactly one non-NULL value per
-    object — listwise, the friedman_test discipline; incomplete
-    judges are counted and dropped). NULL-value rows are filtered
-    before ranking (the ADVICE r14 friedman rule).
+    Only COMPLETE judges count (``_complete_blocks``: exactly one
+    non-NULL value per object — listwise; incomplete judges are
+    counted and dropped).
 
     Exactness: average ranks are half-integers — rank sums and the
     squared deviations ride DECIMAL(25,9); T_j is an exact LONG; W is
@@ -3679,31 +3614,14 @@ def kendalls_w(
         F.col(object_col).alias("_o"),
         F.col(value_col).cast("double").alias("_v"),
     )
-    n_frame = base.agg(F.countDistinct("_o").cast("long").alias("_n"))
-    per_judge = base.filter(F.col("_v").isNotNull()).groupBy("_j").agg(
-        F.count(F.lit(1)).alias("_cnt"),
-        F.countDistinct("_o").alias("_no"),
-    )
-    with_n = per_judge.crossJoin(F.broadcast(n_frame))
-    complete = with_n.filter(
-        (F.col("_cnt") == F.col("_n")) & (F.col("_no") == F.col("_n"))
-    )
-    n_bad = with_n.filter(
-        (F.col("_cnt") != F.col("_n")) | (F.col("_no") != F.col("_n"))
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_incomplete"))
-    rows = base.filter(F.col("_v").isNotNull()).join(
-        complete.select("_j"), "_j"
-    )
-    w_rank = Window.partitionBy("_j").orderBy("_v")
-    w_tie = Window.partitionBy("_j", "_v")
-    ranked = rows.select(
+    _, complete, n_bad = _complete_blocks(base, "_j", "_o", "_v")
+    ranked = _avg_rank2(
+        base.join(complete.select("_j"), "_j"), ["_j"], "_v", "_r2"
+    ).select(
         "_j",
         "_o",
-        (
-            (2 * F.rank().over(w_rank) + F.count(F.lit(1)).over(w_tie) - 1)
-            / F.lit(2.0)
-        ).alias("_r"),
-        F.count(F.lit(1)).over(w_tie).cast("long").alias("_tsz"),
+        (F.col("_r2") / F.lit(2.0)).alias("_r"),
+        F.col("_r2_t").alias("_tsz"),
     )
     dec = "decimal(25,9)"
     # tie term: each tie group of size t contributes t^3 - t; every row
@@ -3781,7 +3699,7 @@ def page_trend_test(
     power; Page's L = sum_j j*R_j weights the rank sums by the
     hypothesized position and detects the monotone trend directly):
     values rank WITHIN each complete item (average ranks on ties,
-    NULL rows filtered — the friedman_test discipline), R_j = rank sum
+    NULL rows filtered), R_j = rank sum
     of the treatment at position j in ``order`` (1-based), L = sum
     j*R_j; under H0 E[L] = n*k(k+1)^2/4 and Var[L] =
     n*k^2(k+1)^2(k-1)/144 (the classic no-tie null variance —
@@ -3807,6 +3725,9 @@ def page_trend_test(
         F.col(treatment_col).alias("_t"),
         F.col(value_col).cast("double").alias("_v"),
     ).withColumn("_w", pos).filter(F.col("_w") > 0)
+    # k is the caller's len(order), not counted from the data as in
+    # _complete_blocks: an ordered treatment absent from every item
+    # must leave every item incomplete
     per_item = base.filter(F.col("_v").isNotNull()).groupBy("_i").agg(
         F.count(F.lit(1)).alias("_cnt"),
         F.countDistinct("_t").alias("_nt"),
@@ -3817,19 +3738,9 @@ def page_trend_test(
     n_bad = per_item.filter(
         (F.col("_cnt") != k) | (F.col("_nt") != k)
     ).agg(F.count(F.lit(1)).cast("long").alias("n_incomplete"))
-    rows = base.filter(F.col("_v").isNotNull()).join(
-        complete.select("_i"), "_i"
-    )
-    w_rank = Window.partitionBy("_i").orderBy("_v")
-    w_tie = Window.partitionBy("_i", "_v")
-    ranked = rows.select(
-        "_i",
-        "_w",
-        (
-            (2 * F.rank().over(w_rank) + F.count(F.lit(1)).over(w_tie) - 1)
-            / F.lit(2.0)
-        ).alias("_r"),
-    )
+    ranked = _avg_rank2(
+        base.join(complete.select("_i"), "_i"), ["_i"], "_v", "_r2"
+    ).select("_i", "_w", (F.col("_r2") / F.lit(2.0)).alias("_r"))
     dec = "decimal(25,9)"
     agg = ranked.agg(
         F.sum(
@@ -3915,32 +3826,21 @@ def jonckheere_terpstra(
     )
     # per-group cumulative count STRICTLY BELOW each value present in
     # ANY group: build the merged value grid per group by unioning
-    # zero-count carrier rows for values the group lacks, then one
-    # group-partitioned ordered window
+    # zero-count carrier rows for every value, then one
+    # group-partitioned ``_value_scan``
     # the group axis is the STATIC order list, so the value x group
     # grid is a map-side literal explode — no join (a k-row crossJoin
     # would plan a non-scalar BNLJ and trip the structural gate);
     # groups absent from the data carry zero counts and contribute 0
-    values = counts.select("_v").distinct()
-    grid = values.select(
+    grid = counts.select("_v").distinct().select(
         F.explode(
             F.array(*[F.lit(i + 1) for i in range(len(order))])
         ).alias("_og"),
         "_v",
+        F.lit(0).cast("long").alias("_c"),
     )
-    filled = grid.join(counts, ["_og", "_v"], "left").select(
-        "_og", "_v", F.coalesce("_c", F.lit(0)).alias("_c")
-    )
-    w_cum = (
-        Window.partitionBy("_og")
-        .orderBy("_v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cums = filled.select(
-        "_og",
-        "_v",
-        (F.sum("_c").over(w_cum) - F.col("_c")).alias("_below"),
-        F.col("_c").alias("_ct"),
+    cums = _value_scan(counts.unionByName(grid), ["_og"], "_v", ["_c"]).select(
+        "_og", "_v", F.col("_c_below").alias("_below"), F.col("_c").alias("_ct")
     )
     # pair assembly, EQUI on value: U_st counts LOWER-group values
     # strictly below each HIGHER-group value, so the cumulative side is
@@ -4114,43 +4014,22 @@ def _ks_grid(
     cvm_two_sample: per distinct pooled value v — (v, ca, cb,
     cum_a, cum_b, n_a, n_b) with cumulative counts INCLUSIVE of v.
 
-    The scan rides the DISTINCT-value frame (the q455 DeLong
-    argument: tied grids compress; at 100 TB swap the ordered window
-    for the q280 two-stage distributed prefix sum — documented)."""
-    base = df.select(
-        F.col(group_col).alias("_g"),
+    The scan is the ``_value_scan`` of the DISTINCT pooled values
+    (tied grids compress; at 100 TB swap the ordered window for the
+    q280 two-stage distributed prefix sum — documented)."""
+    base = df.filter(F.col(group_col).isin([group_a, group_b])).select(
         F.col(value_col).cast("double").alias("_v"),
-    ).filter(
-        F.col("_v").isNotNull() & F.col("_g").isin([group_a, group_b])
+        (F.col(group_col) == group_a).cast("long").alias("_ca"),
+        (F.col(group_col) == group_b).cast("long").alias("_cb"),
     )
-    per_v = base.groupBy("_v").agg(
-        F.count(F.when(F.col("_g") == group_a, 1))
-        .cast("long")
-        .alias("_ca"),
-        F.count(F.when(F.col("_g") == group_b, 1))
-        .cast("long")
-        .alias("_cb"),
-    )
-    w = Window.orderBy("_v").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return per_v.select(
+    return _value_scan(base, [], "_v", ["_ca", "_cb"]).select(
         "_v",
         "_ca",
         "_cb",
-        F.sum("_ca").over(w).alias("_cuma"),
-        F.sum("_cb").over(w).alias("_cumb"),
-    ).crossJoin(
-        F.broadcast(
-            base.agg(
-                F.count(F.when(F.col("_g") == group_a, 1))
-                .cast("long")
-                .alias("_na"),
-                F.count(F.when(F.col("_g") == group_b, 1))
-                .cast("long")
-                .alias("_nb"),
-            )
-        )
+        (F.col("_ca_below") + F.col("_ca")).alias("_cuma"),
+        (F.col("_cb_below") + F.col("_cb")).alias("_cumb"),
+        F.col("_ca_all").alias("_na"),
+        F.col("_cb_all").alias("_nb"),
     )
 
 

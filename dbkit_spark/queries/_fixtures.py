@@ -9,47 +9,42 @@ with no mutual exclusion: two parallel sessions that both observed a
 stale marker could interleave a rewrite, and a third could read a
 half-written overwrite.
 
-:func:`fixture_once` closes the race with an ``O_CREAT|O_EXCL`` lock
-file around the build:
+:func:`fixture_once` closes the race with an ``flock`` on a lock file
+around the build:
 
 - fast path (no syscall beyond one read): marker content equals the
   stamp → the fixture is complete and current, return immediately.
   Completeness is implied because the marker is written (atomically,
-  via ``os.replace`` of a temp file) only AFTER the build returns.
-- slow path: take ``<path>.lock`` with O_EXCL. The winner re-checks
-  freshness (the previous holder may have finished the same build),
-  deletes the stale marker BEFORE rebuilding (a crash mid-build leaves
-  an unambiguously-incomplete fixture, never a fresh-looking one),
-  builds, then atomically publishes the marker. Losers poll the lock at
-  200 ms, returning as soon as the marker goes fresh; a lock whose
-  mtime is older than ``timeout`` is presumed abandoned (owner killed)
-  and broken.
+  via ``os.replace`` of a temp file unique to the owner) only AFTER the
+  build returns.
+- slow path: open ``<path>.lock`` and take an exclusive ``flock`` on
+  it. The owner re-checks freshness (the previous holder may have
+  finished the same build), deletes the stale marker BEFORE rebuilding
+  (a crash mid-build leaves an unambiguously-incomplete fixture, never
+  a fresh-looking one), builds, then atomically publishes the marker.
+  Waiters poll the lock at 200 ms, returning as soon as the marker
+  goes fresh, and raise ``TimeoutError`` after ``timeout``.
 
-Stale-lock breaking and release are identity-safe (ADVICE r11): the
-owner writes a unique token (pid + monotonic nonce) into the lock at
-creation and, on release, unlinks only after verifying the lock still
-holds ITS token — a lock wrongly broken out from under a live owner is
-never collaterally removed a second time. Breaking is by atomic
-``os.rename`` to a breaker-unique name, so of two waiters that both
-observe the same abandoned lock exactly ONE wins the rename (the loser
-gets ENOENT and re-loops); the winner then re-stats the renamed file
-and, if it turns out it stole a FRESH lock (the owner replaced the
-abandoned one in the observe→rename window), restores it via
-``os.link`` (refuses to clobber a newer lock) before re-waiting.
+The kernel drops an ``flock`` when its holder's descriptor closes, so
+an owner that dies mid-build frees the lock at once; no lock is ever
+presumed abandoned. The owner unlinks the lock file before it closes
+the descriptor, so a waiter can end up holding the lock of an unlinked
+file: a lock counts only while the path still names the locked file
+(same device and inode), and a waiter that finds otherwise retries on
+the current file. The release unlinks only under the same check, so an
+owner never removes a lock file another session created at the path.
 
-Residuals (documented, accepted): (1) a session that CACHED the fixture
+Residual (documented, accepted): a session that CACHED the fixture
 path earlier and lazily re-scans it while another session rebuilds can
 still observe the overwrite — that requires the backing testdata to be
-regenerated mid-flight, which invalidates every derived artifact anyway;
-(2) any timeout-based breaker can, by definition, break a LIVE owner
-that stalls past ``timeout`` (600 s vs sub-minute builds) — the
-identity-checked unlink confines the damage to a possible duplicate
-build, never to removing a third session's lock.
+regenerated mid-flight, which invalidates every derived artifact anyway.
 """
 
 from __future__ import annotations
 
+import fcntl
 import os
+import tempfile
 import time
 from typing import Callable
 
@@ -83,81 +78,55 @@ def fixture_once(
         except OSError:
             return False
 
+    def names(fd: int) -> bool:
+        """Does the lock path still name the file ``fd`` has open?"""
+        try:
+            st = os.stat(lock)
+        except FileNotFoundError:
+            return False
+        held = os.fstat(fd)
+        return (st.st_dev, st.st_ino) == (held.st_dev, held.st_ino)
+
     if fresh():
         return path
 
     lock = path + ".lock"
-    token = f"{os.getpid()}.{time.monotonic_ns()}"
     deadline = time.monotonic() + timeout
-
-    def break_stale() -> None:
-        """Atomically steal an apparently-abandoned lock; restore it if
-        the steal turns out to have grabbed a FRESH replacement."""
-        grabbed = f"{lock}.breaking.{token}"
-        try:
-            os.rename(lock, grabbed)  # atomic: exactly one breaker wins
-        except OSError:
-            return  # lost the race (or lock vanished) — re-loop
-        try:
-            still_stale = (time.time() - os.path.getmtime(grabbed)) > timeout
-        except OSError:
-            still_stale = True
-        if not still_stale:
-            # We stole a live owner's fresh lock (replaced in our
-            # observe→rename window). Put it back without clobbering any
-            # newer lock: link() fails on an existing target.
-            try:
-                os.link(grabbed, lock)
-            except OSError:
-                pass  # a newer lock exists; the live owner's unlink is
-                # identity-checked, so nothing else gets removed
-        try:
-            os.unlink(grabbed)
-        except OSError:
-            pass
-
     while True:
+        fd = os.open(lock, os.O_CREAT | os.O_RDWR)
         try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            # another session holds the build; wait for its marker
+            while True:
+                try:
+                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    pass
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"fixture lock never cleared: {lock}")
+                time.sleep(0.2)
+                if fresh():
+                    return path
+            if not names(fd):
+                continue  # a previous owner released and unlinked it
             try:
-                stale = (time.time() - os.path.getmtime(lock)) > timeout
-            except OSError:
-                continue  # lock vanished between open and stat: retry
-            if stale:
-                break_stale()  # abandoned (owner died mid-build)
-                continue
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"fixture lock never cleared: {lock}")
-            time.sleep(0.2)
-            if fresh():
+                if not fresh():  # the prior holder may have built this stamp
+                    try:
+                        os.unlink(done)
+                    except OSError:
+                        pass
+                    build()
+                    os.makedirs(path, exist_ok=True)
+                    tmp_fd, tmp = tempfile.mkstemp(
+                        dir=path, prefix=MARKER + ".tmp."
+                    )
+                    with os.fdopen(tmp_fd, "w") as fh:
+                        fh.write(stamp)
+                    os.replace(tmp, done)
                 return path
-            continue
-        try:
-            os.write(fd, token.encode())
+            finally:
+                # unlink before the close below releases the lock, and
+                # only a file that is still ours
+                if names(fd):
+                    os.unlink(lock)
         finally:
             os.close(fd)
-        try:
-            if not fresh():  # the prior holder may have built this stamp
-                try:
-                    os.unlink(done)
-                except OSError:
-                    pass
-                build()
-                os.makedirs(path, exist_ok=True)
-                tmp = done + f".tmp.{os.getpid()}"
-                with open(tmp, "w") as fh:
-                    fh.write(stamp)
-                os.replace(tmp, done)
-            return path
-        finally:
-            # release only a lock we still own (identity check): a
-            # breaker that wrongly stole ours must not trick us into
-            # removing a THIRD session's lock at the same path
-            try:
-                with open(lock) as fh:
-                    if fh.read() == token:
-                        os.unlink(lock)
-            except OSError:
-                pass

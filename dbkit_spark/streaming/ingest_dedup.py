@@ -34,7 +34,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..llm.cluster import dedup_survivors
 from ..llm.dedup import (
@@ -73,32 +72,32 @@ def ingest_batch(
 
     p = _paths(state_dir)
     first_batch = not os.path.isdir(p["bands"])
+    sh_new = shingle_docs(batch, "text", "doc_id")
+    bands_new = lsh_band_keys(minhash_signatures(sh_new))
     if not first_batch:
-        # a state written with another band-key type would fail the join
-        # mid-job (ANSI) or silently match nothing (non-ANSI)
-        bands_c = spark.read.parquet(p["bands"])
-        found = bands_c.schema["band_key"].dataType
-        if found != T.LongType():
-            raise ValueError(
-                f"incompatible ingest state {state_dir!r}: bands.band_key "
-                f"found {found.simpleString()}, expected "
-                f"{T.LongType().simpleString()}"
-            )
+        state = {t: spark.read.parquet(path) for t, path in p.items()}
+        # a state written with other column types would fail a join
+        # mid-job (ANSI), silently match nothing (non-ANSI) or append
+        # files the next read cannot merge
+        _check_state(
+            state_dir, state, {"docs": batch, "shingles": sh_new, "bands": bands_new}
+        )
 
-    sh_new = shingle_docs(batch, "text", "doc_id").persist()
-    bands_new = lsh_band_keys(minhash_signatures(sh_new)).persist()
+    sh_new.persist()
+    bands_new.persist()
     if first_batch:
         survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
     else:
-        sh_c = spark.read.parquet(p["shingles"])
-        cands, all_sh = _batch_vs_corpus(bands_new, bands_c, sh_new, sh_c)
+        cands, all_sh = _batch_vs_corpus(
+            bands_new, state["bands"], sh_new, state["shingles"]
+        )
         rejected = (
             jaccard_verify(cands, all_sh, threshold)
             .select(F.col("doc_a").alias("doc_id"))
             .distinct()
         )
         # also reject exact id re-ingests (already admitted)
-        already = spark.read.parquet(p["docs"]).select("doc_id")
+        already = state["docs"].select("doc_id")
         fresh = (
             batch.join(rejected, "doc_id", "left_anti")
             .join(already, "doc_id", "left_anti")
@@ -130,6 +129,23 @@ def ingest_batch(
     sh_new.unpersist()
     bands_new.unpersist()
     return n
+
+
+def _check_state(
+    state_dir: str, state: dict[str, DataFrame], appends: dict[str, DataFrame]
+) -> None:
+    """Raise ValueError unless each state table has exactly the column
+    names and types (nullability aside) that this batch appends to it."""
+    for table, df in state.items():
+        found = {f.name: f.dataType.simpleString() for f in df.schema}
+        want = {f.name: f.dataType.simpleString() for f in appends[table].schema}
+        for col in sorted(found.keys() | want.keys()):
+            if found.get(col) != want.get(col):
+                raise ValueError(
+                    f"incompatible ingest state {state_dir!r}: {table}.{col} "
+                    f"found {found.get(col, 'no column')}, expected "
+                    f"{want.get(col, 'no column')}"
+                )
 
 
 def _in_batch_survivors(batch, sh, bands, threshold):

@@ -98,3 +98,44 @@ def test_no_nested_output_columns_anywhere(spark):
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
     assert not offenders, offenders
+
+
+def test_fixture_lock_of_killed_owner_frees_at_once(tmp_path):
+    """An owner killed while it holds the fixture lock leaves the lock
+    file behind, but the kernel drops its ``flock``: the next caller
+    builds at once instead of waiting out ``timeout``."""
+    import os
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    from dbkit_spark.queries._fixtures import MARKER, fixture_once
+
+    path = str(tmp_path / "fix")
+    holder = (
+        "import fcntl, os, sys, time\n"
+        "fd = os.open(sys.argv[1], os.O_CREAT | os.O_RDWR)\n"
+        "fcntl.flock(fd, fcntl.LOCK_EX)\n"
+        "print('locked', flush=True)\n"
+        "time.sleep(600)\n"
+    )
+    child = subprocess.Popen(
+        [sys.executable, "-c", holder, path + ".lock"],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert child.stdout.readline().strip() == "locked"
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait()
+    assert os.path.exists(path + ".lock")
+
+    builds = []
+    t0 = time.monotonic()
+    fixture_once(path, "s1", lambda: builds.append(1), timeout=30.0)
+    assert time.monotonic() - t0 < 10.0
+    assert builds == [1]
+    assert open(os.path.join(path, MARKER)).read() == "s1"
+    assert not os.path.exists(path + ".lock")

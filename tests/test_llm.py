@@ -172,6 +172,21 @@ def test_bmp_ppm_encode_parse_byte_exact():
     commented = b"P6\n# a comment\n4 5\n255\n" + b"\x00" * 60
     assert parse_image_meta(commented) == ("ppm", 4, 5, 24)
     assert parse_image_meta(b"\x89PNG\r\n")[0] == "unknown"
+    # a non-numeric width, height or maxval token is not a PPM header
+    for bad in (b"P6 garbage", b"P6 4 x 255\n", b"P3 4 5 2.5\n"):
+        assert parse_image_meta(bad) == ("unknown", None, None, None)
+
+
+def test_image_pixel_stats_reports_bad_ppm_header_unknown(spark):
+    """A payload whose PPM header holds a non-numeric token degrades to
+    an 'unknown' decoded=false row instead of failing the batch."""
+    from dbkit_spark.llm.multimodal import image_pixel_stats
+
+    one = spark.createDataFrame(
+        [(1, bytearray(b"P6 garbage"))], "doc_id long, payload binary"
+    )
+    r = image_pixel_stats(one).collect()[0]
+    assert (r.doc_id, r.img_format, r.width, r.decoded) == (1, "unknown", None, False)
 
 
 def test_multimodal_plumbing_roundtrip(spark):

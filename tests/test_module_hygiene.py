@@ -113,6 +113,15 @@ def test_multimodal_decode_fallback_and_pcm_shift_written_once():
     assert text.count("{8: -8, 16: 0, 24: 8, 32: 16}") == 1
 
 
+def test_mlmetrics_rank_kernels_written_once():
+    """The statistical tests share one average-rank window, one
+    Poisson-weight ladder and one replicate explode."""
+    text = (PKG / "operators" / "mlmetrics.py").read_text()
+    assert text.count("F.rank()") == 1
+    assert text.count("for k in reversed(range(len(thresholds)))") == 1
+    assert text.count("F.explode(F.sequence(F.lit(1), F.lit(n_replicates)))") == 1
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The two scanners flag an undefined name read in a lambda and in a
     method, and a second top-level binding."""

@@ -446,3 +446,154 @@ def test_kcore_raises_when_rounds_run_out(spark):
     assert k_core(ce, 2).count() == 0
     with pytest.raises(RuntimeError):
         k_core(ce, 2, max_rounds=3).collect()
+
+
+# --- rank kernels of operators/mlmetrics -------------------------------------
+def _avg_ranks(values: list) -> list[float]:
+    """Pure-Python average ranks (ascending; ties share the mean of their
+    1-based rank range)."""
+    order = sorted(range(len(values)), key=lambda i: values[i])
+    ranks = [0.0] * len(values)
+    i = 0
+    while i < len(order):
+        j = i
+        while j + 1 < len(order) and values[order[j + 1]] == values[order[i]]:
+            j += 1
+        for t in range(i, j + 1):
+            ranks[order[t]] = (i + j) / 2.0 + 1.0
+        i = j + 1
+    return ranks
+
+
+def _pearson(xs: list[float], ys: list[float]) -> float:
+    n = len(xs)
+    sx, sy = sum(xs), sum(ys)
+    sxy = sum(x * y for x, y in zip(xs, ys))
+    sxx, syy = sum(x * x for x in xs), sum(y * y for y in ys)
+    return (n * sxy - sx * sy) / ((n * sxx - sx * sx) * (n * syy - sy * sy)) ** 0.5
+
+
+_NULL_CASES = {
+    "spearman_by_group": (
+        "g string, x double, y double",
+        [("g", 1.0, 1.0), ("g", 2.0, 2.0), ("g", 3.0, 3.0)],
+        [("g", 4.0, None), ("g", None, 0.0)],
+        lambda m, df: m.spearman_by_group(df, "g", "x", "y"),
+    ),
+    "mann_whitney_u": (
+        "s string, grp string, v double",
+        [("s", "a", 1.0), ("s", "a", 2.0), ("s", "b", 3.0), ("s", "b", 4.0)],
+        [("s", "b", None)],
+        lambda m, df: m.mann_whitney_u(df, "s", "grp", "v", "a", "b"),
+    ),
+    "kruskal_wallis": (
+        "s string, grp string, v double",
+        [("s", "a", 1.0), ("s", "a", 2.0), ("s", "b", 2.0), ("s", "c", 5.0)],
+        [("s", "a", None), ("s", "c", None)],
+        lambda m, df: m.kruskal_wallis(df, "s", "grp", "v"),
+    ),
+    "average_precision": (
+        "s string, y int, score double",
+        [("s", 1, 0.9), ("s", 0, 0.8), ("s", 1, 0.7), ("s", 0, 0.1)],
+        [("s", 1, None), ("s", 0, None)],
+        lambda m, df: m.average_precision(df, "s", "y", "score"),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_NULL_CASES))
+def test_rank_tests_drop_null_values(spark, case):
+    """A NULL value is not a rank: adding rows whose ranked value is NULL
+    leaves every rank-based statistic unchanged (Spark sorts NULLs
+    first, so a NULL that reached a rank window would shift every
+    rank)."""
+    from dbkit_spark.operators import mlmetrics
+
+    schema, rows, nulls, run = _NULL_CASES[case]
+    clean = run(mlmetrics, spark.createDataFrame(rows, schema)).collect()
+    noisy = run(mlmetrics, spark.createDataFrame(rows + nulls, schema)).collect()
+    assert clean and sorted(map(tuple, noisy)) == sorted(map(tuple, clean))
+
+
+def test_bootstrap_cis_of_one_row_are_its_value(spark):
+    """A 1-row input draws weight 0 in about e^-1 of its replicates; those
+    replicates have no mean and are dropped, and the percentile ranks come
+    from the replicates that remain, so both bootstrap CIs collapse onto
+    the one value."""
+    from dbkit_spark.operators.mlmetrics import (
+        bootstrap_mean_ci,
+        paired_bootstrap_delta,
+    )
+
+    one = spark.createDataFrame([(1, 2.5, 1.0)], "id long, a double, b double")
+    r = bootstrap_mean_ci(one, "a", "id").collect()[0]
+    assert (r["n"], r["ci_lo"], r["ci_hi"]) == (1, 2.5, 2.5)
+    p = paired_bootstrap_delta(one, "a", "b", "id").collect()[0]
+    assert (p["n"], p["delta_ci_lo"], p["delta_ci_hi"]) == (1, 1.5, 1.5)
+    assert p["frac_a_wins"] == 1.0
+
+
+def test_average_rank_tests_match_pure_python(spark):
+    """Seeded tie-heavy cross-check of the four average-rank callers
+    against the pure-Python reference ranks above."""
+    import random
+
+    from dbkit_spark.operators.mlmetrics import (
+        auc_by_group,
+        friedman_test,
+        kendalls_w,
+        spearman_by_group,
+    )
+
+    rnd = random.Random(11)
+    rows = [
+        (f"g{i % 3}", rnd.randrange(2), float(rnd.randrange(5)), float(rnd.randrange(4)))
+        for i in range(90)
+    ]
+    df = spark.createDataFrame(rows, "g string, y int, a double, b double")
+    auc = {r["g"]: r for r in auc_by_group(df, ["g"], "y", "a").collect()}
+    rho = {r["g"]: r["rho"] for r in spearman_by_group(df, "g", "a", "b").collect()}
+    for g in sorted({r[0] for r in rows}):
+        sub = [r for r in rows if r[0] == g]
+        ranks = _avg_ranks([r[2] for r in sub])
+        n_pos = sum(r[1] for r in sub)
+        n_neg = len(sub) - n_pos
+        r_pos = sum(rk for rk, r in zip(ranks, sub) if r[1] == 1)
+        assert auc[g]["auc"] == pytest.approx(
+            (r_pos - n_pos * (n_pos + 1) / 2) / (n_pos * n_neg), abs=1e-12
+        )
+        expect = _pearson(ranks, _avg_ranks([r[3] for r in sub]))
+        assert rho[g] == pytest.approx(expect, abs=2e-6)
+
+    # blocks x members, tie-heavy values: friedman ranks within items,
+    # kendall's W within judges (judge = block, object = member)
+    n_blocks, k = 15, 4
+    vals = {(i, t): float(rnd.randrange(3)) for i in range(n_blocks) for t in range(k)}
+    blocks = spark.createDataFrame(
+        [(i, f"t{t}", v) for (i, t), v in vals.items()], "b long, m string, v double"
+    )
+    per_block = {
+        i: _avg_ranks([vals[(i, t)] for t in range(k)]) for i in range(n_blocks)
+    }
+    rsum = [sum(per_block[i][t] for i in range(n_blocks)) for t in range(k)]
+
+    fr = {r["treatment"]: r for r in friedman_test(blocks, "b", "m", "v").collect()}
+    a1 = sum(x * x for rs in per_block.values() for x in rs)
+    c1 = n_blocks * k * (k + 1) ** 2 / 4
+    dev = sum((rsum[t] - n_blocks * (k + 1) / 2) ** 2 for t in range(k))
+    for t in range(k):
+        assert fr[f"t{t}"]["rank_sum"] == pytest.approx(rsum[t], abs=1e-9)
+        assert fr[f"t{t}"]["chi2_f"] == pytest.approx(
+            (k - 1) * dev / (a1 - c1), abs=2e-6
+        )
+
+    kw = {r["object"]: r for r in kendalls_w(blocks, "b", "m", "v").collect()}
+    ties = 0
+    for i in range(n_blocks):
+        col = [vals[(i, t)] for t in range(k)]
+        ties += sum(col.count(v) ** 3 - col.count(v) for v in set(col))
+    s = sum((rsum[t] - n_blocks * (k + 1) / 2) ** 2 for t in range(k))
+    w = 12 * s / (n_blocks**2 * (k**3 - k) - n_blocks * ties)
+    for t in range(k):
+        assert kw[f"t{t}"]["rank_sum"] == pytest.approx(rsum[t], abs=1e-9)
+        assert kw[f"t{t}"]["w"] == pytest.approx(w, abs=2e-6)

@@ -561,3 +561,31 @@ def test_dedup_ingest_rejects_incompatible_band_key_state(spark, tmp_path):
         ingest_batch(spark, batch, state)
     assert state in str(err.value)
     assert "found string, expected bigint" in str(err.value)
+
+
+def test_dedup_ingest_rejects_incompatible_shingle_state(spark, tmp_path):
+    """The state check covers every state table, not only the band index:
+    a shingle store whose shingle sets were written as strings fails
+    with the state dir, table, column and both types."""
+    import pytest
+
+    from dbkit_spark.streaming.ingest_dedup import ingest_batch
+
+    state = str(tmp_path / "state")
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu"
+    ingest_batch(
+        spark, spark.createDataFrame([(1, text)], "doc_id long, text string"), state
+    )
+    rows = (
+        spark.read.parquet(f"{state}/shingles")
+        .select("doc_id", F.concat_ws(" ", "shingles").alias("shingles"))
+        .collect()
+    )
+    spark.createDataFrame(rows, "doc_id long, shingles string").write.mode(
+        "overwrite"
+    ).parquet(f"{state}/shingles")
+    batch = spark.createDataFrame([(2, text + " nu")], "doc_id long, text string")
+    with pytest.raises(ValueError) as err:
+        ingest_batch(spark, batch, state)
+    assert state in str(err.value)
+    assert "shingles.shingles found string, expected array<string>" in str(err.value)
