@@ -29,6 +29,20 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(F.lower(c), TOKEN_SPLIT_RE), lambda t: t != "")
 
 
+def normalized_words(col: Column | str) -> Column:
+    """The corpus word rule (BPE training, corpus KL): the lowercased
+    text split on whitespace runs, each word stripped to [a-z0-9], empty
+    words dropped — an array column to explode. Stripping every
+    character outside [a-z0-9] and whitespace BEFORE the split yields the
+    same words as stripping each word after it, in one regex pass.
+    SQL equivalent: list_filter(list_transform(string_split_regex(
+    lower(trim(x)), '\\s+'), u -> regexp_replace(u, '[^a-z0-9]', '', 'g')),
+    u -> u <> '')."""
+    c = F.col(col) if isinstance(col, str) else col
+    kept = F.regexp_replace(F.lower(c), r"[^a-z0-9\s]", "")
+    return F.filter(F.split(kept, r"\s+"), lambda w: w != "")
+
+
 def token_count(col: Column | str) -> Column:
     """Whitespace/punct token count (BPE-ish proxy: alnum runs)."""
     return F.size(tokens(col))

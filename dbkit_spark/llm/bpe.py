@@ -36,19 +36,16 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import normalized_words
+
 _END = "▁"  # end-of-word sentinel (SentencePiece-style marker)
 
 
 def word_frequencies(df: DataFrame, text_col: str) -> DataFrame:
-    """(word, cnt) distinct-word table — the one corpus scan. Words are
-    lowercased, stripped to [a-z0-9], empty dropped."""
-    tok = F.explode(
-        F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    ).alias("w")
+    """(word, cnt) distinct-word table — the one corpus scan. Words
+    follow :func:`~dbkit_spark.functions.text.normalized_words`."""
     return (
-        df.select(tok)
-        .select(F.regexp_replace(F.col("w"), "[^a-z0-9]", "").alias("w"))
-        .filter(F.col("w") != "")
+        df.select(F.explode(normalized_words(text_col)).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
     )

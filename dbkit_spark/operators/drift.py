@@ -20,12 +20,24 @@ Cross-engine exactness: edges are rank-selected actual values (no
 interpolation — portable), bucket membership is strict `value > edge`
 counting, and only the final ln-weighted contributions are rounded
 (6dp; ln differs in the last ulp across libms — the q27 rule).
+
+The two-sample rule, stated once: ``_side_counts`` counts both samples
+per key with one tagged union and one aggregate (exact LONG counts for
+every non-NULL key seen on either side, 0 for the side that lacks it),
+and a proportion is ``try_divide`` of a count by its side's total, so
+an EMPTY side yields NULL proportions instead of a division error. PSI
+(``_psi_bins``) floors those at ``floor``; ``wasserstein_1d`` and
+``mauve_frontier`` report the side counts with NULL statistics. The
+CUSUM recursion (``_cusum_walk``) is shared by the batch operator and
+the streaming one in ``streaming/cusum.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions.text import normalized_words
 
 
 def quantile_edges_exact(
@@ -71,6 +83,72 @@ def bucket_by_edges(value: Column, edges: list[float]) -> Column:
     return b.cast("int")
 
 
+def _side_counts(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
+    """(``key``, ``_ca``, ``_cb``): the LONG row counts of ``a`` and ``b``
+    per non-NULL ``key`` seen on either side, 0 for the side without
+    it — one tagged union and one aggregate, no join."""
+    tagged = a.select(key, F.lit(1).alias("_ca"), F.lit(0).alias("_cb")).unionByName(
+        b.select(key, F.lit(0).alias("_ca"), F.lit(1).alias("_cb"))
+    )
+    return (
+        tagged.filter(F.col(key).isNotNull())
+        .groupBy(key)
+        .agg(
+            F.sum("_ca").cast("long").alias("_ca"),
+            F.sum("_cb").cast("long").alias("_cb"),
+        )
+    )
+
+
+def _psi_term(pr: Column, pc: Column) -> Column:
+    """One bin's PSI contribution (pr − pc)·ln(pr/pc) of floored
+    proportions."""
+    return (pr - pc) * F.log(pr / pc)
+
+
+def _psi_bins(counted: DataFrame, groups: list[str], floor: float) -> DataFrame:
+    """PSI from per-bin counts. ``counted`` holds ``groups``, one bin key
+    and the LONG counts ``n_ref``/``n_cur``; each proportion is
+    ``try_divide`` of a count by its side's total within the group,
+    floored at ``floor`` (an empty side floors in every bin; Spark's
+    greatest skips the NULL). Adds p_ref, p_cur and contrib (6dp) and
+    the group's ``psi`` = rounded sum of contrib, repeated per row.
+    Totals re-join as a groups-sized broadcast (with no group: a one-row
+    broadcast cross join)."""
+    on = groups or None
+    tot = counted.groupBy(*groups).agg(
+        F.sum("n_ref").alias("_tr"), F.sum("n_cur").alias("_tc")
+    )
+    with_p = counted.join(F.broadcast(tot), on).select(
+        *counted.columns,
+        F.greatest(F.try_divide(F.col("n_ref"), F.col("_tr")), F.lit(floor)).alias("_pr"),
+        F.greatest(F.try_divide(F.col("n_cur"), F.col("_tc")), F.lit(floor)).alias("_pc"),
+    )
+    per_bin = with_p.select(
+        *counted.columns,
+        F.round("_pr", 6).alias("p_ref"),
+        F.round("_pc", 6).alias("p_cur"),
+        F.round(_psi_term(F.col("_pr"), F.col("_pc")), 6).alias("contrib"),
+    )
+    total = per_bin.groupBy(*groups).agg(F.round(F.sum("contrib"), 6).alias("psi"))
+    return per_bin.join(F.broadcast(total), on).select(*per_bin.columns, "psi")
+
+
+def _cusum_walk(zs, sp: float, sn: float, k: float, h: float):
+    """Two-sided tabular CUSUM over the z sequence ``zs`` from the state
+    (``sp``, ``sn``): per step s+ = max(0, s+ + z − k), s− = max(0,
+    s− − z − k), alarm when either exceeds h. Returns the s+, s− and
+    alarm lists and the final (s+, s−) state."""
+    sps, sns, alarms = [], [], []
+    for z in zs:
+        sp = max(0.0, sp + z - k)
+        sn = max(0.0, sn - z - k)
+        sps.append(sp)
+        sns.append(sn)
+        alarms.append(sp > h or sn > h)
+    return sps, sns, alarms, (sp, sn)
+
+
 def psi_report(
     ref: DataFrame,
     cur: DataFrame,
@@ -82,10 +160,11 @@ def psi_report(
     """Per-bucket PSI decomposition between ``ref`` and ``cur``.
 
     Output: (bucket, n_ref, n_cur, p_ref, p_cur, contrib, psi) — one row
-    per bucket (k rows), proportions and ln-contributions rounded to
-    6dp, ``psi`` the total repeated on every row so a single-row
-    consumer can take any. Empty-side buckets are floored at ``floor``
-    before the ratio so ln stays finite (standard PSI practice).
+    per bucket seen on either side, proportions and ln-contributions
+    rounded to 6dp, ``psi`` the total repeated on every row so a
+    single-row consumer can take any. Proportions floor at ``floor``
+    before the ratio so ln stays finite (standard PSI practice); an
+    empty side floors in every bucket.
 
     ``edges``: pass precomputed bin edges to control the reference
     grid. Default (None) derives them with ``approxQuantile`` — a
@@ -95,8 +174,8 @@ def psi_report(
     ``quantile_edges_exact`` and pass the result in — that is the
     oracle/fixture mode.
 
-    Cost beyond edge derivation: one map-only literal bisection + k-row
-    aggregation per side + an O(k) join.
+    Cost beyond edge derivation: one map-only literal bisection per
+    side, one k-row count aggregate over both, and the k-row PSI reduce.
     """
     if edges is None:
         probs = [i / k for i in range(1, k)]
@@ -107,45 +186,15 @@ def psi_report(
             )
         ]
 
-    def side_counts(df: DataFrame, name: str) -> DataFrame:
-        return (
-            df.filter(F.col(value_col).isNotNull())
-            .select(bucket_by_edges(F.col(value_col), edges).alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count("*").cast("long").alias(name))
+    def buckets(df: DataFrame) -> DataFrame:
+        return df.filter(F.col(value_col).isNotNull()).select(
+            bucket_by_edges(F.col(value_col), edges).alias("bucket")
         )
 
-    rc = side_counts(ref, "n_ref")
-    cc = side_counts(cur, "n_cur")
-    # k buckets: full outer so a bucket absent on one side still reports
-    joined = rc.join(cc, "bucket", "full_outer").select(
-        "bucket",
-        F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-        F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
+    counted = _side_counts(buckets(ref), buckets(cur), "bucket").select(
+        "bucket", F.col("_ca").alias("n_ref"), F.col("_cb").alias("n_cur")
     )
-    tot = joined.agg(
-        F.sum("n_ref").alias("_tr"), F.sum("n_cur").alias("_tc")
-    )
-    with_p = joined.crossJoin(F.broadcast(tot)).select(
-        "bucket",
-        "n_ref",
-        "n_cur",
-        F.greatest(F.col("n_ref") / F.col("_tr"), F.lit(floor)).alias("_pr"),
-        F.greatest(F.col("n_cur") / F.col("_tc"), F.lit(floor)).alias("_pc"),
-    )
-    contrib = F.round(
-        (F.col("_pr") - F.col("_pc")) * F.log(F.col("_pr") / F.col("_pc")), 6
-    )
-    per_bucket = with_p.select(
-        "bucket",
-        "n_ref",
-        "n_cur",
-        F.round("_pr", 6).alias("p_ref"),
-        F.round("_pc", 6).alias("p_cur"),
-        contrib.alias("contrib"),
-    )
-    total = per_bucket.agg(F.round(F.sum("contrib"), 6).alias("psi"))
-    return per_bucket.crossJoin(F.broadcast(total))
+    return _psi_bins(counted, [], floor)
 
 
 def windowed_psi(
@@ -199,8 +248,8 @@ def windowed_psi(
     psi = None
     for i in range(k):
         pr = F.lit(max(float(ref_probs[i]), floor))
-        pc = F.greatest(F.col(f"c{i}") / F.col("n"), F.lit(floor))
-        term = (pr - pc) * F.log(pr / pc)
+        pc = F.greatest(F.try_divide(F.col(f"c{i}"), F.col("n")), F.lit(floor))
+        term = _psi_term(pr, pc)
         psi = term if psi is None else psi + term
     return agg.select(
         F.col("_w.start").alias("window_start"),
@@ -376,17 +425,9 @@ def cusum_scores(
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        sp = sn = 0.0
-        sps, sns, alarms = [], [], []
-        for z in pdf["z"]:
-            sp = max(0.0, sp + z - kk)
-            sn = max(0.0, sn - z - kk)
-            sps.append(sp)
-            sns.append(sn)
-            alarms.append(sp > hh or sn > hh)
-        pdf["s_pos"] = sps
-        pdf["s_neg"] = sns
-        pdf["alarm"] = alarms
+        pdf["s_pos"], pdf["s_neg"], pdf["alarm"], _ = _cusum_walk(
+            pdf["z"], 0.0, 0.0, kk, hh
+        )
         return pdf[[key_col, order_col, "z", "s_pos", "s_neg", "alarm"]]
 
     return zed.groupBy(key_col).applyInPandas(run, out_schema)
@@ -403,45 +444,27 @@ def corpus_kl(
     the symmetric Jensen–Shannon divergence over Laplace-smoothed token
     distributions on the UNION vocabulary.
 
-    Each side is one tokenize+count agg; the vocab join is token-keyed
-    (full outer, fill 0 — no broadcast assumption on the vocabulary);
-    per-token nats terms are 9dp-rounded decimals so the reductions are
+    Words follow ``functions.text.normalized_words``; both sides count
+    in ONE token-keyed ``_side_counts`` aggregate over the union
+    vocabulary (no broadcast assumption on the vocabulary); per-token
+    nats terms are 9dp-rounded decimals so the reductions are
     order-independent. Output: ONE row (vocab, n_a, n_b, kl_ab, kl_ba,
     js) at 6dp (ln is last-ulp engine-dependent — SCALE.md taxonomy)."""
 
-    def counts(df: DataFrame, name: str) -> DataFrame:
-        tok = F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-        ).alias("t")
-        return (
-            df.select(tok)
-            .select(
-                F.regexp_replace(F.col("t"), "[^a-z0-9]", "").alias("t")
-            )
-            .filter(F.col("t") != "")
-            .groupBy("t")
-            .agg(F.count("*").alias(name))
-        )
+    def words(df: DataFrame) -> DataFrame:
+        return df.select(F.explode(normalized_words(text_col)).alias("t"))
 
     dec = "decimal(38,9)"
     s = float(smooth)
-    joined = (
-        counts(df_a, "ca")
-        .join(counts(df_b, "cb"), "t", "full_outer")
-        .select(
-            "t",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
+    joined = _side_counts(words(df_a), words(df_b), "t")
     tot = joined.agg(
         F.count("*").alias("v"),
-        F.sum("ca").alias("na"),
-        F.sum("cb").alias("nb"),
+        F.sum("_ca").alias("na"),
+        F.sum("_cb").alias("nb"),
     )
     j = joined.crossJoin(F.broadcast(tot))
-    p = (F.col("ca") + s) / (F.col("na") + s * F.col("v"))
-    q = (F.col("cb") + s) / (F.col("nb") + s * F.col("v"))
+    p = (F.col("_ca") + s) / (F.col("na") + s * F.col("v"))
+    q = (F.col("_cb") + s) / (F.col("nb") + s * F.col("v"))
     m = (p + q) / 2.0
     agg = j.agg(
         F.max("v").alias("vocab"),
@@ -612,37 +635,27 @@ def wasserstein_1d(
     lead() window, no SinglePartition anywhere). Segment terms
     |F_a−F_b|·gap round at 9dp and decimal-sum, output 6dp.
 
-    Output: one row (n_a, n_b, wasserstein).
+    Output: one row (n_a, n_b, wasserstein); an empty side reports its
+    0 count with a NULL ``wasserstein``.
     """
     from ..operators.prefix import prefix_agg
 
-    va = a.select(F.col(col).cast("double").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
-    vb = b.select(F.col(col).cast("double").alias("v")).filter(
-        F.col("v").isNotNull()
-    )
-    counts = (
-        va.withColumn("_ca", F.lit(1)).withColumn("_cb", F.lit(0))
-        .unionByName(
-            vb.withColumn("_ca", F.lit(0)).withColumn("_cb", F.lit(1))
-        )
-        .groupBy("v")
-        .agg(F.sum("_ca").alias("ca"), F.sum("_cb").alias("cb"))
-        .withColumn("negv", -F.col("v"))
-    )
-    cum_a = prefix_agg(counts, ["v"], "ca", agg="sum", out_col="cum_a")
-    cum_ab = prefix_agg(cum_a, ["v"], "cb", agg="sum", out_col="cum_b")
+    def values(df: DataFrame) -> DataFrame:
+        return df.select(F.col(col).cast("double").alias("v"))
+
+    counts = _side_counts(values(a), values(b), "v").withColumn("negv", -F.col("v"))
+    cum_a = prefix_agg(counts, ["v"], "_ca", agg="sum", out_col="cum_a")
+    cum_ab = prefix_agg(cum_a, ["v"], "_cb", agg="sum", out_col="cum_b")
     with_next = prefix_agg(
         cum_ab, ["negv"], "v", agg="min", inclusive=False, out_col="next_v"
     )
     totals = counts.agg(
-        F.sum("ca").alias("n_a"), F.sum("cb").alias("n_b")
+        F.sum("_ca").alias("n_a"), F.sum("_cb").alias("n_b")
     )
     term = F.round(
         F.abs(
-            F.col("cum_a").cast("double") / F.col("n_a")
-            - F.col("cum_b").cast("double") / F.col("n_b")
+            F.try_divide(F.col("cum_a").cast("double"), F.col("n_a"))
+            - F.try_divide(F.col("cum_b").cast("double"), F.col("n_b"))
         )
         * (F.col("next_v") - F.col("v")),
         9,
@@ -745,11 +758,12 @@ def score_psi_grouped(
     at the top; keep scores normalized upstream).
 
     Plan: one map-side bucket expression + ONE (group, bin, segment)
-    count aggregate + a groups-sized totals re-join (broadcast) — the
-    fact table is read once; adding a group multiplies nothing. Output
-    per (group, bin): n_ref, n_cur, p_ref 6dp, p_cur 6dp, contrib 6dp,
-    psi 6dp (the group total repeated per row, q223 convention; empty
-    cells floored at ``floor`` so ln stays finite).
+    count aggregate + the groups-sized ``_psi_bins`` reduce — the fact
+    table is read once; adding a group multiplies nothing. Output per
+    (group, bin): n_ref, n_cur, p_ref 6dp, p_cur 6dp, contrib 6dp, psi
+    6dp (the group total repeated per row, q223 convention; a group
+    with an empty segment, e.g. a brand-new domain with no baseline
+    rows, floors that segment at ``floor`` in every bin).
     """
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
@@ -772,49 +786,7 @@ def score_psi_grouped(
             .alias("n_cur"),
         )
     )
-    tot = counted.groupBy("grp").agg(
-        F.sum("n_ref").alias("_tr"), F.sum("n_cur").alias("_tc")
-    )
-    with_p = counted.join(F.broadcast(tot), "grp").select(
-        "grp",
-        "bin",
-        "n_ref",
-        "n_cur",
-        # try_divide: a segment can be EMPTY for a group (a brand-new
-        # domain has no baseline rows) — its proportions then floor at
-        # ``floor`` in every bin instead of dividing by zero (Spark's
-        # greatest skips the NULL, same as the oracle's coalesce).
-        F.greatest(
-            F.try_divide(F.col("n_ref"), F.col("_tr")), F.lit(floor)
-        ).alias("_pr"),
-        F.greatest(
-            F.try_divide(F.col("n_cur"), F.col("_tc")), F.lit(floor)
-        ).alias("_pc"),
-    )
-    per_bin = with_p.select(
-        "grp",
-        "bin",
-        "n_ref",
-        "n_cur",
-        F.round("_pr", 6).alias("p_ref"),
-        F.round("_pc", 6).alias("p_cur"),
-        F.round(
-            (F.col("_pr") - F.col("_pc")) * F.log(F.col("_pr") / F.col("_pc")), 6
-        ).alias("contrib"),
-    )
-    totals = per_bin.groupBy("grp").agg(
-        F.round(F.sum("contrib"), 6).alias("psi")
-    )
-    return per_bin.join(F.broadcast(totals), "grp").select(
-        F.col("grp").alias(group_col),
-        "bin",
-        "n_ref",
-        "n_cur",
-        "p_ref",
-        "p_cur",
-        "contrib",
-        "psi",
-    )
+    return _psi_bins(counted, ["grp"], floor).withColumnRenamed("grp", group_col)
 
 
 def mauve_frontier(
@@ -842,33 +814,25 @@ def mauve_frontier(
     P > 0, where R_λ ≥ λP > 0 — finite without smoothing for
     λ ∈ (0,1), which is why the λ grid is OPEN (no 0/1 endpoints).
 
-    Exactness: cell counts exact LONG (ONE label-keyed aggregate per
-    side — the only corpus-sized work); probabilities are single IEEE
-    divisions; per-cell KL terms ln at 9dp ride DECIMAL(25,9) sums
-    over the labels-sized frame; x/y/area 6dp. The trapezoid fold
-    runs over an n_lambdas-sized frame (window over literals — never
-    corpus data).
+    Exactness: cell counts exact LONG (ONE label-keyed ``_side_counts``
+    aggregate over both sides — the only corpus-sized work);
+    probabilities are single IEEE divisions; per-cell KL terms ln at
+    9dp ride DECIMAL(25,9) sums over the labels-sized frame; x/y/area
+    6dp. The trapezoid fold runs over an n_lambdas-sized frame (window
+    over literals — never corpus data).
 
     Output: one row per λ — (lam, kl_q_mix, kl_p_mix, x, y) with
-    (frontier_auc, n_p, n_q, n_cells) repeated via 1-row broadcast.
+    (frontier_auc, n_p, n_q, n_cells) repeated via 1-row broadcast; an
+    empty side reports its 0 count with NULL KL, x, y and AUC.
     """
     if n_lambdas < 3:
         raise ValueError("n_lambdas must be >= 3")
 
-    def hist(df: DataFrame, out: str) -> DataFrame:
-        return df.groupBy(F.col(label_col).alias("cell")).agg(
-            F.count("*").cast("long").alias(out)
-        )
+    def cells_of(df: DataFrame) -> DataFrame:
+        return df.select(F.col(label_col).alias("cell"))
 
-    hp = hist(p_df, "cp")
-    hq = hist(q_df, "cq")
-    cells = (
-        hp.join(hq, "cell", "full_outer")
-        .select(
-            "cell",
-            F.coalesce("cp", F.lit(0)).alias("cp"),
-            F.coalesce("cq", F.lit(0)).alias("cq"),
-        )
+    cells = _side_counts(cells_of(p_df), cells_of(q_df), "cell").select(
+        "cell", F.col("_ca").alias("cp"), F.col("_cb").alias("cq")
     )
     tot = cells.agg(
         F.sum("cp").cast("long").alias("n_p"),
@@ -886,8 +850,8 @@ def mauve_frontier(
     graded = cells.crossJoin(F.broadcast(tot)).select(
         "cell", "cp", "cq", "n_p", "n_q", "n_cells", lam_grid
     )
-    p = F.col("cp") / F.col("n_p")
-    q = F.col("cq") / F.col("n_q")
+    p = F.try_divide(F.col("cp"), F.col("n_p"))
+    q = F.try_divide(F.col("cq"), F.col("n_q"))
     r = F.col("lam") * p + (1 - F.col("lam")) * q
     dec = "decimal(25,9)"
     klq_term = F.when(
@@ -897,8 +861,8 @@ def mauve_frontier(
         F.col("cp") > 0, F.round(p * F.log(p / r), 9).cast(dec)
     )
     per_lam = graded.groupBy("lam").agg(
-        F.coalesce(F.sum(klq_term), F.lit(0).cast(dec)).alias("_klq"),
-        F.coalesce(F.sum(klp_term), F.lit(0).cast(dec)).alias("_klp"),
+        F.sum(klq_term).alias("_klq"),
+        F.sum(klp_term).alias("_klp"),
         F.first("n_p").alias("n_p"),
         F.first("n_q").alias("n_q"),
         F.first("n_cells").alias("n_cells"),
@@ -928,8 +892,7 @@ def mauve_frontier(
         ).cast("decimal(25,9)"),
     )
     auc = with_prev.agg(
-        F.round(F.coalesce(F.sum(trap), F.lit(0).cast("decimal(25,9)"))
-                .cast("double"), 6).alias("frontier_auc")
+        F.round(F.sum(trap).cast("double"), 6).alias("frontier_auc")
     )
     return (
         per_lam.crossJoin(F.broadcast(auc))

@@ -785,7 +785,9 @@ def mann_whitney_u(
     sigma² = (n_a·n_b/12)·((n+1) - Σ(t³-t)/(n(n-1))).
 
     Same engine contract as welch_ttest: the statistic, not the
-    p-value (the normal CDF lookup is a client-side table).
+    p-value (the normal CDF lookup is a client-side table). A segment
+    with an empty group reports its counts with NULL u_stat and z; an
+    all-tied segment (σ² = 0) has a NULL z.
 
     Scale + portability: the ``_value_scan`` of each segment's DISTINCT
     values (tied corpora compress massively; segments rank in
@@ -821,17 +823,18 @@ def mann_whitney_u(
     n_a = F.col("n_a").cast("double")
     n_b = F.col("n_b").cast("double")
     n = n_a + n_b
-    u = (F.col("r2a").cast("double") - n_a * (n_a + 1)) / 2.0
+    ok = (F.col("n_a") > 0) & (F.col("n_b") > 0)
+    u = F.when(ok, (F.col("r2a").cast("double") - n_a * (n_a + 1)) / 2.0)
     sigma2 = (
         n_a * n_b / 12.0
-        * ((n + 1) - F.col("tie_term").cast("double") / (n * (n - 1)))
+        * ((n + 1) - F.try_divide(F.col("tie_term").cast("double"), n * (n - 1)))
     )
     return agg.select(
         segment_col,
         "n_a",
         "n_b",
         u.alias("u_stat"),
-        ((u - n_a * n_b / 2.0) / F.sqrt(sigma2)).alias("z"),
+        F.try_divide(u - n_a * n_b / 2.0, F.sqrt(sigma2)).alias("z"),
     )
 
 
@@ -1181,9 +1184,10 @@ def average_precision(
     n_pos(s)·cumTP(s)/cumTot(s); their per-segment float sum is the
     only order-sensitive reduce → rounded to 6dp. best_f1 uses the
     identity F1_t = 2·TP_t/(cumTot_t + n_pos): a MAX of exact-operand
-    IEEE ratios, order-independent, so it ships unrounded.
+    IEEE ratios, order-independent, so it ships unrounded. Rows with a
+    NULL label are dropped, as in :func:`auc_by_group`.
     """
-    sv = df.select(
+    sv = df.filter(F.col(label_col).isNotNull()).select(
         segment_col,
         score_col,
         F.lit(1).alias("n_s"),
@@ -3187,7 +3191,8 @@ def delong_auc_test(
 
     Output: ONE row — (n_pos, n_neg, auc_a, auc_b, delta_auc, se, z,
     p_two_sided); zero variance (e.g. identical scorers) degrades
-    z/p to NULL.
+    z/p to NULL, and an input without positives or without negatives
+    reports its counts with every statistic NULL.
     """
     y = F.col(label_col).cast("int")
     base = df.select(
@@ -3212,14 +3217,18 @@ def delong_auc_test(
         return _value_scan(per_v, [], "_v", ["_pv", "_nv"]).select(
             F.col("_v").alias(f"{out}_v"),
             F.round(
-                (2 * F.col("_nv_below") + F.col("_nv"))
-                / (F.lit(2.0) * F.col("_nv_all")),
+                F.try_divide(
+                    2 * F.col("_nv_below") + F.col("_nv"),
+                    F.lit(2.0) * F.col("_nv_all"),
+                ),
                 9,
             ).alias(f"{out}_p10"),
             F.round(
-                (2 * (F.col("_pv_all") - F.col("_pv_below") - F.col("_pv"))
-                 + F.col("_pv"))
-                / (F.lit(2.0) * F.col("_pv_all")),
+                F.try_divide(
+                    2 * (F.col("_pv_all") - F.col("_pv_below") - F.col("_pv"))
+                    + F.col("_pv"),
+                    F.lit(2.0) * F.col("_pv_all"),
+                ),
                 9,
             ).alias(f"{out}_p01"),
         )
@@ -3283,8 +3292,8 @@ def delong_auc_test(
             / (nn - 1),
         )
 
-    auc_a = F.col("_sap").cast("double") / F.col("_np")
-    auc_b = F.col("_sbp").cast("double") / F.col("_np")
+    auc_a = F.try_divide(F.col("_sap").cast("double"), F.col("_np"))
+    auc_b = F.try_divide(F.col("_sbp").cast("double"), F.col("_np"))
     var = (
         cov("_sap", "_sap", "_saap", "_np")
         + cov("_sbp", "_sbp", "_sbbp", "_np")
@@ -4095,7 +4104,8 @@ def ks_two_sample(
     """
     grid = _ks_grid(df, group_col, value_col, group_a, group_b)
     diff = F.abs(
-        F.col("_cuma") / F.col("_na") - F.col("_cumb") / F.col("_nb")
+        F.try_divide(F.col("_cuma"), F.col("_na"))
+        - F.try_divide(F.col("_cumb"), F.col("_nb"))
     )
     agg = grid.agg(
         F.max(F.round(diff, 9)).alias("_d"),
@@ -4107,7 +4117,7 @@ def ks_two_sample(
     ne = F.col("n_a").cast("double") * F.col("n_b") / (
         F.col("n_a") + F.col("n_b")
     )
-    lam = (F.sqrt(ne) + 0.12 + 0.11 / F.sqrt(ne)) * d
+    lam = (F.sqrt(ne) + 0.12 + F.try_divide(F.lit(0.11), F.sqrt(ne))) * d
     return agg.select(
         "n_a",
         "n_b",
@@ -4134,10 +4144,13 @@ def cvm_two_sample(
     q471 carries the p story).
 
     Same distinct-value grid as ks_two_sample; squared-gap terms ride
-    9dp DECIMAL. Output ONE row: (n_a, n_b, t_stat).
+    9dp DECIMAL. Output ONE row: (n_a, n_b, t_stat); either side empty
+    degrades t to NULL.
     """
     grid = _ks_grid(df, group_col, value_col, group_a, group_b)
-    gap = F.col("_cuma") / F.col("_na") - F.col("_cumb") / F.col("_nb")
+    gap = F.try_divide(F.col("_cuma"), F.col("_na")) - F.try_divide(
+        F.col("_cumb"), F.col("_nb")
+    )
     dec = "decimal(25,9)"
     agg = grid.agg(
         F.sum(

@@ -6,7 +6,8 @@ the monitoring deployment needs the same recursion over an UNBOUNDED
 stream: per-key (s+, s−) state carried across micro-batches, each new
 event advancing the recursion exactly as a batch replay would. Same
 accumulation, two runtimes — the batch/stream parity discipline of the
-session-window and windowed-PSI families (SURVEY §2.9).
+session-window and windowed-PSI families (SURVEY §2.9); both runtimes
+step through the one recursion ``drift._cusum_walk``.
 
 Contract: the input stream already carries the standardized ``z``
 column (in production a stream-static broadcast join against a
@@ -25,6 +26,8 @@ from typing import Any, Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.drift import _cusum_walk
 
 
 def streaming_cusum(
@@ -53,14 +56,8 @@ def streaming_cusum(
         sp, sn = state.get if state.exists else (0.0, 0.0)
         pdf = pd.concat(list(pdfs), ignore_index=True)
         pdf = pdf.sort_values(order_col).reset_index(drop=True)
-        sps, sns, alarms = [], [], []
-        for z in pdf["z"]:
-            sp = max(0.0, sp + z - kk)
-            sn = max(0.0, sn - z - kk)
-            sps.append(sp)
-            sns.append(sn)
-            alarms.append(sp > hh or sn > hh)
-        state.update((sp, sn))
+        sps, sns, alarms, carried = _cusum_walk(pdf["z"], sp, sn, kk, hh)
+        state.update(carried)
         yield pd.DataFrame(
             {
                 key_col: [key[0]] * len(pdf),

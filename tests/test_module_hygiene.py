@@ -122,6 +122,16 @@ def test_mlmetrics_rank_kernels_written_once():
     assert text.count("F.explode(F.sequence(F.lit(1), F.lit(n_replicates)))") == 1
 
 
+def test_drift_two_sample_kernels_written_once():
+    """The drift monitors count two samples with one tagged union (no
+    ``full_outer`` join), and the batch and streaming CUSUM share one
+    recursion step."""
+    drift = (PKG / "operators" / "drift.py").read_text()
+    assert "full_outer" not in drift
+    text = drift + (PKG / "streaming" / "cusum.py").read_text()
+    assert len(re.findall(r"max\(0\.0, *s\w* *[+-] *z", text)) == 2  # s+ and s-, once
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The two scanners flag an undefined name read in a lambda and in a
     method, and a second top-level binding."""

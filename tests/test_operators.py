@@ -597,3 +597,165 @@ def test_average_rank_tests_match_pure_python(spark):
     for t in range(k):
         assert kw[f"t{t}"]["rank_sum"] == pytest.approx(rsum[t], abs=1e-9)
         assert kw[f"t{t}"]["w"] == pytest.approx(w, abs=2e-6)
+
+
+# --- two-sample empty-side rule ----------------------------------------------
+def _psi(side):
+    from dbkit_spark.operators.drift import psi_report
+
+    def run(spark):
+        vals = spark.createDataFrame([(0.5,), (1.5,), (1.7,), (9.0,)], "v double")
+        empty = vals.limit(0)
+        ref, cur = (empty, vals) if side == "ref" else (vals, empty)
+        return psi_report(ref, cur, "v", edges=[1.0, 2.0]).orderBy("bucket")
+
+    return run
+
+
+def _wasserstein(spark):
+    from dbkit_spark.operators.drift import wasserstein_1d
+
+    a = spark.createDataFrame([(1.0,), (2.0,), (4.0,)], "x double")
+    return wasserstein_1d(a, a.limit(0), "x")
+
+
+def _mauve(spark):
+    from dbkit_spark.operators.drift import mauve_frontier
+
+    p = spark.createDataFrame([(0,), (1,), (1,), (2,)], "label int")
+    return mauve_frontier(p, p.limit(0), "label")
+
+
+_EMPTY_SIDE_CASES = {
+    "psi_ref_empty": (
+        _psi("ref"),
+        {"n_ref": 0, "p_ref": 1e-06},
+        ["psi", "contrib", "p_cur"],
+    ),
+    "psi_cur_empty": (
+        _psi("cur"),
+        {"n_cur": 0, "p_cur": 1e-06},
+        ["psi", "contrib", "p_ref"],
+    ),
+    "wasserstein_1d": (_wasserstein, {"n_a": 3, "n_b": 0, "wasserstein": None}, []),
+    "mauve_frontier": (
+        _mauve,
+        {
+            "n_p": 4,
+            "n_q": 0,
+            "kl_q_mix": None,
+            "kl_p_mix": None,
+            "x": None,
+            "y": None,
+            "frontier_auc": None,
+        },
+        [],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_EMPTY_SIDE_CASES))
+def test_drift_empty_side_degrades(spark, case):
+    """An empty sample is counted, not divided by: PSI floors the empty
+    side's proportion in every bucket and stays finite; Wasserstein and
+    the MAUVE frontier report the side counts with NULL statistics."""
+    import math
+
+    run, expect, finite = _EMPTY_SIDE_CASES[case]
+    rows = run(spark).collect()
+    assert rows
+    for r in rows:
+        assert {c: r[c] for c in expect} == expect
+        assert all(math.isfinite(r[c]) for c in finite)
+    if case.startswith("psi"):
+        assert [r["bucket"] for r in rows] == [0, 1, 2]
+        assert rows[0]["psi"] > 0
+
+
+_TWO_SAMPLE_EMPTY_CASES = {
+    "ks_two_sample": (
+        "g string, v double",
+        [("a", 1.0), ("a", 2.0)],
+        lambda m, df: m.ks_two_sample(df, "g", "v", "a", "b"),
+        {"n_a": 2, "n_b": 0, "d_stat": None, "ks_lambda": None, "p_value": None},
+    ),
+    "cvm_two_sample": (
+        "g string, v double",
+        [("a", 1.0), ("a", 2.0)],
+        lambda m, df: m.cvm_two_sample(df, "g", "v", "a", "b"),
+        {"n_a": 2, "n_b": 0, "t_stat": None},
+    ),
+    "mann_whitney_u_no_b": (
+        "s string, grp string, v double",
+        [("s", "a", 1.0), ("s", "a", 2.0)],
+        lambda m, df: m.mann_whitney_u(df, "s", "grp", "v", "a", "b"),
+        {"n_a": 2, "n_b": 0, "u_stat": None, "z": None},
+    ),
+    "mann_whitney_u_one_row": (
+        "s string, grp string, v double",
+        [("s", "a", 1.0)],
+        lambda m, df: m.mann_whitney_u(df, "s", "grp", "v", "a", "b"),
+        {"n_a": 1, "n_b": 0, "u_stat": None, "z": None},
+    ),
+    "mann_whitney_u_all_tied": (
+        "s string, grp string, v double",
+        [("s", "a", 1.0), ("s", "b", 1.0)],
+        lambda m, df: m.mann_whitney_u(df, "s", "grp", "v", "a", "b"),
+        {"n_a": 1, "n_b": 1, "u_stat": 0.5, "z": None},
+    ),
+    "delong_auc_test": (
+        "y int, a double, b double",
+        [(1, 0.9, 0.8), (1, 0.3, 0.4)],
+        lambda m, df: m.delong_auc_test(df, "y", "a", "b"),
+        {
+            "n_pos": 2,
+            "n_neg": 0,
+            "auc_a": None,
+            "auc_b": None,
+            "delta_auc": None,
+            "se": None,
+            "z": None,
+            "p_two_sided": None,
+        },
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_TWO_SAMPLE_EMPTY_CASES))
+def test_two_sample_tests_degrade_on_empty_side(spark, case):
+    """A two-sample test with an empty side (or no spread) reports its
+    counts and a NULL statistic, z and p instead of dividing by zero."""
+    from dbkit_spark.operators import mlmetrics
+
+    schema, rows, run, expect = _TWO_SAMPLE_EMPTY_CASES[case]
+    (r,) = run(mlmetrics, spark.createDataFrame(rows, schema)).collect()
+    assert {c: r[c] for c in expect} == expect
+
+
+def test_average_precision_drops_null_labels(spark):
+    """A NULL label is neither a positive nor a negative."""
+    from dbkit_spark.operators.mlmetrics import average_precision
+
+    rows = [("s", 1, 0.9), ("s", 0, 0.5)]
+    df = spark.createDataFrame(rows + [("s", None, 0.7)], "s string, y int, score double")
+    (r,) = average_precision(df, "s", "y", "score").collect()
+    assert (r["n_pos"], r["n_neg"], r["avg_precision"]) == (1, 1, 1.0)
+
+
+def test_normalized_words_matches_per_word_rule(spark):
+    """The one-pass word rule equals splitting lower(trim(text)) on
+    whitespace runs and stripping each word to [a-z0-9]."""
+    import random
+    import re
+
+    from dbkit_spark.functions.text import normalized_words
+
+    rnd = random.Random(5)
+    alphabet = "abZ09 \t\n-.,'!é_"
+    texts = ["".join(rnd.choice(alphabet) for _ in range(rnd.randrange(12))) for _ in range(300)]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)] + [(300, None)], "i int, t string")
+    got = {r["i"]: r["w"] for r in df.select("i", normalized_words("t").alias("w")).collect()}
+    for i, t in enumerate(texts):
+        want = [re.sub("[^a-z0-9]", "", u) for u in re.split(r"\s+", t.lower().strip(" "))]
+        assert got[i] == [u for u in want if u], repr(t)
+    assert got[300] is None
