@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.iterate import checkpoint_and_release, iterate_until_fixpoint
+
 # assign_clusters broadcast cap for the component table (rows; two int64
 # columns ≈ 16 B/row, but the BUILT HashedRelation is several times that
 # and is collected through the driver). 2M rows keeps the built
@@ -70,8 +72,6 @@ def connected_components(
     inflate per-round message volume — so the flag is purely a
     performance contract (guide §2.4: a ``distinct`` on already-unique
     data is an accidental shuffle)."""
-    from ..operators.iterate import iterate_until_fixpoint
-
     fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
     rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     # Persist the edge list ALREADY HASH-PARTITIONED on src, the key
@@ -420,11 +420,7 @@ def density_clusters(
     out = core_labels.withColumn("role", F.lit("core")).unionByName(
         border.withColumn("role", F.lit("border"))
     )
-    # metadata-sized next to the corpus; materialize and release the
-    # persisted edge list (the triangle_stats discipline)
-    out = out.localCheckpoint(eager=True)
-    edges.unpersist()
-    return out
+    return checkpoint_and_release(out, edges)
 
 
 def connected_components_contracting(
@@ -470,8 +466,6 @@ def connected_components_contracting(
     seeded with self-pairs) and convergence here on a path graph whose
     diameter exceeds the plain loop's max_iter.
     """
-    from ..operators.iterate import iterate_until_fixpoint
-
     def sym(e: DataFrame) -> DataFrame:
         return e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

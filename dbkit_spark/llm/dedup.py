@@ -1,6 +1,6 @@
 """Deduplication operators over document corpora (SURVEY.md §2.11).
 
-Four tiers, all pure DataFrame ops (JVM-side, shuffle-aware):
+Seven families, all pure DataFrame ops (JVM-side, shuffle-aware):
 
 - **exact**: sha256 of normalized text → groupBy → deterministic survivor.
   One shuffle on the hash; at 100 TB this is the cheapest pass and runs
@@ -8,12 +8,25 @@ Four tiers, all pure DataFrame ops (JVM-side, shuffle-aware):
 - **MinHash + LSH banding**: word-shingles → K portable min-hashes →
   B bands of R rows → band-bucket equi-join for candidates → exact
   Jaccard verify. Cost: candidates shuffle on band keys (tiny vs n²);
-  the verify join touches only candidate pairs. K/B/R tune the S-curve.
+  the verify join touches only candidate pairs. K/B/R tune the S-curve
+  (``minhash_tune``); ``minhash_incremental_pairs`` joins a new batch
+  against the corpus bands.
 - **SimHash**: per-token md5-derived ±1 votes over SIMHASH_BITS bit
-  positions → signature string; near-dups share signatures within small
-  Hamming distance (bucket by signature prefix at scale).
+  positions → signature string; pigeonhole bands find every pair within
+  a small Hamming distance.
 - **n-gram Jaccard (exact)**: all-pairs via shingle-inverted-index join —
   the O(candidate²) verify baseline; use only post-LSH or on small sets.
+- **prefix filter (exact)**: the same pairs as n-gram Jaccard from a
+  rarest-first prefix index (AllPairs/ppjoin).
+- **containment**: directed doc-in-doc scores over a df-capped index.
+- **spans**: duplicated token spans corpus-wide, and their removal.
+
+Shared kernels, written once: ``_key_pairs`` (the ``doc_a < doc_b``
+self-join of a keyed table, also used by the image near-dup operator in
+``multimodal``), ``_pair_sides`` (per-doc columns joined onto both ends
+of a pair), ``_shingle_images`` (the 64-bit shingle image every index
+and verify works on), and ``operators.iterate.checkpoint_and_release``
+for the operators that persist intermediates.
 
 Hashes are md5-based (not Spark's xxhash) so every step is bit-for-bit
 reproducible in ANSI SQL — the DuckDB oracles mirror these pipelines
@@ -21,13 +34,15 @@ exactly. md5 costs more than xxhash64 but stays JVM-side and vectorized;
 swap `_portable_hash` for `F.xxhash64` when cross-engine replay is not
 required.
 """
-
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_hash, shingles_from_tokens, tokens
+from ..operators.iterate import checkpoint_and_release
 from ._guards import DEFAULT_MAX_ROWS, require_small
 
 # LSH parameters: K = NUM_BANDS * BAND_ROWS minhashes.
@@ -48,6 +63,47 @@ SIMHASH_BITS = 60
 MINHASH_PRIME = 281474976710597  # largest prime < 2^48
 MINHASH_A = [3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47, 53, 59]
 MINHASH_B = [1000003 * i + 12345 for i in range(16)]
+
+
+def _shingle_images(shingles: Column | str) -> Column:
+    """The distinct 64-bit ``xxhash64`` images of a shingle array: the
+    one domain every index, candidate join and verify intersection in
+    this module works on, so a prefix filter stays complete for exactly
+    the pairs the verify can pass."""
+    return F.array_distinct(F.transform(shingles, lambda s: F.xxhash64(s)))
+
+
+def _sides(
+    df: DataFrame, side: str, renamed: Sequence[str], kept: Sequence[str] = ()
+) -> DataFrame:
+    """``df``'s ``doc_id`` as ``doc_<side>``, ``kept`` as they are, and
+    each of ``renamed`` as ``<c>_<side>``."""
+    return df.select(
+        F.col("doc_id").alias(f"doc_{side}"),
+        *kept,
+        *[F.col(c).alias(f"{c}_{side}") for c in renamed],
+    )
+
+
+def _key_pairs(index: DataFrame, key: str, carry: Sequence[str] = ()) -> DataFrame:
+    """The ``doc_a < doc_b`` rows of a ``(doc_id, key, carry…)`` table
+    whose two docs share ``key``: one equi-join of the table with itself,
+    so candidates shuffle on the key and never form the n² cross
+    product. Each carried column ``c`` comes out as ``c_a``/``c_b``."""
+    a = _sides(index, "a", carry, [key])
+    b = _sides(index, "b", carry, [key])
+    return a.join(b, key).filter(F.col("doc_a") < F.col("doc_b"))
+
+
+def _pair_sides(pairs: DataFrame, per_doc: DataFrame) -> DataFrame:
+    """``pairs`` with each non-id column ``c`` of ``per_doc`` (keyed by
+    ``doc_id``) joined on as ``c_a`` by doc_a, then ``c_b`` by doc_b. The
+    pairs stay the left side of both joins, which lets AQE broadcast
+    them when they are the small side."""
+    cols = [c for c in per_doc.columns if c != "doc_id"]
+    return pairs.join(_sides(per_doc, "a", cols), "doc_a").join(
+        _sides(per_doc, "b", cols), "doc_b"
+    )
 
 
 def exact_dedup(
@@ -173,15 +229,8 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     reps: join+persist 2.94 s vs 3.86 s median — the codegen'd hash
     join over cached fixed-width rows beats the object-hash
     aggregation + nested-lambda pair expansion."""
-    band_keys = band_keys.persist()
-    a = band_keys.select(F.col("doc_id").alias("doc_a"), "band_key")
-    b = band_keys.select(F.col("doc_id").alias("doc_b"), "band_key")
-    return (
-        a.join(b, "band_key")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    pairs = _key_pairs(band_keys.persist(), "band_key")
+    return pairs.select("doc_a", "doc_b").distinct()
 
 
 def jaccard_verify(
@@ -189,41 +238,30 @@ def jaccard_verify(
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs; emits (doc_a, doc_b, jaccard).
 
-    The per-pair set intersection runs over 64-bit ``xxhash64`` images
-    of the shingles, not the shingle strings (OPTIMIZATION_r15, guide
-    §4.2 spirit at the JVM level: the intersect's hash-set build/probe
-    dominated the verify stage — hashing/equality on fixed-width longs
-    instead of ~10-word strings cut the verify stage's CPU ~3x at
-    sf0.1, and the joined row narrows by the same factor). Set SIZES
-    are taken from the original string arrays before hashing, so the
-    union term is exact even if two shingles of one doc collided; a
-    collision can perturb the distinct-hash intersection in either
+    The per-pair set intersection runs over the 64-bit shingle images
+    (``_shingle_images``), not the shingle strings (OPTIMIZATION_r15,
+    guide §4.2 spirit at the JVM level: the intersect's hash-set
+    build/probe dominated the verify stage — hashing/equality on
+    fixed-width longs instead of ~10-word strings cut the verify stage's
+    CPU ~3x at sf0.1, and the joined row narrows by the same factor).
+    Set SIZES are taken from the original string arrays before hashing,
+    so the union term is exact even if two shingles of one doc collided;
+    a collision can perturb the distinct-hash intersection in either
     direction (an inter-doc collision adds one; an intra-doc collision
     whose shared image also appears in the other doc collapses two
     shared shingles into one), with probability ~(shingles/doc)²/2⁶⁴
-    per pair either way. Results on the
-    deterministic fixtures are bit-identical (q40/q87/q88/q112/q42
-    oracles re-verified at all three SFs)."""
-    hashed = shingled.select(
+    per pair either way. Results on the deterministic fixtures are
+    bit-identical (q40/q87/q88/q112/q42 oracles re-verified at all
+    three SFs)."""
+    per_doc = shingled.select(
         "doc_id",
-        F.size("shingles").alias("__sz"),
-        F.transform("shingles", lambda s: F.xxhash64(s)).alias("__hs"),
+        F.size("shingles").alias("sz"),
+        _shingle_images("shingles").alias("hs"),
     )
-    sa = hashed.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("__sz").alias("za"),
-        F.col("__hs").alias("sa"),
-    )
-    sb = hashed.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("__sz").alias("zb"),
-        F.col("__hs").alias("sb"),
-    )
-    inter = F.size(F.array_intersect("sa", "sb"))
-    union = F.col("za") + F.col("zb") - inter
+    inter = F.size(F.array_intersect("hs_a", "hs_b"))
+    union = F.col("sz_a") + F.col("sz_b") - inter
     return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _pair_sides(candidates, per_doc)
         .select(
             "doc_a",
             "doc_b",
@@ -264,12 +302,10 @@ def minhash_near_dup_pairs(
     cache then trades 2 recompute scans for one in-memory write+read
     during that single materialization — measured a ~0.4 s edge at
     sf0.1, within the host band but consistently signed). In this mode
-    the PAIR SET is eagerly localCheckpoint-ed so the shingle cache and
-    ``lsh_candidate_pairs``' band-key cache can be released before
-    returning — without that, no caller could ever unpersist them and
-    each invocation would pin them for the session (the graph.py
-    ADVICE-r9 lesson); the eager materialization is exactly the work the
-    caller's own barrier was about to do anyway. Callers: q40, q87 and
+    the pair set goes through ``checkpoint_and_release``, which frees
+    the shingle cache and ``lsh_candidate_pairs``' band-key cache; the
+    eager materialization is exactly the work the caller's own barrier
+    was about to do anyway. Callers: q40, q87 and
     q88 pass True (q40 since OPTIMIZATION_r15: with the split scan the
     cache fills in parallel and saves the verify's two extra scans).
     The default False keeps the result fully lazy for callers that fold
@@ -284,11 +320,7 @@ def minhash_near_dup_pairs(
     pairs = jaccard_verify(lsh_candidate_pairs(bands), shingled, threshold)
     if not persist_shingles:
         return pairs
-    try:
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        bands.unpersist()  # persisted by lsh_candidate_pairs
-        shingled.unpersist()
+    return checkpoint_and_release(pairs, bands, shingled)
 
 
 def simhash_signatures(
@@ -398,16 +430,9 @@ def simhash_candidate_pairs(
     band_rows = sigs.select(
         "doc_id", "simhash", F.explode(F.array(*bands)).alias("bk")
     ).persist()
-    a = band_rows.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"), "bk"
-    )
-    b_ = band_rows.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"), "bk"
-    )
     cands = (
-        a.join(b_, "bk")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "sig_a", "doc_b", "sig_b")
+        _key_pairs(band_rows, "bk", ["simhash"])
+        .select("doc_a", "simhash_a", "doc_b", "simhash_b")
         .distinct()
     )
     # exact Hamming distance: XOR 30-bit integer chunks and popcount
@@ -416,14 +441,15 @@ def simhash_candidate_pairs(
     hamming = F.lit(0)
     for start in range(1, bits + 1, chunk_w):
         w = min(chunk_w, bits - start + 1)
-        ca = F.conv(F.substring("sig_a", start, w), 2, 10).cast("long")
-        cb = F.conv(F.substring("sig_b", start, w), 2, 10).cast("long")
+        ca = F.conv(F.substring("simhash_a", start, w), 2, 10).cast("long")
+        cb = F.conv(F.substring("simhash_b", start, w), 2, 10).cast("long")
         hamming = hamming + F.bit_count(ca.bitwiseXOR(cb))
-    return (
+    pairs = (
         cands.withColumn("hamming", hamming.cast("long"))
         .filter(F.col("hamming") <= max_distance)
         .select("doc_a", "doc_b", "hamming")
     )
+    return checkpoint_and_release(pairs, band_rows)
 
 
 def ngram_jaccard_pairs(
@@ -445,36 +471,18 @@ def ngram_jaccard_pairs(
     pairs``. Pass ``max_rows=None`` to force the quadratic plan.
 
     The shingle set feeds the inverted index and both verify-join sides,
-    so it is persisted; the verified pair set is eagerly
-    localCheckpoint-ed and the shingle cache released before returning
-    (the ``minhash_incremental_pairs`` rule: no caller can reach the
-    shingle frame to unpersist it)."""
+    so it is persisted and released through ``checkpoint_and_release``."""
     require_small(docs, max_rows, "ngram_jaccard_pairs", "jaccard_prefix_filter_pairs")
     shingled = shingle_docs(docs, text_col, id_col).persist()
-    # inverted index on xxhash64 images, not shingle strings — the same
-    # §2.3 narrowing as jaccard_prefix_filter_pairs (candidates are
-    # complete for every pair the image-based verify can pass; collision
-    # odds and oracle receipts documented there and on jaccard_verify)
+    # inverted index on the verify's shingle images, not shingle strings
+    # — the same §2.3 narrowing as jaccard_prefix_filter_pairs
     inv = shingled.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
-        ).alias("shingle"),
+        "doc_id", F.explode(_shingle_images("shingles")).alias("shingle")
     )
-    a = inv.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = inv.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cands = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    cands = _key_pairs(inv, "shingle").select("doc_a", "doc_b").distinct()
+    return checkpoint_and_release(
+        jaccard_verify(cands, shingled, threshold), shingled
     )
-    try:
-        return jaccard_verify(cands, shingled, threshold).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shingled.unpersist()
 
 
 def minhash_incremental_pairs(
@@ -495,12 +503,8 @@ def minhash_incremental_pairs(
 
     Cache lifecycle: both shingle sets are persisted (each feeds its
     signatures and the verify), and ``lsh_candidate_pairs`` persists
-    the batch's band keys. The verified pair set is eagerly
-    localCheckpoint-ed and all three caches are released before
-    returning — the ``minhash_near_dup_pairs(persist_shingles=True)``
-    rule: no caller can reach those frames to unpersist them, so
-    without it every call would pin them for the session. A
-    long-running ingest driver should still materialize the corpus
+    the batch's band keys; ``checkpoint_and_release`` frees all three.
+    A long-running ingest driver should still materialize the corpus
     bands/shingles to storage once (write_bucketed on band_key) rather
     than re-shingle the corpus per batch.
     """
@@ -510,14 +514,9 @@ def minhash_incremental_pairs(
     bands_n = lsh_band_keys(minhash_signatures(sh_new))
     cross, all_shingles = _batch_vs_corpus(bands_n, bands_c, sh_new, sh_corpus)
     cands = cross.unionByName(lsh_candidate_pairs(bands_n)).distinct()
-    try:
-        return jaccard_verify(cands, all_shingles, threshold).localCheckpoint(
-            eager=True
-        )
-    finally:
-        bands_n.unpersist()  # persisted by lsh_candidate_pairs
-        sh_new.unpersist()
-        sh_corpus.unpersist()
+    return checkpoint_and_release(
+        jaccard_verify(cands, all_shingles, threshold), bands_n, sh_new, sh_corpus
+    )
 
 
 def _batch_vs_corpus(
@@ -586,14 +585,15 @@ def jaccard_prefix_filter_pairs(
     # verify). The prefix-filter lemma only needs A SHARED GLOBAL TOTAL
     # ORDER, and (document frequency, hash image) is one; completeness
     # transfers because the verify's own intersection (r15) is computed
-    # on the SAME images: a pair the verify can pass has image-Jaccard
-    # >= t (image-set sizes never exceed string-set sizes), and the
-    # image-set prefix filter is complete for exactly those pairs.
+    # on the SAME images (both take ``_shingle_images``): a pair the
+    # verify can pass has image-Jaccard >= t (image-set sizes never
+    # exceed string-set sizes), and the image-set prefix filter is
+    # complete for exactly those pairs.
     # ``__sz`` below is therefore the IMAGE-set size, keeping the lemma
     # arithmetic on one domain; a hash collision (P ~ (shingles/doc)²/
     # 2⁶⁴) perturbs candidates/scores exactly as documented on
     # jaccard_verify. All consumers re-oracled at sf0.001/0.01/0.1.
-    him = F.array_distinct(F.transform("shingles", lambda s: F.xxhash64(s)))
+    him = _shingle_images("shingles")
     inv = shingled.select(
         "doc_id",
         F.size(him).alias("__sz"),
@@ -627,15 +627,8 @@ def jaccard_prefix_filter_pairs(
         # the prefix index before the join at 100 TB
         .persist()
     )
-    a = prefix.select(
-        F.col("doc_id").alias("doc_a"), "shingle", F.col("__sz").alias("__sa")
-    )
-    b = prefix.select(
-        F.col("doc_id").alias("doc_b"), "shingle", F.col("__sz").alias("__sb")
-    )
     cands = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _key_pairs(prefix, "shingle", ["__sz"])
         # size-ratio filter (AllPairs length filter, exact): J >= t
         # forces min(|x|,|y|) >= t·max(|x|,|y|) — a necessary condition,
         # so dropping violators can never lose a qualifying pair. Cuts
@@ -645,8 +638,8 @@ def jaccard_prefix_filter_pairs(
         # 0.07*100 = 7.000000000000001 rejects |x|=7 inside |y|=100,
         # a pair with J = 0.07 exactly.
         .filter(
-            F.least("__sa", "__sb")
-            >= F.round(F.lit(threshold) * F.greatest("__sa", "__sb"), 9)
+            F.least("__sz_a", "__sz_b")
+            >= F.round(F.lit(threshold) * F.greatest("__sz_a", "__sz_b"), 9)
         )
         .select("doc_a", "doc_b")
         .distinct()
@@ -693,22 +686,18 @@ def containment_pairs(
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError("threshold must be in (0, 1]")
-    from pyspark.sql import Window
+    if max_df_frac is not None and not 0.0 < max_df_frac <= 1.0:
+        raise ValueError("max_df_frac must be in (0, 1]")
 
     # persisted ONCE: sizes and the inverted index both derive from the
     # shingling pass (tokenize + n-gram + distinct), so without this
-    # barrier that pass executes twice. All persists are released before
-    # return: the (pair-sized, small) result is eagerly
-    # localCheckpoint-ed so it survives the unpersist without recompute
-    # — no cached frames outlive the call.
+    # barrier that pass executes twice; checkpoint_and_release frees it.
     sh = shingle_docs(docs, text_col, id_col).persist()
     if max_df_frac is not None:
-        if not 0.0 < max_df_frac <= 1.0:
-            raise ValueError("max_df_frac must be in (0, 1]")
         import math
 
         max_df = max(max_df, math.ceil(max_df_frac * sh.count()))
-    sizes = sh.select("doc_id", F.size("shingles").alias("n_sh"))
+    sizes = sh.select("doc_id", F.size("shingles").alias("n"))
     inv = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     # persist the capped index: it feeds BOTH sides of the self-join, and
     # without the barrier each side re-runs shingling + the df window —
@@ -723,28 +712,12 @@ def containment_pairs(
         .drop("df")
         .persist()
     )
-    a = capped.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = capped.select(F.col("doc_id").alias("doc_b"), "shingle")
     ov = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        _key_pairs(capped, "shingle")
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("ov"))
     )
-    sized = (
-        ov.join(
-            sizes.select(
-                F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a")
-            ),
-            "doc_a",
-        )
-        .join(
-            sizes.select(
-                F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b")
-            ),
-            "doc_b",
-        )
-    )
+    sized = _pair_sides(ov, sizes)
     # both directions from ONE pass over the overlap pipeline: a union of
     # two selects would re-execute the join+agg per branch; the 2-element
     # array explode is per-row, so the pipeline runs once
@@ -768,12 +741,10 @@ def containment_pairs(
             )
         ).alias("d")
     ).select("d.contained", "d.container", "d.containment")
-    out = both.filter(F.col("containment") >= threshold).localCheckpoint(
-        eager=True
+    return checkpoint_and_release(
+        both.filter(F.col("containment") >= threshold), capped, sh
     )
-    capped.unpersist()
-    sh.unpersist()
-    return out
+
 
 def duplicated_spans(
     docs: DataFrame,
@@ -1267,8 +1238,6 @@ def survivor_by_score(
     both the filtered corpus (kept) and the removal audit (NOT kept)
     fall out of one pass.
     """
-    from pyspark.sql import Window
-
     w = Window.partitionBy(label_col).orderBy(
         F.col(score_col).desc(), F.col(id_col).asc()
     )

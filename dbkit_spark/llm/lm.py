@@ -269,8 +269,6 @@ def vocab_coverage(
     Output per domain: (domain, total_tokens, distinct_tokens,
     oov_tokens, oov_rate 6dp, vocab_size).
     """
-    from ..functions.text import tokens
-
     if vocab_size <= 0:
         raise ValueError("vocab_size must be positive")
     toks = docs.select(
@@ -334,8 +332,6 @@ def trigram_lm_train(
     model-sized (KenLM-class, GBs): joins stay key-partitioned hash
     joins; broadcast them only when they fit.
     """
-    from ..functions.text import tokens
-
     toks = ref.select(tokens(text_col).alias("t")).filter(F.size("t") >= 3)
     tri = (
         toks.select(
@@ -405,7 +401,6 @@ def trigram_lm_score(
         raise ValueError("lambdas must be positive and sum to 1")
     if k <= 0:
         raise ValueError("k must be positive")
-    from ..functions.text import tokens
 
     toks = docs.select(
         F.col(id_col).alias("_id"), tokens(text_col).alias("t")
@@ -515,7 +510,6 @@ def good_turing_mass(
     """
     if max_r < 1:
         raise ValueError(f"max_r must be >= 1, got {max_r}")
-    from ..functions.text import tokens
 
     tok = docs.select(
         F.explode(tokens(text_col)).alias("_t")

@@ -33,6 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .dedup import _key_pairs, _pair_sides
+
 PAYLOAD_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -1068,7 +1070,7 @@ def image_near_dup_pairs(
 ) -> DataFrame:
     """Image near-dup candidate pairs from dhash values — the multimodal
     member of the dedup family, same shape as MinHash LSH: band the 64
-    hash bits into ``n_bands`` keys, equi-join per band, dedupe
+    hash bits into ``n_bands`` keys, one equi-join on (band, key), dedupe
     candidates, verify with exact XOR + bit_count Hamming. Never
     all-pairs.
 
@@ -1094,47 +1096,31 @@ def image_near_dup_pairs(
     width = 64 // n_bands  # 16 or 32
     mask = (1 << width) - 1
 
-    def band(col_lo, col_hi, b):
+    def band(b):
         bitpos = b * width
-        src = F.col(col_lo) if bitpos < 32 else F.col(col_hi)
-        shift = bitpos % 32
-        return F.shiftrightunsigned(src, shift).bitwiseAND(F.lit(mask))
+        src = F.col("dhash_lo") if bitpos < 32 else F.col("dhash_hi")
+        return F.shiftrightunsigned(src, bitpos % 32).bitwiseAND(F.lit(mask))
 
-    cands = None
-    for b in range(n_bands):
-        keyed = h.select(
-            "doc_id",
-            band("dhash_lo", "dhash_hi", b).alias("_bk"),
-            F.lit(b).alias("_b"),
-        )
-        l = keyed.select(
-            F.col("doc_id").alias("doc_a"), "_bk", "_b"
-        )
-        r = keyed.select(
-            F.col("doc_id").alias("doc_b"), "_bk", "_b"
-        )
-        pair = l.join(r, ["_bk", "_b"]).filter(
-            F.col("doc_a") < F.col("doc_b")
-        ).select("doc_a", "doc_b")
-        cands = pair if cands is None else cands.unionByName(pair)
-    cands = cands.distinct()
-    ha = h.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("dhash_lo").alias("_alo"),
-        F.col("dhash_hi").alias("_ahi"),
+    # one (doc, (band index, band value)) row per band and one self-join
+    # on that key — the lsh_band_keys -> lsh_candidate_pairs shape
+    keyed = h.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(b).alias("b"), band(b).alias("v"))
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("bk"),
     )
-    hb = h.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("dhash_lo").alias("_blo"),
-        F.col("dhash_hi").alias("_bhi"),
-    )
+    cands = _key_pairs(keyed, "bk").select("doc_a", "doc_b").distinct()
     ham = (
-        F.bit_count(F.col("_alo").bitwiseXOR(F.col("_blo")))
-        + F.bit_count(F.col("_ahi").bitwiseXOR(F.col("_bhi")))
+        F.bit_count(F.col("dhash_lo_a").bitwiseXOR(F.col("dhash_lo_b")))
+        + F.bit_count(F.col("dhash_hi_a").bitwiseXOR(F.col("dhash_hi_b")))
     ).cast("int")
     return (
-        cands.join(ha, "doc_a")
-        .join(hb, "doc_b")
+        _pair_sides(cands, h)
         .withColumn("hamming", ham)
         .filter(F.col("hamming") <= max_hamming)
         .select("doc_a", "doc_b", "hamming")

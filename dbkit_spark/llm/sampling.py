@@ -270,7 +270,6 @@ def quota_sample(
     """
     if quota <= 0:
         raise ValueError("quota must be positive")
-    from pyspark.sql import Window
 
     rank_key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
     w = Window.partitionBy(group_col).orderBy(rank_key.asc(), F.col(id_col).asc())
@@ -354,7 +353,6 @@ def temperature_sample(
         raise ValueError("alpha must be in [0, 1]")
     if not 0.0 < total_frac <= 1.0:
         raise ValueError("total_frac must be in (0, 1]")
-    from pyspark.sql import Window
 
     n = F.col("_n").cast("double")
     w_num = F.sqrt(n) if alpha == 0.5 else F.pow(n, F.lit(alpha))

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
+from ..operators.iterate import checkpoint_and_release
 from ..operators.window import per_group_topk
 from ._guards import DEFAULT_MAX_ROWS, require_small
 
@@ -570,16 +571,12 @@ def ann_incremental_pairs(
     The batch is hashed ONCE for all tables (``hyperplane_bucket_multi``)
     and persisted — it feeds len(tables) cross joins plus the in-batch
     self-joins; without the barrier each join re-runs the hash pass.
-    The persist is released before return (the pair-sized result is
-    eagerly localCheckpoint-ed, the containment_pairs discipline).
+    ``checkpoint_and_release`` frees the persist before return.
     """
     hashed, pairs = _incremental_plan(
         new_batch, tables, threshold, id_col, vec_col, bits, dim
     )
-    try:
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        hashed.unpersist()
+    return checkpoint_and_release(pairs, hashed)
 
 
 def truncation_recall(
@@ -603,15 +600,12 @@ def truncation_recall(
     window, then a self-join of truncated top-1s against the full-dim
     top-1. Output: (dim, n_queries, n_matched, recall) — recall is a
     small-int division, raw-double portable."""
-    from ._guards import require_small
-
     require_small(
         emb,
         max_rows,
         "truncation_recall",
         "evaluate on a hash-sampled probe subset at corpus scale",
     )
-    from ..functions.vectors import cosine
 
     full_d = len(emb.select(vec_col).first()[0])
     all_dims = sorted(set(list(dims) + [full_d]))
@@ -757,8 +751,6 @@ def hamming_rerank(
     hamming (integer, deterministic ties by id), cosine runs only on
     queries × shortlist. Output: (query_id, cand_id, hamming, cos_sim
     6dp, rank 1..k by cosine desc)."""
-    from pyspark.sql import Window
-
     if k <= 0 or shortlist < k:
         raise ValueError("need shortlist >= k > 0")
     qlo, qhi = pack_sign_bits(vec_col)
@@ -1123,7 +1115,6 @@ def hard_negatives(
         raise ValueError("need sim_lo < sim_hi")
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Window
 
     pairs = ann_bucketed(
         emb, threshold=sim_lo, id_col=id_col, vec_col=vec_col, bits=bits, dim=dim
@@ -1276,10 +1267,6 @@ def projection_recall(
     Output: one row — (n_queries, n_matched, recall,
     mean_cos_distortion 6dp).
     """
-    from ..functions.vectors import cosine
-
-    from ._guards import require_small
-
     require_small(
         emb,
         max_rows,

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint_and_release
+
 
 def item_pairs(
     baskets: DataFrame,
@@ -46,9 +48,7 @@ def item_pairs(
     ).distinct()
     sizes = bi.groupBy("_b").agg(F.count("*").alias("_sz"))
     # the distinct pass feeds the size filter AND both self-join sides —
-    # persist collapses three recomputations to one (the
-    # association_rules discipline); the pair-sized result is eagerly
-    # checkpointed so the cache releases without recompute
+    # persist collapses three recomputations to one
     kept = bi.join(
         sizes.filter(F.col("_sz") <= max_basket_size).select("_b"), "_b"
     ).persist()
@@ -60,9 +60,7 @@ def item_pairs(
         .groupBy("item_a", "item_b")
         .agg(F.count("*").cast("long").alias("pair_cnt"))
     )
-    out = out.localCheckpoint(eager=True)
-    kept.unpersist()
-    return out
+    return checkpoint_and_release(out, kept)
 
 
 def association_rules(
@@ -137,12 +135,8 @@ def association_rules(
         ).alias("lift"),
     )
     # the capped basket set feeds three branches (n_baskets, item counts,
-    # the pair self-join); the persist collapses them to one distinct
-    # pass, and the eager checkpoint of the (pair-sized) result lets the
-    # cache release without recompute — the containment_pairs discipline
-    out = out.localCheckpoint(eager=True)
-    kept.unpersist()
-    return out
+    # the pair self-join); the persist collapses them to one distinct pass
+    return checkpoint_and_release(out, kept)
 
 
 def item_similarity_topk(

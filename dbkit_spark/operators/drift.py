@@ -80,7 +80,7 @@ def bucket_by_edges(value: Column, edges: list[float]) -> Column:
     b = F.lit(0)
     for e in edges:
         b = b + F.when(value > F.lit(e), 1).otherwise(0)
-    return b.cast("int")
+    return F.when(value.isNotNull(), b).cast("int")
 
 
 def _side_counts(a: DataFrame, b: DataFrame, key: str) -> DataFrame:

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterate import iterate_until_fixpoint
+from .iterate import checkpoint_and_release, iterate_until_fixpoint
 
 
 def canonical_edges(
@@ -109,12 +109,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
             ).alias("clustering"),
         )
     )
-    # the output is one metadata-sized row; eager localCheckpoint
-    # materializes it so the persisted inputs can be released
-    out = out.localCheckpoint(eager=True)
-    for d in (und, deg, oriented):
-        d.unpersist()
-    return out
+    return checkpoint_and_release(out, und, deg, oriented)
 
 
 def label_propagation(
@@ -375,7 +370,7 @@ def modularity(
     """
     # both the community map and the tagged edge set feed 2-3 downstream
     # branches — persist so the corpus is scanned once per input, not
-    # once per branch (the triangle_stats discipline)
+    # once per branch
     cmap = communities.select(
         F.col(node_col).alias("_node"), F.col(comm_col).alias("_comm")
     ).persist()
@@ -433,13 +428,7 @@ def modularity(
             * (F.col("degree_sum").cast("double") / two_m)
         ).alias("q_contrib"),
     )
-    # communities-sized output: eager localCheckpoint materializes it so
-    # the persisted inputs can be released instead of pinning executor
-    # memory for the session (the triangle_stats discipline, ADVICE r9)
-    out = out.localCheckpoint(eager=True)
-    for d in (cmap, tagged):
-        d.unpersist()
-    return out
+    return checkpoint_and_release(out, cmap, tagged)
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -467,8 +456,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     broadcasts it for dim-sized graphs, shuffles on the node key
     otherwise), one global agg. No windows, no collect. Both the edge
     set and the degree table feed multiple branches — persisted so the
-    edge corpus is scanned once, not once per branch (the
-    modularity/triangle_stats discipline).
+    edge corpus is scanned once, not once per branch.
     """
     edges = edges.persist()
     deg = (
@@ -510,10 +498,4 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
             "assortativity"
         ),
     )
-    # one metadata-sized row: eager localCheckpoint, then release the
-    # persisted edge corpus and degree table (the triangle_stats
-    # discipline, ADVICE r9)
-    out = out.localCheckpoint(eager=True)
-    for d in (edges, deg):
-        d.unpersist()
-    return out
+    return checkpoint_and_release(out, edges, deg)

@@ -64,6 +64,23 @@ def _barrier_fn(spark, checkpoint_dir, eager: bool = True):
     return barrier
 
 
+def checkpoint_and_release(df: DataFrame, *cached: DataFrame) -> DataFrame:
+    """Return ``df`` eagerly ``localCheckpoint``-ed, then unpersist
+    ``cached``.
+
+    An operator that persists an intermediate (because several branches
+    of its plan consume it) returns a result through which no caller can
+    reach that cache, so the operator must release it itself or every
+    call pins it for the session. The eager checkpoint materializes the
+    small result first, so the release costs no recompute; the
+    ``finally`` releases the caches also when the checkpoint job fails."""
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        for c in cached:
+            c.unpersist()
+
+
 def iterate_until_fixpoint(
     initial: DataFrame,
     step: Callable[[DataFrame], DataFrame],

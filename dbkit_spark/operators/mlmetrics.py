@@ -2699,7 +2699,6 @@ def best_of_n_value(
         raise ValueError(
             f"ks must be distinct ascending positive ints, got {ks!r}"
         )
-    from pyspark.sql import Window
 
     from .aggregate import stable_sum
 

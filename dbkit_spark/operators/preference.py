@@ -376,8 +376,6 @@ def length_controlled_winrates(
     Output per pair: (item_a, item_b, n_matches, winrate_a,
     mean_len_diff, length_bias_slope, lc_winrate_a).
     """
-    from .aggregate import stable_sum
-
     x = (F.col(len_a_col) - F.col(len_b_col)).cast("double")
     y = F.col(win_a_col).cast("int").cast("double")
     base = matches.filter(

@@ -674,7 +674,6 @@ def information_gain_ranking(
     """
     if not feature_cols:
         raise ValueError("feature_cols must be non-empty")
-    from pyspark.sql import Window
 
     stack_expr = "stack({}, {}) as (feature, value)".format(
         len(feature_cols),

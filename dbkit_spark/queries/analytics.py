@@ -953,7 +953,7 @@ _Q212_NOTES = (
 def q216_scd2_point_in_time_enrich(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from ..operators.timeseries import enrich_with_scd2, scd2_history
+    from ..operators.timeseries import enrich_with_scd2
 
     ev = read_table(spark, sf_dir, "events")
     dim = scd2_history(ev, "user_id", ["event_type"], "ts", tiebreak="event_id")
@@ -5009,7 +5009,6 @@ def q355_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id becomes a keyed token, and the per-user analytics the
     release exists for (event counts, distinct types, revenue) still
     compute — grouped on the token, never the identifier."""
-    from ..operators.aggregate import stable_sum
     from ..operators.privacy import pseudonymize
 
     ev = read_table(spark, sf_dir, "events").select(
@@ -5315,8 +5314,6 @@ def q419_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q419_oracle(iters: int = 5) -> str:
-    from ..operators.aggregate import stable_sum_sql
-
     # Every CTE is MATERIALIZED: DuckDB re-inlines plain CTEs per
     # reference, and the MM recursion references each s{{t-1}} twice —
     # the same 4^iters blowup the Spark side solves with
@@ -5550,8 +5547,6 @@ def q424_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q424_oracle() -> str:
-    from ..operators.aggregate import stable_sum_sql
-
     rater = """
       SELECT item, '{rid}' AS rater,
              CASE WHEN {flip} < 3
@@ -5704,8 +5699,6 @@ def q427_length_controlled_winrate(
 
 
 def _q427_oracle() -> str:
-    from ..operators.aggregate import stable_sum_sql
-
     return f"""
     WITH m AS ({_PREF_MATCHES_EXT_SQL}),
     base AS (

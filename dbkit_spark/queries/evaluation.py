@@ -1765,7 +1765,7 @@ def q399_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition (operators/mlmetrics.brier_decomposition)
     of stop_ratio as a probability that a document is English — the
     calibration audit of the q47 lang-ID signal."""
-    from ..functions.text import stopword_ratio, tokens
+    from ..functions.text import stopword_ratio
     from ..operators.mlmetrics import brier_decomposition
 
     docs = read_table(spark, sf_dir, "documents")

@@ -272,8 +272,6 @@ def q95_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q97_trailing_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.aggregate import dec
-
     events = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -653,9 +651,6 @@ def q107_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     "session set as the batch operator",
 )
 def q115_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.runner import read_events_stream, run_available_now
-    from ..streaming.windows import session_agg
-
     stream = read_events_stream(spark, sf_dir)
     agg = session_agg(
         stream, "ts", "30 minutes", ["user_id"], {"n_events": F.count("*")}
@@ -703,8 +698,6 @@ def q115_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final watermark (= min(max c_ts, max v_ts) - 10 min delay)",
 )
 def q187_stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.runner import read_events_stream, run_available_now
-
     df = read_events_stream(spark, sf_dir)
     clicks = df.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"),
@@ -788,7 +781,6 @@ def q207_heavy_hitters_stream_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from ..streaming.heavy_hitters import heavy_hitters_stream
-    from ..streaming.runner import read_events_stream, run_available_now
 
     stream = read_events_stream(spark, sf_dir)
     return run_available_now(
@@ -881,7 +873,6 @@ def q273_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..streaming.cusum import streaming_cusum
-    from ..streaming.runner import run_available_now
 
     dec = "decimal(38,9)"
     ev = read_table(spark, sf_dir, "events").filter(
@@ -992,7 +983,6 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..streaming.funnel import streaming_funnel
-    from ..streaming.runner import run_available_now
 
     steps = ["view", "click", "purchase"]
     ev = read_table(spark, sf_dir, "events").filter(
@@ -1119,8 +1109,6 @@ def q353_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id DIV 3 — three events per key); the projected payload is a
     pure function of the key so ANY survivor yields identical output
     rows and the batch oracle is a plain DISTINCT."""
-    from ..streaming.runner import read_events_stream, run_available_now
-
     s = read_events_stream(spark, sf_dir)
     keyed = (
         s.select(
@@ -1169,7 +1157,6 @@ def q398_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     must equal the batch run row-for-row."""
     from ..llm.quality import gopher_quality_filters
     from ..schema import TABLE_SCHEMAS
-    from ..streaming.runner import run_available_now
 
     stream = (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])
@@ -1209,7 +1196,6 @@ def q414_stream_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention; shares q406's oracle verbatim)."""
     from ..llm.pii import pii_scrub
     from ..schema import TABLE_SCHEMAS
-    from ..streaming.runner import run_available_now
 
     stream = (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])
@@ -1247,7 +1233,6 @@ def q449_stream_eval_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule to the EVALUATION family."""
     from ..llm.texteval import truncation_eval_gate
     from ..schema import TABLE_SCHEMAS
-    from ..streaming.runner import run_available_now
 
     stream = (
         spark.readStream.schema(TABLE_SCHEMAS["documents"])

@@ -355,7 +355,6 @@ _STOP_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 )
 def q46_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    from ..functions.text import tokens
 
     with_toks = docs.select("doc_id", "text", tokens("text").alias("__toks"))
     tk = F.col("__toks")
@@ -396,7 +395,6 @@ def q46_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q47_lang_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    from ..functions.text import tokens
 
     with_toks = docs.select("doc_id", "lang", "text", tokens("text").alias("__toks"))
     tk = F.col("__toks")
@@ -714,8 +712,6 @@ def q92_quantize_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(top-k never materializes a global sort)",
 )
 def q96_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id", F.explode(tokens("text")).alias("token")
@@ -950,7 +946,7 @@ _TOKHASH_SQL = (
     "set fingerprint; md5-portable fold, JVM-side",
 )
 def q67_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import rolling_fingerprint, tokens
+    from ..functions.text import rolling_fingerprint
 
     docs = read_table(spark, sf_dir, "documents")
     return docs.select("doc_id", "text").select(
@@ -974,7 +970,7 @@ def q67_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "/ punct marks) vs whitespace tokens; chars-per-token ratio",
 )
 def q68_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import bpe_token_count, token_count
+    from ..functions.text import bpe_token_count
 
     docs = read_table(spark, sf_dir, "documents")
     n_bpe = bpe_token_count("text")
@@ -1226,7 +1222,7 @@ _SHINGLE10_SQL = (
     "no quadratic risk at this n",
 )
 def q141_cross_doc_ngram10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import shingles_from_tokens, tokens
+    from ..functions.text import shingles_from_tokens
 
     docs = read_table(spark, sf_dir, "documents")
     toks = docs.select(
@@ -1314,8 +1310,6 @@ def q143_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expansion, no shuffle",
 )
 def q151_explode_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions.text import tokens
-
     docs = read_table(spark, sf_dir, "documents")
     toks = tokens("text")
     d = docs.select(
@@ -1996,8 +1990,6 @@ def q270_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q270_oracle() -> str:
-    from ..functions.text import STOPWORDS
-
     stop_list = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
     WITH toks AS MATERIALIZED (
@@ -2467,10 +2459,6 @@ def q298_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate of cumulative-conjunction conditional sums — the report a
     curation run ships with (how much survived each gate, in docs and
     chars), never five scans."""
-    from pyspark.sql import Window
-
-    from ..functions.text import fingerprint, lang_id, quality_score, tokens
-
     docs = read_table(spark, sf_dir, "documents")
     tk = tokens("text")
     base = docs.select(
@@ -2883,8 +2871,6 @@ def q321_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain by length (tiebreak doc_id) — the dedup-adjacent quota step
     every crawl pipeline runs. Heuristic keying would merge all
     github.io tenants into one quota bucket; PSL keying is the fix."""
-    from pyspark.sql import Window
-
     from ..functions.psl import psl_registered_domain
 
     docs = read_table(spark, sf_dir, "documents")
@@ -3710,8 +3696,6 @@ def q347_audio_content_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dhash): the duplicate-bearing fixture carries the same waveform
     re-encoded across PCM16/float32/float64 containers; the energy-
     contour fingerprint groups them while any byte hash would not."""
-    from pyspark.sql import Window
-
     from ..llm.audio import audio_fingerprint, with_wav_payload_grouped
 
     docs = read_table(spark, sf_dir, "documents")
@@ -3977,7 +3961,7 @@ def q377_fertility_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-fertility drift (operators/drift.fertility_drift):
     per-source fertility (BPE-ish tokens per word) across three crawl
     batches (doc_id % 3), each batch's drift ratio vs batch 0."""
-    from ..functions.text import bpe_token_count, token_count
+    from ..functions.text import bpe_token_count
     from ..operators.drift import fertility_drift
 
     docs = read_table(spark, sf_dir, "documents")
@@ -4048,7 +4032,6 @@ def q378_score_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the stopword-ratio quality signal: PSI of its fixed-width decile
     histogram between the even-doc_id baseline segment and the
     odd-doc_id current segment, every source in one plan."""
-    from ..functions.text import stopword_ratio, tokens
     from ..operators.drift import score_psi_grouped
 
     docs = read_table(spark, sf_dir, "documents")
@@ -4920,7 +4903,6 @@ def q404_token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately crosses the corpus size across fixture scales: all
     domains cap at sf0.001 (leftover > 0), mixed at sf0.01,
     pure-proportional at sf0.1 — one anchor exercises every regime."""
-    from ..functions.text import token_count
     from ..llm.sampling import token_budget_waterfill
 
     docs = read_table(spark, sf_dir, "documents").withColumn(
@@ -5202,7 +5184,6 @@ register("q410_vocab_coverage", _q410_oracle(), _Q410_NOTES)(q410_vocab_coverage
 def q413_mixture_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-share mixture health (llm/sampling.mixture_health) per
     source — entropy, effective domains, HHI, max share."""
-    from ..functions.text import token_count
     from ..llm.sampling import mixture_health
 
     docs = read_table(spark, sf_dir, "documents").withColumn(

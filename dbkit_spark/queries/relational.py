@@ -713,7 +713,6 @@ def _rollup_level_sql(sec: int, label: str) -> str:
     "oracle computes each level directly from raw",
 )
 def q73_rollup_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import dec
     from ..operators.rollup_hierarchy import rollup_hierarchy
 
     events = read_table(spark, sf_dir, "events").withColumn(
@@ -1239,7 +1238,7 @@ def q114_hof_array_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
     "percentiles are order-sensitive in the last bits)",
 )
 def q116_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import dec, rounded
+    from ..operators.aggregate import rounded
 
     events = read_table(spark, sf_dir, "events")
     med = events.groupBy("event_type").agg(
@@ -2033,8 +2032,6 @@ def q138_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "collect-style aggs where map-side combine can't help",
 )
 def q139_salted_two_stage_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import dec
-
     ev = read_table(spark, sf_dir, "events")
     salted = ev.withColumn("__salt", F.pmod(F.hash("event_id"), F.lit(16)))
     partial = salted.groupBy("event_type", "__salt").agg(
@@ -2207,8 +2204,6 @@ def q144_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the dim side at runtime. Oracle is the plain join on raw events",
 )
 def q145_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import dec
-
     path, dim_path = _ensure_partitioned_events(spark, sf_dir)
     fact = spark.read.parquet(path)
     # DPP is injected only when the dim side carries a LIKELY-SELECTIVE
@@ -2520,8 +2515,6 @@ def q155_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from pyspark.sql import types as T
-
     from ..sources.readers import read_csv, read_json, read_orc
     from ..sources.writers import write_csv, write_json, write_orc
 
@@ -2664,8 +2657,6 @@ def _ensure_uint64_fixture(spark: SparkSession, sf_dir: str) -> str:
     "Python ints (round-trip pytest in tests/test_sources_sinks.py)",
 )
 def q160_uint64_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import types as T
-
     from ..sources.readers import read_parquet
 
     path = _ensure_uint64_fixture(spark, sf_dir)
@@ -2707,8 +2698,6 @@ def q160_uint64_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "plain join",
 )
 def q163_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import stable_sum
-
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
@@ -3571,8 +3560,6 @@ def q182_url_parsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sort-once-aggregate-once shape that scales",
 )
 def q183_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -3749,8 +3736,6 @@ def q188_array_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     "NULL credit rather than vanishing",
 )
 def q189_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -3948,8 +3933,6 @@ def q191_mix_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     "kept SET is pinned, not just its size",
 )
 def q192_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events")
     floor_n = (
         ev.groupBy("event_type")
@@ -4055,8 +4038,6 @@ def q193_minmax_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     "float). Deterministic (value, wt) tiebreak",
 )
 def q194_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = ev.select(
         "event_type",
@@ -4138,8 +4119,6 @@ def q194_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     "are exact",
 )
 def q195_interval_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events")
     iv = ev.select(
         "user_id",
@@ -4250,8 +4229,6 @@ def q197_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "distinction on both engines",
 )
 def q199_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     orders = read_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc())
     return (
@@ -4294,8 +4271,6 @@ def q199_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     "IS NULL)",
 )
 def q200_value_volatility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = ev.select(
@@ -4365,10 +4340,6 @@ _Q222_NOTES = (
 
 
 def q224_returns_above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from ..operators.aggregate import dec
-
     li = read_table(spark, sf_dir, "lineitem")
     orders = read_table(spark, sf_dir, "orders")
     cust = read_table(spark, sf_dir, "customer")
@@ -4476,7 +4447,6 @@ def _ensure_range_files(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q231_file_stats_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.aggregate import stable_sum
     from ..sources.fileindex import (
         build_file_stats_index,
         list_parquet_files,
@@ -4616,8 +4586,6 @@ register("q233_chi_square", _Q233_ORACLE, _Q233_NOTES)(q233_chi_square)
 
 
 def q235_rolling_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     ev = read_table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     w = (
         Window.partitionBy("user_id")
@@ -4880,8 +4848,6 @@ _Q241_NOTES = (
 
 
 def q242_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     docs = read_table(spark, sf_dir, "documents")
     uni = (
         docs.select(F.explode(F.split("text", " ")).alias("w"))
@@ -5266,8 +5232,6 @@ def q325_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import tempfile
 
-    from pyspark.sql import types as T
-
     from ..sources import read_xml
 
     docs = read_table(spark, sf_dir, "documents")
@@ -5475,7 +5439,6 @@ def q349_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the user's most recent click/view within a 7-day lookback, or
     'direct' when none — operators/joins.asof_join with tolerance does
     the whole thing in one key-sorted pass, no per-purchase scan."""
-    from ..operators.aggregate import stable_sum
     from ..operators.joins import asof_join
 
     ev = read_table(spark, sf_dir, "events")
@@ -5569,8 +5532,6 @@ def q350_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     globally sort. Ties at a boundary share a score (strictly-greater
     counting), which is also more honest than ntile's arbitrary
     position split."""
-    from ..operators.aggregate import stable_sum
-
     o = read_table(spark, sf_dir, "orders")
     anchor = o.agg(F.max(F.to_date("o_orderdate")).alias("_anchor"))
     cust = (
@@ -5692,8 +5653,6 @@ def q352_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned against BROADCAST exact-percentile boundaries (the q350
     discipline — no global ntile sort); the cumulative window runs over
     the 10-row decile table (the q238 risk-table discipline)."""
-    from pyspark.sql import Window
-
     c = read_table(spark, sf_dir, "customer")
     o = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
@@ -5823,10 +5782,6 @@ def q369_linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     take-all last-touch over-credits the final retargeting click; the
     linear model is the standard first alternative). Purchases with no
     touch credit 'direct' in full."""
-    from pyspark.sql import Window
-
-    from ..operators.aggregate import dec
-
     ev = read_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("pid"), "user_id", "ts", "value"

@@ -39,9 +39,10 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     cache the pipeline made (the shingle sets and the band-key table
     lsh_candidate_pairs persists): the session holds as many cached
     plans after the call as before. minhash_incremental_pairs (both
-    shingle sets plus the batch's band keys) and ngram_jaccard_pairs
-    (its shingle set) follow the same rule."""
-    from dbkit_spark.llm.dedup import minhash_incremental_pairs
+    shingle sets plus the batch's band keys), ngram_jaccard_pairs (its
+    shingle set) and simhash_candidate_pairs (its band table) follow
+    the same rule."""
+    from dbkit_spark.llm.dedup import minhash_incremental_pairs, simhash_candidate_pairs
 
     docs = spark.createDataFrame(
         [
@@ -63,6 +64,9 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     assert cache_manager.cachedData().size() == before
     exact = ngram_jaccard_pairs(docs, threshold=0.5)
     assert {(r.doc_a, r.doc_b) for r in exact.collect()} == {(1, 2)}
+    assert cache_manager.cachedData().size() == before
+    near = simhash_candidate_pairs(simhash_signatures(docs), max_distance=20)
+    assert {(r.doc_a, r.doc_b) for r in near.collect()} == {(1, 2)}
     assert cache_manager.cachedData().size() == before
 
 

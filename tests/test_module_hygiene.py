@@ -4,7 +4,7 @@ A function moved to a module that lacks one of its globals only fails when
 it runs; these checks turn that latent ``NameError`` into a collection-time
 failure, and catch a merge that silently rebinds a top-level name (a
 second ``def test_x`` in one module hides the first test). Both scan
-``dbkit_spark/`` and ``tests/``.
+``dbkit_spark/`` and ``tests/``; the re-import check scans ``dbkit_spark/``.
 """
 
 from __future__ import annotations
@@ -85,6 +85,38 @@ def _rebound_names(path: Path) -> list[str]:
     return hits
 
 
+def _imported(stmt: ast.Import | ast.ImportFrom) -> list[tuple[str, tuple]]:
+    """(bound name, source) for each name an import statement binds."""
+    if isinstance(stmt, ast.Import):
+        # ``import a.b`` binds the package ``a``; ``import a.b as c`` binds ``a.b``
+        return [
+            ((a.asname or a.name).split(".")[0], a.name if a.asname else a.name.split(".")[0])
+            for a in stmt.names
+        ]
+    return [(a.asname or a.name, (stmt.level, stmt.module, a.name)) for a in stmt.names]
+
+
+def _local_reimports(path: Path) -> list[str]:
+    """Imports inside a function or class that bind a name the module
+    already imports at top level from the same source."""
+    tree = ast.parse(path.read_text())
+    top = {
+        n: src
+        for stmt in tree.body
+        if isinstance(stmt, (ast.Import, ast.ImportFrom))
+        for n, src in _imported(stmt)
+    }
+    return [
+        f"{_rel(path)}:{node.lineno} re-imports {n}"
+        for stmt in tree.body
+        if not isinstance(stmt, (ast.Import, ast.ImportFrom))
+        for node in ast.walk(stmt)
+        if isinstance(node, (ast.Import, ast.ImportFrom))
+        for n, src in _imported(node)
+        if top.get(n) == src
+    ]
+
+
 def test_function_globals_are_bound():
     """Every global a function, lambda or method reads in ``dbkit_spark/``
     or ``tests/`` is bound at the module's top level, imported there, or a
@@ -94,6 +126,10 @@ def test_function_globals_are_bound():
 
 def test_no_top_level_name_bound_twice():
     assert [h for p in MODULES for h in _rebound_names(p)] == []
+
+
+def test_no_function_reimports_a_module_import():
+    assert [h for p in sorted(PKG.rglob("*.py")) for h in _local_reimports(p)] == []
 
 
 def test_no_round_named_query_modules():
@@ -132,21 +168,38 @@ def test_drift_two_sample_kernels_written_once():
     assert len(re.findall(r"max\(0\.0, *s\w* *[+-] *z", text)) == 2  # s+ and s-, once
 
 
+def test_dedup_candidate_kernels_written_once():
+    """The near-dup operators share one same-key self-join, one shingle
+    image, and release their caches through the one
+    checkpoint-then-release helper."""
+    llm = PKG / "llm"
+    joins = "".join((llm / n).read_text() for n in ("dedup.py", "multimodal.py"))
+    assert joins.count('F.col("doc_a") < F.col("doc_b")') == 1
+    assert (llm / "dedup.py").read_text().count("F.xxhash64(s)") == 1
+    for path in (llm / "dedup.py", llm / "similarity.py", PKG / "operators" / "assoc.py"):
+        assert "localCheckpoint(eager=True)" not in path.read_text(), path.name
+
+
 def test_checks_catch_injected_defects(tmp_path):
-    """The two scanners flag an undefined name read in a lambda and in a
-    method, and a second top-level binding."""
+    """The scanners flag an undefined name read in a lambda and in a
+    method, a second top-level binding, and a function that re-imports
+    a module-level import."""
     bad = tmp_path / "bad.py"
     bad.write_text(
         "import os\n"
+        "from pyspark.sql import Window\n"
         "f = lambda: missing_in_lambda\n"
         "class C:\n"
         "    def m(self):\n"
         "        return os.sep + missing_in_method\n"
         "def g():\n"
+        "    from pyspark.sql import Window, functions\n"
+        "    import os.path\n"
         "    return 1\n"
         "g = 2\n"
     )
     reads = " ".join(_unbound_global_reads(bad))
     assert "missing_in_lambda" in reads and "missing_in_method" in reads
     assert "os" not in reads.split()
-    assert _rebound_names(bad) == ["bad.py:8 rebinds g (first at line 6)"]
+    assert _rebound_names(bad) == ["bad.py:11 rebinds g (first at line 7)"]
+    assert _local_reimports(bad) == ["bad.py:8 re-imports Window", "bad.py:9 re-imports os"]

@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbkit_spark import errors
+from dbkit_spark.llm import dedup
+from dbkit_spark.operators import assoc, graph
 from dbkit_spark.operators.joins import asof_join, range_join
 from dbkit_spark.operators.project import Projector, prefix_all, project, rename
 from dbkit_spark.operators.setops import dedup_keep_first, union_all
@@ -759,3 +761,58 @@ def test_normalized_words_matches_per_word_rule(spark):
         want = [re.sub("[^a-z0-9]", "", u) for u in re.split(r"\s+", t.lower().strip(" "))]
         assert got[i] == [u for u in want if u], repr(t)
     assert got[300] is None
+
+
+def test_bucket_by_edges_maps_null_to_null(spark):
+    """A NULL value has no bucket; every other value counts the edges
+    strictly below it."""
+    from dbkit_spark.operators.drift import bucket_by_edges
+
+    df = spark.createDataFrame([(0, None), (1, 0.5), (2, 1.0), (3, 5.0)], "i int, v double")
+    out = df.select("i", bucket_by_edges(F.col("v"), [1.0, 2.0]).alias("b"))
+    assert [r["b"] for r in out.orderBy("i").collect()] == [None, 0, 0, 2]
+
+
+# --- cache release when the checkpoint job fails -----------------------------
+def _failing(df, col, value):
+    """``df`` whose ``col`` raises where it equals ``value``."""
+    boom = F.when(F.col(col) == value, F.raise_error(F.lit("boom")))
+    return df.withColumn(col, boom.otherwise(F.col(col)))
+
+
+def _edges(spark):
+    edges = spark.createDataFrame([(1, 2), (1, 3), (2, 3), (3, 4)], "a long, b long")
+    return _failing(edges, "b", 4)
+
+
+def _baskets(spark):
+    baskets = spark.createDataFrame([(1, "x"), (1, "y"), (2, "x"), (2, "y")], "b int, i string")
+    return _failing(baskets, "i", "y")
+
+
+def _docs(spark):
+    rows = [(1, "one two three four five"), (2, "one two three four six")]
+    return _failing(spark.createDataFrame(rows, "doc_id long, text string"), "doc_id", 2)
+
+
+_RELEASE_CASES = {
+    "containment_pairs": lambda spark: dedup.containment_pairs(_docs(spark)),
+    "item_pairs": lambda spark: assoc.item_pairs(_baskets(spark), "b", "i"),
+    "association_rules": lambda spark: assoc.association_rules(_baskets(spark), "b", "i"),
+    "triangle_stats": lambda spark: graph.triangle_stats(_edges(spark)),
+    "modularity": lambda spark: graph.modularity(
+        _edges(spark), spark.createDataFrame([(n, n % 2) for n in range(1, 5)], "node long, c long"), "node", "c"
+    ),
+    "degree_assortativity": lambda spark: graph.degree_assortativity(_edges(spark)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_RELEASE_CASES))
+def test_operators_release_caches_when_the_job_fails(spark, case):
+    """An operator that persists intermediates and checkpoints its result
+    unpersists them also when that job raises."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.cachedData().size()
+    with pytest.raises(Exception, match="boom"):
+        _RELEASE_CASES[case](spark)
+    assert cache_manager.cachedData().size() == before
