@@ -17,10 +17,14 @@ piles of tiny dense cliques (diameter 2–4), so the loop converges in a
 handful of rounds; ``max_iter`` guards against pathological chains, and
 convergence is detected with a decimal-summed label aggregate (labels
 only ever decrease; an unchanged sum ⇒ fixpoint) — an O(1)-result
-action per round, overflow-safe at any corpus size. For adversarial
-high-diameter graphs the literature's large-star/small-star contraction
-halves diameter per round; near-dup dedup does not need it and the
-simple loop keeps every round a plain AQE-optimized join.
+action per round, overflow-safe at any corpus size. For high-diameter
+graphs, ``connected_components_contracting`` below runs the
+literature's large-star/small-star contraction, which halves diameter
+per round. Use ``connected_components`` for near-dup pair graphs
+(fewer rounds, each a plain AQE-optimized join, an O(1) convergence
+probe) and the contracting form for chain- or mesh-shaped link graphs
+whose diameter is unbounded (identity handoff chains, citation or
+session paths).
 
 Intermediate labels are eagerly localCheckpoint-ed per round — this
 both bounds storage (one label table) and, critically, TRUNCATES
@@ -35,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.iterate import checkpoint_and_release, iterate_until_fixpoint
+from ..operators.graph import _degree_table, _relabel, _stubs
+from ..operators.iterate import iterate_until_fixpoint
 
 # assign_clusters broadcast cap for the component table (rows; two int64
 # columns ≈ 16 B/row, but the BUILT HashedRelation is several times that
@@ -72,8 +77,6 @@ def connected_components(
     inflate per-round message volume — so the flag is purely a
     performance contract (guide §2.4: a ``distinct`` on already-unique
     data is an accidental shuffle)."""
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
     # Persist the edge list ALREADY HASH-PARTITIONED on src, the key
     # every round joins on: the cached partitioning satisfies the join's
     # required distribution, so the per-round plans re-exchange only the
@@ -91,7 +94,7 @@ def connected_components(
     except (TypeError, ValueError):
         # managed AQE setups may report a non-numeric value (e.g. "auto")
         n_part = pairs.sparkSession.sparkContext.defaultParallelism
-    edges = fwd.unionByName(rev).repartition(n_part, "src")
+    edges = _stubs(pairs, a_col, b_col).repartition(n_part, "src")
     if dedupe_edges:
         edges = edges.distinct()
     edges = edges.persist()
@@ -179,14 +182,10 @@ def assign_clusters(
     sort-merge shape is kept, so nothing here assumes local scale."""
     comp = connected_components(
         pairs, a_col, b_col, max_iter, dedupe_edges=dedupe_edges
-    ).withColumnRenamed("id", "__cc_id")
+    )
     if comp.count() <= _BROADCAST_COMP_MAX_ROWS:
         comp = F.broadcast(comp)
-    return (
-        docs.join(comp, docs[id_col] == comp["__cc_id"], "left")
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col(id_col)))
-        .drop("__cc_id")
-    )
+    return _relabel(docs, comp, id_col)
 
 
 def dedup_survivors(
@@ -379,48 +378,48 @@ def density_clusters(
     pair graph); border attachment is one join + min-agg. Deterministic:
     labels are min-ids, border ties take the smallest cluster label.
     """
-    fwd = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    rev = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    edges = fwd.unionByName(rev).distinct().persist()
-
-    deg = edges.groupBy("src").agg(F.count("*").alias("_deg"))
-    cores = deg.filter(F.col("_deg") >= min_pts).select(F.col("src").alias("_c"))
-
-    core_edges = (
-        edges.join(cores, edges["src"] == cores["_c"], "left_semi")
-        .join(
-            cores.withColumnRenamed("_c", "_c2"),
-            edges["dst"] == F.col("_c2"),
-            "left_semi",
+    edges = _stubs(pairs, a_col, b_col).distinct().persist()
+    try:
+        cores = (
+            _degree_table(edges)
+            .filter(F.col("degree") >= min_pts)
+            .select(F.col("node").alias("_c"))
         )
-    )
-    linked = connected_components(
-        core_edges.select(
-            F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
-        ),
-        max_iter=max_iter,
-    )
-    # cores with no core neighbor form singleton clusters of their own id
-    core_labels = (
-        cores.join(linked, cores["_c"] == linked["id"], "left")
-        .select(
-            F.col("_c").alias("id"),
-            F.coalesce("cluster_id", F.col("_c")).alias("cluster_id"),
+        core_edges = (
+            edges.join(cores, edges["src"] == cores["_c"], "left_semi")
+            .join(
+                cores.withColumnRenamed("_c", "_c2"),
+                edges["dst"] == F.col("_c2"),
+                "left_semi",
+            )
         )
-    )
-    border = (
-        edges.join(cores, edges["src"] == cores["_c"], "left_anti")
-        .join(
-            core_labels.withColumnRenamed("id", "_dst"),
-            F.col("dst") == F.col("_dst"),
+        linked = connected_components(
+            core_edges.select(
+                F.col("src").alias("doc_a"), F.col("dst").alias("doc_b")
+            ),
+            max_iter=max_iter,
         )
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.min("cluster_id").alias("cluster_id"))
-    )
-    out = core_labels.withColumn("role", F.lit("core")).unionByName(
-        border.withColumn("role", F.lit("border"))
-    )
-    return checkpoint_and_release(out, edges)
+        # cores with no core neighbor form singleton clusters of their own id
+        core_labels = _relabel(cores, linked, "_c").select(
+            F.col("_c").alias("id"), "cluster_id"
+        )
+        border = (
+            edges.join(cores, edges["src"] == cores["_c"], "left_anti")
+            .join(
+                core_labels.withColumnRenamed("id", "_dst"),
+                F.col("dst") == F.col("_dst"),
+            )
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.min("cluster_id").alias("cluster_id"))
+        )
+        out = core_labels.withColumn("role", F.lit("core")).unionByName(
+            border.withColumn("role", F.lit("border"))
+        )
+        # the inner component loop runs jobs before this checkpoint, so
+        # the release sits in the finally, not in the checkpoint step
+        return out.localCheckpoint(eager=True)
+    finally:
+        edges.unpersist()
 
 
 def connected_components_contracting(
@@ -467,9 +466,7 @@ def connected_components_contracting(
     diameter exceeds the plain loop's max_iter.
     """
     def sym(e: DataFrame) -> DataFrame:
-        return e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
+        return _stubs(e, "src", "dst").distinct()
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         """One star phase over the symmetric edge list: attach the
@@ -492,8 +489,8 @@ def connected_components_contracting(
             .distinct()
         )
 
-    raw = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    initial = sym(raw.filter(F.col("src") != F.col("dst")))
+    loops = F.col(a_col) == F.col(b_col)
+    initial = _stubs(pairs.filter(~loops), a_col, b_col).distinct()
 
     def step(e: DataFrame) -> DataFrame:
         return sym(star(sym(star(e, large=True)), large=False))
@@ -516,8 +513,8 @@ def connected_components_contracting(
     # nodes whose ONLY edges were self-pairs vanished with the filter
     # above; re-emit them as singleton components (plain-CC contract)
     selfies = (
-        raw.filter(F.col("src") == F.col("dst"))
-        .select(F.col("src").alias("id"))
+        pairs.filter(loops)
+        .select(F.col(a_col).alias("id"))
         .distinct()
         .join(linked.select("id"), "id", "left_anti")
         .select("id", F.col("id").alias("cluster_id"))
@@ -561,46 +558,34 @@ def connected_components_delta(
     Output: (id, cluster_id) for every id in ``prior`` plus every
     endpoint of ``new_pairs`` — same contract as the full algorithms,
     self-pairs included as singletons."""
-    pid = F.col(id_col)
-    prior_lab = prior.select(pid.alias("_nid"), F.col(cluster_col).alias("_lab"))
-
+    prior_lab = prior.select(
+        F.col(id_col).alias("id"), F.col(cluster_col).alias("cluster_id")
+    )
     edges = new_pairs.select(F.col(a_col).alias("_a"), F.col(b_col).alias("_b"))
-
-    lab_a = edges.join(prior_lab, edges["_a"] == prior_lab["_nid"], "left").select(
-        F.coalesce("_lab", F.col("_a")).alias("_a_lab"), "_b"
+    lab_a = _relabel(edges, prior_lab, "_a").select(
+        F.col("cluster_id").alias("_a"), "_b"
     )
     lab_edges = (
-        lab_a.join(prior_lab, lab_a["_b"] == prior_lab["_nid"], "left")
-        .select(
-            F.col("_a_lab").alias("doc_a"),
-            F.coalesce("_lab", F.col("_b")).alias("doc_b"),
-        )
+        _relabel(lab_a, prior_lab, "_b")
+        .select(F.col("_a").alias("doc_a"), F.col("cluster_id").alias("doc_b"))
         .distinct()
     )
     # contraction over the LABEL graph — delta-sized by construction
     merged = connected_components_contracting(
         lab_edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir
-    ).select(F.col("id").alias("_old"), F.col("cluster_id").alias("_new"))
-
-    relabeled = (
-        prior_lab.join(merged, prior_lab["_lab"] == merged["_old"], "left")
-        .select(
-            F.col("_nid").alias(id_col),
-            F.coalesce("_new", F.col("_lab")).alias(cluster_col),
-        )
     )
+    out = F.col("cluster_id").alias(cluster_col)
+    relabeled = _relabel(
+        prior_lab.withColumnRenamed("cluster_id", "_lab"), merged, "_lab"
+    ).select(F.col("id").alias(id_col), out)
     # endpoints never seen in prior: their label was their own id
     fresh = (
-        edges.select(F.col("_a").alias("_nid"))
-        .unionByName(edges.select(F.col("_b").alias("_nid")))
+        _stubs(edges, "_a", "_b")
+        .select(F.col("src").alias("_nid"))
         .distinct()
-        .join(prior_lab.select("_nid"), "_nid", "left_anti")
-        .join(merged, F.col("_nid") == merged["_old"], "left")
-        .select(
-            F.col("_nid").alias(id_col),
-            F.coalesce("_new", F.col("_nid")).alias(cluster_col),
-        )
+        .join(prior_lab.select(F.col("id").alias("_nid")), "_nid", "left_anti")
     )
+    fresh = _relabel(fresh, merged, "_nid").select(F.col("_nid").alias(id_col), out)
     return relabeled.unionByName(fresh)
 
 

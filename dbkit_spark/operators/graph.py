@@ -1,14 +1,23 @@
-"""Distributed graph analytics beyond the iterate family.
+"""Distributed graph analytics over undirected edge lists.
 
-`operators/iterate.py` covers the fixpoint algorithms (connected
-components, PageRank, reachability). This module holds the one-shot
-join-shaped graph kernels — starting with triangle counting, the
-building block of clustering-coefficient / community-density profiling
-(e.g. grading a link graph's spamminess before using it for crawl
-prioritization). North-star surface: the reference implements no graph
-operators (its `operation/mod.rs` roadmap stops at relational ops).
+The module holds eight public operators: the one-shot join-shaped
+kernels ``triangle_stats``, ``link_prediction_features``,
+``modularity`` and ``degree_assortativity``, the iterative
+``label_propagation``, ``k_core`` and ``bfs_hops``, and the
+``canonical_edges`` input normalizer they share. Connected components
+live in ``llm/cluster.py`` (the dedup pipeline's transitive closure);
+PageRank is catalog query q177 on ``operators.iterate.iterate_fixed``.
+North-star surface: the reference implements no graph operators (its
+`operation/mod.rs` roadmap stops at relational ops).
 
-Scale design: triangles are counted on a DEGREE-ORIENTED graph — every
+Every operator here and in ``llm/cluster.py`` and
+``operators/identity.py`` shares one edge model, written once each:
+``_stubs`` turns undirected pairs into the directed stub list (each
+pair in both directions), ``_degree_table`` counts a node's stubs, and
+``_relabel`` maps ids through an (id, cluster_id) table with every
+missing id its own singleton cluster.
+
+Triangles are counted on a DEGREE-ORIENTED graph — every
 undirected edge points from its lower-(degree, id) endpoint to the
 higher one. The orientation is acyclic, so each triangle is counted
 exactly once (at its unique two-out-edge apex), and the per-node
@@ -20,10 +29,10 @@ wedge→edge verification is a join on the (lo, hi) edge key.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .iterate import checkpoint_and_release, iterate_until_fixpoint
+from .iterate import checkpoint_and_release, iterate_fixed, iterate_until_fixpoint
 
 
 def canonical_edges(
@@ -37,6 +46,36 @@ def canonical_edges(
         df.filter(F.col(src_col) != F.col(dst_col))
         .select(a.alias("a"), b.alias("b"))
         .distinct()
+    )
+
+
+def _stubs(pairs: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
+    """(src, dst) stub list of the undirected pairs (a, b): every pair
+    once in each direction, so a node's neighbors are the ``dst`` of its
+    ``src`` rows."""
+    return pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionByName(
+        pairs.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+    )
+
+
+def _degree_table(stubs: DataFrame) -> DataFrame:
+    """(node, degree) over a stub list: a node's degree is its stub
+    count. Column pruning reads only ``src``, so the plan is the
+    ``a ∪ b`` endpoint union."""
+    return stubs.groupBy(F.col("src").alias("node")).agg(
+        F.count("*").alias("degree")
+    )
+
+
+def _relabel(df: DataFrame, labels: DataFrame, key: str) -> DataFrame:
+    """``df`` + ``cluster_id``: the label of ``key`` in the (id,
+    cluster_id) table ``labels`` (left join); a key the table lacks is
+    its own singleton cluster (coalesce to the key)."""
+    lab = labels.withColumnRenamed("id", "__cc_id")
+    return (
+        df.join(lab, df[key] == lab["__cc_id"], "left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", F.col(key)))
+        .drop("__cc_id")
     )
 
 
@@ -56,17 +95,11 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     Σ deg·(deg−1)/2, exact BIGINT.
     """
     und = edges.persist()
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionAll(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-        .persist()
-    )
+    deg = _degree_table(_stubs(und)).persist()
     # orient: lower (deg, node) -> higher (deg, node); total order, so
     # the oriented graph is acyclic and out-degree is O(sqrt(m))
-    da = deg.select(F.col("node").alias("a"), F.col("deg").alias("_dega"))
-    db = deg.select(F.col("node").alias("b"), F.col("deg").alias("_degb"))
+    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_dega"))
+    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_degb"))
     keyed = und.join(da, "a").join(db, "b")
     a_first = (F.col("_dega") < F.col("_degb")) | (
         (F.col("_dega") == F.col("_degb")) & (F.col("a") < F.col("b"))
@@ -90,7 +123,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # exact BIGINT at any scale (a double sum loses exactness past 2^53)
     stats = deg.agg(
         F.count("*").cast("long").alias("n_nodes"),
-        F.sum(F.expr("CAST(deg * (deg - 1) DIV 2 AS BIGINT)"))
+        F.sum(F.expr("CAST(degree * (degree - 1) DIV 2 AS BIGINT)"))
         .cast("long")
         .alias("n_wedges"),
     )
@@ -133,15 +166,7 @@ def label_propagation(
     one node-keyed window rank — O(edges) work, lineage truncated per
     round. Initial labels are the node ids themselves.
     """
-    from pyspark.sql import Window
-
-    from .iterate import iterate_fixed
-
-    und = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .persist()
-    )
+    und = _stubs(edges).persist()
     labels0 = und.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -160,9 +185,10 @@ def label_propagation(
             .select("node", "label")
         )
 
-    out = iterate_fixed(labels0, step, n_rounds, checkpoint_dir)
-    und.unpersist()
-    return out
+    try:
+        return iterate_fixed(labels0, step, n_rounds, checkpoint_dir)
+    finally:
+        und.unpersist()
 
 
 def k_core(
@@ -192,28 +218,17 @@ def k_core(
     (node, degree) — degree ≥ k by construction.
     """
     def peel(cur: DataFrame) -> DataFrame:
-        keep = _degrees(cur).filter(F.col("degree") >= k).select("node")
+        keep = _degree_table(_stubs(cur)).filter(F.col("degree") >= k).select("node")
         return (
             cur.join(
                 keep.withColumnRenamed("node", "a"), "a", "left_semi"
             ).join(keep.withColumnRenamed("node", "b"), "b", "left_semi")
         ).select("a", "b")
 
-    return _degrees(
-        iterate_until_fixpoint(
-            edges, peel, measure=DataFrame.count, max_iter=max_rounds
-        )
+    core = iterate_until_fixpoint(
+        edges, peel, measure=DataFrame.count, max_iter=max_rounds
     )
-
-
-def _degrees(edges: DataFrame) -> DataFrame:
-    """(node, degree) over canonical (a, b) edges."""
-    return (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
+    return _degree_table(_stubs(core))
 
 
 def bfs_hops(
@@ -242,29 +257,27 @@ def bfs_hops(
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    und = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .persist()
-    )
-    visited = (
-        sources.select("node").distinct().withColumn("hops", F.lit(0))
-    ).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    for depth in range(1, max_hops + 1):
-        nxt = (
-            und.join(frontier, und["src"] == frontier["node"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-            .withColumn("hops", F.lit(depth))
+    und = _stubs(edges).persist()
+    try:
+        visited = (
+            sources.select("node").distinct().withColumn("hops", F.lit(0))
         ).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-    und.unpersist()
-    return visited
+        frontier = visited.select("node")
+        for depth in range(1, max_hops + 1):
+            nxt = (
+                und.join(frontier, und["src"] == frontier["node"])
+                .select(F.col("dst").alias("node"))
+                .distinct()
+                .join(visited.select("node"), "node", "left_anti")
+                .withColumn("hops", F.lit(depth))
+            ).localCheckpoint(eager=True)
+            if nxt.isEmpty():
+                break
+            visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+            frontier = nxt.select("node")
+        return visited
+    finally:
+        und.unpersist()
 
 
 def link_prediction_features(
@@ -293,22 +306,19 @@ def link_prediction_features(
     Input: canonical (a, b) edges. Output: (a, b, common_neighbors,
     jaccard, adamic_adar) for candidate pairs with a < b.
     """
-    und = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    )
-    deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    und = _stubs(edges)
+    deg = _degree_table(und)
     centers = deg if max_degree is None else deg.filter(
-        F.col("deg") <= max_degree
+        F.col("degree") <= max_degree
     )
     # wedges through each (degree-capped) center w: (u, w, v), u < v
     e1 = und.select(F.col("dst").alias("w"), F.col("src").alias("u"))
     e2 = und.select(F.col("dst").alias("w2"), F.col("src").alias("v"))
     wedges = (
-        e1.join(centers.select(F.col("src").alias("w"), "deg"), "w")
+        e1.join(centers.select(F.col("node").alias("w"), "degree"), "w")
         .join(e2, F.col("w") == F.col("w2"))
         .filter(F.col("u") < F.col("v"))
-        .select("u", "v", "w", F.col("deg").alias("deg_w"))
+        .select("u", "v", "w", F.col("degree").alias("deg_w"))
     )
     term = F.round(
         F.lit(1.0) / F.log(F.col("deg_w").cast("double")), 9
@@ -322,8 +332,8 @@ def link_prediction_features(
         ["u", "v"],
         "left_anti",
     )
-    du = deg.select(F.col("src").alias("u"), F.col("deg").alias("deg_u"))
-    dv = deg.select(F.col("src").alias("v"), F.col("deg").alias("deg_v"))
+    du = deg.select(F.col("node").alias("u"), F.col("degree").alias("deg_u"))
+    dv = deg.select(F.col("node").alias("v"), F.col("degree").alias("deg_v"))
     return (
         cand.join(du, "u")
         .join(dv, "v")
@@ -459,23 +469,10 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     edge corpus is scanned once, not once per branch.
     """
     edges = edges.persist()
-    deg = (
-        edges.select(F.col("a").alias("node"))
-        .unionAll(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("long").alias("deg"))
-        .persist()
-    )
-    tagged = (
-        edges.join(deg.withColumnRenamed("node", "a"), "a")
-        .withColumnRenamed("deg", "da")
-        .join(
-            deg.withColumnRenamed("node", "b").withColumnRenamed(
-                "deg", "db"
-            ),
-            "b",
-        )
-    )
+    deg = _degree_table(_stubs(edges)).persist()
+    tagged = edges.join(
+        deg.select(F.col("node").alias("a"), F.col("degree").alias("da")), "a"
+    ).join(deg.select(F.col("node").alias("b"), F.col("degree").alias("db")), "b")
     agg = tagged.agg(
         F.count("*").cast("long").alias("n_edges"),
         F.sum(F.col("da") + F.col("db")).alias("s1"),
@@ -485,7 +482,7 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
         ).alias("sxx"),
     )
     nstats = deg.agg(
-        F.count("*").alias("n_nodes"), F.max("deg").alias("max_degree")
+        F.count("*").alias("n_nodes"), F.max("degree").alias("max_degree")
     )
     m = F.col("n_edges")
     num = (4 * m * F.col("sxy") - F.col("s1") * F.col("s1")).cast("double")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .graph import _relabel, canonical_edges
+
 
 def handoff_links(
     events: DataFrame,
@@ -66,16 +68,15 @@ def handoff_links(
     )
     linked = seq.filter(
         F.col("_prev_id").isNotNull()
-        & (F.col("_prev_id") != F.col("_id"))
         & (
             F.unix_micros("_ts") - F.unix_micros("_prev_ts")
             <= F.lit(int(max_gap_s) * 1_000_000)
         )
     )
-    return linked.select(
-        F.least("_id", "_prev_id").alias("id_a"),
-        F.greatest("_id", "_prev_id").alias("id_b"),
-    ).distinct()
+    # canonical_edges drops the same-id handoffs
+    return canonical_edges(linked, "_id", "_prev_id").select(
+        F.col("a").alias("id_a"), F.col("b").alias("id_b")
+    )
 
 
 def stitch_identities(
@@ -100,10 +101,6 @@ def stitch_identities(
         links, a_col="id_a", b_col="id_b", max_iter=max_iter
     )
     ids = events.select(F.col(id_col).alias("id")).distinct()
-    return (
-        ids.join(comp, "id", "left")
-        .select(
-            "id",
-            F.coalesce("cluster_id", F.col("id")).alias("identity_id"),
-        )
+    return _relabel(ids, comp, "id").select(
+        "id", F.col("cluster_id").alias("identity_id")
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import CATALOG, register
 from ..operators.aggregate import stable_avg_sql
+from ..operators.graph import _relabel
 from ..sources import read_table
 from ._sql import _TOKS4_SQL, _bucket_sql
 
@@ -1696,11 +1697,8 @@ def q359_components_contracting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     comp = connected_components_contracting(edges, max_iter=12)
     return (
-        ids.join(comp, ids["u"] == comp["id"], "left")
-        .select(
-            F.col("u").alias("user_id"),
-            F.coalesce("cluster_id", F.col("u")).alias("component"),
-        )
+        _relabel(ids, comp, "u")
+        .select(F.col("u").alias("user_id"), F.col("cluster_id").alias("component"))
         .orderBy("user_id")
     )
 
@@ -1952,9 +1950,8 @@ def q365_components_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = edges.filter(F.col("doc_a") % 11 == 3)
     base = edges.filter(F.col("doc_a") % 11 != 3)
     prior_cc = connected_components_contracting(base, max_iter=12)
-    prior = ids.join(prior_cc, ids["u"] == prior_cc["id"], "left").select(
-        F.col("u").alias("id"),
-        F.coalesce("cluster_id", F.col("u")).alias("cluster_id"),
+    prior = _relabel(ids, prior_cc, "u").select(
+        F.col("u").alias("id"), "cluster_id"
     )
     merged = connected_components_delta(prior, delta, max_iter=12)
     return merged.select(

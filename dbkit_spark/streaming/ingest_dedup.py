@@ -85,50 +85,55 @@ def ingest_batch(
 
     sh_new.persist()
     bands_new.persist()
-    if first_batch:
-        survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
-    else:
-        cands, all_sh = _batch_vs_corpus(
-            bands_new, state["bands"], sh_new, state["shingles"]
-        )
-        rejected = (
-            jaccard_verify(cands, all_sh, threshold)
-            .select(F.col("doc_a").alias("doc_id"))
-            .distinct()
-        )
-        # also reject exact id re-ingests (already admitted)
-        already = state["docs"].select("doc_id")
-        fresh = (
-            batch.join(rejected, "doc_id", "left_anti")
-            .join(already, "doc_id", "left_anti")
-        )
-        fresh_sh = sh_new.join(fresh.select("doc_id"), "doc_id", "left_semi")
-        fresh_bands = bands_new.join(
-            fresh.select("doc_id"), "doc_id", "left_semi"
-        )
-        survivors = _in_batch_survivors(fresh, fresh_sh, fresh_bands, threshold)
+    # lsh_candidate_pairs persists the band table it is given; in a first
+    # batch every doc is fresh, so that table is bands_new itself
+    fresh_bands = bands_new
+    try:
+        if first_batch:
+            survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
+        else:
+            cands, all_sh = _batch_vs_corpus(
+                bands_new, state["bands"], sh_new, state["shingles"]
+            )
+            rejected = (
+                jaccard_verify(cands, all_sh, threshold)
+                .select(F.col("doc_a").alias("doc_id"))
+                .distinct()
+            )
+            # also reject exact id re-ingests (already admitted)
+            already = state["docs"].select("doc_id")
+            fresh = (
+                batch.join(rejected, "doc_id", "left_anti")
+                .join(already, "doc_id", "left_anti")
+            )
+            fresh_sh = sh_new.join(fresh.select("doc_id"), "doc_id", "left_semi")
+            fresh_bands = bands_new.join(
+                fresh.select("doc_id"), "doc_id", "left_semi"
+            )
+            survivors = _in_batch_survivors(fresh, fresh_sh, fresh_bands, threshold)
 
-    # localCheckpoint (NOT persist): the admitted set's lineage reads the
-    # very state tables the appends below mutate. A cache can evict and
-    # re-evaluate — after the docs append, a re-evaluated `already`
-    # anti-join silently empties `ids`, and later appends write nothing
-    # (observed: the band index lost every batch-2 doc). The eager
-    # checkpoint severs lineage so the admitted set is immutable across
-    # the three appends regardless of caching.
-    admitted = survivors.localCheckpoint(eager=True)
-    n = admitted.count()
-    if n:
-        ids = admitted.select("doc_id")
-        admitted.write.mode("append").parquet(p["docs"])
-        sh_new.join(ids, "doc_id", "left_semi").write.mode("append").parquet(
-            p["shingles"]
-        )
-        bands_new.join(ids, "doc_id", "left_semi").write.mode(
-            "append"
-        ).parquet(p["bands"])
-    sh_new.unpersist()
-    bands_new.unpersist()
-    return n
+        # localCheckpoint (NOT persist): the admitted set's lineage reads
+        # the very state tables the appends below mutate. A cache can
+        # evict and re-evaluate — after the docs append, a re-evaluated
+        # `already` anti-join silently empties `ids`, and later appends
+        # write nothing (observed: the band index lost every batch-2
+        # doc). The eager checkpoint severs lineage so the admitted set
+        # is immutable across the three appends regardless of caching.
+        admitted = survivors.localCheckpoint(eager=True)
+        n = admitted.count()
+        if n:
+            ids = admitted.select("doc_id")
+            admitted.write.mode("append").parquet(p["docs"])
+            sh_new.join(ids, "doc_id", "left_semi").write.mode("append").parquet(
+                p["shingles"]
+            )
+            bands_new.join(ids, "doc_id", "left_semi").write.mode(
+                "append"
+            ).parquet(p["bands"])
+        return n
+    finally:
+        for df in (sh_new, bands_new, fresh_bands):
+            df.unpersist()
 
 
 def _check_state(

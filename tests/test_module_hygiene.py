@@ -180,6 +180,23 @@ def test_dedup_candidate_kernels_written_once():
         assert "localCheckpoint(eager=True)" not in path.read_text(), path.name
 
 
+def test_graph_edge_model_written_once():
+    """The graph and clustering operators share one stub list (the
+    reversed select), one degree count over stubs, and one singleton
+    relabel (coalesce of the label to the key)."""
+    text = "".join(
+        (PKG / rel).read_text()
+        for rel in ("llm/cluster.py", "operators/graph.py", "operators/identity.py", "queries/similarity.py")
+    )
+    rules = {
+        "reversed stub": r'F\.col\((b|b_col|"b"|"dst")\)\.alias\("src"\),\s*F\.col\((a|a_col|"a"|"src")\)\.alias\("dst"\)',
+        "degree count": r'F\.count\(("\*"|F\.lit\(1\))\)(\.cast\("long"\))?\.alias\("_?deg(ree)?"\)',
+        "singleton coalesce": r'F\.coalesce\(\s*"(cluster_id|_lab|_new)",\s*F\.col\(',
+    }
+    for rule, pattern in rules.items():
+        assert len(re.findall(pattern, text)) == 1, rule
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The scanners flag an undefined name read in a lambda and in a
     method, a second top-level binding, and a function that re-imports

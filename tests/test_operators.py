@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dbkit_spark import errors
-from dbkit_spark.llm import dedup
+from dbkit_spark.llm import cluster, dedup
 from dbkit_spark.operators import assoc, graph
 from dbkit_spark.operators.joins import asof_join, range_join
 from dbkit_spark.operators.project import Projector, prefix_all, project, rename
@@ -804,6 +804,9 @@ _RELEASE_CASES = {
         _edges(spark), spark.createDataFrame([(n, n % 2) for n in range(1, 5)], "node long, c long"), "node", "c"
     ),
     "degree_assortativity": lambda spark: graph.degree_assortativity(_edges(spark)),
+    "density_clusters": lambda spark: cluster.density_clusters(_edges(spark), a_col="a", b_col="b"),
+    "label_propagation": lambda spark: graph.label_propagation(_edges(spark)),
+    "bfs_hops": lambda spark: graph.bfs_hops(_edges(spark), spark.createDataFrame([(1,)], "node long"), 2),
 }
 
 

@@ -534,6 +534,23 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
     assert n == 0  # id 5 < 100, but 100 arrived first and wins
 
 
+def test_dedup_ingest_releases_its_caches(spark, tmp_path):
+    """Every frame an ingest batch persists, including the band table its
+    in-batch candidate search persists, is released when the batch
+    returns: two batches (the second checked against the corpus) leave
+    the session's cache count where it started."""
+    from dbkit_spark.streaming.ingest_dedup import ingest_batch
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.cachedData().size()
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu".split()
+    state = str(tmp_path / "state")
+    for ids in ((1, 2), (3, 4)):
+        rows = [(i, " ".join(w + str(i) for w in words)) for i in ids]
+        ingest_batch(spark, spark.createDataFrame(rows, "doc_id long, text string"), state)
+    assert cache_manager.cachedData().size() == before
+
+
 def test_dedup_ingest_rejects_incompatible_band_key_state(spark, tmp_path):
     """A state whose band index holds string band keys (the format before
     band keys became 64-bit longs) fails with an error that names the
