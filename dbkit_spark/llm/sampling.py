@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import md5_rank, salted, u32_md5
 from ..functions.text import _hash24_u01, token_hash24
 
 SPLIT_BUCKETS = 10_000
@@ -29,8 +30,7 @@ def _hash_bucket(id_col: Column, salt: str) -> Column:
     splitting off the same unsalted hash are fully correlated (e.g. every
     row kept by a 50% sample would land in an 80% train split), which
     silently destroys stratification when the two compose."""
-    keyed = F.concat(id_col.cast("string"), F.lit(":" + salt))
-    return token_hash24(keyed) % SPLIT_BUCKETS
+    return token_hash24(salted(id_col, salt)) % SPLIT_BUCKETS
 
 
 def split_assign(
@@ -73,12 +73,24 @@ def stratified_sample(
     so sample-then-split composes without correlation."""
     if not fraction_by_stratum:
         raise ValueError("fraction_by_stratum must name at least one stratum")
-    bucket = _hash_bucket(F.col(id_col), "sample")
+    thresholds = {
+        s: int(round(frac * SPLIT_BUCKETS))
+        for s, frac in fraction_by_stratum.items()
+    }
+    return _keep_under(
+        df, strata_col, thresholds, _hash_bucket(F.col(id_col), "sample")
+    )
+
+
+def _keep_under(
+    df: DataFrame, strata_col: str, thresholds: dict[str, int], bucket: Column
+) -> DataFrame:
+    """Keep a row iff its stratum is listed and ``bucket`` falls under
+    that stratum's threshold: the OR of ``stratum = s AND bucket < t``.
+    Unlisted strata (NULL included) are dropped. Map-only."""
     keep = None
-    for stratum, frac in fraction_by_stratum.items():
-        cond = (F.col(strata_col) == stratum) & (
-            bucket < int(round(frac * SPLIT_BUCKETS))
-        )
+    for stratum, th in thresholds.items():
+        cond = (F.col(strata_col) == stratum) & (bucket < th)
         keep = cond if keep is None else keep | cond
     return df.filter(keep)
 
@@ -135,12 +147,9 @@ def weighted_domain_mix(
         )
         for d in present
     }
-    bucket = _hash_bucket(F.col(id_col), salt)
-    keep = None
-    for d, th in thresholds.items():
-        cond = (F.col(domain_col) == d) & (bucket < th)
-        keep = cond if keep is None else keep | cond
-    return df.filter(keep)
+    return _keep_under(
+        df, domain_col, thresholds, _hash_bucket(F.col(id_col), salt)
+    )
 
 
 def pack_by_token_budget(
@@ -182,10 +191,8 @@ def pack_by_token_budget(
     docs should filter on ``token_col > budget`` first.
     """
     if shard_by == "auto":
-        keyed = F.concat(F.col(id_col).cast("string"), F.lit(":pack"))
         df = df.withColumn(
-            "shard",
-            token_hash24(keyed) % n_shards,
+            "shard", token_hash24(salted(F.col(id_col), "pack")) % n_shards
         )
         shard_by = "shard"
     if shard_by is None:
@@ -202,13 +209,6 @@ def pack_by_token_budget(
         token_col,
         ((cum - F.col(token_col)) / F.lit(budget)).cast("long").alias("batch_id"),
     )
-
-
-def _hash_uniform(id_col: Column, salt: str) -> Column:
-    """Deterministic uniform in (0,1): first 6 md5 hex digits as an
-    integer in [0, 16^6), midpoint-shifted — strictly inside (0,1) so
-    ln() is always finite. Portable digit-for-digit to other engines."""
-    return _hash24_u01(F.concat(id_col.cast("string"), F.lit(":" + salt)))
 
 
 def weighted_sample_topk(
@@ -238,7 +238,7 @@ def weighted_sample_topk(
     if k <= 0:
         raise ValueError("k must be positive")
     w = F.col(weight_col).cast("double")
-    u = _hash_uniform(F.col(id_col), salt)
+    u = _hash24_u01(salted(F.col(id_col), salt))
     wkey = F.round(-F.log(u) / w, 9)
     return (
         df.filter(w > 0)
@@ -270,14 +270,30 @@ def quota_sample(
     """
     if quota <= 0:
         raise ValueError("quota must be positive")
-
-    rank_key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
-    w = Window.partitionBy(group_col).orderBy(rank_key.asc(), F.col(id_col).asc())
     return (
-        df.withColumn("_qrank", F.row_number().over(w))
+        df.withColumn("_qrank", md5_rank(id_col, salt, group_col))
         .filter(F.col("_qrank") <= quota)
         .drop("_qrank")
     )
+
+
+def _take_per_stratum(
+    df: DataFrame, strata_col: str, id_col: str, salt: str, takes: DataFrame
+) -> DataFrame:
+    """Keep the first ``_take`` rows of each stratum in md5-rank order.
+
+    ``takes`` is a strata-sized ``(_s, _take)`` table, broadcast and
+    joined NULL-safely on the stratum: a NULL stratum is its own
+    stratum, as in the count aggregates that size the takes. A stratum
+    missing from ``takes`` keeps no rows; a take above the stratum's
+    size keeps all of them. One window shuffle on the stratum."""
+    return (
+        df.join(F.broadcast(takes), F.col(strata_col).eqNullSafe(F.col("_s")))
+        .withColumn("_rank", md5_rank(id_col, salt, strata_col))
+        .filter(F.col("_rank") <= F.col("_take"))
+        .drop("_s", "_take", "_rank")
+    )
+
 
 def leakage_safe_split(
     docs: DataFrame,
@@ -344,6 +360,8 @@ def temperature_sample(
     Within a domain the t_d winners are chosen by md5 rank with id
     tiebreak (the ``quota_sample`` rule — reproducible across engines,
     reruns, repartitioning, appends only displace by their own key).
+    A NULL domain is one more domain: it is counted, weighted and
+    sampled like any other.
 
     Plan: one metadata-sized count agg (~domains rows) → broadcast join
     of take counts → one window shuffle on domain for the rank. No
@@ -366,23 +384,11 @@ def temperature_sample(
         F.sum("_w").alias("_wsum"),
         F.floor(F.sum("_n") * F.lit(total_frac)).cast("long").alias("_ttake"),
     )
-    takes = (
-        weighted.crossJoin(F.broadcast(tot))
-        .select(
-            domain_col,
-            F.expr("CAST((_ttake * _w) DIV _wsum AS BIGINT)").alias("_take"),
-        )
+    takes = weighted.crossJoin(F.broadcast(tot)).select(
+        F.col(domain_col).alias("_s"),
+        F.expr("CAST((_ttake * _w) DIV _wsum AS BIGINT)").alias("_take"),
     )
-    rank_key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(":" + salt)))
-    wnd = Window.partitionBy(domain_col).orderBy(
-        rank_key.asc(), F.col(id_col).asc()
-    )
-    return (
-        df.join(F.broadcast(takes), domain_col)
-        .withColumn("_trank", F.row_number().over(wnd))
-        .filter(F.col("_trank") <= F.col("_take"))
-        .drop("_trank", "_take")
-    )
+    return _take_per_stratum(df, domain_col, id_col, salt, takes)
 
 
 def negative_sample(
@@ -420,6 +426,13 @@ def negative_sample(
     so the output size is exactly predictable: k·|positives| minus
     collisions.
     """
+    user_item_draw = F.concat(
+        F.col("user").cast("string"),
+        F.lit("_"),
+        F.col("item").cast("string"),
+        F.lit("_"),
+        F.col("draw").cast("string"),
+    )
     draws = positives.select(
         F.col(user_col).alias("user"),
         F.col(item_col).alias("item"),
@@ -427,27 +440,9 @@ def negative_sample(
     ).select(
         "user",
         "draw",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.col("user").cast("string"),
-                            F.lit("_"),
-                            F.col("item").cast("string"),
-                            F.lit("_"),
-                            F.col("draw").cast("string"),
-                            F.lit(":" + salt),
-                        )
-                    ),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % F.lit(n_items)
-        ).alias("neg_item"),
+        (token_hash24(salted(user_item_draw, salt)) % F.lit(n_items)).alias(
+            "neg_item"
+        ),
     )
     pos_keys = positives.select(
         F.col(user_col).alias("user"), F.col(item_col).alias("neg_item")
@@ -525,7 +520,9 @@ def neyman_sample(
       denominator is order-independent too;
     - within a stratum, rows are picked by 'neyman'-salted md5 rank
       with ``id_col`` tiebreak (independent of the 'sample'/'split'
-      salts so the ops compose without correlation).
+      salts so the ops compose without correlation);
+    - a NULL stratum is one more stratum: it gets moments, a quota and
+      its picks like any other.
 
     Single-value strata (σ=0, e.g. one-row strata) get weight 0 and
     only ever receive remainder seats — degenerate strata cannot eat
@@ -594,31 +591,14 @@ def neyman_sample(
         (F.lit(int(total_n)) - F.sum("_base")).cast("long").alias("_left")
     )
     wrem = Window.orderBy(F.col("_rem").desc(), F.col("_s"))
-    alloc = (
-        base.crossJoin(F.broadcast(leftover))
-        .select(
-            "_s",
-            (
-                F.col("_base")
-                + F.when(
-                    F.row_number().over(wrem) <= F.col("_left"), 1
-                ).otherwise(0)
-            ).alias("_quota"),
-        )
+    alloc = base.crossJoin(F.broadcast(leftover)).select(
+        "_s",
+        (
+            F.col("_base")
+            + F.when(F.row_number().over(wrem) <= F.col("_left"), 1).otherwise(0)
+        ).alias("_take"),
     )
-    pick = F.md5(
-        F.concat(F.col(id_col).cast("string"), F.lit(":neyman"))
-    )
-    wpick = Window.partitionBy(strata_col).orderBy(pick, F.col(id_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(wpick))
-        .join(
-            F.broadcast(alloc),
-            F.col(strata_col) == F.col("_s"),
-        )
-        .filter(F.col("_rn") <= F.col("_quota"))
-        .drop("_s", "_rn", "_quota")
-    )
+    return _take_per_stratum(df, strata_col, id_col, "neyman", alloc)
 
 
 def weighted_sample(
@@ -652,8 +632,8 @@ def weighted_sample(
     weighted_sample_topk uses). Rows with NULL or non-positive weight
     are excluded (zero selection probability in the A-ES model).
     """
-    from ..functions.portable_hash import u32_md5
-
+    if k <= 0:
+        raise ValueError("k must be positive")
     u = (u32_md5(F.col(id_col), salt) + F.lit(1)).cast("double") / F.lit(
         float(1 << 32)
     )
@@ -1159,8 +1139,6 @@ def eval_holdout_carve(
     emitting the certification for the candidate slice only keeps the
     output holdout-sized).
     """
-    from ..functions.portable_hash import u32_md5
-
     if not 0 < eval_frac < 1:
         raise ValueError("eval_frac must be in (0, 1)")
     if quota <= 0:
@@ -1193,20 +1171,12 @@ def eval_holdout_carve(
         group_col,
         F.coalesce("_dirty", F.lit(False)).alias("contaminated"),
     )
-    rank_key = F.md5(
-        F.concat(F.col(id_col).cast("string"), F.lit(":" + salt + ":rank"))
-    )
     # Partition by (group, contaminated) so clean rows rank densely
     # 1..n_clean — ranking the mixed set would skip numbers wherever a
     # contaminated row sorts in between and under-fill the quota.
-    w = Window.partitionBy(group_col, "contaminated").orderBy(
-        rank_key.asc(), F.col(id_col).asc()
-    )
+    rank = md5_rank(id_col, salt + ":rank", group_col, "contaminated")
     ranked = flagged.withColumn(
-        "pick_rank",
-        F.when(
-            ~F.col("contaminated"), F.row_number().over(w)
-        ),
+        "pick_rank", F.when(~F.col("contaminated"), rank)
     )
     return ranked.select(
         id_col,

@@ -21,11 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import salted
+
 
 def _key_sampled(key: Column, hex_zeros: int, salt: str) -> Column:
     """Deterministic key-level Bernoulli(16^-hex_zeros): keep keys whose
     salted md5 starts with ``hex_zeros`` zero hex digits."""
-    h = F.md5(F.concat(key.cast("string"), F.lit(":" + salt)))
+    h = F.md5(salted(key, salt))
     return F.substring(h, 1, hex_zeros) == "0" * hex_zeros
 
 

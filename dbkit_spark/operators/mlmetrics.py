@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import salted, u32_md5
 from ..functions.text import _hash24_u01, token_hash24
 
 
@@ -135,14 +136,7 @@ def _poisson_bootstrap(
         "_x",
         F.explode(F.sequence(F.lit(1), F.lit(n_replicates))).alias("_rep"),
     )
-    u = _hash24_u01(
-        F.concat(
-            F.col("_id").cast("string"),
-            F.lit(":"),
-            F.col("_rep").cast("string"),
-            F.lit(":" + salt),
-        )
-    )
+    u = _hash24_u01(salted(F.col("_id"), F.col("_rep"), salt))
     w = F.lit(len(thresholds))
     for k in reversed(range(len(thresholds))):
         w = F.when(u < F.lit(thresholds[k]), k).otherwise(w)
@@ -573,8 +567,7 @@ def conformal_intervals(
     everything else is map-side. md5 split + discrete quantile +
     correctly-rounded arithmetic → bit-portable without rounding."""
     dec = "decimal(38,9)"
-    keyed = F.concat(F.col(id_col).cast("string"), F.lit(":" + salt))
-    is_fit = token_hash24(keyed) % 2 == 0
+    is_fit = token_hash24(salted(F.col(id_col), salt)) % 2 == 0
     tagged = df.withColumn("_fit", is_fit)
     pred = (
         tagged.filter(F.col("_fit"))
@@ -920,23 +913,7 @@ def permutation_test(
     # u32 · n_units < n_units_a · 2^32 — exact decimal(20,0) integer
     # compare (u32 < 2^32 and unit counts up to ~10^18 keep the products
     # inside 38 digits), bit-replayable by CAST('0x'||hex AS BIGINT).
-    u32 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.col("_unit").cast("string"),
-                    F.lit(":"),
-                    F.col("b").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-    # (not u32_md5: the "salt" here is the permutation index b, a COLUMN —
-    # the literal-salt helper would change the hashed string)
+    u32 = u32_md5(F.col("_unit"), F.col("b"))
     perm_tag = F.when(
         u32.cast("decimal(20,0)") * F.col("_ut").cast("decimal(20,0)")
         < F.lit(4294967296).cast("decimal(20,0)")
@@ -2432,7 +2409,6 @@ def jackknife_ratio_ci(
         raise ValueError(
             f"alpha={alpha} not in supported table {sorted(_Z_ALPHA_2)}"
         )
-    from ..functions.portable_hash import u32_md5
     from .aggregate import stable_sum
 
     z = _Z_ALPHA_2[alpha]

@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import salted
 from ..functions.text import _hash24_u01
 
 
@@ -55,13 +56,6 @@ def k_anonymity_audit(
     ).withColumn("violates", F.col("group_size") < k)
 
 
-def _hash_u01(key: Column, salt: str) -> Column:
-    """Deterministic uniform in (0,1): first 6 md5 hex digits (the
-    engine-wide portable hash rule), offset by 0.5 so u is never 0 or
-    1 and ln(1−2|u−½|) stays finite."""
-    return _hash24_u01(F.concat(key.cast("string"), F.lit(":" + salt)))
-
-
 def dp_counts(
     df: DataFrame,
     keys: Sequence[str],
@@ -83,7 +77,7 @@ def dp_counts(
         raise ValueError("epsilon must be positive")
     counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("true_count"))
     gk = F.concat_ws("", *[F.col(c).cast("string") for c in keys])
-    u = _hash_u01(gk, salt)
+    u = _hash24_u01(salted(gk, salt))
     centered = u - F.lit(0.5)
     noise = (
         -F.lit(1.0 / float(epsilon))

@@ -33,18 +33,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import salted, u32_md5
 from ..functions.text import token_hash24
 
 
 def _cm_bucket(key: Column, row_idx: Column, salt: str, width: int) -> Column:
     """Portable md5 bucket for hash row ``row_idx``: first 6 hex digits
     of md5(key:salt:row) mod width — digit-replayable in any engine."""
-    keyed = F.concat(
-        key.cast("string"),
-        F.lit(":" + salt + ":"),
-        row_idx.cast("string"),
-    )
-    return token_hash24(keyed) % F.lit(width)
+    return token_hash24(salted(key, salt, row_idx)) % F.lit(width)
 
 
 def cm_sketch(
@@ -226,8 +222,6 @@ def tdigest_build(
     makes that safe under skew.
     """
     import pandas as pd
-
-    from ..functions.portable_hash import u32_md5
 
     src = (
         df.filter(F.col(value_col).isNotNull())

@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..functions.portable_hash import salted
+from ..functions.text import token_hash24
 from ..operators.aggregate import stable_sum, stable_sum_sql
 from ..operators.timeseries import gapfill_locf, scd2_history
 from ..sources import read_table
@@ -3787,13 +3789,7 @@ def q308_conversion_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = funnel.withColumn(
         "variant",
         F.when(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("user_id").cast("string"), F.lit(":ab"))),
-                    1, 6,
-                ), 16, 10,
-            ).cast("long") % 2 == 0,
-            F.lit("A"),
+            token_hash24(salted(F.col("user_id"), "ab")) % 2 == 0, F.lit("A")
         ).otherwise(F.lit("B")),
     )
     # ONE no-grouping aggregate with per-variant conditional sums — no

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import register
+from ..functions.portable_hash import salted
 from ..functions.text import (
     STOPWORDS,
     avg_word_len,
@@ -28,6 +29,7 @@ from ..functions.text import (
     quality_score,
     stopword_ratio,
     token_count,
+    token_hash24,
     tokens,
 )
 from ..functions.text import STOPWORDS as _CUR_STOPWORDS
@@ -2474,19 +2476,7 @@ def q298_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "s_samp",
         F.col("s_canon")
-        & (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":cur"))),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
-            < 50
-        ),
+        & (token_hash24(salted(F.col("doc_id"), "cur")) % 100 < 50),
     )
 
     def stage(flag, name):

@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..catalog import register
+from ..functions.portable_hash import md5_rank
 from ..operators.aggregate import (
     dec,
     stable_avg,
@@ -3939,15 +3940,9 @@ def q192_balanced_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         .agg(F.min("count").alias("floor_n"))
     )
-    rk = F.row_number().over(
-        Window.partitionBy("event_type").orderBy(
-            F.md5(F.concat(F.col("event_id").cast("string"), F.lit(":balance"))),
-            F.col("event_id"),
-        )
-    )
     return (
         ev.select("event_id", "event_type")
-        .withColumn("rk", rk)
+        .withColumn("rk", md5_rank("event_id", "balance", "event_type"))
         .crossJoin(F.broadcast(floor_n))
         .filter(F.col("rk") <= F.col("floor_n"))
         .groupBy("event_type")

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import CATALOG, register
+from ..functions.portable_hash import md5_rank, salted
+from ..functions.text import token_hash24
 from ..operators.aggregate import stable_avg_sql
 from ..operators.graph import _relabel
 from ..sources import read_table
@@ -795,7 +797,9 @@ def q211_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.sampling import leakage_safe_split
 
     docs = read_table(spark, sf_dir, "documents")
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
+    # persist_shingles: the component pipeline materializes the pair set
+    # once, so the pairs are checkpointed and their caches released
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
     return leakage_safe_split(
         docs, pairs, {"train": 0.8, "val": 0.1, "test": 0.1}
     ).select("doc_id", "cluster_id", "split").orderBy("doc_id")
@@ -1185,18 +1189,12 @@ def q303_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical 'retrieval run'), graded qrels from a doc_id residue —
     the metric operator is what's under test, with hits, misses,
     graded gains and no-relevant queries all present."""
-    from pyspark.sql import Window
-
     from ..llm.retrieval import ranking_metrics
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id")
     base = docs.withColumn("query_id", (F.col("doc_id") % 5).cast("long"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":rank"))),
-        F.col("doc_id"),
-    )
     results = (
-        base.withColumn("rank", F.row_number().over(w))
+        base.withColumn("rank", md5_rank("doc_id", "rank", "query_id"))
         .filter(F.col("rank") <= 10)
         .select("query_id", "doc_id", "rank")
     )
@@ -1470,12 +1468,7 @@ def q310_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("doc_id"),
             "embedding",
             (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.col("vec_id").cast("string"), F.lit(":rel"))),
-                        1, 6,
-                    ), 16, 10,
-                ).cast("double")
+                token_hash24(salted(F.col("vec_id"), "rel")).cast("double")
                 / F.lit(float(1 << 24))
             ).alias("rel"),
         )

@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.portable_hash import salted
 from ..functions.text import token_hash24
 
 HH_OUTPUT_SCHEMA = StructType(
@@ -134,9 +135,8 @@ def _sharded(events: DataFrame, key_col: str, n_shards: int) -> DataFrame:
     # and letting them through would inflate n_shard (the error-bound
     # denominator) while pandas value_counts silently drops them from
     # the counts — a silent bound violation.
-    keyed = F.concat(F.col(key_col).cast("string"), F.lit(":hh"))
     return events.filter(F.col(key_col).isNotNull()).select(
-        (token_hash24(keyed) % n_shards).alias("shard"),
+        (token_hash24(salted(F.col(key_col), "hh")) % n_shards).alias("shard"),
         F.col(key_col).cast("string").alias("key"),
     )
 

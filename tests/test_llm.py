@@ -70,6 +70,22 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     assert cache_manager.cachedData().size() == before
 
 
+def test_leakage_split_query_releases_its_caches(spark, sf_dir):
+    """q211 materializes its near-dup pairs once, in the component
+    pipeline, so it checkpoints them and releases the shingle and
+    band-key caches: the session holds as many cached plans after one
+    execution as before. The session starts empty: a plan another test
+    left cached over the same table would be shared, not added, by the
+    query's persist."""
+    from dbkit_spark.catalog import load_all
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = load_all()["q211_leakage_safe_split"].fn(spark, sf_dir).collect()
+    assert rows
+    assert cache_manager.cachedData().size() == 0
+
+
 def test_exact_dedup_idempotent_and_deterministic(spark):
     df = spark.createDataFrame(
         [(1, "Hello  World"), (2, "hello world"), (3, "different")],
@@ -603,7 +619,7 @@ def test_weighted_sample_properties(spark):
     and heavy strata dominate the sample roughly in proportion."""
     import pytest as _pytest
 
-    from dbkit_spark.llm.sampling import weighted_sample_topk
+    from dbkit_spark.llm.sampling import weighted_sample, weighted_sample_topk
 
     rows = [(i, 100.0 if i < 500 else 1.0) for i in range(1000)]
     df = spark.createDataFrame(rows, "id long, w double")
@@ -635,6 +651,8 @@ def test_weighted_sample_properties(spark):
 
     with _pytest.raises(ValueError):
         weighted_sample_topk(df, "id", "w", k=0)
+    with _pytest.raises(ValueError, match="k must be positive"):
+        weighted_sample(df, "id", "w", k=0)
 
 
 def test_jaccard_prefix_filter_equal_results_fewer_candidates(spark, sf_dir):
@@ -1068,6 +1086,26 @@ def test_quota_sample_properties(spark):
     again = {(r.source, r.doc_id) for r in
              quota_sample(docs, "source", "doc_id", quota=3).collect()}
     assert again == {(r.source, r.doc_id) for r in got}
+
+
+def test_null_stratum_keeps_its_seats(spark):
+    """A NULL stratum is one more stratum in the quota samplers: it is
+    counted, gets a take, and keeps its picks, so neyman_sample returns
+    exactly ``total_n`` rows and temperature_sample exactly
+    T = floor(total_frac * N) when no take is clipped."""
+    from dbkit_spark.llm.sampling import neyman_sample, temperature_sample
+
+    rows = [
+        (i, None if i < 20 else ("a" if i < 40 else "b"), float(i % 7))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "id long, s string, v double")
+    ney = neyman_sample(df, "id", "s", "v", total_n=30).collect()
+    assert len(ney) == 30
+    assert any(r.s is None for r in ney)
+    temp = temperature_sample(df, "s", "id", total_frac=0.5).collect()
+    assert len(temp) == 30
+    assert sum(r.s is None for r in temp) == 10
 
 
 def test_reconcile_identical_tables_clean(spark):

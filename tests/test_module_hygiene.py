@@ -197,6 +197,52 @@ def test_graph_edge_model_written_once():
         assert len(re.findall(pattern, text)) == 1, rule
 
 
+def _match_sites(pattern: str) -> list[str]:
+    """``file:function`` (innermost enclosing def) of every match of
+    ``pattern`` in ``dbkit_spark/``."""
+    sites = []
+    for path in sorted(PKG.rglob("*.py")):
+        text = path.read_text()
+        defs = [
+            (n.end_lineno - n.lineno, n.lineno, n.end_lineno, n.name)
+            for n in ast.walk(ast.parse(text))
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for m in re.finditer(pattern, text):
+            line = text.count("\n", 0, m.start()) + 1
+            inner = min((d for d in defs if d[1] <= line <= d[2]), default=None)
+            sites.append(f"{_rel(path)}:{inner[3] if inner else '<module>'}")
+    return sorted(sites)
+
+
+def test_salted_draw_written_once():
+    """Every ``key:salt`` md5 draw goes through ``functions/portable_hash``:
+    ``salted`` builds each salted key from a part list (so the inline
+    ``concat(cast(key), ':salt')`` form appears nowhere, builder
+    included); md5 hex digits become an integer only in ``token_hash24``,
+    ``u32_md5`` and the two 12-digit keys of dedup and reconcile; the
+    midpoint uniform and the per-group md5 rank are written once; and
+    the samplers share one quota join and one threshold filter, with no
+    md5 call of their own."""
+    assert _match_sites(r'\.cast\("string"\),\s*F\.lit\(f?":') == []
+    assert _match_sites(r"F\.conv\(\s*F\.substring\(\s*F\.md5\(") == [
+        "dbkit_spark/functions/portable_hash.py:u32_md5",
+        "dbkit_spark/functions/text.py:token_hash24",
+        "dbkit_spark/llm/dedup.py:minhash_signatures",
+        "dbkit_spark/operators/reconcile.py:row_fingerprint",
+    ]
+    assert _match_sites(r"F\.lit\(0\.5\)\)\s*/\s*F\.lit\(float\(16\s*\*\*\s*6\)\)") == [
+        "dbkit_spark/functions/text.py:_hash24_u01"
+    ]
+    assert _match_sites(r"orderBy\(\s*F\.md5\(") == [
+        "dbkit_spark/functions/portable_hash.py:md5_rank"
+    ]
+    sampling = (PKG / "llm" / "sampling.py").read_text()
+    assert "F.md5(" not in sampling
+    assert sampling.count('<= F.col("_take")') == 1
+    assert sampling.count("keep = cond if keep is None else keep | cond") == 1
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The scanners flag an undefined name read in a lambda and in a
     method, a second top-level binding, and a function that re-imports
