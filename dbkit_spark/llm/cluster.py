@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.graph import _degree_table, _relabel, _stubs
-from ..operators.iterate import iterate_until_fixpoint
+from ..operators.iterate import held, iterate_until_fixpoint
 
 # assign_clusters broadcast cap for the component table (rows; two int64
 # columns ≈ 16 B/row, but the BUILT HashedRelation is several times that
@@ -97,7 +97,6 @@ def connected_components(
     edges = _stubs(pairs, a_col, b_col).repartition(n_part, "src")
     if dedupe_edges:
         edges = edges.distinct()
-    edges = edges.persist()
 
     # Seed = propagation round 1 WITHOUT the identity join: the first
     # round of the loop would join edges against identity labels
@@ -139,20 +138,19 @@ def connected_components(
         ).collect()[0][0]
 
     try:
-        return iterate_until_fixpoint(
-            initial,
-            step,
-            measure=label_sum,
-            max_iter=max_iter,
-            checkpoint_dir=checkpoint_dir,
-        )
+        with held(edges):
+            return iterate_until_fixpoint(
+                initial,
+                step,
+                measure=label_sum,
+                max_iter=max_iter,
+                checkpoint_dir=checkpoint_dir,
+            )
     except RuntimeError as exc:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(pair-graph diameter exceeds max_iter)"
         ) from exc
-    finally:
-        edges.unpersist()
 
 
 def assign_clusters(
@@ -378,8 +376,8 @@ def density_clusters(
     pair graph); border attachment is one join + min-agg. Deterministic:
     labels are min-ids, border ties take the smallest cluster label.
     """
-    edges = _stubs(pairs, a_col, b_col).distinct().persist()
-    try:
+    edges = _stubs(pairs, a_col, b_col).distinct()
+    with held(edges):
         cores = (
             _degree_table(edges)
             .filter(F.col("degree") >= min_pts)
@@ -416,10 +414,8 @@ def density_clusters(
             border.withColumn("role", F.lit("border"))
         )
         # the inner component loop runs jobs before this checkpoint, so
-        # the release sits in the finally, not in the checkpoint step
+        # the edge set is held for the whole body, not just the checkpoint
         return out.localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()
 
 
 def connected_components_contracting(

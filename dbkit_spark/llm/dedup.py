@@ -26,7 +26,7 @@ self-join of a keyed table, also used by the image near-dup operator in
 ``multimodal``), ``_pair_sides`` (per-doc columns joined onto both ends
 of a pair), ``_shingle_images`` (the 64-bit shingle image every index
 and verify works on), and ``operators.iterate.checkpoint_and_release``
-for the operators that persist intermediates.
+for the operators that hold intermediates in the session cache.
 
 Hashes are md5-based (not Spark's xxhash) so every step is bit-for-bit
 reproducible in ANSI SQL — the DuckDB oracles mirror these pipelines
@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_hash, shingles_from_tokens, tokens
-from ..operators.iterate import checkpoint_and_release
+from ..operators.iterate import checkpoint_and_release, held
 from ._guards import DEFAULT_MAX_ROWS, require_small
 
 # LSH parameters: K = NUM_BANDS * BAND_ROWS minhashes.
@@ -182,7 +182,7 @@ def lsh_band_keys(
     band_key = ``xxhash64(band_index, sig[r·b+1..r·b+r])`` — a long, not
     the md5 hex string of earlier rounds (OPTIMIZATION_r16 / VERDICT r15
     item 7, guide §2.3 "shuffle keys and metadata instead of payloads"):
-    the band table is persisted and BOTH candidate self-join sides
+    the band table is held and BOTH candidate self-join sides
     shuffle and hash it, so narrowing the key from a 32-char string
     (~48 B on the wire) to 8 B shrinks the LSH exchange ~3x and makes
     the join's hash/equality fixed-width — and the md5 + concat_ws
@@ -214,11 +214,12 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     The equi-join on band_key is the whole point of LSH: candidates
     shuffle on bucket keys instead of forming the n² cross product.
 
-    ``band_keys`` is persisted: both self-join sides consume it and
-    Catalyst does not ReusedExchange across the differing aliases, so
-    without a barrier the signature pipeline upstream runs twice. Size
-    is bounded at NUM_BANDS short rows per doc — the in-memory analogue
-    of the bucketed band table a 100 TB pipeline materializes anyway.
+    Callers hold ``band_keys`` (``operators.iterate.held``) while the
+    pairs run: both self-join sides consume it and Catalyst does not
+    ReusedExchange across the differing aliases, so without a barrier
+    the signature pipeline upstream runs twice. Size is bounded at
+    NUM_BANDS short rows per doc — the in-memory analogue of the
+    bucketed band table a 100 TB pipeline materializes anyway.
     The downstream verify joins are left to AQE, which broadcast-
     converts the candidate side from runtime stats (asserted in
     tests/test_plans.py) — an unconditional broadcast hint would be
@@ -229,7 +230,7 @@ def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
     reps: join+persist 2.94 s vs 3.86 s median — the codegen'd hash
     join over cached fixed-width rows beats the object-hash
     aggregation + nested-lambda pair expansion."""
-    pairs = _key_pairs(band_keys.persist(), "band_key")
+    pairs = _key_pairs(band_keys, "band_key")
     return pairs.select("doc_a", "doc_b").distinct()
 
 
@@ -271,56 +272,46 @@ def jaccard_verify(
     )
 
 
+def _near_dup_plan(
+    docs: DataFrame, text_col: str, id_col: str, threshold: float
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The lazy plan of ``minhash_near_dup_pairs``: (shingle sets, band
+    keys, verified pairs). Read the pairs' plan inside ``held(shingles,
+    bands)`` to see it as ``minhash_near_dup_pairs`` runs it."""
+    shingled = shingle_docs(docs, text_col, id_col)
+    bands = lsh_band_keys(minhash_signatures(shingled))
+    pairs = jaccard_verify(lsh_candidate_pairs(bands), shingled, threshold)
+    return shingled, bands, pairs
+
+
 def minhash_near_dup_pairs(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    persist_shingles: bool = False,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup pipeline: (doc_a, doc_b, jaccard).
 
-    The shingle set feeds three consumers (signatures, and both sides of
-    the verify join) and is deliberately NOT persisted: each consumer
-    recomputes tokenize+shingle fused into its own whole-stage-codegen
-    pipeline (3 column-pruned corpus scans), which measured 1.60 s vs
-    2.28 s median for persist at sf0.1 (cache dropped between reps —
-    the materialization of per-doc string arrays costs more than the
-    regex pass it saves; the same finding as shingle_docs' explode
-    barrier replacing its persist). At 100 TB the trade holds harder:
-    a full-corpus shingle cache cannot fit executor memory, so persist
-    degrades to a disk write+read of the widest intermediate in the
-    pipeline, while recompute stays 3 pruned parquet scans. The one
-    barrier that DOES pay is inside ``lsh_candidate_pairs``: band_keys
-    is narrow (doc_id, band_key) and both self-join sides consume it —
-    without it the whole minhash agg re-runs per side (A/B receipt in
-    BASELINE.md round-8 notes).
+    Two tables are held for the one job that checkpoints the pairs
+    (``checkpoint_and_release``), then released:
 
-    ``persist_shingles=True`` restores the cache barrier for callers
-    that materialize the pair set exactly once into their OWN barrier
-    (q87/q88's component pipelines persist the edge list; the shingle
-    cache then trades 2 recompute scans for one in-memory write+read
-    during that single materialization — measured a ~0.4 s edge at
-    sf0.1, within the host band but consistently signed). In this mode
-    the pair set goes through ``checkpoint_and_release``, which frees
-    the shingle cache and ``lsh_candidate_pairs``' band-key cache; the
-    eager materialization is exactly the work the caller's own barrier
-    was about to do anyway. Callers: q40, q87 and
-    q88 pass True (q40 since OPTIMIZATION_r15: with the split scan the
-    cache fills in parallel and saves the verify's two extra scans).
-    The default False keeps the result fully lazy for callers that fold
-    the pairs into a larger plan they materialize once — q198, q211,
-    q343, q357 — and for plan inspection (tests/test_plans.py); the
-    band-key cache then stays with the session.
+    - the shingle sets, which feed three consumers (signatures and both
+      sides of the verify join): one in-memory write and read instead
+      of two more corpus scans and tokenize passes (in-process A/B x3
+      blocks at sf0.1 with the split scan: 1.06/1.09/1.06 s held vs
+      1.52/1.24/1.15 s recomputed; over an unsplit scan the cache once
+      measured slower, 2.28 s vs 1.60 s median);
+    - the narrow (doc_id, band_key) table, which both
+      ``lsh_candidate_pairs`` self-join sides consume; without it the
+      whole minhash aggregate re-runs per side (A/B receipt in
+      BASELINE.md round-8 notes).
+
+    The result is a checkpointed frame that reads neither cache, so a
+    caller may fold it into any larger plan. ``_near_dup_plan`` gives
+    the lazy pipeline for plan inspection (tests/test_plans.py).
     """
-    shingled = shingle_docs(docs, text_col, id_col)
-    if persist_shingles:
-        shingled = shingled.persist()
-    bands = lsh_band_keys(minhash_signatures(shingled))
-    pairs = jaccard_verify(lsh_candidate_pairs(bands), shingled, threshold)
-    if not persist_shingles:
-        return pairs
-    return checkpoint_and_release(pairs, bands, shingled)
+    shingled, bands, pairs = _near_dup_plan(docs, text_col, id_col, threshold)
+    return checkpoint_and_release(pairs, shingled, bands)
 
 
 def simhash_signatures(
@@ -421,7 +412,7 @@ def simhash_candidate_pairs(
                 F.substring("simhash", start, w).alias("v"),
             )
         )
-    # persist: both self-join sides consume band_rows, and without a
+    # held: both self-join sides consume band_rows, and without a
     # barrier each side re-runs the full signature pipeline upstream
     # (Catalyst does not ReusedExchange across the differing aliases) —
     # measured 2x the signature cost at sf0.1. Size is bounded:
@@ -429,7 +420,7 @@ def simhash_candidate_pairs(
     # signature table once, bucketed by band key.
     band_rows = sigs.select(
         "doc_id", "simhash", F.explode(F.array(*bands)).alias("bk")
-    ).persist()
+    )
     cands = (
         _key_pairs(band_rows, "bk", ["simhash"])
         .select("doc_a", "simhash_a", "doc_b", "simhash_b")
@@ -471,9 +462,9 @@ def ngram_jaccard_pairs(
     pairs``. Pass ``max_rows=None`` to force the quadratic plan.
 
     The shingle set feeds the inverted index and both verify-join sides,
-    so it is persisted and released through ``checkpoint_and_release``."""
+    so it is held and released through ``checkpoint_and_release``."""
     require_small(docs, max_rows, "ngram_jaccard_pairs", "jaccard_prefix_filter_pairs")
-    shingled = shingle_docs(docs, text_col, id_col).persist()
+    shingled = shingle_docs(docs, text_col, id_col)
     # inverted index on the verify's shingle images, not shingle strings
     # — the same §2.3 narrowing as jaccard_prefix_filter_pairs
     inv = shingled.select(
@@ -501,21 +492,22 @@ def minhash_incremental_pairs(
     with the batch, not the corpus. Emits (doc_a=new id, doc_b=corpus id)
     for cross pairs and (doc_a < doc_b, both new) for in-batch pairs.
 
-    Cache lifecycle: both shingle sets are persisted (each feeds its
-    signatures and the verify), and ``lsh_candidate_pairs`` persists
-    the batch's band keys; ``checkpoint_and_release`` frees all three.
+    Cache lifecycle: both shingle sets (each feeds its signatures and
+    the verify) and the batch's band keys (both ``lsh_candidate_pairs``
+    self-join sides) are held for the checkpoint of the pairs, then
+    released (``checkpoint_and_release``).
     A long-running ingest driver should still materialize the corpus
     bands/shingles to storage once (write_bucketed on band_key) rather
     than re-shingle the corpus per batch.
     """
-    sh_corpus = shingle_docs(corpus, text_col, id_col).persist()
-    sh_new = shingle_docs(new_docs, text_col, id_col).persist()
+    sh_corpus = shingle_docs(corpus, text_col, id_col)
+    sh_new = shingle_docs(new_docs, text_col, id_col)
     bands_c = lsh_band_keys(minhash_signatures(sh_corpus))
     bands_n = lsh_band_keys(minhash_signatures(sh_new))
     cross, all_shingles = _batch_vs_corpus(bands_n, bands_c, sh_new, sh_corpus)
     cands = cross.unionByName(lsh_candidate_pairs(bands_n)).distinct()
     return checkpoint_and_release(
-        jaccard_verify(cands, all_shingles, threshold), bands_n, sh_new, sh_corpus
+        jaccard_verify(cands, all_shingles, threshold), sh_corpus, sh_new, bands_n
     )
 
 
@@ -574,8 +566,12 @@ def jaccard_prefix_filter_pairs(
     index at 100 TB. Completeness is oracle-checked (q112 shares q42's
     brute-force oracle) and equality with the unfiltered operator is
     pytest-asserted.
+
+    The shingle sets (index and verify) and the prefix index (both
+    candidate self-join sides) are held for the checkpoint of the
+    pairs, then released.
     """
-    shingled = shingle_docs(docs, text_col, id_col).persist()
+    shingled = shingle_docs(docs, text_col, id_col)
     # The ENTIRE index/candidate pipeline runs on 64-bit xxhash64 IMAGES
     # of the shingles, never the ~10-word strings (OPTIMIZATION_r16,
     # guide §2.3 — the q209 precedent applied to this operator: warm
@@ -621,11 +617,10 @@ def jaccard_prefix_filter_pairs(
             + 1
         )
         .select("doc_id", "shingle", "__sz")
-        # both candidate self-join sides consume the prefix index; the
-        # persist (tiny: prefix rows only) stops the whole df+ranking
+        # both candidate self-join sides consume the prefix index;
+        # holding it (tiny: prefix rows only) stops the whole df+ranking
         # chain from executing twice — the storage analogue of writing
         # the prefix index before the join at 100 TB
-        .persist()
     )
     cands = (
         _key_pairs(prefix, "shingle", ["__sz"])
@@ -644,7 +639,9 @@ def jaccard_prefix_filter_pairs(
         .select("doc_a", "doc_b")
         .distinct()
     )
-    return jaccard_verify(cands, shingled, threshold)
+    return checkpoint_and_release(
+        jaccard_verify(cands, shingled, threshold), shingled, prefix
+    )
 
 
 def containment_pairs(
@@ -689,61 +686,61 @@ def containment_pairs(
     if max_df_frac is not None and not 0.0 < max_df_frac <= 1.0:
         raise ValueError("max_df_frac must be in (0, 1]")
 
-    # persisted ONCE: sizes and the inverted index both derive from the
+    # held ONCE: sizes and the inverted index both derive from the
     # shingling pass (tokenize + n-gram + distinct), so without this
-    # barrier that pass executes twice; checkpoint_and_release frees it.
-    sh = shingle_docs(docs, text_col, id_col).persist()
-    if max_df_frac is not None:
-        import math
+    # barrier that pass executes twice
+    sh = shingle_docs(docs, text_col, id_col)
+    with held(sh):
+        if max_df_frac is not None:
+            import math
 
-        max_df = max(max_df, math.ceil(max_df_frac * sh.count()))
-    sizes = sh.select("doc_id", F.size("shingles").alias("n"))
-    inv = sh.select("doc_id", F.explode("shingles").alias("shingle"))
-    # persist the capped index: it feeds BOTH sides of the self-join, and
-    # without the barrier each side re-runs shingling + the df window —
-    # 13 exchanges / 4 corpus scans collapse to one materialized index
-    # (the q112 persisted-prefix-index discipline; at 100 TB this is the
-    # difference between one corpus pass and four)
-    capped = (
-        inv.withColumn(
-            "df", F.count("*").over(Window.partitionBy("shingle"))
-        )
-        .filter(F.col("df") <= max_df)
-        .drop("df")
-        .persist()
-    )
-    ov = (
-        _key_pairs(capped, "shingle")
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("ov"))
-    )
-    sized = _pair_sides(ov, sizes)
-    # both directions from ONE pass over the overlap pipeline: a union of
-    # two selects would re-execute the join+agg per branch; the 2-element
-    # array explode is per-row, so the pipeline runs once
-    both = sized.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("doc_a").alias("contained"),
-                    F.col("doc_b").alias("container"),
-                    (F.col("ov").cast("double") / F.col("n_a")).alias(
-                        "containment"
-                    ),
-                ),
-                F.struct(
-                    F.col("doc_b").alias("contained"),
-                    F.col("doc_a").alias("container"),
-                    (F.col("ov").cast("double") / F.col("n_b")).alias(
-                        "containment"
-                    ),
-                ),
+            max_df = max(max_df, math.ceil(max_df_frac * sh.count()))
+        sizes = sh.select("doc_id", F.size("shingles").alias("n"))
+        inv = sh.select("doc_id", F.explode("shingles").alias("shingle"))
+        # hold the capped index: it feeds BOTH sides of the self-join, and
+        # without the barrier each side re-runs shingling + the df window —
+        # 13 exchanges / 4 corpus scans collapse to one materialized index
+        # (the q112 held-prefix-index discipline; at 100 TB this is the
+        # difference between one corpus pass and four)
+        capped = (
+            inv.withColumn(
+                "df", F.count("*").over(Window.partitionBy("shingle"))
             )
-        ).alias("d")
-    ).select("d.contained", "d.container", "d.containment")
-    return checkpoint_and_release(
-        both.filter(F.col("containment") >= threshold), capped, sh
-    )
+            .filter(F.col("df") <= max_df)
+            .drop("df")
+        )
+        ov = (
+            _key_pairs(capped, "shingle")
+            .groupBy("doc_a", "doc_b")
+            .agg(F.count("*").alias("ov"))
+        )
+        sized = _pair_sides(ov, sizes)
+        # both directions from ONE pass over the overlap pipeline: a union of
+        # two selects would re-execute the join+agg per branch; the 2-element
+        # array explode is per-row, so the pipeline runs once
+        both = sized.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("doc_a").alias("contained"),
+                        F.col("doc_b").alias("container"),
+                        (F.col("ov").cast("double") / F.col("n_a")).alias(
+                            "containment"
+                        ),
+                    ),
+                    F.struct(
+                        F.col("doc_b").alias("contained"),
+                        F.col("doc_a").alias("container"),
+                        (F.col("ov").cast("double") / F.col("n_b")).alias(
+                            "containment"
+                        ),
+                    ),
+                )
+            ).alias("d")
+        ).select("d.contained", "d.container", "d.containment")
+        return checkpoint_and_release(
+            both.filter(F.col("containment") >= threshold), capped
+        )
 
 
 def duplicated_spans(

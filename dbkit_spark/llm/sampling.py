@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.portable_hash import md5_rank, salted, u32_md5
 from ..functions.text import _hash24_u01, token_hash24
+from ..operators.iterate import held, iterate_fixed
 
 SPLIT_BUCKETS = 10_000
 
@@ -1218,12 +1219,13 @@ def rake_weights(
     test, not silently weighted 1).
 
     Scale + determinism: ONE corpus-sized (row,col) count (map-side
-    combined, persisted); every IPF step is a cells-sized broadcast
-    join + margins-sized aggregate. The n·b / n·a products ride EXACT
-    DECIMAL(20,0)x(18,9) — no mid-pipeline rounding of products (the
-    q411 rule); each factor update is ONE division rounded at 9dp; the
-    final weight a_r·b_c is an IEEE double product of identical 9dp
-    operands (bit-equal cross-engine), 6dp out.
+    combined, held for the fit); every IPF step is a cells-sized
+    broadcast join + margins-sized aggregate, and each alternation ends
+    at an ``iterate_fixed`` lineage barrier. The n·b / n·a products
+    ride EXACT DECIMAL(20,0)x(18,9) — no mid-pipeline rounding of
+    products (the q411 rule); each factor update is ONE division
+    rounded at 9dp; the final weight a_r·b_c is an IEEE double product
+    of identical 9dp operands (bit-equal cross-engine), 6dp out.
 
     Output: (row_col, col_col, n, weight, raked_share).
     """
@@ -1243,81 +1245,81 @@ def rake_weights(
         df.filter(F.col(row_col).isNotNull() & F.col(col_col).isNotNull())
         .groupBy(F.col(row_col).alias("_r"), F.col(col_col).alias("_c"))
         .agg(F.count(F.lit(1)).alias("_n"))
-        .persist()
     )
-    n_total = cells.agg(F.sum("_n").cast("long").alias("_ntot"))
-    row_t = spark.createDataFrame(
-        sorted(row_targets.items()), ["_r", "_share_r"]
-    ).crossJoin(F.broadcast(n_total)).select(
-        "_r", (F.col("_share_r") * F.col("_ntot").cast("double")).alias("_tr")
-    )
-    col_t = spark.createDataFrame(
-        sorted(col_targets.items()), ["_c", "_share_c"]
-    ).crossJoin(F.broadcast(n_total)).select(
-        "_c", (F.col("_share_c") * F.col("_ntot").cast("double")).alias("_tc")
-    )
-    b = col_t.select("_c", F.lit(1.0).alias("_b"))
-    a = None
     # DECIMAL(12,0) x (18,9) = (31,9): exact in BOTH engines. A (20,0)
     # cast would push Spark's multiply to precision 39 > 38, which
     # silently RESCALES to (38,8) — an 8dp round DuckDB doesn't take.
     # Bound: per-cell counts < 10^12 (document-count cells, not rows
     # of a fact table — generous at any corpus size).
     exact_nb = F.col("_n").cast("decimal(12,0)")
-    for _ in range(iters):
-        a = (
-            cells.join(F.broadcast(b), "_c")
+
+    def fit(factor: DataFrame, f: str, key: str, other: str,
+            targets: DataFrame, target: str, out: str) -> DataFrame:
+        # one margin step: out_key = T_key / sum over `other` of n * f
+        return (
+            cells.join(F.broadcast(factor), other)
+            .select(key, (exact_nb * F.col(f).cast("decimal(18,9)")).alias("_t"))
+            .groupBy(key)
+            .agg(F.sum("_t").cast("double").alias("_d"))
+            .join(F.broadcast(targets), key)
             .select(
-                "_r",
-                (exact_nb * F.col("_b").cast("decimal(18,9)")).alias("_t"),
-            )
-            .groupBy("_r")
-            .agg(F.sum("_t").cast("double").alias("_dr"))
-            .join(F.broadcast(row_t), "_r")
-            .select(
-                "_r",
-                F.round(F.try_divide(F.col("_tr"), F.col("_dr")), 9)
-                .alias("_a"),
+                key,
+                F.round(F.try_divide(F.col(target), F.col("_d")), 9).alias(out),
             )
         )
-        b = (
+
+    with held(cells):
+        n_total = cells.agg(F.sum("_n").cast("long").alias("_ntot"))
+        # both target tables are read by every alternation: materialized
+        # once, not re-derived from the cell counts per step
+        row_t = spark.createDataFrame(
+            sorted(row_targets.items()), ["_r", "_share_r"]
+        ).crossJoin(F.broadcast(n_total)).select(
+            "_r", (F.col("_share_r") * F.col("_ntot").cast("double")).alias("_tr")
+        ).localCheckpoint(eager=True)
+        col_t = spark.createDataFrame(
+            sorted(col_targets.items()), ["_c", "_share_c"]
+        ).crossJoin(F.broadcast(n_total)).select(
+            "_c", (F.col("_share_c") * F.col("_ntot").cast("double")).alias("_tc")
+        ).localCheckpoint(eager=True)
+
+        def a_step(b: DataFrame) -> DataFrame:
+            return fit(b, "_b", key="_r", other="_c", targets=row_t, target="_tr", out="_a")
+
+        def b_step(a: DataFrame) -> DataFrame:
+            return fit(a, "_a", key="_c", other="_r", targets=col_t, target="_tc", out="_b")
+
+        # one alternation (b -> a -> b) per round from b = 1, lineage cut
+        # at each round's a by the iterate barrier
+        a = iterate_fixed(
+            a_step(col_t.select("_c", F.lit(1.0).alias("_b"))),
+            lambda a: a_step(b_step(a)),
+            iters - 1,
+        )
+        b = b_step(a)
+        # weight = a*b as an IEEE DOUBLE product of identical 9dp operands
+        # (bit-equal cross-engine), rounded at 6dp. NOT an exact-decimal
+        # product cast to double: DuckDB's wide-DECIMAL(37,18)->DOUBLE cast
+        # is not correctly rounded and diverged from Spark's by one ulp at
+        # pre-verification (banked lesson: never ship a wide-decimal->double
+        # CAST to the compare boundary; the q401 unrounded rule is for
+        # decimals that STAY decimal-summed, not for decimal casts).
+        wd = F.col("_a") * F.col("_b")
+        out = (
             cells.join(F.broadcast(a), "_r")
+            .join(F.broadcast(b), "_c")
+            .crossJoin(F.broadcast(n_total))
             .select(
-                "_c",
-                (exact_nb * F.col("_a").cast("decimal(18,9)")).alias("_t"),
-            )
-            .groupBy("_c")
-            .agg(F.sum("_t").cast("double").alias("_dc"))
-            .join(F.broadcast(col_t), "_c")
-            .select(
-                "_c",
-                F.round(F.try_divide(F.col("_tc"), F.col("_dc")), 9)
-                .alias("_b"),
+                F.col("_r").alias(row_col),
+                F.col("_c").alias(col_col),
+                F.col("_n").cast("long").alias("n"),
+                F.round(wd, 6).alias("weight"),
+                F.round(
+                    F.col("_n").cast("double")
+                    * wd
+                    / F.col("_ntot").cast("double"),
+                    6,
+                ).alias("raked_share"),
             )
         )
-    # weight = a*b as an IEEE DOUBLE product of identical 9dp operands
-    # (bit-equal cross-engine), rounded at 6dp. NOT an exact-decimal
-    # product cast to double: DuckDB's wide-DECIMAL(37,18)->DOUBLE cast
-    # is not correctly rounded and diverged from Spark's by one ulp at
-    # pre-verification (banked lesson: never ship a wide-decimal->double
-    # CAST to the compare boundary; the q401 unrounded rule is for
-    # decimals that STAY decimal-summed, not for decimal casts).
-    wd = F.col("_a") * F.col("_b")
-    out = (
-        cells.join(F.broadcast(a), "_r")
-        .join(F.broadcast(b), "_c")
-        .crossJoin(F.broadcast(n_total))
-        .select(
-            F.col("_r").alias(row_col),
-            F.col("_c").alias(col_col),
-            F.col("_n").cast("long").alias("n"),
-            F.round(wd, 6).alias("weight"),
-            F.round(
-                F.col("_n").cast("double")
-                * wd
-                / F.col("_ntot").cast("double"),
-                6,
-            ).alias("raked_share"),
-        )
-    )
-    return out
+        return out.localCheckpoint(eager=True)

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
-from ..operators.iterate import checkpoint_and_release
+from ..operators.iterate import checkpoint_and_release, held
 from ..operators.window import per_group_topk
 from ._guards import DEFAULT_MAX_ROWS, require_small
 
@@ -341,7 +341,7 @@ def save_hyperplane_index(
     A 100 TB corpus hashes ONCE and serves every subsequent query batch
     from this index (``ann_query_index``) — re-deriving buckets per query
     batch re-scans the corpus. All H bucket columns are computed in one
-    corpus pass; with several tables the hashed corpus is persisted
+    corpus pass; with several tables the hashed corpus is held
     across the per-table writes, so it is scanned and hashed once.
     Storage is H× one table: the multi-table recall trade, paid in cheap
     parquet. The partition key is the bucket's integer value
@@ -360,10 +360,8 @@ def save_hyperplane_index(
             "bucket_id is conv(bucket, 2, 10) cast to long"
         )
     bucketed = hyperplane_bucket_multi(df, vec_col, bits, dim, n_tables)
-    shared = n_tables > 1
-    if shared:
-        bucketed = bucketed.persist()
-    try:
+    # one table reads the hashed corpus once: nothing to hold
+    with held(*([bucketed] if n_tables > 1 else [])):
         for t in range(n_tables):
             one = bucketed.select(
                 id_col,
@@ -372,9 +370,6 @@ def save_hyperplane_index(
                 F.conv(f"bucket_{t}", 2, 10).cast("long").alias("bucket_id"),
             )
             write_parquet(one, f"{path}/table_{t}", partition_by=["bucket_id"])
-    finally:
-        if shared:
-            bucketed.unpersist()
 
 
 def load_hyperplane_index(spark, path: str, n_tables: int = 1) -> list[DataFrame]:
@@ -519,14 +514,14 @@ def _incremental_plan(
     bits: int,
     dim: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """The lazy plan of ``ann_incremental_pairs``: (the persisted hashed
-    batch, the distinct candidate pairs). The caller owns the persisted
-    batch and must unpersist it."""
+    """The lazy plan of ``ann_incremental_pairs``: (the hashed batch,
+    the distinct candidate pairs over it). Read the pairs' plan inside
+    ``held(hashed)`` to see it as ``ann_incremental_pairs`` runs it."""
     if not tables:
         raise ValueError("tables must be a non-empty list of loaded LSH tables")
     hashed = hyperplane_bucket_multi(
         new_batch, vec_col, bits, dim, n_tables=len(tables)
-    ).persist()
+    )
     pairs = []
     for t, index in enumerate(tables):
         bucket_col = f"bucket_{t}"
@@ -569,9 +564,9 @@ def ann_incremental_pairs(
     dial (geometric in ``len(tables)``).
 
     The batch is hashed ONCE for all tables (``hyperplane_bucket_multi``)
-    and persisted — it feeds len(tables) cross joins plus the in-batch
+    and held — it feeds len(tables) cross joins plus the in-batch
     self-joins; without the barrier each join re-runs the hash pass.
-    ``checkpoint_and_release`` frees the persist before return.
+    ``checkpoint_and_release`` frees it before return.
     """
     hashed, pairs = _incremental_plan(
         new_batch, tables, threshold, id_col, vec_col, bits, dim
@@ -846,9 +841,8 @@ def pq_train(
             frac = min(1.0, min_fit_rows / max(n, 1))
         if frac < 1.0:
             fit_input = fit_input.sample(fraction=frac, seed=seed)
-    fit_input = fit_input.persist()
     books = []
-    try:
+    with held(fit_input):
         for j in range(m):
             feat = fit_input.select(
                 array_to_vector(
@@ -860,8 +854,6 @@ def pq_train(
                 predictionCol="_c",
             ).fit(feat)
             books.append([[float(x) for x in c] for c in model.clusterCenters()])
-    finally:
-        fit_input.unpersist()
     return books
 
 

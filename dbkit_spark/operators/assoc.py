@@ -48,10 +48,10 @@ def item_pairs(
     ).distinct()
     sizes = bi.groupBy("_b").agg(F.count("*").alias("_sz"))
     # the distinct pass feeds the size filter AND both self-join sides —
-    # persist collapses three recomputations to one
+    # holding it collapses three recomputations to one
     kept = bi.join(
         sizes.filter(F.col("_sz") <= max_basket_size).select("_b"), "_b"
-    ).persist()
+    )
     a = kept.select("_b", F.col("_i").alias("item_a"))
     b = kept.select("_b", F.col("_i").alias("item_b"))
     out = (
@@ -92,7 +92,7 @@ def association_rules(
     sizes = bi.groupBy("_b").agg(F.count("*").alias("_sz"))
     kept = bi.join(
         sizes.filter(F.col("_sz") <= max_basket_size).select("_b"), "_b"
-    ).persist()
+    )
     n_baskets = kept.agg(
         F.countDistinct("_b").cast("long").alias("_nb")
     )
@@ -135,7 +135,7 @@ def association_rules(
         ).alias("lift"),
     )
     # the capped basket set feeds three branches (n_baskets, item counts,
-    # the pair self-join); the persist collapses them to one distinct pass
+    # the pair self-join); holding it collapses them to one distinct pass
     return checkpoint_and_release(out, kept)
 
 

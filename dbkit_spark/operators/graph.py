@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .iterate import checkpoint_and_release, iterate_fixed, iterate_until_fixpoint
+from .iterate import checkpoint_and_release, held, iterate_fixed, iterate_until_fixpoint
 
 
 def canonical_edges(
@@ -94,31 +94,30 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     (open+closed triads) come from the degree table alone:
     Σ deg·(deg−1)/2, exact BIGINT.
     """
-    und = edges.persist()
-    deg = _degree_table(_stubs(und)).persist()
+    deg = _degree_table(_stubs(edges))
     # orient: lower (deg, node) -> higher (deg, node); total order, so
     # the oriented graph is acyclic and out-degree is O(sqrt(m))
     da = deg.select(F.col("node").alias("a"), F.col("degree").alias("_dega"))
     db = deg.select(F.col("node").alias("b"), F.col("degree").alias("_degb"))
-    keyed = und.join(da, "a").join(db, "b")
+    keyed = edges.join(da, "a").join(db, "b")
     a_first = (F.col("_dega") < F.col("_degb")) | (
         (F.col("_dega") == F.col("_degb")) & (F.col("a") < F.col("b"))
     )
     oriented = keyed.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
-    ).persist()
+    )
     # wedges at the apex: pairs of out-neighbors; closing edge looked up
     # by canonical (lo, hi) key in the undirected set
     e1 = oriented.select(F.col("src"), F.col("dst").alias("v"))
     e2 = oriented.select(F.col("src"), F.col("dst").alias("w"))
     apex_pairs = e1.join(e2, "src").filter(F.col("v") < F.col("w"))
-    closing = und.select(F.col("a").alias("v"), F.col("b").alias("w"))
+    closing = edges.select(F.col("a").alias("v"), F.col("b").alias("w"))
     tri_cnt = (
         apex_pairs.join(closing, ["v", "w"])
         .agg(F.count("*").cast("long").alias("n_triangles"))
     )
-    edge_cnt = und.agg(F.count("*").cast("long").alias("n_edges"))
+    edge_cnt = edges.agg(F.count("*").cast("long").alias("n_edges"))
     # per-node wedge count is computed with integer DIV so the sum stays
     # exact BIGINT at any scale (a double sum loses exactness past 2^53)
     stats = deg.agg(
@@ -142,7 +141,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
             ).alias("clustering"),
         )
     )
-    return checkpoint_and_release(out, und, deg, oriented)
+    return checkpoint_and_release(out, edges, deg, oriented)
 
 
 def label_propagation(
@@ -166,7 +165,7 @@ def label_propagation(
     one node-keyed window rank — O(edges) work, lineage truncated per
     round. Initial labels are the node ids themselves.
     """
-    und = _stubs(edges).persist()
+    und = _stubs(edges)
     labels0 = und.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -185,10 +184,8 @@ def label_propagation(
             .select("node", "label")
         )
 
-    try:
+    with held(und):
         return iterate_fixed(labels0, step, n_rounds, checkpoint_dir)
-    finally:
-        und.unpersist()
 
 
 def k_core(
@@ -257,8 +254,8 @@ def bfs_hops(
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    und = _stubs(edges).persist()
-    try:
+    und = _stubs(edges)
+    with held(und):
         visited = (
             sources.select("node").distinct().withColumn("hops", F.lit(0))
         ).localCheckpoint(eager=True)
@@ -276,8 +273,6 @@ def bfs_hops(
             visited = visited.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt.select("node")
         return visited
-    finally:
-        und.unpersist()
 
 
 def link_prediction_features(
@@ -379,11 +374,11 @@ def modularity(
     collect; output is communities-sized metadata.
     """
     # both the community map and the tagged edge set feed 2-3 downstream
-    # branches — persist so the corpus is scanned once per input, not
+    # branches — held so the corpus is scanned once per input, not
     # once per branch
     cmap = communities.select(
         F.col(node_col).alias("_node"), F.col(comm_col).alias("_comm")
-    ).persist()
+    )
     tagged = (
         edges.join(
             cmap.withColumnRenamed("_comm", "_ca"),
@@ -395,7 +390,6 @@ def modularity(
             edges["b"] == F.col("_node"),
         )
         .drop("_node")
-        .persist()
     )
     m = tagged.agg(F.count("*").cast("long").alias("_m"))
     # per-community degree sum: each edge adds 1 to each endpoint's side
@@ -465,11 +459,10 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     tag endpoint degrees (the degree table is nodes-sized — AQE
     broadcasts it for dim-sized graphs, shuffles on the node key
     otherwise), one global agg. No windows, no collect. Both the edge
-    set and the degree table feed multiple branches — persisted so the
+    set and the degree table feed multiple branches — held so the
     edge corpus is scanned once, not once per branch.
     """
-    edges = edges.persist()
-    deg = _degree_table(_stubs(edges)).persist()
+    deg = _degree_table(_stubs(edges))
     tagged = edges.join(
         deg.select(F.col("node").alias("a"), F.col("degree").alias("da")), "a"
     ).join(deg.select(F.col("node").alias("b"), F.col("degree").alias("db")), "b")

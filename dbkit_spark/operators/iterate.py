@@ -26,12 +26,22 @@ graph-reachability / label-propagation closure without rebuilding the
 - **Rounds needed = problem diameter**, so ``max_iter`` is a safety
   rail: exhaustion raises ``RuntimeError`` rather than silently
   returning a non-fixpoint.
+
+The cache rule, kept by ``held``: an operator holds a cache only for
+the work it does itself, and returns a frame that does not read it — a
+checkpointed result (``checkpoint_and_release``) or the output of a
+fixpoint or loop. No operator returns a lazy frame over a cache, so no
+caller is left a cache it cannot reach to release, and an entry a
+caller cached before the call keeps its storage level after it.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Any, Callable
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 
@@ -64,21 +74,33 @@ def _barrier_fn(spark, checkpoint_dir, eager: bool = True):
     return barrier
 
 
-def checkpoint_and_release(df: DataFrame, *cached: DataFrame) -> DataFrame:
-    """Return ``df`` eagerly ``localCheckpoint``-ed, then unpersist
-    ``cached``.
+@contextmanager
+def held(*frames: DataFrame) -> Iterator[None]:
+    """Hold ``frames`` in the session cache for the body of a ``with``.
 
-    An operator that persists an intermediate (because several branches
-    of its plan consume it) returns a result through which no caller can
-    reach that cache, so the operator must release it itself or every
-    call pins it for the session. The eager checkpoint materializes the
-    small result first, so the release costs no recompute; the
-    ``finally`` releases the caches also when the checkpoint job fails."""
+    On entry each frame is persisted, in argument order (pass a frame's
+    dependencies before it), unless a session cache entry already holds
+    its plan: Spark shares one entry between identical plans, so that
+    entry belongs to whoever made it and stays as it is. On exit,
+    also on error, exactly the frames persisted here are unpersisted,
+    last first. This is the one place in the package that persists or
+    unpersists."""
+    made = [df for df in frames if df.storageLevel == StorageLevel.NONE]
+    for df in made:
+        df.persist()
     try:
-        return df.localCheckpoint(eager=True)
+        yield
     finally:
-        for c in cached:
-            c.unpersist()
+        for df in reversed(made):
+            df.unpersist()
+
+
+def checkpoint_and_release(df: DataFrame, *frames: DataFrame) -> DataFrame:
+    """Return ``df`` eagerly ``localCheckpoint``-ed while ``frames`` are
+    ``held``: the checkpoint job reads each of them from the cache, and
+    the result reads none of them, so the release costs no recompute."""
+    with held(*frames):
+        return df.localCheckpoint(eager=True)
 
 
 def iterate_until_fixpoint(

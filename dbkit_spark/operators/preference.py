@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .aggregate import stable_sum
+from .iterate import checkpoint_and_release, held
 
 _Z95 = 1.959963984540054  # two-sided 95% normal quantile (pinned literal)
 
@@ -99,15 +100,13 @@ def bradley_terry(
     # Complete ordered pair table: n_ij = w_ij + w_ji for every ordered
     # pair that played at least once (both orientations present).
     # pairs-sized and the root of every downstream branch (totals,
-    # games, the MM loop): persisted so the corpus-sized match
-    # reduction runs ONCE, not once per branch (no unpersist — the
-    # caller owns the action, the llm/dedup.py convention)
+    # games, the MM loop): held so the corpus-sized match reduction
+    # runs ONCE, not once per branch
     sym = (
         d.select("i", "j", "w")
         .unionByName(d.select(F.col("j").alias("i"), F.col("i").alias("j"), F.lit(0).cast("long").alias("w")))
         .groupBy("i", "j")
         .agg(F.sum("w").alias("wij"))
-        .persist()
     )
     n = (
         sym.alias("a")
@@ -121,71 +120,70 @@ def bradley_terry(
     totals = sym.groupBy("i").agg(
         F.sum("wij").alias("wins"),
     )
-    # pairs-sized; persisted so the MM iterations reuse one computation
-    # of the corpus reduction (no unpersist — the caller owns the
-    # action, the llm/dedup.py convention)
-    n = n.persist()
-    games = n.groupBy("i").agg(F.sum("n").alias("games"))
-    s = totals.select("i", F.lit(1.0).alias("s"))
-    # Each MM step references the previous strengths TWICE (as s_i and
-    # s_j) and the normalization references the raw update twice more —
-    # a naive lazy loop quadruples the logical plan per step (4^iters
-    # copies of the match lineage; the first run OOM'd the driver at
-    # FIVE items). localCheckpoint per step truncates the lineage to
-    # the items-sized frame — the llm/cluster.py connected-components
-    # precedent; 5 eager jobs over <=items rows is metadata work.
-    for _ in range(iters):
-        denom = (
-            n.join(F.broadcast(s.select(F.col("i"), F.col("s").alias("_si"))), "i")
-            .join(
-                F.broadcast(
-                    s.select(F.col("i").alias("j"), F.col("s").alias("_sj"))
-                ),
-                "j",
+    # n is pairs-sized and read by every MM step: held with sym for the
+    # loop and the checkpoint of the result
+    with held(sym, n):
+        games = n.groupBy("i").agg(F.sum("n").alias("games"))
+        s = totals.select("i", F.lit(1.0).alias("s"))
+        # Each MM step references the previous strengths TWICE (as s_i and
+        # s_j) and the normalization references the raw update twice more —
+        # a naive lazy loop quadruples the logical plan per step (4^iters
+        # copies of the match lineage; the first run OOM'd the driver at
+        # FIVE items). localCheckpoint per step truncates the lineage to
+        # the items-sized frame — the llm/cluster.py connected-components
+        # precedent; 5 eager jobs over <=items rows is metadata work.
+        for _ in range(iters):
+            denom = (
+                n.join(F.broadcast(s.select(F.col("i"), F.col("s").alias("_si"))), "i")
+                .join(
+                    F.broadcast(
+                        s.select(F.col("i").alias("j"), F.col("s").alias("_sj"))
+                    ),
+                    "j",
+                )
+                .select(
+                    "i",
+                    F.round(
+                        F.col("n").cast("double")
+                        / (F.col("_si") + F.col("_sj")),
+                        9,
+                    ).alias("_term"),
+                )
+                .groupBy("i")
+                .agg(stable_sum("_term", 9).alias("_denom"))
             )
-            .select(
+            raw = totals.join(denom, "i").select(
                 "i",
                 F.round(
-                    F.col("n").cast("double")
-                    / (F.col("_si") + F.col("_sj")),
-                    9,
-                ).alias("_term"),
+                    F.try_divide(F.col("wins").cast("double"), F.col("_denom")), 9
+                ).alias("_raw"),
             )
-            .groupBy("i")
-            .agg(stable_sum("_term", 9).alias("_denom"))
+            norm = raw.agg(
+                (stable_sum("_raw", 9) / F.count(F.lit(1))).alias("_mean")
+            )
+            s = raw.crossJoin(F.broadcast(norm)).select(
+                "i", F.round(F.col("_raw") / F.col("_mean"), 9).alias("s")
+            ).localCheckpoint(eager=True)
+        out = (
+            totals.join(games, "i")
+            .join(s, "i")
+            .select(
+                F.col("i").alias("item"),
+                F.col("games").cast("long").alias("games"),
+                F.col("wins").cast("long").alias("wins"),
+                F.col("s").alias("_s9"),
+            )
         )
-        raw = totals.join(denom, "i").select(
-            "i",
-            F.round(
-                F.try_divide(F.col("wins").cast("double"), F.col("_denom")), 9
-            ).alias("_raw"),
-        )
-        norm = raw.agg(
-            (stable_sum("_raw", 9) / F.count(F.lit(1))).alias("_mean")
-        )
-        s = raw.crossJoin(F.broadcast(norm)).select(
-            "i", F.round(F.col("_raw") / F.col("_mean"), 9).alias("s")
-        ).localCheckpoint(eager=True)
-    out = (
-        totals.join(games, "i")
-        .join(s, "i")
-        .select(
-            F.col("i").alias("item"),
-            F.col("games").cast("long").alias("games"),
-            F.col("wins").cast("long").alias("wins"),
-            F.col("s").alias("_s9"),
-        )
-    )
-    from pyspark.sql import Window
+        from pyspark.sql import Window
 
-    rk = Window.orderBy(F.col("_s9").desc(), F.col("item").asc())
-    return out.select(
-        "item",
-        "games",
-        "wins",
-        F.round(F.col("_s9"), 6).alias("strength"),
-        F.row_number().over(rk).cast("long").alias("rank"),
-    )
+        rk = Window.orderBy(F.col("_s9").desc(), F.col("item").asc())
+        return out.select(
+            "item",
+            "games",
+            "wins",
+            F.round(F.col("_s9"), 6).alias("strength"),
+            F.row_number().over(rk).cast("long").alias("rank"),
+        ).localCheckpoint(eager=True)
 
 
 def preference_cycles(
@@ -202,9 +200,10 @@ def preference_cycles(
 
     Plans: the match groupBy is the only corpus-sized step; the edge
     table is pairs-sized and every join below is items²-bounded and
-    broadcast.
+    broadcast. The win table and the edge table feed several branches,
+    so both are held for the checkpoint of the result.
     """
-    d = _directed_wins(matches, winner_col, loser_col).persist()
+    d = _directed_wins(matches, winner_col, loser_col)
     # majority edges u -> v (u beat v strictly more often)
     both = (
         d.alias("a")
@@ -220,7 +219,7 @@ def preference_cycles(
             F.coalesce(F.col("b.w"), F.lit(0)).alias("wv"),
         )
     )
-    edges = both.filter(F.col("wu") > F.col("wv")).select("u", "v").persist()
+    edges = both.filter(F.col("wu") > F.col("wv")).select("u", "v")
     items = d.select(F.col("i").alias("x")).unionByName(
         d.select(F.col("j").alias("x"))
     ).distinct()
@@ -287,7 +286,7 @@ def preference_cycles(
             ).alias("cycle_rate"),
         )
     )
-    return res
+    return checkpoint_and_release(res, d, edges)
 
 
 def pairwise_winrates(

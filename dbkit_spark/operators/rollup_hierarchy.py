@@ -19,6 +19,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .iterate import checkpoint_and_release
+
 
 _UNIT_SECONDS = {
     "second": 1, "seconds": 1, "minute": 60, "minutes": 60,
@@ -61,13 +63,30 @@ def rollup_hierarchy(
     i-1's partials (n summed, total summed, min of mins, max of maxes).
     Resolutions must nest (validated — see ``_check_nesting``).
 
-    Cache lifecycle: each level is persisted for the returned DataFrame's
-    evaluation and not unpersisted (the caller owns the action); repeated
-    in-session calls should clearCache between them, and production
-    continuous aggregates materialize each level to a table instead.
+    Each level is held in the session cache for the one job that
+    checkpoints the union, then released: the union reads every level,
+    and level i feeds level i+1, so without the barrier Catalyst
+    re-derives each level from raw per union branch (measured: 3
+    branches -> 3 raw scans, no ReuseExchange across the union). That is
+    the in-session analogue of materializing each continuous-aggregate
+    level to a table, which production does at 100 TB. ``_rollup_plan``
+    gives the lazy levels and union for plan inspection.
     """
+    levels, out = _rollup_plan(df, ts_col, keys, value_col, resolutions)
+    return checkpoint_and_release(out, *levels)
+
+
+def _rollup_plan(
+    df: DataFrame,
+    ts_col: str,
+    keys: Sequence[str],
+    value_col: str,
+    resolutions: Sequence[str],
+) -> tuple[list[DataFrame], DataFrame]:
+    """The lazy plan of ``rollup_hierarchy``: (the levels, finest first;
+    their tagged union). Read the union's plan inside ``held(*levels)``
+    to see it as ``rollup_hierarchy`` runs it."""
     _check_nesting(resolutions)
-    levels: list[DataFrame] = []
     # level 0: raw -> finest resolution
     cur = (
         df.groupBy(F.window(ts_col, resolutions[0]), *keys)
@@ -86,14 +105,7 @@ def rollup_hierarchy(
             "vmax",
         )
     )
-    # Persist each level: the union output references every level, and
-    # level i feeds level i+1 — without a barrier Catalyst re-derives each
-    # level from raw per union branch (measured: 3 branches -> 3 raw scans,
-    # no ReuseExchange across the union). Persisting is the in-session
-    # analogue of materializing each continuous-aggregate level to a table,
-    # which is what you'd do at 100 TB anyway.
-    cur = cur.persist()
-    levels.append(cur.withColumn("resolution", F.lit(resolutions[0])))
+    levels = [cur]
     # level i: re-aggregate level i-1 partials into coarser buckets
     for res in resolutions[1:]:
         cur = (
@@ -113,12 +125,11 @@ def rollup_hierarchy(
                 "vmax",
             )
         )
-        cur = cur.persist()
-        levels.append(cur.withColumn("resolution", F.lit(res)))
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out
+        levels.append(cur)
+    out = levels[0].withColumn("resolution", F.lit(resolutions[0]))
+    for lv, res in zip(levels[1:], resolutions[1:]):
+        out = out.unionByName(lv.withColumn("resolution", F.lit(res)))
+    return levels, out
 
 
 def merge_upsert(

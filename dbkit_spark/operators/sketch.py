@@ -213,7 +213,7 @@ def tdigest_build(
     ``distinct_values(group) / fanout`` rows — a dominant repeated
     value is ONE weighted row, never a data-sized shard, and the
     pre-agg shuffle ships per-partition-distinct rows rather than raw
-    data. The residual bound is real and the caller owns it: for a
+    data. The residual bound is real and left to the caller: for a
     continuous column (all values distinct) a shard is ~n/fanout rows,
     so size ``fanout ≈ rows_per_group / 5e6`` to keep shards inside an
     executor Arrow batch; the default 32 is sized for ~1e8 distinct

@@ -408,7 +408,7 @@ def q118_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     "DuckDB's UNION-distinct recursion terminates",
 )
 def q158_reachability_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.iterate import iterate_until_fixpoint
+    from ..operators.iterate import held, iterate_until_fixpoint
 
     ev = read_table(spark, sf_dir, "events")
     fun = ev.select(
@@ -418,7 +418,7 @@ def q158_reachability_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain = ev.filter(F.col("user_id") < 8).select(
         F.col("user_id").alias("src"), (F.col("user_id") + 1).alias("dst")
     )
-    edges = fun.unionByName(chain).distinct().persist()
+    edges = fun.unionByName(chain).distinct()
 
     seeds = (
         edges.filter(F.col("src") < 5)
@@ -438,10 +438,10 @@ def q158_reachability_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return state.withColumn("frontier", F.lit(False)).unionByName(nxt)
 
-    out = iterate_until_fixpoint(
-        seeds, step, measure=lambda df: df.count(), max_iter=40
-    )
-    edges.unpersist()
+    with held(edges):
+        out = iterate_until_fixpoint(
+            seeds, step, measure=lambda df: df.count(), max_iter=40
+        )
     return out.select("start", "node")
 
 
@@ -631,7 +631,7 @@ def _pagerank_oracle(n_iter: int = 10) -> str:
     "node-count scalar is computed once, never per round",
 )
 def q177_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.iterate import iterate_fixed
+    from ..operators.iterate import held, iterate_fixed
 
     ev = read_table(spark, sf_dir, "events")
     edges = (
@@ -640,45 +640,42 @@ def q177_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("user_id") * 7 + 3) % 150).alias("dst"),
         )
         .distinct()
-        .persist()
     )
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = edges.join(deg, "src").persist()
+    edges_deg = edges.join(deg, "src")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .persist()
     )
-    n = nodes.count()
-    base = F.lit(0.15).cast("double") / F.lit(n).cast("double")
-    init = nodes.withColumn(
-        "rank", F.lit(1.0).cast("double") / F.lit(n).cast("double")
-    )
+    with held(edges, edges_deg, nodes):
+        n = nodes.count()
+        base = F.lit(0.15).cast("double") / F.lit(n).cast("double")
+        init = nodes.withColumn(
+            "rank", F.lit(1.0).cast("double") / F.lit(n).cast("double")
+        )
 
-    def step(ranks: DataFrame) -> DataFrame:
-        contribs = (
-            ranks.join(edges_deg, ranks["node"] == edges_deg["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("deg")).cast("decimal(25,18)").alias("c"),
+        def step(ranks: DataFrame) -> DataFrame:
+            contribs = (
+                ranks.join(edges_deg, ranks["node"] == edges_deg["src"])
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.col("rank") / F.col("deg")).cast("decimal(25,18)").alias("c"),
+                )
+                .groupBy("node")
+                .agg(F.sum("c").alias("csum"))
             )
-            .groupBy("node")
-            .agg(F.sum("c").alias("csum"))
-        )
-        zero = F.lit(0).cast("decimal(25,18)")
-        return nodes.join(contribs, "node", "left").select(
-            "node",
-            (
-                base
-                + F.lit(0.85).cast("double")
-                * F.coalesce("csum", zero).cast("double")
-            ).alias("rank"),
-        )
+            zero = F.lit(0).cast("decimal(25,18)")
+            return nodes.join(contribs, "node", "left").select(
+                "node",
+                (
+                    base
+                    + F.lit(0.85).cast("double")
+                    * F.coalesce("csum", zero).cast("double")
+                ).alias("rank"),
+            )
 
-    out = iterate_fixed(init, step, 10)
-    for df in (edges, edges_deg, nodes):
-        df.unpersist()
+        out = iterate_fixed(init, step, 10)
     return out.select("node", F.round("rank", 12).alias("rank")).orderBy("node")
 
 

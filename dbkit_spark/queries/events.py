@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import register
 from ..operators.aggregate import dec, stable_sum, stable_sum_sql
+from ..operators.iterate import held
 from ..sources import read_table
 from ..streaming.runner import read_events_stream, run_available_now
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
@@ -928,22 +929,21 @@ def q273_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import shutil
 
-    z = z.persist()
-    cut = z.stat.approxQuantile("event_id", [0.5], 0.0)[0]
     d = tempfile.mkdtemp(prefix="q273_zstream_")
-    chunks = (
-        z.filter(F.col("event_id") <= cut),
-        z.filter(F.col("event_id") > cut),
-    )
-    for i, chunk in enumerate(chunks):
-        stage = os.path.join(d, f"_stage{i}")
-        chunk.coalesce(1).write.parquet(stage)
-        shutil.move(
-            _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-            os.path.join(d, f"part{i}.parquet"),
+    with held(z):
+        cut = z.stat.approxQuantile("event_id", [0.5], 0.0)[0]
+        chunks = (
+            z.filter(F.col("event_id") <= cut),
+            z.filter(F.col("event_id") > cut),
         )
-        shutil.rmtree(stage)
-    z.unpersist()
+        for i, chunk in enumerate(chunks):
+            stage = os.path.join(d, f"_stage{i}")
+            chunk.coalesce(1).write.parquet(stage)
+            shutil.move(
+                _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
+                os.path.join(d, f"part{i}.parquet"),
+            )
+            shutil.rmtree(stage)
     zstream = (
         spark.readStream.schema("user_id long, event_id long, z double")
         .option("maxFilesPerTrigger", 1)
@@ -1010,19 +1010,18 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.partitionBy("user_id").orderBy("ts", "event_type")
             ),
         )
-        .persist()
     )
     d = tempfile.mkdtemp(prefix="q294_funnel_")
     chunks = (base.filter(F.col("_rn") == 1), base.filter(F.col("_rn") > 1))
-    for i, chunk in enumerate(chunks):
-        stage = os.path.join(d, f"_stage{i}")
-        chunk.drop("_rn").coalesce(1).write.parquet(stage)
-        shutil.move(
-            _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-            os.path.join(d, f"part{i}.parquet"),
-        )
-        shutil.rmtree(stage)
-    base.unpersist()
+    with held(base):
+        for i, chunk in enumerate(chunks):
+            stage = os.path.join(d, f"_stage{i}")
+            chunk.drop("_rn").coalesce(1).write.parquet(stage)
+            shutil.move(
+                _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
+                os.path.join(d, f"part{i}.parquet"),
+            )
+            shutil.rmtree(stage)
     stream = (
         spark.readStream.schema("user_id long, ts long, event_type string")
         .option("maxFilesPerTrigger", 1)

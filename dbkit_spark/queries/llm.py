@@ -154,16 +154,8 @@ def q40_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # split=True: tokenize+shingle+minhash all run map-side before the
     # first exchange — the adaptive scan split parallelizes that CPU
     # (A/B at sf0.1: 1.53 s -> 0.71 s).
-    # persist_shingles=True (OPTIMIZATION_r15 re-measurement): the
-    # round-8 recompute preference was measured when the cache
-    # materialized on the raw scan's ONE task; with the split the cache
-    # fills in parallel and saves the verify pass's two extra
-    # scan+tokenize executions (in-process A/B x3 blocks at sf0.1:
-    # persist 1.06/1.09/1.06 s vs recompute 1.52/1.24/1.15 — persist
-    # won every block). Same trade at scale: one shingle-table
-    # write+read beats two more full-corpus scans plus 2x tokenize CPU.
     docs = read_table(spark, sf_dir, "documents", split=True)
-    out = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    out = minhash_near_dup_pairs(docs, threshold=0.5)
     return out.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
 
 
@@ -533,10 +525,7 @@ def q87_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # split=True: same map-side tokenize/shingle front end as q40
     docs = read_table(spark, sf_dir, "documents", split=True)
-    # persist_shingles: the component pipeline materializes the pair
-    # set once into its own edge persist — the shingle cache pays here
-    # (see minhash_near_dup_pairs docstring)
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
     # LSH pairs are distinct (doc_a < doc_b) by construction: skip the
     # edge-dedup shuffle (OPTIMIZATION_r15; fixpoint identical)
     return assign_clusters(docs, pairs, dedupe_edges=False).select(
@@ -561,7 +550,7 @@ def q88_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # split=True: same map-side tokenize/shingle front end as q40
     docs = read_table(spark, sf_dir, "documents", split=True)
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
     return dedup_survivors(docs, pairs, dedupe_edges=False).select(
         "doc_id", "lang", "source", "n_chars"
     )

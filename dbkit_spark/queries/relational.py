@@ -26,6 +26,7 @@ from ..operators.aggregate import (
     stable_sum,
     stable_sum_sql,
 )
+from ..operators.iterate import checkpoint_and_release
 from ..operators.joins import join
 from ..operators.project import Projector
 from ..operators.setops import dedup_keep_first, except_all, intersect_all
@@ -2471,7 +2472,6 @@ def q154_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((F.col("user_id") * 7 + 3) % 150).alias("dst"),
         )
         .distinct()
-        .persist()
     )
     frontier = (
         edges.filter(F.col("src") < 10)
@@ -2486,8 +2486,12 @@ def q154_transitive_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("start", F.col("dst").alias("node"), F.lit(hop).alias("depth"))
         )
         all_reach = all_reach.unionByName(nxt)
-    return all_reach.groupBy("start", "node").agg(
-        F.min("depth").cast("int").alias("min_depth")
+    # every hop reads the edge table: held for the checkpoint
+    return checkpoint_and_release(
+        all_reach.groupBy("start", "node").agg(
+            F.min("depth").cast("int").alias("min_depth")
+        ),
+        edges,
     )
 
 

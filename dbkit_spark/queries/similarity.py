@@ -797,9 +797,7 @@ def q211_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.sampling import leakage_safe_split
 
     docs = read_table(spark, sf_dir, "documents")
-    # persist_shingles: the component pipeline materializes the pair set
-    # once, so the pairs are checkpointed and their caches released
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
     return leakage_safe_split(
         docs, pairs, {"train": 0.8, "val": 0.1, "test": 0.1}
     ).select("doc_id", "cluster_id", "split").orderBy("doc_id")

@@ -44,6 +44,7 @@ from ..llm.dedup import (
     minhash_signatures,
     shingle_docs,
 )
+from ..operators.iterate import held
 
 
 def _paths(state_dir: str) -> dict[str, str]:
@@ -83,14 +84,9 @@ def ingest_batch(
             state_dir, state, {"docs": batch, "shingles": sh_new, "bands": bands_new}
         )
 
-    sh_new.persist()
-    bands_new.persist()
-    # lsh_candidate_pairs persists the band table it is given; in a first
-    # batch every doc is fresh, so that table is bands_new itself
-    fresh_bands = bands_new
-    try:
+    with held(sh_new, bands_new):
         if first_batch:
-            survivors = _in_batch_survivors(batch, sh_new, bands_new, threshold)
+            fresh, fresh_sh, fresh_bands = batch, sh_new, bands_new
         else:
             cands, all_sh = _batch_vs_corpus(
                 bands_new, state["bands"], sh_new, state["shingles"]
@@ -110,16 +106,21 @@ def ingest_batch(
             fresh_bands = bands_new.join(
                 fresh.select("doc_id"), "doc_id", "left_semi"
             )
-            survivors = _in_batch_survivors(fresh, fresh_sh, fresh_bands, threshold)
 
-        # localCheckpoint (NOT persist): the admitted set's lineage reads
+        # localCheckpoint (NOT a cache): the admitted set's lineage reads
         # the very state tables the appends below mutate. A cache can
         # evict and re-evaluate — after the docs append, a re-evaluated
         # `already` anti-join silently empties `ids`, and later appends
         # write nothing (observed: the band index lost every batch-2
         # doc). The eager checkpoint severs lineage so the admitted set
         # is immutable across the three appends regardless of caching.
-        admitted = survivors.localCheckpoint(eager=True)
+        # Both in-batch candidate self-join sides read the band table, so
+        # it is held while the component loop and the checkpoint run (in
+        # a first batch it is bands_new, already held).
+        with held(fresh_bands):
+            admitted = _in_batch_survivors(
+                fresh, fresh_sh, fresh_bands, threshold
+            ).localCheckpoint(eager=True)
         n = admitted.count()
         if n:
             ids = admitted.select("doc_id")
@@ -131,9 +132,6 @@ def ingest_batch(
                 "append"
             ).parquet(p["bands"])
         return n
-    finally:
-        for df in (sh_new, bands_new, fresh_bands):
-            df.unpersist()
 
 
 def _check_state(

@@ -50,6 +50,7 @@ _FULL_TIER_MODULES = {
 _FULL_TIER_TESTS = {
     "test_catalog_wide_no_accidental_nlj",
     "test_no_nested_output_columns_anywhere",
+    "test_no_query_leaves_a_cached_plan",
 }
 # default-tier modules left out of `-m quick`
 _NOT_QUICK_MODULES = {"test_oracle_sample", "test_plans"}

@@ -20,6 +20,8 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 from dbkit_spark.catalog import _driver_green_rounds, load_all, qnum
 
 REPO = Path(__file__).resolve().parent.parent
@@ -98,6 +100,18 @@ def test_no_nested_output_columns_anywhere(spark):
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType.simpleString()}")
     assert not offenders, offenders
+
+
+@pytest.mark.parametrize("name", sorted(load_all()))
+def test_no_query_leaves_a_cached_plan(spark, sf_dir, name):
+    """One execution of a query leaves the session cache as empty as it
+    found it: every cache an operator or query takes is released before
+    the query's frame is returned (``operators.iterate.held``), so no
+    band table, shingle set or level table stays pinned for the rest of
+    a session. Full tier: it executes all 475 queries."""
+    spark.catalog.clearCache()
+    load_all()[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_fixture_lock_of_killed_owner_frees_at_once(tmp_path):

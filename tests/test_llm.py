@@ -35,9 +35,9 @@ def test_minhash_pairs_subset_of_exact_with_high_recall(spark, sf_dir):
 
 
 def test_minhash_persist_shingles_releases_its_caches(spark):
-    """persist_shingles=True checkpoints the pairs and then releases every
+    """minhash_near_dup_pairs checkpoints the pairs and then releases every
     cache the pipeline made (the shingle sets and the band-key table
-    lsh_candidate_pairs persists): the session holds as many cached
+    both lsh_candidate_pairs sides read): the session holds as many cached
     plans after the call as before. minhash_incremental_pairs (both
     shingle sets plus the batch's band keys), ngram_jaccard_pairs (its
     shingle set) and simhash_candidate_pairs (its band table) follow
@@ -54,7 +54,7 @@ def test_minhash_persist_shingles_releases_its_caches(spark):
     )
     cache_manager = spark._jsparkSession.sharedState().cacheManager()
     before = cache_manager.cachedData().size()
-    pairs = minhash_near_dup_pairs(docs, threshold=0.5, persist_shingles=True)
+    pairs = minhash_near_dup_pairs(docs, threshold=0.5)
     assert {(r.doc_a, r.doc_b) for r in pairs.collect()} == {(1, 2)}
     assert cache_manager.cachedData().size() == before
     incremental = minhash_incremental_pairs(
@@ -1254,6 +1254,7 @@ def test_ann_incremental_pairs_batch_vs_index(spark, tmp_path):
         load_hyperplane_index,
         save_hyperplane_index,
     )
+    from dbkit_spark.operators.iterate import held
     from dbkit_spark.sources import read_table
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -1313,8 +1314,8 @@ def test_ann_incremental_pairs_batch_vs_index(spark, tmp_path):
     hashed, pairs = _incremental_plan(
         batch, tables, 0.2, "vec_id", "embedding", 8, 64
     )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
-    hashed.unpersist()
+    with held(hashed):
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
     # index scans are the ones whose ReadSchema carries the PRECOMPUTED
     # bucket_id partition column (the batch side has no such column)
     idx_scans = [

@@ -243,6 +243,17 @@ def test_salted_draw_written_once():
     assert sampling.count("keep = cond if keep is None else keep | cond") == 1
 
 
+def test_one_cache_owner():
+    """Every cache in the package is taken and released by one helper,
+    ``operators.iterate.held``: ``.persist(`` and ``.unpersist(`` each
+    appear once, both inside it, and neither a per-call persist switch
+    nor a cache left for the caller to release remains."""
+    assert _match_sites(r"\.persist\(") == ["dbkit_spark/operators/iterate.py:held"]
+    assert _match_sites(r"\.unpersist\(") == ["dbkit_spark/operators/iterate.py:held"]
+    assert _match_sites(r"persist_shingles") == []
+    assert _match_sites(r"(?i)caller\s+owns") == []
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The scanners flag an undefined name read in a lambda and in a
     method, a second top-level binding, and a function that re-imports

@@ -10,7 +10,9 @@ from pyspark.sql import types as T
 
 from dbkit_spark import errors
 from dbkit_spark.llm import cluster, dedup
-from dbkit_spark.operators import assoc, graph
+from dbkit_spark.llm.sampling import rake_weights
+from dbkit_spark.operators import assoc, graph, preference
+from dbkit_spark.operators.rollup_hierarchy import rollup_hierarchy
 from dbkit_spark.operators.joins import asof_join, range_join
 from dbkit_spark.operators.project import Projector, prefix_all, project, rename
 from dbkit_spark.operators.setops import dedup_keep_first, union_all
@@ -819,3 +821,71 @@ def test_operators_release_caches_when_the_job_fails(spark, case):
     with pytest.raises(Exception, match="boom"):
         _RELEASE_CASES[case](spark)
     assert cache_manager.cachedData().size() == before
+
+
+# --- cache ownership: an operator leaves the session cache as it found it ---
+def _plain_docs(spark):
+    rows = [
+        (1, "cache owner probe alpha beta gamma delta epsilon zeta"),
+        (2, "cache owner probe alpha beta gamma delta epsilon theta"),
+        (3, "an unrelated sentence about rivers mountains and weather"),
+    ]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _wins(spark):
+    rows = [("A", "B"), ("B", "C"), ("C", "A"), ("A", "C"), ("A", "B")]
+    return spark.createDataFrame(rows, "winner string, loser string")
+
+
+def _timed_values(spark):
+    rows = [(f"2024-01-01 0{h}:0{m}:00", k, float(h + m)) for h in range(3) for m in range(3) for k in "xy"]
+    return spark.createDataFrame(rows, "ts string, k string, v double").withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+_NO_LEAK_CASES = {
+    "jaccard_prefix_filter_pairs": lambda spark: dedup.jaccard_prefix_filter_pairs(_plain_docs(spark)),
+    "minhash_near_dup_pairs": lambda spark: dedup.minhash_near_dup_pairs(_plain_docs(spark)),
+    "bradley_terry": lambda spark: preference.bradley_terry(_wins(spark), "winner", "loser"),
+    "preference_cycles": lambda spark: preference.preference_cycles(_wins(spark), "winner", "loser"),
+    "rollup_hierarchy": lambda spark: rollup_hierarchy(
+        _timed_values(spark), "ts", ["k"], "v", ("1 minute", "1 hour")
+    ),
+    "rake_weights": lambda spark: rake_weights(
+        _wins(spark), "winner", "loser", {"A": 0.4, "B": 0.3, "C": 0.3}, {"A": 0.2, "B": 0.4, "C": 0.4}
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_NO_LEAK_CASES))
+def test_operators_leave_no_cached_plan(spark, op):
+    """An operator holds a cache only for its own work: after it returns
+    and its result is read, the session holds as many cached plans as
+    before the call."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    before = cache_manager.cachedData().size()
+    assert _NO_LEAK_CASES[op](spark).collect()
+    assert cache_manager.cachedData().size() == before
+
+
+def test_operators_keep_a_cache_entry_their_caller_made(spark):
+    """Spark shares one cache entry between identical plans, so an
+    operator that holds the shingle sets of ``docs`` meets the entry a
+    caller already made for them. It uses that entry and leaves it
+    cached: the entry belongs to the caller."""
+    from pyspark import StorageLevel
+
+    docs = _plain_docs(spark)
+    shingled = dedup.shingle_docs(docs).persist(StorageLevel.MEMORY_ONLY)
+    try:
+        assert shingled.count() == 3
+        for op in (
+            dedup.minhash_near_dup_pairs,
+            dedup.ngram_jaccard_pairs,
+            dedup.jaccard_prefix_filter_pairs,
+            dedup.containment_pairs,
+        ):
+            op(docs).collect()
+            assert shingled.storageLevel == StorageLevel.MEMORY_ONLY, op.__name__
+    finally:
+        shingled.unpersist()

@@ -228,22 +228,24 @@ def test_lsh_candidates_broadcast_verify(spark, sf_dir):
     runtime conversion or static estimate — never a shuffle of the
     shingle arrays), with no nested loop anywhere.
 
-    The plan is asserted on the pipeline built with
-    ``persist_shingles=False``: the catalog q40 flips it True
-    (OPTIMIZATION_r15 #6), whose eager localCheckpoint truncates the
-    returned frame's executed plan to a bare ``Scan ExistingRDD`` — the
-    verify-join shape would be invisible there, not absent (ADVICE r15).
-    The verify joins themselves are identical in both modes, and the
+    The plan is asserted on the lazy pipeline of
+    ``minhash_near_dup_pairs`` (``_near_dup_plan``), read while its
+    shingle and band-key tables are held as the operator holds them:
+    the operator's eager localCheckpoint truncates the returned frame's
+    executed plan to a bare ``Scan ExistingRDD`` — the verify-join
+    shape would be invisible there, not absent (ADVICE r15). The
     catalog q40's rows equal the gated pipeline's on the same input."""
     import re
 
-    from dbkit_spark.llm.dedup import minhash_near_dup_pairs
+    from dbkit_spark.llm.dedup import _near_dup_plan
+    from dbkit_spark.operators.iterate import held
     from dbkit_spark.sources import read_table as _rt
 
     docs_split = _rt(spark, sf_dir, "documents", split=True)
-    df = minhash_near_dup_pairs(docs_split, threshold=0.5, persist_shingles=False)
-    df.write.format("noop").mode("overwrite").save()
-    post = df._jdf.queryExecution().executedPlan().toString()
+    shingled, bands, df = _near_dup_plan(docs_split, "text", "doc_id", 0.5)
+    with held(shingled, bands):
+        df.write.format("noop").mode("overwrite").save()
+        post = df._jdf.queryExecution().executedPlan().toString()
     final = post.split("== Initial Plan ==")[0]
     assert len(re.findall(r"BroadcastHashJoin", final)) >= 2
     assert "BroadcastNestedLoopJoin" not in final

@@ -106,12 +106,16 @@ def test_rollup_hierarchy_single_raw_scan(spark, sf_dir):
     raw data (the continuous-aggregate property; regression guard for the
     persist barriers in operators/rollup_hierarchy.py)."""
     from dbkit_spark.operators.aggregate import dec
-    from dbkit_spark.operators.rollup_hierarchy import rollup_hierarchy
+    from dbkit_spark.operators.iterate import held
+    from dbkit_spark.operators.rollup_hierarchy import _rollup_plan
 
     events = read_table(spark, sf_dir, "events").withColumn("value", dec("value", 6))
-    out = rollup_hierarchy(events, "ts", ["event_type"], "value")
-    out.write.format("noop").mode("overwrite").save()
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    levels, out = _rollup_plan(
+        events, "ts", ["event_type"], "value", ("5 minutes", "1 hour", "1 day")
+    )
+    with held(*levels):
+        out.write.format("noop").mode("overwrite").save()
+        plan = out._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("Scan parquet") == 1, final
 
