@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from ..catalog import register
 from ..operators.aggregate import dec, stable_sum, stable_sum_sql
 from ..operators.iterate import held
-from ..sources import read_table
-from ..streaming.runner import read_events_stream, run_available_now
+from ..sources import read_table, read_table_stream
+from ..streaming.runner import replay_stream, run_available_now
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
 from ._sql import _Q256_ORACLE, _T, _q383_oracle, _q406_oracle, _shard_sql
 
@@ -34,6 +34,32 @@ def _bin_sql(sec: int, offset: int = 0) -> str:
     """Spark-compatible epoch-aligned window start, TZ-free."""
     expr = f"CAST(floor((epoch(ts) - {offset}) / {sec}) * {sec} + {offset} AS BIGINT)"
     return f"{_EPOCH} + to_seconds({expr})"
+
+
+def _click_view_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The watermarked click⋈view interval join over the events stream
+    (q66 and its outer/chained family): each click ``(c_user, c_ts,
+    c_id)`` meets the same user's views ``(v_user, v_ts, v_id)`` in the
+    5 minutes up to it, both sides watermarked 10 minutes."""
+    df = read_table_stream(spark, sf_dir, "events")
+    clicks = df.filter(F.col("event_type") == "click").select(
+        F.col("user_id").alias("c_user"),
+        F.col("ts").alias("c_ts"),
+        F.col("event_id").alias("c_id"),
+    )
+    views = df.filter(F.col("event_type") == "view").select(
+        F.col("user_id").alias("v_user"),
+        F.col("ts").alias("v_ts"),
+        F.col("event_id").alias("v_id"),
+    )
+    cond = (
+        (F.col("c_user") == F.col("v_user"))
+        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
+        & (F.col("v_ts") <= F.col("c_ts"))
+    )
+    return clicks.withWatermark("c_ts", "10 minutes").join(
+        views.withWatermark("v_ts", "10 minutes"), cond, how
+    )
 
 
 # --- B5: tumbling window aggregation (batch) -------------------------------
@@ -137,7 +163,7 @@ def q36_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "memory sink: structured-streaming replay must equal batch",
 )
 def q37_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     agg = tumbling_agg(
         stream,
         "ts",
@@ -172,7 +198,7 @@ def q37_stream_tumbling_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q38_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.state import user_running_stats
 
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     return run_available_now(user_running_stats(stream), output_mode="update")
 
 
@@ -302,8 +328,8 @@ def q97_trailing_window_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "over the sink table",
 )
 def q100_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s1 = read_events_stream(spark, sf_dir)
-    s2 = read_events_stream(spark, sf_dir)
+    s1 = read_table_stream(spark, sf_dir, "events")
+    s2 = read_table_stream(spark, sf_dir, "events")
     deduped = (
         s1.unionByName(s2)
         .withWatermark("ts", "30 days")
@@ -330,7 +356,7 @@ def q100_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "must equal the batch-join oracle",
 )
 def q63_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     static_dim = F.broadcast(
         read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     )
@@ -356,27 +382,7 @@ def q63_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "equals the batch interval-join oracle",
 )
 def q66_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = read_events_stream(spark, sf_dir)
-    clicks = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    views = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_id"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
-        & (F.col("v_ts") <= F.col("c_ts"))
-    )
-    joined = (
-        clicks.withWatermark("c_ts", "10 minutes")
-        .join(views.withWatermark("v_ts", "10 minutes"), cond)
-        .select("c_id", "v_id")
-    )
+    joined = _click_view_join(spark, sf_dir, "inner").select("c_id", "v_id")
     return run_available_now(joined, output_mode="append")
 
 
@@ -412,27 +418,7 @@ def q66_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "data arrives",
 )
 def q128_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = read_events_stream(spark, sf_dir)
-    clicks = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    views = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_id"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
-        & (F.col("v_ts") <= F.col("c_ts"))
-    )
-    joined = (
-        clicks.withWatermark("c_ts", "10 minutes")
-        .join(views.withWatermark("v_ts", "10 minutes"), cond, "left_outer")
-        .select("c_id", "v_id")
-    )
+    joined = _click_view_join(spark, sf_dir, "left_outer").select("c_id", "v_id")
     return run_available_now(joined, output_mode="append")
 
 
@@ -475,27 +461,7 @@ def q128_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     "more data arrives",
 )
 def q146_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = read_events_stream(spark, sf_dir)
-    clicks = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    views = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_id"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
-        & (F.col("v_ts") <= F.col("c_ts"))
-    )
-    joined = (
-        clicks.withWatermark("c_ts", "10 minutes")
-        .join(views.withWatermark("v_ts", "10 minutes"), cond, "full_outer")
-        .select("c_id", "v_id")
-    )
+    joined = _click_view_join(spark, sf_dir, "full_outer").select("c_id", "v_id")
     return run_available_now(joined, output_mode="append")
 
 
@@ -527,27 +493,7 @@ def q146_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     "never null-extend",
 )
 def q152_stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = read_events_stream(spark, sf_dir)
-    clicks = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    views = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_id"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
-        & (F.col("v_ts") <= F.col("c_ts"))
-    )
-    joined = (
-        clicks.withWatermark("c_ts", "10 minutes")
-        .join(views.withWatermark("v_ts", "10 minutes"), cond, "right_outer")
-        .select("c_id", "v_id")
-    )
+    joined = _click_view_join(spark, sf_dir, "right_outer").select("c_id", "v_id")
     return run_available_now(joined, output_mode="append")
 
 
@@ -652,7 +598,7 @@ def q107_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFram
     "session set as the batch operator",
 )
 def q115_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     agg = session_agg(
         stream, "ts", "30 minutes", ["user_id"], {"n_events": F.count("*")}
     )
@@ -699,27 +645,7 @@ def q115_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "final watermark (= min(max c_ts, max v_ts) - 10 min delay)",
 )
 def q187_stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = read_events_stream(spark, sf_dir)
-    clicks = df.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("c_id"),
-    )
-    views = df.filter(F.col("event_type") == "view").select(
-        F.col("user_id").alias("v_user"),
-        F.col("ts").alias("v_ts"),
-        F.col("event_id").alias("v_id"),
-    )
-    cond = (
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("c_ts") - F.expr("interval 5 minutes"))
-        & (F.col("v_ts") <= F.col("c_ts"))
-    )
-    joined = (
-        clicks.withWatermark("c_ts", "10 minutes")
-        .join(views.withWatermark("v_ts", "10 minutes"), cond)
-        .select("c_ts")
-    )
+    joined = _click_view_join(spark, sf_dir, "inner").select("c_ts")
     agg = (
         joined.groupBy(F.window("c_ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_matches"))
@@ -783,7 +709,7 @@ def q207_heavy_hitters_stream_replay(
 ) -> DataFrame:
     from ..streaming.heavy_hitters import heavy_hitters_stream
 
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     return run_available_now(
         heavy_hitters_stream(stream, "user_id", capacity=16, n_shards=4),
         output_mode="update",
@@ -807,16 +733,9 @@ _Q207_NOTES = (
 def q215_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..schema import TABLE_SCHEMAS
     from ..streaming.ingest_dedup import run_dedup_ingest
 
-    stream = (
-        spark.readStream.schema(TABLE_SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id", "text")
-    )
+    stream = read_table_stream(spark, sf_dir, "documents").select("doc_id", "text")
     state = tempfile.mkdtemp(prefix="dbkit_ingest_")
     corpus = run_dedup_ingest(stream, state, threshold=0.5)
     return corpus.select("doc_id").orderBy("doc_id")
@@ -868,9 +787,6 @@ def q273_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed file-by-file through the stateful stream — so the oracle
     is the SAME recursive SQL as q256, now pinning cross-micro-batch
     state carry under the driver's hash compare."""
-    import os
-    import tempfile
-
     from pyspark.sql import Window
 
     from ..streaming.cusum import streaming_cusum
@@ -926,29 +842,11 @@ def q273_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorts within each micro-batch, so only the file-level event_id split
     # (all ≤ cut before all > cut) carries the ordering contract; the
     # single-file-per-chunk layout IS the two-batch replay fixture.
-    import glob as _glob
-    import shutil
-
-    d = tempfile.mkdtemp(prefix="q273_zstream_")
     with held(z):
         cut = z.stat.approxQuantile("event_id", [0.5], 0.0)[0]
-        chunks = (
-            z.filter(F.col("event_id") <= cut),
-            z.filter(F.col("event_id") > cut),
+        zstream = replay_stream(
+            (z.filter(F.col("event_id") <= cut), z.filter(F.col("event_id") > cut))
         )
-        for i, chunk in enumerate(chunks):
-            stage = os.path.join(d, f"_stage{i}")
-            chunk.coalesce(1).write.parquet(stage)
-            shutil.move(
-                _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-                os.path.join(d, f"part{i}.parquet"),
-            )
-            shutil.rmtree(stage)
-    zstream = (
-        spark.readStream.schema("user_id long, event_id long, z double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
     out = run_available_now(
         streaming_cusum(zstream, "user_id", "event_id", k=0.25, h=2.0),
         output_mode="update",
@@ -979,8 +877,7 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     file-by-file through the stateful stream; the final state per key
     (max n_seen) must reproduce the batch fold — the oracle is q283's
     nested-MIN SQL with the anchor kept in epoch micros."""
-    import os
-    import tempfile
+    from pyspark.sql import Window
 
     from ..streaming.funnel import streaming_funnel
 
@@ -993,11 +890,6 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark-written — nothing data-sized lands on the driver. The funnel
     # fold is tie-insensitive (nested MINs over timestamps), so any
     # deterministic tiebreak for the chunk-0 seed row is valid.
-    import glob as _glob
-    import shutil
-
-    from pyspark.sql import Window
-
     base = (
         ev.select(
             "user_id",
@@ -1011,28 +903,17 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    d = tempfile.mkdtemp(prefix="q294_funnel_")
-    chunks = (base.filter(F.col("_rn") == 1), base.filter(F.col("_rn") > 1))
     with held(base):
-        for i, chunk in enumerate(chunks):
-            stage = os.path.join(d, f"_stage{i}")
-            chunk.drop("_rn").coalesce(1).write.parquet(stage)
-            shutil.move(
-                _glob.glob(os.path.join(stage, "part-*.parquet"))[0],
-                os.path.join(d, f"part{i}.parquet"),
+        stream = replay_stream(
+            (
+                base.filter(F.col("_rn") == 1).drop("_rn"),
+                base.filter(F.col("_rn") > 1).drop("_rn"),
             )
-            shutil.rmtree(stage)
-    stream = (
-        spark.readStream.schema("user_id long, ts long, event_type string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+        )
     out = run_available_now(
         streaming_funnel(stream, "user_id", "ts", "event_type", steps, 7200),
         output_mode="update",
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         out.withColumn("_rk", F.row_number().over(w))
@@ -1108,7 +989,7 @@ def q353_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_id DIV 3 — three events per key); the projected payload is a
     pure function of the key so ANY survivor yields identical output
     rows and the batch oracle is a plain DISTINCT."""
-    s = read_events_stream(spark, sf_dir)
+    s = read_table_stream(spark, sf_dir, "events")
     keyed = (
         s.select(
             "ts",
@@ -1155,14 +1036,8 @@ def q398_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged (append mode, no state) — and the availableNow replay
     must equal the batch run row-for-row."""
     from ..llm.quality import gopher_quality_filters
-    from ..schema import TABLE_SCHEMAS
 
-    stream = (
-        spark.readStream.schema(TABLE_SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     gated = gopher_quality_filters(stream)
     return run_available_now(gated, output_mode="append").orderBy("doc_id")
 
@@ -1194,14 +1069,8 @@ def q414_stream_pii_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow replay equals the batch run row-for-row (the q398
     convention; shares q406's oracle verbatim)."""
     from ..llm.pii import pii_scrub
-    from ..schema import TABLE_SCHEMAS
 
-    stream = (
-        spark.readStream.schema(TABLE_SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     gated = pii_scrub(stream)
     return run_available_now(gated, output_mode="append").orderBy("doc_id")
 
@@ -1231,14 +1100,8 @@ def q449_stream_eval_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     q398/q414 convention) — extending the map-only-lifts-to-streaming
     rule to the EVALUATION family."""
     from ..llm.texteval import truncation_eval_gate
-    from ..schema import TABLE_SCHEMAS
 
-    stream = (
-        spark.readStream.schema(TABLE_SCHEMAS["documents"])
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    stream = read_table_stream(spark, sf_dir, "documents")
     gated = truncation_eval_gate(stream)
     return run_available_now(gated, output_mode="append").orderBy("doc_id")
 

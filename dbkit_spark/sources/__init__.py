@@ -15,6 +15,7 @@ from .readers import (
     read_parquet,
     read_parquet_evolved,
     read_table,
+    read_table_stream,
     read_text,
     read_xml,
     scan_view,
@@ -24,6 +25,7 @@ from .writers import write_csv, write_json, write_parquet
 
 __all__ = [
     "read_table",
+    "read_table_stream",
     "read_parquet",
     "read_parquet_evolved",
     "read_csv",

@@ -18,9 +18,10 @@ from __future__ import annotations
 
 import os
 from decimal import Decimal as _Decimal
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..errors import AttributeMissing, AttributeNullability, AttributeType, RowOutOfBounds
@@ -194,7 +195,6 @@ def _maybe_split_scan(
     target = min(cores, -(-rows // _SPLIT_MIN_ROWS_PER_TASK))
     if target < 2:
         return df
-    from pyspark.sql import functions as F
 
     keys = _SPREAD_KEYS.get(name)
     if keys:
@@ -279,6 +279,41 @@ def parquet_ts_unit(path: str, column: str = "ts") -> str | None:
     return units.pop()
 
 
+def _fixture_path(sf_dir: str, name: str) -> str:
+    if name not in TABLE_SCHEMAS:
+        raise AttributeMissing(name, sorted(TABLE_SCHEMAS))
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _load_fixture(
+    name: str, path: str, load: Callable[[T.StructType], DataFrame]
+) -> DataFrame:
+    """``load(schema)`` with the fixture schema of ``name``, normalizing
+    the ``events.ts`` encoding.
+
+    ``events.ts`` has shipped in two physical encodings across fixture
+    generations: TIMESTAMP(NANOS) — which Spark cannot read as a timestamp
+    and (via ``spark.sql.legacy.parquet.nanosAsLong``, set by
+    ``session.build_session``) surfaces as nanos-since-epoch LONG, converted
+    here to a microsecond timestamp by truncation exactly as DuckDB narrows
+    ns → us — and plain TIMESTAMP(MICROS), which reads natively. The footer
+    is sniffed (metadata-only, ``events`` only) so both encodings produce
+    identical frames.
+    """
+    schema = TABLE_SCHEMAS[name]
+    if name != "events" or parquet_ts_unit(path) != "ns":
+        return load(schema)
+    raw = load(
+        T.StructType(
+            [
+                f if f.name != "ts" else T.StructField("ts", T.LongType(), f.nullable)
+                for f in schema.fields
+            ]
+        )
+    )
+    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+
 def read_table(
     spark: SparkSession, sf_dir: str, name: str, split: bool = False
 ) -> DataFrame:
@@ -300,34 +335,31 @@ def read_table(
     and it keeps the zero-exchange plan contracts of map-only
     operators intact. Call sites that MEASURED the split net-negative
     pass ``split=False`` explicitly so a future default flip cannot
-    regress them. A table may be one parquet file or a directory.
-
-    ``events.ts`` has shipped in two physical encodings across fixture
-    generations: TIMESTAMP(NANOS) — which Spark cannot read as a timestamp
-    and (via ``spark.sql.legacy.parquet.nanosAsLong``, set by
-    ``session.build_session``) surfaces as nanos-since-epoch LONG, converted
-    here to a microsecond timestamp by truncation exactly as DuckDB narrows
-    ns → us — and plain TIMESTAMP(MICROS), which reads natively. The footer
-    is sniffed (metadata-only) so both encodings produce identical frames.
+    regress them. A table may be one parquet file or a directory;
+    ``events.ts`` reads as a timestamp in either encoding
+    (``_load_fixture``).
     """
-    if name not in TABLE_SCHEMAS:
-        raise AttributeMissing(name, sorted(TABLE_SCHEMAS))
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events" and parquet_ts_unit(path) == "ns":
-        raw_schema = T.StructType(
-            [
-                f if f.name != "ts" else T.StructField("ts", T.LongType(), f.nullable)
-                for f in TABLE_SCHEMAS["events"].fields
-            ]
-        )
-        raw = read_parquet(spark, path, raw_schema)
-        from pyspark.sql import functions as F
+    path = _fixture_path(sf_dir, name)
+    df = _load_fixture(name, path, lambda schema: read_parquet(spark, path, schema))
+    return _maybe_split_scan(spark, df, path, name, split)
 
-        converted = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        return _maybe_split_scan(spark, converted, path, name, split)
-    return _maybe_split_scan(
-        spark, read_parquet(spark, path, TABLE_SCHEMAS[name]), path, name, split
-    )
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Streaming twin of ``read_table``: the same name check, path, schema
+    and ``events.ts`` rule, replayed one file per trigger
+    (``maxFilesPerTrigger=1``). A ``<name>.parquet`` directory streams
+    directly; the file stream source needs a directory, so a single file
+    is read by scanning ``sf_dir`` with a glob filter that admits only
+    that file."""
+    path = _fixture_path(sf_dir, name)
+
+    def load(schema: T.StructType) -> DataFrame:
+        reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        if os.path.isdir(path):
+            return reader.parquet(path)
+        return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+
+    return _load_fixture(name, path, load)
 
 
 def scan_view(df: DataFrame, offset: int = 0, limit: int | None = None) -> DataFrame:

@@ -28,6 +28,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 
+from .runner import _drive
+
 
 def run_incremental_upsert(
     stream_df: DataFrame,
@@ -63,21 +65,10 @@ def run_incremental_upsert(
             shutil.rmtree(stale, ignore_errors=True)
         del versions[:-keep_versions]
 
-    q = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .start()
+    writer = stream_df.writeStream.foreachBatch(_merge).option(
+        "checkpointLocation", f"{state_dir}/_checkpoint"
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"incremental upsert did not finish within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
+    _drive(writer, "incremental upsert", timeout_sec)
     if not versions:
         raise RuntimeError("stream produced no micro-batches")
     return stream_df.sparkSession.read.parquet(versions[-1])

@@ -32,6 +32,8 @@ loop they exist for.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,6 +47,7 @@ from ..llm.dedup import (
     shingle_docs,
 )
 from ..operators.iterate import held
+from .runner import _drive
 
 
 def _paths(state_dir: str) -> dict[str, str]:
@@ -69,8 +72,6 @@ def ingest_batch(
     rule), so replays append nothing. Exactly-once across a crash
     INSIDE the three appends still needs a transactional table format
     (same caveat as every plain-parquet foreachBatch sink here)."""
-    import os
-
     p = _paths(state_dir)
     first_batch = not os.path.isdir(p["bands"])
     sh_new = shingle_docs(batch, "text", "doc_id")
@@ -166,27 +167,22 @@ def run_dedup_ingest(
 ) -> DataFrame:
     """Drive a (doc_id, text) stream to completion (availableNow),
     admitting each micro-batch through ``ingest_batch``; returns the
-    final admitted corpus. foreachBatch runs driver-sequential, so the
-    first-arrival-wins order is the micro-batch order."""
+    final admitted corpus (empty, with the stream's columns, when nothing
+    was ever admitted under ``state_dir``). foreachBatch runs
+    driver-sequential, so the first-arrival-wins order is the micro-batch
+    order."""
 
     def _ingest(batch_df: DataFrame, batch_id: int) -> None:
         # first_batch by state detection, NOT batch_id == 0: a replayed
         # batch 0 after a checkpoint restart must re-check the corpus
         ingest_batch(batch_df.sparkSession, batch_df, state_dir, threshold)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_ingest)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .start()
+    writer = stream_df.writeStream.foreachBatch(_ingest).option(
+        "checkpointLocation", f"{state_dir}/_checkpoint"
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"dedup ingest did not finish within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    return stream_df.sparkSession.read.parquet(_paths(state_dir)["docs"])
+    _drive(writer, "dedup ingest", timeout_sec)
+    docs = _paths(state_dir)["docs"]
+    spark = stream_df.sparkSession
+    if not os.path.isdir(docs):  # nothing was ever admitted
+        return spark.createDataFrame([], stream_df.schema)
+    return spark.read.parquet(docs)

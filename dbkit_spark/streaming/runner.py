@@ -5,49 +5,37 @@ determinism — file sources + availableNow, never wall-clock).
 file source to completion and returns the materialized result: the batch
 DataFrame → transformation → memory sink → table round-trip. This is the
 engine's batch-replay harness for validating streaming semantics against
-batch oracles.
+batch oracles. Fixture tables stream through
+``sources.read_table_stream``; ``replay_stream`` turns ordered batch
+chunks into a stream with one chunk per micro-batch.
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+import tempfile
 import uuid
-from typing import Callable
+from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from ..schema import TABLE_SCHEMAS
+from pyspark.sql import DataFrame
+from pyspark.sql.streaming import DataStreamWriter
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming source over the events fixture (ts physical-encoding
-    sniff + normalization exactly like sources.read_table)."""
-    import os
-
-    from ..sources.readers import parquet_ts_unit
-
-    path = os.path.join(sf_dir, "events.parquet")
-    legacy_ns = parquet_ts_unit(path) == "ns"
-    if legacy_ns:
-        schema = T.StructType(
-            [
-                f if f.name != "ts" else T.StructField("ts", T.LongType(), f.nullable)
-                for f in TABLE_SCHEMAS["events"].fields
-            ]
-        )
-    else:
-        schema = TABLE_SCHEMAS["events"]
-    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-    if os.path.isdir(path):
-        raw = reader.parquet(path)
-    else:
-        # the file stream source requires a directory: scan sf_dir but
-        # admit only the events file
-        raw = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
-    if legacy_ns:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+def _drive(writer: DataStreamWriter, what: str, timeout_sec: int) -> None:
+    """Start ``writer`` with the availableNow trigger and wait for it to
+    finish; raise ``TimeoutError`` if it has not finished within
+    ``timeout_sec``. The query is stopped either way."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_sec):
+            # Returning the sink here would silently truncate the result
+            # to whatever batches completed before the deadline.
+            raise TimeoutError(f"{what} did not finish within {timeout_sec}s")
+    finally:
+        if q.isActive:
+            q.stop()
 
 
 def run_available_now(
@@ -58,23 +46,28 @@ def run_available_now(
     """Run a streaming DataFrame to completion (availableNow trigger) into
     a memory sink; return the result table as a DataFrame."""
     name = f"sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
+    writer = (
+        stream_df.writeStream.outputMode(output_mode).format("memory").queryName(name)
     )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            # Returning the memory sink here would silently truncate the
-            # result to whatever batches completed before the deadline.
-            raise TimeoutError(
-                f"streaming query {name} did not finish within {timeout_sec}s"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+    _drive(writer, f"streaming query {name}", timeout_sec)
+    return stream_df.sparkSession.table(name)
+
+
+def replay_stream(chunks: Sequence[DataFrame]) -> DataFrame:
+    """Write each batch chunk as exactly one file ``part{i}.parquet`` of a
+    fresh directory and return the stream over them, one file per
+    trigger, so chunk ``i`` is micro-batch ``i``. The chunks are written
+    by Spark (``coalesce(1)``), so nothing data-sized reaches the driver."""
+    d = tempfile.mkdtemp(prefix="dbkit_replay_")
+    for i, chunk in enumerate(chunks):
+        stage = os.path.join(d, f"_stage{i}")
+        chunk.coalesce(1).write.parquet(stage)
+        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+        shutil.move(part, os.path.join(d, f"part{i}.parquet"))
+        shutil.rmtree(stage)
+    return (
+        chunks[0]
+        .sparkSession.readStream.schema(chunks[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(d)
+    )

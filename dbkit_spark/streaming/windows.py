@@ -18,6 +18,26 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def _window_agg(
+    df: DataFrame,
+    window: Column,
+    struct: str,
+    prefix: str,
+    keys: Sequence[str],
+    aggs: dict[str, Column],
+) -> DataFrame:
+    """Group by the ``window`` column (named ``struct``) and ``keys``;
+    select the window bounds as ``<prefix>_start``/``<prefix>_end``, then
+    the keys, then the aggregates."""
+    out = df.groupBy(window, *keys).agg(*[c.alias(n) for n, c in aggs.items()])
+    return out.select(
+        F.col(f"{struct}.start").alias(f"{prefix}_start"),
+        F.col(f"{struct}.end").alias(f"{prefix}_end"),
+        *keys,
+        *aggs.keys(),
+    )
+
+
 def tumbling_agg(
     df: DataFrame,
     ts_col: str,
@@ -26,15 +46,7 @@ def tumbling_agg(
     aggs: dict[str, Column],
 ) -> DataFrame:
     """Fixed-size non-overlapping event-time windows (epoch-aligned)."""
-    out = df.groupBy(F.window(ts_col, duration), *keys).agg(
-        *[c.alias(n) for n, c in aggs.items()]
-    )
-    return out.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        *keys,
-        *aggs.keys(),
-    )
+    return _window_agg(df, F.window(ts_col, duration), "window", "window", keys, aggs)
 
 
 def sliding_agg(
@@ -46,14 +58,8 @@ def sliding_agg(
     aggs: dict[str, Column],
 ) -> DataFrame:
     """Overlapping windows: each event lands in duration/slide windows."""
-    out = df.groupBy(F.window(ts_col, duration, slide), *keys).agg(
-        *[c.alias(n) for n, c in aggs.items()]
-    )
-    return out.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        *keys,
-        *aggs.keys(),
+    return _window_agg(
+        df, F.window(ts_col, duration, slide), "window", "window", keys, aggs
     )
 
 
@@ -67,12 +73,6 @@ def session_agg(
     """Session windows: events within ``gap`` of the previous event merge;
     a new session starts when the inter-event gap is >= ``gap``.
     Session end = last event + gap (Spark semantics)."""
-    out = df.groupBy(F.session_window(ts_col, gap), *keys).agg(
-        *[c.alias(n) for n, c in aggs.items()]
-    )
-    return out.select(
-        F.col("session_window.start").alias("session_start"),
-        F.col("session_window.end").alias("session_end"),
-        *keys,
-        *aggs.keys(),
+    return _window_agg(
+        df, F.session_window(ts_col, gap), "session_window", "session", keys, aggs
     )

@@ -16,14 +16,14 @@ import pytest
 
 import dbkit_spark
 from dbkit_spark.catalog import load_all
-from dbkit_spark.sources import fileindex, read_table
+from dbkit_spark.sources import fileindex, read_table, read_table_stream
 from dbkit_spark.sources.fileindex import build_file_stats_index, prune_files
 from dbkit_spark.sources.readers import (
     _scan_metadata,
     footer_lead_boundaries,
     parquet_ts_unit,
 )
-from dbkit_spark.streaming.runner import read_events_stream, run_available_now
+from dbkit_spark.streaming.runner import run_available_now
 
 
 def _rows(df):
@@ -32,17 +32,25 @@ def _rows(df):
 
 @pytest.fixture(scope="module")
 def multi_sf(sf_dir, tmp_path_factory):
-    """``orders`` (sorted by date, so files cover disjoint date ranges)
-    and ``events`` of ``sf_dir``, each rewritten as a 4-file directory
-    ``<name>.parquet``."""
+    """``orders`` (sorted by date, so files cover disjoint date ranges),
+    ``events`` and ``documents`` of ``sf_dir``, each rewritten as a
+    4-file directory ``<name>.parquet``. The file stream source delivers
+    files oldest first at millisecond resolution, so the files get
+    mtimes one second apart: ``part-i`` is micro-batch ``i``."""
     root = tmp_path_factory.mktemp("multi_sf")
-    for name, key in (("orders", "o_orderdate"), ("events", "event_id")):
+    for name, key in (
+        ("orders", "o_orderdate"),
+        ("events", "event_id"),
+        ("documents", "doc_id"),
+    ):
         table = pq.read_table(os.path.join(sf_dir, f"{name}.parquet")).sort_by(key)
         out = root / f"{name}.parquet"
         out.mkdir()
         step = -(-table.num_rows // 4)
         for i in range(4):
-            pq.write_table(table.slice(i * step, step), str(out / f"part-{i}.parquet"))
+            part = str(out / f"part-{i}.parquet")
+            pq.write_table(table.slice(i * step, step), part)
+            os.utime(part, (1_700_000_000 + i,) * 2)
     return str(root)
 
 
@@ -65,9 +73,33 @@ def test_events_stream_reads_a_multi_file_dataset(spark, sf_dir, multi_sf):
     ``events.parquet`` directory, like the batch reader."""
     expected = _rows(read_table(spark, sf_dir, "events"))
     batch = _rows(read_table(spark, multi_sf, "events"))
-    stream = _rows(run_available_now(read_events_stream(spark, multi_sf), "append"))
+    stream = _rows(
+        run_available_now(read_table_stream(spark, multi_sf, "events"), "append")
+    )
     assert (len(batch), len(stream)) == (len(expected), len(expected))
     assert stream == expected
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q215_streaming_dedup_ingest",
+        "q398_stream_quality_gate",
+        "q414_stream_pii_gate",
+        "q449_stream_eval_gate",
+    ],
+)
+def test_documents_stream_queries_read_a_multi_file_dataset(
+    spark, sf_dir, multi_sf, name
+):
+    """The ``documents`` stream queries read every file of a
+    ``documents.parquet`` directory: the same rows as on the single file
+    (the four files hold ascending ``doc_id`` ranges, so q215's
+    first-arrival-wins order is its single-batch min-id order)."""
+    fn = load_all()[name].fn
+    expected = _rows(fn(spark, sf_dir))
+    assert expected
+    assert _rows(fn(spark, multi_sf)) == expected
 
 
 def test_file_stats_index_non_numeric_columns(spark, multi_sf):

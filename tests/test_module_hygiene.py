@@ -254,6 +254,33 @@ def test_one_cache_owner():
     assert _match_sites(r"(?i)caller\s+owns") == []
 
 
+def test_one_stream_path():
+    """Every availableNow query is started, awaited and stopped by one
+    driver (``streaming/runner._drive``), the ``events.ts`` nanos rule is
+    written once (``sources/readers._load_fixture``, shared by the batch
+    and stream readers), and the click⋈view interval join is built once
+    (``queries/events._click_view_join``)."""
+    assert _match_sites(r"awaitTermination\(") == ["dbkit_spark/streaming/runner.py:_drive"]
+    assert _match_sites(r"ts div 1000") == ["dbkit_spark/sources/readers.py:_load_fixture"]
+    assert _match_sites(r'withWatermark\("c_ts"') == [
+        "dbkit_spark/queries/events.py:_click_view_join"
+    ]
+    assert _match_sites(r"read_events_stream") == []
+
+
+def test_doc_module_pointers_exist():
+    """Every ``dbkit_spark/….py`` path that README.md, SCALE.md and
+    SURVEY.md cite names a module that exists."""
+    root = PKG.parent
+    cited = {
+        (doc, path)
+        for doc in ("README.md", "SCALE.md", "SURVEY.md")
+        for path in re.findall(r"dbkit_spark/[\w/]+\.py", (root / doc).read_text())
+    }
+    assert cited
+    assert sorted(c for c in cited if not (root / c[1]).is_file()) == []
+
+
 def test_checks_catch_injected_defects(tmp_path):
     """The scanners flag an undefined name read in a lambda and in a
     method, a second top-level binding, and a function that re-imports

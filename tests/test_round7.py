@@ -679,7 +679,8 @@ def test_windowed_psi_stream_replay_equals_batch(spark, sf_dir):
         quantile_edges_exact,
         windowed_psi,
     )
-    from dbkit_spark.streaming.runner import read_events_stream, run_available_now
+    from dbkit_spark.sources import read_table_stream
+    from dbkit_spark.streaming.runner import run_available_now
 
     ev = read_table(spark, sf_dir, "events")
     vals = ev.filter(F.col("value").isNotNull()).select("event_id", "ts", "value")
@@ -694,7 +695,7 @@ def test_windowed_psi_stream_replay_equals_batch(spark, sf_dir):
 
     batch = windowed_psi(ev, "ts", "value", edges, ref, window="10 minutes")
     stream = windowed_psi(
-        read_events_stream(spark, sf_dir), "ts", "value", edges, ref,
+        read_table_stream(spark, sf_dir, "events"), "ts", "value", edges, ref,
         window="10 minutes",
     )
     replay = run_available_now(stream, output_mode="complete")

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import functions as F
 
-from dbkit_spark.sources import read_table
-from dbkit_spark.streaming.runner import read_events_stream, run_available_now
+from dbkit_spark.sources import read_table, read_table_stream
+from dbkit_spark.streaming.runner import run_available_now
 from dbkit_spark.streaming.state import user_running_stats
 from dbkit_spark.streaming.windows import tumbling_agg
 
@@ -19,7 +19,7 @@ def test_stream_equals_batch_tumbling(spark, sf_dir):
         {"n": F.count("*")},
     )
     stream = tumbling_agg(
-        read_events_stream(spark, sf_dir), "ts", "5 minutes", ["event_type"],
+        read_table_stream(spark, sf_dir, "events"), "ts", "5 minutes", ["event_type"],
         {"n": F.count("*")},
     )
     got = run_available_now(stream, output_mode="complete")
@@ -41,7 +41,8 @@ def test_stateful_operator_matches_batch(spark, sf_dir):
         .collect()
     }
     got_df = run_available_now(
-        user_running_stats(read_events_stream(spark, sf_dir)), output_mode="update"
+        user_running_stats(read_table_stream(spark, sf_dir, "events")),
+        output_mode="update",
     )
     # update mode with one input file => one final row per user
     got = {
@@ -106,7 +107,7 @@ def test_tws_plan_construction(spark, sf_dir):
     whether the protobuf state-protocol runtime is present."""
     from dbkit_spark.streaming.state import user_running_stats_tws
 
-    df = user_running_stats_tws(read_events_stream(spark, sf_dir))
+    df = user_running_stats_tws(read_table_stream(spark, sf_dir, "events"))
     assert df.isStreaming
     assert df.schema.simpleString() == (
         "struct<user_id:bigint,n_events:bigint,"
@@ -143,7 +144,7 @@ def test_tws_matches_batch_and_legacy_api(spark, sf_dir):
         .collect()
     }
     got_df = run_available_now(
-        user_running_stats_tws(read_events_stream(spark, sf_dir)),
+        user_running_stats_tws(read_table_stream(spark, sf_dir, "events")),
         output_mode="update",
     )
     got = {

@@ -8,10 +8,10 @@ import uuid
 
 from pyspark.sql import functions as F
 
-from dbkit_spark.sources import read_table
+from dbkit_spark.sources import read_table, read_table_stream
 from dbkit_spark.sources.writers import write_orc
 from dbkit_spark.sources.readers import read_orc
-from dbkit_spark.streaming.runner import read_events_stream, run_available_now
+from dbkit_spark.streaming.runner import run_available_now
 
 
 def test_stream_stream_interval_join(spark, sf_dir):
@@ -38,7 +38,7 @@ def test_stream_stream_interval_join(spark, sf_dir):
         & (F.col("v_ts") <= F.col("c_ts"))
     )
 
-    sc, sv = sides(read_events_stream(spark, sf_dir))
+    sc, sv = sides(read_table_stream(spark, sf_dir, "events"))
     stream_joined = (
         sc.withWatermark("c_ts", "10 minutes")
         .join(sv.withWatermark("v_ts", "10 minutes"), cond)
@@ -83,7 +83,7 @@ def test_file_sink_checkpoint_exactly_once(spark, sf_dir, tmp_path):
 
     def run_once():
         q = (
-            read_events_stream(spark, sf_dir)
+            read_table_stream(spark, sf_dir, "events")
             .select("event_id", "ts", "event_type", "value")
             .writeStream.format("parquet")
             .option("path", out)
@@ -256,7 +256,7 @@ def test_outer_eviction_rule_dense_fixture(spark, tmp_path):
     fixture.mkdir()
     pq.write_table(tbl, str(fixture / "events.parquet"))
 
-    dfs = read_events_stream(spark, str(fixture))
+    dfs = read_table_stream(spark, str(fixture), "events")
     clicks = dfs.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"),
         F.col("event_id").alias("c_id"))
@@ -288,7 +288,6 @@ def test_dynamic_gap_session_stream_equals_batch(spark):
     as the batch operator — the batch==stream contract for per-event
     gap expressions (q115's discipline, generalized to dynamic gaps)."""
     from dbkit_spark.catalog import load_all
-    from dbkit_spark.streaming.runner import read_events_stream, run_available_now
 
     sf = "/root/testdata/sf0.001"
     batch = {
@@ -296,7 +295,7 @@ def test_dynamic_gap_session_stream_equals_batch(spark):
         for r in load_all()["q181_dynamic_session_gap"].fn(spark, sf).collect()
     }
 
-    stream = read_events_stream(spark, sf)
+    stream = read_table_stream(spark, sf, "events")
     gap = (
         F.when(F.col("event_type") == "click", F.lit("300 seconds"))
         .when(F.col("event_type") == "view", F.lit("600 seconds"))
@@ -356,7 +355,7 @@ def test_heavy_hitters_stream_bounds_and_parity(spark, sf_dir, tmp_path):
     batch_rows = {tuple(r) for r in batch.collect()}
 
     # (1) parity: events.parquet is one file -> one micro-batch
-    stream = read_events_stream(spark, sf_dir)
+    stream = read_table_stream(spark, sf_dir, "events")
     got = run_available_now(
         heavy_hitters_stream(stream, "user_id", capacity=CAP, n_shards=SHARDS),
         output_mode="update",
@@ -450,7 +449,7 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
     near-dup pair at the ingest threshold; (4) re-running the whole
     stream over the built corpus admits nothing."""
     from dbkit_spark.llm.dedup import minhash_near_dup_pairs
-    from dbkit_spark.sources import read_table
+    from dbkit_spark.sources import read_table, read_table_stream
     from dbkit_spark.streaming.ingest_dedup import (
         ingest_batch,
         run_dedup_ingest,
@@ -532,6 +531,24 @@ def test_dedup_ingest_stream_parity_and_consistency(spark, sf_dir, tmp_path):
         0.5,
     )
     assert n == 0  # id 5 < 100, but 100 arrived first and wins
+
+
+def test_dedup_ingest_of_an_empty_stream_is_an_empty_corpus(spark, tmp_path):
+    """A stream that never delivers a file admits nothing: the ingest
+    returns an empty corpus with the stream's columns instead of reading
+    a ``docs`` table that was never written."""
+    from dbkit_spark.streaming.ingest_dedup import run_dedup_ingest
+
+    src = tmp_path / "empty"
+    src.mkdir()
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    corpus = run_dedup_ingest(stream, str(tmp_path / "state"), threshold=0.5)
+    assert corpus.columns == ["doc_id", "text"]
+    assert corpus.count() == 0
 
 
 def test_dedup_ingest_releases_its_caches(spark, tmp_path):
