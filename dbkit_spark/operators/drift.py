@@ -636,7 +636,8 @@ def wasserstein_1d(
     |F_a−F_b|·gap round at 9dp and decimal-sum, output 6dp.
 
     Output: one row (n_a, n_b, wasserstein); an empty side reports its
-    0 count with a NULL ``wasserstein``.
+    0 count with a NULL ``wasserstein``. Two non-empty samples that share
+    a single distinct value close no segment and report 0.0.
     """
     from ..operators.prefix import prefix_agg
 
@@ -660,16 +661,14 @@ def wasserstein_1d(
         * (F.col("next_v") - F.col("v")),
         9,
     )
-    return (
-        with_next.join(F.broadcast(totals))
-        .filter(F.col("next_v").isNotNull())  # the max value closes no segment
-        .agg(
-            F.max("n_a").cast("long").alias("n_a"),
-            F.max("n_b").cast("long").alias("n_b"),
-            F.round(
-                F.sum(term.cast("decimal(38,12)")).cast("double"), 6
-            ).alias("wasserstein"),
-        )
+    n_a = F.coalesce(F.max("n_a"), F.lit(0)).cast("long")
+    n_b = F.coalesce(F.max("n_b"), F.lit(0)).cast("long")
+    # the max value closes no segment: its NULL next_v makes a NULL term
+    w = F.coalesce(F.sum(term.cast("decimal(38,12)")).cast("double"), F.lit(0.0))
+    return with_next.join(F.broadcast(totals)).agg(
+        n_a.alias("n_a"),
+        n_b.alias("n_b"),
+        F.round(F.when((n_a > 0) & (n_b > 0), w), 6).alias("wasserstein"),
     )
 
 

@@ -13,14 +13,18 @@ doubled as exact LONGs so the rank-sum is order-independent and
 bit-exact at any parallelism; the final AUC is a single IEEE division
 of exact operands, so no rounding is needed for the oracle hash.
 
-The statistical tests share four private kernels, one per job:
+The statistical tests share private kernels, one per job:
 ``_avg_rank2`` (doubled average rank and tie size from one window),
 ``_value_scan`` (per-value counts with exact cumulative-before counts
 over the distinct-value frame), ``_complete_blocks`` (the listwise
-complete-block filter) and ``_poisson_bootstrap`` (Poisson-bootstrap
-replicate means and the percentile select). Each kernel drops the rows
-whose ranked, scanned, blocked or resampled value is NULL, and keeps
-its arithmetic integer- or decimal-exact.
+complete-block filter), ``_block_rank_sums`` (mid-ranks within complete
+blocks and their per-member sums), ``_sq_dev_reduce`` (the Σ(x − c)²
+reduce of the blocked tests), ``_group_moments`` and ``_oneway`` (the
+one-way between/within decomposition) and ``_poisson_bootstrap``
+(Poisson-bootstrap replicate means and the percentile select). Each
+kernel drops the rows whose ranked, scanned, blocked, grouped or
+resampled value is NULL, and keeps its arithmetic integer- or
+decimal-exact.
 """
 
 from __future__ import annotations
@@ -108,6 +112,89 @@ def _complete_blocks(
         F.count(F.lit(1)).cast("long").alias("n_incomplete")
     )
     return k_frame, per_block.filter(ok).select(block_col, "_bsum"), n_bad
+
+
+def _block_rank_sums(
+    base: DataFrame, block_col: str, member_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The blocked rank-sum kernel over ``base`` = (``block_col``,
+    ``member_col``, ``_v`` DOUBLE): (ranked rows, per-member sums,
+    n_incomplete frame). Only ``_complete_blocks`` are ranked; a ranked
+    row carries ``_r``, the mid-rank of ``_v`` within its block, and
+    ``_tsz``, its tie size. Per member: ``_nb`` ranked rows (LONG) and
+    ``_rsum`` = Σ round(r, 9) and ``_r2`` = Σ round(r², 9), both
+    DECIMAL(25,9) sums, exact because mid-ranks are half-integers."""
+    dec = "decimal(25,9)"
+    _, complete, n_bad = _complete_blocks(base, block_col, member_col, "_v")
+    ranked = _avg_rank2(
+        base.join(complete.select(block_col), block_col), [block_col], "_v", "_r2"
+    ).select(
+        block_col,
+        member_col,
+        (F.col("_r2") / F.lit(2.0)).alias("_r"),
+        F.col("_r2_t").alias("_tsz"),
+    )
+    r = F.col("_r")
+    per_member = ranked.groupBy(member_col).agg(
+        F.count(F.lit(1)).cast("long").alias("_nb"),
+        F.sum(F.round(r, 9).cast(dec)).alias("_rsum"),
+        F.sum(F.round(r * r, 9).cast(dec)).alias("_r2"),
+    )
+    return ranked, per_member, n_bad
+
+
+def _sq_dev_reduce(frame: DataFrame, x: str, center: Column, *keep: str) -> DataFrame:
+    """One row over ``frame``: ``_ss`` = Σ round((x − center)², 9),
+    summed on DECIMAL(25,9) and read back as DOUBLE, and the max of each
+    ``keep`` column (the 1-row scalars that ``frame`` repeats on every
+    row)."""
+    dev = F.col(x).cast("double") - center
+    return frame.agg(
+        F.sum(F.round(dev * dev, 9).cast("decimal(25,9)")).cast("double").alias("_ss"),
+        *(F.max(c).alias(c) for c in keep),
+    )
+
+
+def _group_moments(base: DataFrame) -> DataFrame:
+    """Per-group moments of ``base`` = (``_g``, ``_v`` DOUBLE) without
+    its NULL ``_v`` rows: ``_ng`` (LONG count), ``_sv`` = Σ round(v, 9)
+    and ``_qv`` = Σ round(v², 9), both DECIMAL(25,9) sums."""
+    dec = "decimal(25,9)"
+    v = F.col("_v")
+    return (
+        base.filter(v.isNotNull())
+        .groupBy("_g")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("_ng"),
+            F.sum(F.round(v, 9).cast(dec)).alias("_sv"),
+            F.sum(F.round(v * v, 9).cast(dec)).alias("_qv"),
+        )
+    )
+
+
+def _oneway(base: DataFrame) -> tuple[DataFrame, Column, Column]:
+    """The one-way decomposition of ``base`` = (``_g``, ``_v`` DOUBLE),
+    NULL values dropped: (one row, SSB, SSW). The row reduces the
+    ``_group_moments`` frame to ``_k`` groups, ``_n`` values, ``_s`` =
+    ΣS_g (DECIMAL), ``_q`` = ΣQ_g, ``_sb`` = Σ S_g²/n_g (each term a
+    single IEEE division rounded 9dp back onto DECIMAL) and ``_n2`` =
+    Σn_g² (LONG); SSB = ``_sb`` − (ΣS_g)²/N and SSW = ``_q`` − ``_sb``
+    are Columns over that row."""
+    sv = F.col("_sv").cast("double")
+    agg = _group_moments(base).agg(
+        F.count(F.lit(1)).cast("long").alias("_k"),
+        F.sum("_ng").cast("long").alias("_n"),
+        F.sum("_sv").alias("_s"),
+        F.sum("_qv").cast("double").alias("_q"),
+        F.sum(F.round(sv * sv / F.col("_ng"), 9).cast("decimal(25,9)"))
+        .cast("double")
+        .alias("_sb"),
+        F.sum(F.col("_ng") * F.col("_ng")).cast("long").alias("_n2"),
+    )
+    s = F.col("_s").cast("double")
+    ssb = F.col("_sb") - s * s / F.col("_n").cast("double")
+    ssw = F.col("_q") - F.col("_sb")
+    return agg, ssb, ssw
 
 
 def _poisson_bootstrap(
@@ -3430,31 +3517,20 @@ def friedman_test(
         F.col(treatment_col).alias("_t"),
         F.col(value_col).cast("double").alias("_v"),
     )
-    _, complete, n_bad = _complete_blocks(base, "_i", "_t", "_v")
-    ranked = _avg_rank2(
-        base.join(complete.select("_i"), "_i"), ["_i"], "_v", "_r2"
-    ).select("_i", "_t", (F.col("_r2") / F.lit(2.0)).alias("_r"))
-    dec = "decimal(25,9)"
-    per_t = ranked.groupBy("_t").agg(
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.sum(F.round(F.col("_r"), 9).cast(dec)).alias("_rsum"),
-        F.sum(F.round(F.col("_r") * F.col("_r"), 9).cast(dec)).alias("_r2"),
-    )
+    _, per_t, n_bad = _block_rank_sums(base, "_i", "_t")
     # two-step: treatment frame -> scalars (the window-free form)
     scal = per_t.agg(
-        F.max("n_items").cast("long").alias("_n"),
+        F.max("_nb").cast("long").alias("_n"),
         F.count(F.lit(1)).cast("long").alias("_kk"),
         F.sum(F.col("_r2")).cast("double").alias("_a1"),
     )
-    joined = per_t.crossJoin(F.broadcast(scal))
-    dev = F.col("_rsum").cast("double") - F.col("_n") * (
-        F.col("_kk") + 1
-    ) / F.lit(2.0)
-    ssq = joined.agg(
-        F.sum(F.round(dev * dev, 9).cast(dec)).cast("double").alias("_ss"),
-        F.max("_n").alias("_n"),
-        F.max("_kk").alias("_kk"),
-        F.max("_a1").alias("_a1"),
+    ssq = _sq_dev_reduce(
+        per_t.crossJoin(F.broadcast(scal)),
+        "_rsum",
+        F.col("_n") * (F.col("_kk") + 1) / F.lit(2.0),
+        "_n",
+        "_kk",
+        "_a1",
     )
     n = F.col("_n").cast("double")
     kk = F.col("_kk").cast("double")
@@ -3481,7 +3557,7 @@ def friedman_test(
             F.col("_kk").alias("k_treatments"),
             F.round(F.col("_rsum").cast("double"), 6).alias("rank_sum"),
             F.round(
-                F.col("_rsum").cast("double") / F.col("n_items"), 6
+                F.col("_rsum").cast("double") / F.col("_nb"), 6
             ).alias("mean_rank"),
             "chi2_f",
             "p_value",
@@ -3529,20 +3605,14 @@ def cochran_q_test(
         .groupBy("_t")
         .agg(F.sum("_x").cast("long").alias("_gj"))
     )
-    gsq = g.crossJoin(F.broadcast(item_stats)).crossJoin(
-        F.broadcast(k_frame)
-    )
-    dev = F.col("_gj").cast("double") - F.col("_nn") / F.col("_k").cast(
-        "double"
-    )
-    agg = gsq.agg(
-        F.sum(F.round(dev * dev, 9).cast("decimal(25,9)"))
-        .cast("double")
-        .alias("_ss"),
-        F.max("_n").alias("_n"),
-        F.max("_nn").alias("_nn"),
-        F.max("_l2").alias("_l2"),
-        F.max("_k").alias("_k"),
+    agg = _sq_dev_reduce(
+        g.crossJoin(F.broadcast(item_stats)).crossJoin(F.broadcast(k_frame)),
+        "_gj",
+        F.col("_nn") / F.col("_k").cast("double"),
+        "_n",
+        "_nn",
+        "_l2",
+        "_k",
     )
     kk = F.col("_k").cast("double")
     denom = kk * F.col("_nn") - F.col("_l2")
@@ -3598,16 +3668,7 @@ def kendalls_w(
         F.col(object_col).alias("_o"),
         F.col(value_col).cast("double").alias("_v"),
     )
-    _, complete, n_bad = _complete_blocks(base, "_j", "_o", "_v")
-    ranked = _avg_rank2(
-        base.join(complete.select("_j"), "_j"), ["_j"], "_v", "_r2"
-    ).select(
-        "_j",
-        "_o",
-        (F.col("_r2") / F.lit(2.0)).alias("_r"),
-        F.col("_r2_t").alias("_tsz"),
-    )
-    dec = "decimal(25,9)"
+    ranked, per_o, n_bad = _block_rank_sums(base, "_j", "_o")
     # tie term: each tie group of size t contributes t^3 - t; every row
     # in the group carries _tsz = t, so sum (t^2 - 1) over rows = the
     # group total without a second exchange
@@ -3615,30 +3676,23 @@ def kendalls_w(
         F.sum(F.col("_tsz") * F.col("_tsz") - 1).cast("long").alias("_tt"),
         F.countDistinct("_j").cast("long").alias("_k"),
     )
-    per_o = ranked.groupBy("_o").agg(
-        F.sum(F.round(F.col("_r"), 9).cast(dec)).alias("_rsum"),
-    )
     scal = per_o.agg(
         F.count(F.lit(1)).cast("long").alias("_nn"),
     )
-    joined = per_o.crossJoin(F.broadcast(scal)).crossJoin(
-        F.broadcast(ties)
-    )
-    dev = F.col("_rsum").cast("double") - F.col("_k") * (
-        F.col("_nn") + 1
-    ) / F.lit(2.0)
-    agg = joined.agg(
-        F.sum(F.round(dev * dev, 9).cast(dec)).cast("double").alias("_s"),
-        F.max("_nn").alias("_nn"),
-        F.max("_k").alias("_k"),
-        F.max("_tt").alias("_tt"),
+    agg = _sq_dev_reduce(
+        per_o.crossJoin(F.broadcast(scal)).crossJoin(F.broadcast(ties)),
+        "_rsum",
+        F.col("_k") * (F.col("_nn") + 1) / F.lit(2.0),
+        "_nn",
+        "_k",
+        "_tt",
     )
     kk = F.col("_k").cast("double")
     nn = F.col("_nn").cast("double")
     denom = kk * kk * (nn * nn * nn - nn) - kk * F.col("_tt")
     w_stat = F.when(
         (F.col("_k") >= 1) & (F.col("_nn") >= 2) & (denom > 0),
-        F.lit(12.0) * F.col("_s") / denom,
+        F.lit(12.0) * F.col("_ss") / denom,
     )
     chi2 = kk * (nn - 1) * w_stat
     stats = agg.select(
@@ -3931,42 +3985,15 @@ def icc_oneway(
     row: (n_items, n_total, k0, msb, msw, f_stat, icc1, icc1k);
     n < 2 or N <= n degrades everything past the counts to NULL.
     """
-    dec = "decimal(25,9)"
-    base = df.select(
-        F.col(item_col).alias("_i"),
-        F.col(value_col).cast("double").alias("_v"),
-    ).filter(F.col("_v").isNotNull())
-    per_item = base.groupBy("_i").agg(
-        F.count(F.lit(1)).cast("long").alias("_ni"),
-        F.sum(F.round(F.col("_v"), 9).cast(dec)).alias("_si"),
-        F.sum(F.round(F.col("_v") * F.col("_v"), 9).cast(dec)).alias(
-            "_qi"
-        ),
-    )
-    agg = per_item.agg(
-        F.count(F.lit(1)).cast("long").alias("_n"),
-        F.sum("_ni").cast("long").alias("_ntot"),
-        F.sum("_si").alias("_S"),
-        F.sum("_qi").cast("double").alias("_Q"),
-        F.sum(
-            F.round(
-                F.col("_si").cast("double")
-                * F.col("_si").cast("double")
-                / F.col("_ni"),
-                9,
-            ).cast(dec)
+    agg, ssb, ssw = _oneway(
+        df.select(
+            F.col(item_col).alias("_g"),
+            F.col(value_col).cast("double").alias("_v"),
         )
-        .cast("double")
-        .alias("_sb"),
-        F.sum(F.col("_ni") * F.col("_ni")).cast("long").alias("_n2"),
     )
-    n = F.col("_n").cast("double")
-    N = F.col("_ntot").cast("double")
-    ssb = F.col("_sb") - F.col("_S").cast("double") * F.col("_S").cast(
-        "double"
-    ) / N
-    ssw = F.col("_Q") - F.col("_sb")
-    ok = (F.col("_n") >= 2) & (F.col("_ntot") > F.col("_n"))
+    n = F.col("_k").cast("double")
+    N = F.col("_n").cast("double")
+    ok = (F.col("_k") >= 2) & (F.col("_n") > F.col("_k"))
     msb = F.when(ok, ssb / (n - 1))
     msw = F.when(ok, ssw / (N - n))
     k0 = F.when(ok, (N - F.col("_n2") / N) / (n - 1))
@@ -3976,8 +4003,8 @@ def icc_oneway(
     )
     icc1k = F.when(ok & (msb != 0) & (msw > 0), (msb - msw) / msb)
     return agg.select(
-        F.col("_n").alias("n_items"),
-        F.col("_ntot").alias("n_total"),
+        F.col("_k").alias("n_items"),
+        F.col("_n").alias("n_total"),
         F.round(k0, 6).alias("k0"),
         F.round(msb, 6).alias("msb"),
         F.round(msw, 6).alias("msw"),
@@ -4179,39 +4206,13 @@ def levene_test(
         )
     else:
         cen = base.groupBy("_g").agg(F.avg("_v").alias("_c"))
-    dec = "decimal(25,9)"
-    z = base.join(F.broadcast(cen), "_g").select(
-        "_g", F.abs(F.col("_v") - F.col("_c")).alias("_z")
-    )
-    per_g = z.groupBy("_g").agg(
-        F.count(F.lit(1)).cast("long").alias("_ng"),
-        F.sum(F.round(F.col("_z"), 9).cast(dec)).alias("_sz"),
-        F.sum(F.round(F.col("_z") * F.col("_z"), 9).cast(dec)).alias(
-            "_qz"
-        ),
-    )
-    agg = per_g.agg(
-        F.count(F.lit(1)).cast("long").alias("_k"),
-        F.sum("_ng").cast("long").alias("_n"),
-        F.sum("_sz").alias("_s"),
-        F.sum("_qz").cast("double").alias("_q"),
-        F.sum(
-            F.round(
-                F.col("_sz").cast("double")
-                * F.col("_sz").cast("double")
-                / F.col("_ng"),
-                9,
-            ).cast(dec)
+    agg, ssb, ssw = _oneway(
+        base.join(F.broadcast(cen), "_g").select(
+            "_g", F.abs(F.col("_v") - F.col("_c")).alias("_v")
         )
-        .cast("double")
-        .alias("_sb"),
     )
     n = F.col("_n").cast("double")
     k = F.col("_k").cast("double")
-    ssb = F.col("_sb") - F.col("_s").cast("double") * F.col("_s").cast(
-        "double"
-    ) / n
-    ssw = F.col("_q") - F.col("_sb")
     ok = (F.col("_k") >= 2) & (F.col("_n") > F.col("_k")) & (ssw > 0)
     w_stat = F.when(ok, (n - k) / (k - 1) * ssb / ssw)
     return agg.select(
@@ -4244,16 +4245,11 @@ def bartlett_test(
     p_value, n_excluded); k < 2 after exclusion degrades t/p to NULL.
     """
     dec = "decimal(25,9)"
-    base = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(value_col).cast("double").alias("_v"),
-    ).filter(F.col("_v").isNotNull())
-    per_g = base.groupBy("_g").agg(
-        F.count(F.lit(1)).cast("long").alias("_ng"),
-        F.sum(F.round(F.col("_v"), 9).cast(dec)).alias("_sv"),
-        F.sum(F.round(F.col("_v") * F.col("_v"), 9).cast(dec)).alias(
-            "_qv"
-        ),
+    per_g = _group_moments(
+        df.select(
+            F.col(group_col).alias("_g"),
+            F.col(value_col).cast("double").alias("_v"),
+        )
     )
     s2 = (
         F.col("_qv").cast("double")
@@ -4331,40 +4327,14 @@ def anova_oneway(
     Output ONE row: (k_groups, n_total, f_stat, eta_sq, omega_sq);
     k < 2 or N <= k degrades to NULL.
     """
-    dec = "decimal(25,9)"
-    base = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(value_col).cast("double").alias("_v"),
-    ).filter(F.col("_v").isNotNull())
-    per_g = base.groupBy("_g").agg(
-        F.count(F.lit(1)).cast("long").alias("_ng"),
-        F.sum(F.round(F.col("_v"), 9).cast(dec)).alias("_sv"),
-        F.sum(F.round(F.col("_v") * F.col("_v"), 9).cast(dec)).alias(
-            "_qv"
-        ),
-    )
-    agg = per_g.agg(
-        F.count(F.lit(1)).cast("long").alias("_k"),
-        F.sum("_ng").cast("long").alias("_n"),
-        F.sum("_sv").alias("_s"),
-        F.sum("_qv").cast("double").alias("_q"),
-        F.sum(
-            F.round(
-                F.col("_sv").cast("double")
-                * F.col("_sv").cast("double")
-                / F.col("_ng"),
-                9,
-            ).cast(dec)
+    agg, ssb, ssw = _oneway(
+        df.select(
+            F.col(group_col).alias("_g"),
+            F.col(value_col).cast("double").alias("_v"),
         )
-        .cast("double")
-        .alias("_sb"),
     )
     n = F.col("_n").cast("double")
     k = F.col("_k").cast("double")
-    ssb = F.col("_sb") - F.col("_s").cast("double") * F.col("_s").cast(
-        "double"
-    ) / n
-    ssw = F.col("_q") - F.col("_sb")
     sst = ssb + ssw
     ok = (F.col("_k") >= 2) & (F.col("_n") > F.col("_k"))
     msb = F.when(ok, ssb / (k - 1))

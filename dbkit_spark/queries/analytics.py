@@ -4094,15 +4094,17 @@ _Q313_ORACLE = """
              LEAD(v) OVER (ORDER BY v) AS next_v
       FROM counts
     ),
-    tot AS (SELECT SUM(ca) AS n_a, SUM(cb) AS n_b FROM counts)
-    SELECT CAST(t.n_a AS BIGINT) AS n_a, CAST(t.n_b AS BIGINT) AS n_b,
-           round(CAST(SUM(CAST(round(
-             abs(CAST(o.cum_a AS DOUBLE) / t.n_a
-                 - CAST(o.cum_b AS DOUBLE) / t.n_b)
-             * (o.next_v - o.v), 9) AS DECIMAL(38,12))) AS DOUBLE), 6)
-             AS wasserstein
-    FROM ordered o CROSS JOIN tot t
-    WHERE o.next_v IS NOT NULL
+    tot AS (SELECT CAST(COALESCE(SUM(ca), 0) AS BIGINT) AS n_a,
+                   CAST(COALESCE(SUM(cb), 0) AS BIGINT) AS n_b
+            FROM counts)
+    SELECT t.n_a, t.n_b,
+           CASE WHEN t.n_a > 0 AND t.n_b > 0 THEN
+             round(COALESCE(CAST(SUM(CAST(round(
+               abs(CAST(o.cum_a AS DOUBLE) / t.n_a
+                   - CAST(o.cum_b AS DOUBLE) / t.n_b)
+               * (o.next_v - o.v), 9) AS DECIMAL(38,12))) AS DOUBLE), 0.0), 6)
+           END AS wasserstein
+    FROM tot t LEFT JOIN ordered o ON o.next_v IS NOT NULL
     GROUP BY t.n_a, t.n_b
 """
 

@@ -4058,12 +4058,10 @@ def _wh_p_sql(chi2: str, dof: str) -> str:
     )
 
 
-def q457_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friedman rank test (operators/mlmetrics.friedman_test) across
-    the four truncation systems on the same items — the omnibus
-    'does ANY system rank better?' before pairwise signed-ranks."""
-    from ..operators.mlmetrics import friedman_test
-
+def _long_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The shared (pair, system, f1) long frame of the k-system
+    family — the q457 union fan-out over the checkpointed wide
+    derivation."""
     wide = _multi_sys_scores(spark, sf_dir)
     long_ = None
     for den in _DENS:
@@ -4073,7 +4071,16 @@ def q457_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col(f"f1_d{den}").alias("f1"),
         )
         long_ = part if long_ is None else long_.unionByName(part)
-    return friedman_test(long_, "pair_id", "sys", "f1")
+    return long_
+
+
+def q457_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Friedman rank test (operators/mlmetrics.friedman_test) across
+    the four truncation systems on the same items — the omnibus
+    'does ANY system rank better?' before pairwise signed-ranks."""
+    from ..operators.mlmetrics import friedman_test
+
+    return friedman_test(_long_frame(spark, sf_dir), "pair_id", "sys", "f1")
 
 
 def _q457_oracle() -> str:
@@ -4152,16 +4159,10 @@ def q458_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gates' pass rates differ beyond per-item difficulty?"""
     from ..operators.mlmetrics import cochran_q_test
 
-    wide = _multi_sys_scores(spark, sf_dir)
-    long_ = None
-    for den in _DENS:
-        part = wide.select(
-            F.col("pair_id"),
-            F.lit(f"d{den}").alias("sys"),
-            (F.col(f"f1_d{den}") >= 0.6).cast("int").alias("pass_flag"),
-        )
-        long_ = part if long_ is None else long_.unionByName(part)
-    return cochran_q_test(long_, "pair_id", "sys", "pass_flag")
+    passes = _long_frame(spark, sf_dir).select(
+        "pair_id", "sys", (F.col("f1") >= 0.6).cast("int").alias("pass_flag")
+    )
+    return cochran_q_test(passes, "pair_id", "sys", "pass_flag")
 
 
 def _q458_oracle() -> str:
@@ -4216,22 +4217,6 @@ _Q458_NOTES = (
 )
 
 register("q458_cochran_q", _q458_oracle(), _Q458_NOTES)(q458_cochran_q)
-
-
-def _long_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared (pair, system, f1) long frame of the k-system
-    family — the q457 union fan-out over the checkpointed wide
-    derivation."""
-    wide = _multi_sys_scores(spark, sf_dir)
-    long_ = None
-    for den in _DENS:
-        part = wide.select(
-            F.col("pair_id"),
-            F.lit(f"d{den}").alias("sys"),
-            F.col(f"f1_d{den}").alias("f1"),
-        )
-        long_ = part if long_ is None else long_.unionByName(part)
-    return long_
 
 
 # --- q466 Kendall's W --------------------------------------------------------

@@ -15,12 +15,14 @@ dedup, heavy hitters, quality gates).
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import register
 from ..operators.aggregate import dec, stable_sum, stable_sum_sql
-from ..operators.iterate import held
+from ..operators.iterate import checkpoint_and_release, held
 from ..sources import read_table, read_table_stream
 from ..streaming.runner import replay_stream, run_available_now
 from ..streaming.windows import session_agg, sliding_agg, tumbling_agg
@@ -521,19 +523,7 @@ def q152_stream_stream_right_outer(spark: SparkSession, sf_dir: str) -> DataFram
     "portable to the DuckDB oracle",
 )
 def q107_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.foreach_batch import run_incremental_upsert
-
-    events = read_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="dbkit_q107_")
-    in_dir = f"{work}/input"
-    events.repartition(4).write.mode("overwrite").parquet(in_dir)
-    stream = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
 
     def sort_key(ts, event_id):
         return F.concat(
@@ -560,14 +550,26 @@ def q107_stream_incremental_upsert(spark: SparkSession, sf_dir: str) -> DataFram
             F.max_by("last_type", "__last_key").alias("last_type"),
         )
 
-    state = run_incremental_upsert(stream, partial, merge, f"{work}/state")
-    return state.select(
-        "user_id",
-        "n_events",
-        F.col("__total_dec").cast("double").alias("total_value"),
-        "last_ts",
-        "last_type",
-    )
+    events = read_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(prefix="dbkit_q107_") as work:
+        in_dir = f"{work}/input"
+        events.repartition(4).write.mode("overwrite").parquet(in_dir)
+        stream = (
+            spark.readStream.schema(events.schema)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(in_dir)
+        )
+        state = run_incremental_upsert(stream, partial, merge, f"{work}/state")
+        # the state table lives under ``work``: materialize before removal
+        return checkpoint_and_release(
+            state.select(
+                "user_id",
+                "n_events",
+                F.col("__total_dec").cast("double").alias("total_value"),
+                "last_ts",
+                "last_type",
+            )
+        )
 
 
 # --- streaming replay of q36's session windows (batch/stream parity) --------
@@ -731,14 +733,14 @@ _Q207_NOTES = (
 
 
 def q215_streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.ingest_dedup import run_dedup_ingest
 
     stream = read_table_stream(spark, sf_dir, "documents").select("doc_id", "text")
-    state = tempfile.mkdtemp(prefix="dbkit_ingest_")
-    corpus = run_dedup_ingest(stream, state, threshold=0.5)
-    return corpus.select("doc_id").orderBy("doc_id")
+    with tempfile.TemporaryDirectory(prefix="dbkit_ingest_") as state:
+        corpus = run_dedup_ingest(stream, state, threshold=0.5)
+        # the corpus is read from ``state``: materialize before removal
+        ids = checkpoint_and_release(corpus.select("doc_id"))
+    return ids.orderBy("doc_id")
 
 
 def _q215_oracle() -> str:
@@ -844,13 +846,13 @@ def q273_streaming_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-file-per-chunk layout IS the two-batch replay fixture.
     with held(z):
         cut = z.stat.approxQuantile("event_id", [0.5], 0.0)[0]
-        zstream = replay_stream(
+        with replay_stream(
             (z.filter(F.col("event_id") <= cut), z.filter(F.col("event_id") > cut))
-        )
-    out = run_available_now(
-        streaming_cusum(zstream, "user_id", "event_id", k=0.25, h=2.0),
-        output_mode="update",
-    )
+        ) as zstream:
+            out = run_available_now(
+                streaming_cusum(zstream, "user_id", "event_id", k=0.25, h=2.0),
+                output_mode="update",
+            )
     return out.orderBy("user_id", "event_id")
 
 
@@ -903,17 +905,16 @@ def q294_streaming_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    with held(base):
-        stream = replay_stream(
-            (
-                base.filter(F.col("_rn") == 1).drop("_rn"),
-                base.filter(F.col("_rn") > 1).drop("_rn"),
-            )
+    with held(base), replay_stream(
+        (
+            base.filter(F.col("_rn") == 1).drop("_rn"),
+            base.filter(F.col("_rn") > 1).drop("_rn"),
         )
-    out = run_available_now(
-        streaming_funnel(stream, "user_id", "ts", "event_type", steps, 7200),
-        output_mode="update",
-    )
+    ) as stream:
+        out = run_available_now(
+            streaming_funnel(stream, "user_id", "ts", "event_type", steps, 7200),
+            output_mode="update",
+        )
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     return (
         out.withColumn("_rk", F.row_number().over(w))

@@ -5234,11 +5234,6 @@ def q325_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import read_xml
 
     docs = read_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="q325_xml_")
-    path = os.path.join(d, "docs")
-    docs.write.format("xml").option("rootTag", "corpus").option(
-        "rowTag", "doc"
-    ).save(path)
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -5248,16 +5243,21 @@ def q325_xml_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    back = read_xml(spark, path, row_tag="doc", schema=schema)
-    return (
-        back.groupBy("lang", "source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").alias("total_chars"),
-            F.sum(F.length("text")).alias("total_text_len"),
+    with tempfile.TemporaryDirectory(prefix="q325_xml_") as d:
+        path = os.path.join(d, "docs")
+        docs.write.format("xml").option("rootTag", "corpus").option(
+            "rowTag", "doc"
+        ).save(path)
+        back = read_xml(spark, path, row_tag="doc", schema=schema)
+        # the XML files live under ``d``: materialize before removal
+        per = checkpoint_and_release(
+            back.groupBy("lang", "source").agg(
+                F.count("*").alias("n_docs"),
+                F.sum("n_chars").alias("total_chars"),
+                F.sum(F.length("text")).alias("total_text_len"),
+            )
         )
-        .orderBy("lang", "source")
-    )
+    return per.orderBy("lang", "source")
 
 
 _Q325_ORACLE = """

@@ -7,7 +7,8 @@ DataFrame → transformation → memory sink → table round-trip. This is the
 engine's batch-replay harness for validating streaming semantics against
 batch oracles. Fixture tables stream through
 ``sources.read_table_stream``; ``replay_stream`` turns ordered batch
-chunks into a stream with one chunk per micro-batch.
+chunks into a stream with one chunk per micro-batch, for the body of a
+``with``.
 """
 
 from __future__ import annotations
@@ -17,7 +18,8 @@ import os
 import shutil
 import tempfile
 import uuid
-from typing import Sequence
+from contextlib import contextmanager
+from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
@@ -53,21 +55,24 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
-def replay_stream(chunks: Sequence[DataFrame]) -> DataFrame:
+@contextmanager
+def replay_stream(chunks: Sequence[DataFrame]) -> Iterator[DataFrame]:
     """Write each batch chunk as exactly one file ``part{i}.parquet`` of a
-    fresh directory and return the stream over them, one file per
+    fresh directory and yield the stream over them, one file per
     trigger, so chunk ``i`` is micro-batch ``i``. The chunks are written
-    by Spark (``coalesce(1)``), so nothing data-sized reaches the driver."""
-    d = tempfile.mkdtemp(prefix="dbkit_replay_")
-    for i, chunk in enumerate(chunks):
-        stage = os.path.join(d, f"_stage{i}")
-        chunk.coalesce(1).write.parquet(stage)
-        (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
-        shutil.move(part, os.path.join(d, f"part{i}.parquet"))
-        shutil.rmtree(stage)
-    return (
-        chunks[0]
-        .sparkSession.readStream.schema(chunks[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
+    by Spark (``coalesce(1)``), so nothing data-sized reaches the driver.
+    The directory is removed when the ``with`` exits, also on error, so
+    the stream must be run to completion inside it."""
+    with tempfile.TemporaryDirectory(prefix="dbkit_replay_") as d:
+        for i, chunk in enumerate(chunks):
+            stage = os.path.join(d, f"_stage{i}")
+            chunk.coalesce(1).write.parquet(stage)
+            (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
+            shutil.move(part, os.path.join(d, f"part{i}.parquet"))
+            shutil.rmtree(stage)
+        yield (
+            chunks[0]
+            .sparkSession.readStream.schema(chunks[0].schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(d)
+        )

@@ -268,6 +268,23 @@ def test_one_stream_path():
     assert _match_sites(r"read_events_stream") == []
 
 
+def test_k_sample_kernels_written_once():
+    """The one-way tests share one between/within decomposition
+    (``mlmetrics._oneway``; ``cluster_design_effect`` keeps its own
+    double-cast path), the blocked rank tests share one squared-deviation
+    reduce (``mlmetrics._sq_dev_reduce``), and the k-system queries build
+    their long frame once (``evaluation._long_frame``)."""
+    assert _match_sites(r"\bssw = F\.col") == [
+        "dbkit_spark/operators/mlmetrics.py:_oneway",
+        "dbkit_spark/operators/mlmetrics.py:cluster_design_effect",
+    ]
+    assert _match_sites(r"F\.sum\(F\.round\(dev \* dev, 9\)") == [
+        "dbkit_spark/operators/mlmetrics.py:_sq_dev_reduce"
+    ]
+    evaluation = (PKG / "queries" / "evaluation.py").read_text()
+    assert evaluation.count("for den in _DENS") == 1
+
+
 def test_doc_module_pointers_exist():
     """Every ``dbkit_spark/….py`` path that README.md, SCALE.md and
     SURVEY.md cite names a module that exists."""

@@ -676,6 +676,19 @@ def test_drift_empty_side_degrades(spark, case):
         assert rows[0]["psi"] > 0
 
 
+def test_wasserstein_single_distinct_value(spark):
+    """Samples that together hold one distinct value close no segment:
+    both sides non-empty report W = 0.0, an empty side keeps its NULL
+    W, and the side counts are reported either way."""
+    from dbkit_spark.operators.drift import wasserstein_1d
+
+    a = spark.createDataFrame([(1.0,)], "x double")
+    b = spark.createDataFrame([(1.0,), (1.0,)], "x double")
+    assert tuple(wasserstein_1d(a, b, "x").collect()[0]) == (1, 2, 0.0)
+    c = spark.createDataFrame([(2.0,)], "x double")
+    assert tuple(wasserstein_1d(c.limit(0), c, "x").collect()[0]) == (0, 1, None)
+
+
 _TWO_SAMPLE_EMPTY_CASES = {
     "ks_two_sample": (
         "g string, v double",

@@ -623,3 +623,32 @@ def test_dedup_ingest_rejects_incompatible_shingle_state(spark, tmp_path):
         ingest_batch(spark, batch, state)
     assert state in str(err.value)
     assert "shingles.shingles found string, expected array<string>" in str(err.value)
+
+
+def test_queries_remove_their_temp_dirs(spark, sf_dir):
+    """The queries that stage files in a temp directory (the upsert
+    input and state, the ingest state, the replay chunks, the XML
+    round-trip) materialize their result, then remove the directory: a
+    run leaves the temp root's entries of those prefixes as it found
+    them, and the returned frame still reads."""
+    import os
+    import tempfile
+
+    from dbkit_spark.catalog import load_all
+
+    prefixes = ("dbkit_q107_", "dbkit_ingest_", "dbkit_replay_", "q325_xml_")
+
+    def staged() -> set[str]:
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith(prefixes)}
+
+    catalog = load_all()
+    before = staged()
+    for name in (
+        "q107_stream_incremental_upsert",
+        "q215_streaming_dedup_ingest",
+        "q273_streaming_cusum",
+        "q294_streaming_funnel",
+        "q325_xml_source",
+    ):
+        assert catalog[name].fn(spark, sf_dir).count() > 0, name
+        assert staged() == before, name
